@@ -260,7 +260,8 @@ def spark_conf(work: str, scale: Scale) -> dict:
         "spark.driver.memory": scale.driver_memory,
         "spark.local.dir": local,
         "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
-        "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={local}",
+        # the JVM's perf-data file ignores java.io.tmpdir: switch it off
+        "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={local} -XX:-UsePerfData",
         "spark.ui.showConsoleProgress": "false",
         # the status store must keep every job of a run for the tracer
         "spark.ui.retainedJobs": "100000",
