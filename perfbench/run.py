@@ -67,6 +67,7 @@ def run_workload(workload: str, seed: int, seconds: float, trace: bool,
         shutil.rmtree(work, ignore_errors=True)
     env["loadavg_end"] = os.getloadavg()
     env["probe_ms"] = run.probe_ms
+    env["par_probe_ms"] = run.par_probe_ms
     env["probe_n"] = len(run.probes)
     env["wall_s"] = time.perf_counter() - t0
     return {

@@ -1,4 +1,4 @@
-"""Tiny-scale self-test of the benchmark itself (about a minute).
+"""Tiny-scale self-test of the benchmark itself (about five minutes).
 
     python3 perfbench/selftest.py
 
@@ -21,7 +21,7 @@ ROOT = os.getcwd()
 sys.path.insert(0, ROOT)
 
 from run import _env_for_spark, load_spec, result_line, run_workload  # noqa: E402
-from workloads import Scale, spark_conf  # noqa: E402
+from workloads import CORES, Scale, spark_conf  # noqa: E402
 
 TINY = Scale(n_docs=300, min_queries=40, batch_size=32, exhaustive_checks=20)
 
@@ -42,7 +42,7 @@ def main() -> int:
     spec = load_spec()
     work = os.path.join(ROOT, ".perfbench_work", "selftest")
     _env_for_spark(work)
-    spark = get_spark(TINY.cores, app_name="perfbench-selftest", extra_conf=spark_conf(work, TINY))
+    spark = get_spark(CORES, app_name="perfbench-selftest", extra_conf=spark_conf(work))
     try:
         for wl in (w["name"] for w in spec["workloads"]):
             for trace in (False, True):
