@@ -8,8 +8,8 @@ end-to-end metric, with --trace 1 every per-layer metric:
 
     {"correct": true, "attempted": N, "failed": 0, "metrics": {name: {"value": v, "unit": u}}}
 
-End-to-end times and rates are scaled to a reference CPU speed measured
-by a probe between operations (workloads.REF_PROBE_MS). A human-readable
+Query latencies are scaled to a reference CPU speed measured by probes
+between queries (workloads.REF_PROBE_MS). A human-readable
 report (all metrics, unscaled values too, error rate, sample counts,
 nproc, load average at start and end) goes to stderr, and the run's record,
 spans included when traced, to .perfbench_out/. Scratch files live under
@@ -61,7 +61,8 @@ def run_workload(workload: str, seed: int, seconds: float, trace: bool,
     t0 = time.perf_counter()
     try:
         WORKLOADS[workload](run)
-        run.e2e["peak_rss_mb"] = run.raw_e2e["peak_rss_mb"] = run.peak_rss_mb()
+        env["driver_hwm_mb"], env["jvm_hwm_mb"] = run.peak_rss_mb()
+        run.e2e["peak_rss_mb"] = run.raw_e2e["peak_rss_mb"] = env["driver_hwm_mb"] + env["jvm_hwm_mb"]
     finally:
         run.stop()
         shutil.rmtree(work, ignore_errors=True)
@@ -74,6 +75,7 @@ def run_workload(workload: str, seed: int, seconds: float, trace: bool,
         "workload": workload, "seed": seed, "trace": trace, "env": env,
         "attempted": run.attempted, "failed": run.failed,
         "e2e": run.e2e, "raw_e2e": run.raw_e2e, "layer": run.layer, "samples": run.samples,
+        "queries": run.query_log, "probes": run.probes, "par_probes": run.par_probes,
         "spans": [
             {"name": s.name, "parent": s.parent.name if s.parent else None,
              "start": s.start, "end": s.end, "self_s": s.self_s}

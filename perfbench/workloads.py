@@ -1,20 +1,20 @@
 """The benchmark's two workloads, their seeded inputs and their checks.
 
 Both workloads run the same kinds of operation, so every end-to-end metric
-is measured on each: index documents, serve BM25 queries one at a time,
-and run one B=1024 distributed batch. They differ in which layers do it:
+is measured on each: index documents and serve BM25 queries one at a
+time. They differ in which layers do it:
 
   build_serve  one full build (postings, positions, bigrams) of a fresh
                corpus, then single-index serving over a ~1%-tombstoned
                index: BM25 via `query_index` and phrase via `phrase_topk`.
   ingest       a committed base (90% of the corpus, with positions, built
                in set-up), one append of the other 10% with positions,
-               group serving via `IndexGroup.topk` and
-               `batch_query_index_group`, deletes of ~1% of the docs, group
-               serving again, then `compact_index`, which folds postings
-               and positions. Bigrams are left out of ingest: their three
-               extra jobs (base, delta, fold) would push a run past the
-               benchmark's time budget; `build_serve` builds them.
+               group serving via `IndexGroup.topk`, one B=512
+               `batch_query_index_group` job, deletes of ~1% of the docs,
+               group serving again, then `compact_index`, which folds
+               postings and positions. Bigrams are left out of ingest: their
+               three extra jobs (base, delta, fold) would push a run past
+               the benchmark's time budget; `build_serve` builds them.
 
 Every answer a timed operation returns is checked after the timed loop;
 a wrong answer or an exception counts as a failed operation.
@@ -39,17 +39,17 @@ MIN_SCORE = 0.0
 
 #: The box's CPU speed swings by up to 1.5x between and within runs (other
 #: tenants share the host), and every timing moves with it. The query
-#: latencies and the batch rate are therefore scaled to a reference speed:
-#: the speed at which `Run.probe`'s fixed kernels take REF_PROBE_MS (one
-#: thread) and REF_PAR_PROBE_MS (CORES threads). Raw values are kept in the
-#: run record and the stderr report.
+#: latencies are therefore scaled to a reference speed: the speed at which
+#: `Run.probe`'s fixed kernels take REF_PROBE_MS (one thread) and
+#: REF_PAR_PROBE_MS (CORES threads). Raw values are kept in the run record
+#: and the stderr report.
 REF_PROBE_MS = 6.0
 REF_PAR_PROBE_MS = 8.0
-#: batch jobs per run; the batch rate is the faster job's, since one ~2 s
-#: job alone is too noisy a sample
-BATCH_JOBS = 2
 #: rounds between a slow query's first try and its retry (~1 s of queries)
 RETRY_LAG = 200
+#: build_serve times one phrase query per this many BM25 queries (phrase
+#: latency is a per-layer mean, so ~100 samples suffice)
+PHRASE_EVERY = 10
 #: Spark runs local[CORES] (nproc on the reference box) with this driver
 #: heap, and every build and append writes CORES buckets: one task per core
 #: and stage at this corpus size, where the default 16 adds waves of tasks
@@ -68,17 +68,19 @@ class Scale:
     n_docs: int = 1000
     exhaustive_checks: int = 50  # per answer set, seeded sample
     min_queries: int = 1000   # BM25 queries timed per run (p99 needs >= 1000)
-    batch_size: int = 1024
+    # B of ingest's batch job, whose texts its first group round serves
+    batch_size: int = 512
 
 
 # ---------------------------------------------------------------- helpers
-def percentile_tail(lat_ms: list[float]) -> tuple[float, float, int]:
-    """(p50, tail, tail_pct): the tail is the highest of p99/p95/p90 that
-    still has at least ten samples beyond it (the median if none has)."""
+def percentile_tail(lat_ms: list[float]) -> tuple[float, float, float]:
+    """(p50, tail, tail_pct): the tail is p99, or the highest percentile
+    that still has ten samples beyond it when p99 has fewer (no lower than
+    the median)."""
     xs = sorted(lat_ms)
     n = len(xs)
-    pct = next((p for p in (99, 95, 90) if n * (100 - p) / 100 >= 10), 50)
-    return statistics.median(xs), xs[min(n - 1, math.ceil(n * pct / 100) - 1)], pct
+    rank = max(min(math.ceil(n * 0.99), n - 10), math.ceil(n / 2))
+    return statistics.median(xs), xs[rank - 1], 100.0 * rank / n
 
 
 def dir_bytes_files(path: str) -> tuple[int, int]:
@@ -175,16 +177,18 @@ class Query:
 
 def query_mix(rng: random.Random, corpus: Corpus, live: list[int], n: int,
               phrase: bool = False) -> list[Query]:
-    """n seeded queries, the families in FAMILY_WEIGHTS proportions (exact
-    up to one cycle of the weights), shuffled. A phrase mix leaves out the
+    """n seeded queries, the families in FAMILY_WEIGHTS proportions (each
+    within one query of its share), shuffled. A phrase mix leaves out the
     Zipf mix, which is a BM25 family (three unrelated terms are no phrase),
     and its OOV query pairs the unknown term with w1, so that it is a
     phrase; a BM25 OOV query is the unknown term alone."""
     from olaf_spark.synth import NEEDLE_EVERY
 
     needles = [d for d in live if d % NEEDLE_EVERY == 0]
-    cycle = [f for f, w in FAMILY_WEIGHTS.items() if not (phrase and f == "zipf")
-             for _ in range(w)]
+    weights = {f: w for f, w in FAMILY_WEIGHTS.items() if not (phrase and f == "zipf")}
+    # each family spread evenly over the cycle, so that the first n of it
+    # hold every family's share to within one
+    cycle = [f for _, f in sorted(((k + 0.5) / w, f) for f, w in weights.items() for k in range(w))]
     out = []
     for i in range(n):
         fam = cycle[i % len(cycle)]
@@ -265,8 +269,14 @@ def spark_conf(work: str) -> dict:
         "spark.driver.memory": DRIVER_MEMORY,
         "spark.local.dir": local,
         "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
-        # the JVM's perf-data file ignores java.io.tmpdir: switch it off
-        "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={local} -XX:-UsePerfData",
+        # the JVM's perf-data file ignores java.io.tmpdir: switch it off.
+        # C1 only: a run's JVM lives about a minute and its jobs are small,
+        # so C2's compile threads would mostly take the 4 cores from tasks
+        # (a build_serve run on the 4-core reference box: 70 s -> 50 s
+        # wall, setup 24 s -> 18 s)
+        "spark.driver.extraJavaOptions": (
+            f"-Djava.io.tmpdir={local} -XX:-UsePerfData -XX:TieredStopAtLevel=1"
+        ),
         "spark.ui.showConsoleProgress": "false",
         # the status store must keep every job of a run for the tracer
         "spark.ui.retainedJobs": "100000",
@@ -302,6 +312,7 @@ class Run:
         self.par_probe_ms = REF_PAR_PROBE_MS
         self.raw_e2e: dict[str, float] = {}
         self.by_family: dict[str, float] = {}
+        self.query_log: dict[str, list] = {}  # every query's latency and family
 
     # ---- set-up ------------------------------------------------------------
     def start_session(self) -> None:
@@ -351,22 +362,22 @@ class Run:
             return None, time.perf_counter() - t0
         return res, time.perf_counter() - t0
 
-    def query_loop(self, budget_s: float, min_n: int, families) -> tuple[list, list, list]:
+    def query_loop(self, budget_s: float, min_n: int, families) -> tuple[list, list]:
         """Interleave `families` [(queries, op, every)] -- a family runs on
         every `every`-th round -- until min_n rounds have run and budget_s
         has passed, probing the box's speed every 0.25 s. Returns per
-        family the first-pass [(query, answer)] (kept for the checks),
-        every latency in ms, and when each query ended.
+        family the first-pass [(query, answer)] (kept for the checks) and
+        every latency in ms.
 
-        A query of the first family slower than that family's running p75
+        A query of the first family slower than that family's running p90
         is timed once more RETRY_LAG rounds later (or after the loop) and
         keeps the lower time; a retry answering otherwise is a failed op.
         A host hiccup (up to ~10x a query's time here) then no longer
-        decides the p99, while a query that is slow every time still does.
-        The lag keeps a retry out of the hiccup that slowed the first try."""
+        decides the p99, while a query that is slow every time still does;
+        a query below p90 cannot reach the tail. The lag keeps a retry out
+        of the hiccup that slowed the first try."""
         answers = [[] for _ in families]
         lat = [[] for _ in families]
-        stamps = [[] for _ in families]
         seen: list[float] = []  # the first family's first tries, sorted
         pending: deque[tuple[int, int]] = deque()  # (round, j) awaiting a retry
 
@@ -376,9 +387,7 @@ class Run:
             res, dt = self.timed(lambda: op(q))
             if j < len(answers[0]) and answers[0][j][1] is not None:
                 self.check(res == answers[0][j][1])
-            if dt * 1e3 < lat[0][j]:
-                lat[0][j] = dt * 1e3
-                stamps[0][j] = time.perf_counter()
+            lat[0][j] = min(lat[0][j], dt * 1e3)
 
         t_end = time.perf_counter() + budget_s
         i = 0
@@ -390,21 +399,20 @@ class Run:
                 q = qs[j % len(qs)]
                 res, dt = self.timed(lambda: op(q))
                 lat[f].append(dt * 1e3)
-                stamps[f].append(time.perf_counter())
                 if time.perf_counter() - self._last_probe > 0.25:
                     self.probe()
                 if j < len(qs):
                     answers[f].append((q, res))
                 if f == 0:
                     bisect.insort(seen, dt * 1e3)
-                    if dt * 1e3 > seen[int(len(seen) * 0.75)]:
+                    if dt * 1e3 > seen[int(len(seen) * 0.9)]:
                         pending.append((i, j))
                     if pending and i - pending[0][0] >= RETRY_LAG:
                         retry(pending.popleft()[1])
             i += 1
         while pending:
             retry(pending.popleft()[1])
-        return answers, lat, stamps
+        return answers, lat
 
     def probe(self, n: int = 1) -> None:
         """Time two fixed kernels between ops: the box's speed at that
@@ -432,32 +440,6 @@ class Run:
             self.par_probes.append((t2, (t2 - t1) * 1e3))
         self._last_probe = time.perf_counter()
 
-    def probed(self, fn):
-        """self.timed(fn) with three probes on each side, so the run's
-        speed sample, which scales the batch rate, covers the batch jobs."""
-        self.probe(3)
-        res = self.timed(fn)
-        self.probe(3)
-        return res
-
-    def at_reference_speed(self, lat_ms: list[float], stamps: list[float], power: float) -> list[float]:
-        """Each latency divided by (s1 * s4) ** power, where s1 and s4 are
-        the one-thread and the CORES-thread slowdowns when it ended, each
-        the median of the five probes nearest in time. The p50 is taken
-        with power 1/2 (the geometric mean) and the tail with power 1: on
-        five seeds per workload the tail moved about as much as the
-        product, the median about as much as the mean (README)."""
-        import numpy as np
-
-        def slowdown(probes, ref_ms):
-            pt = np.array([t for t, _ in probes])
-            pv = np.array([v for _, v in probes])
-            i = np.clip(np.searchsorted(pt, stamps), 2, pt.size - 3)
-            return np.median(np.stack([pv[i + k] for k in range(-2, 3)]), axis=0) / ref_ms
-
-        both = slowdown(self.probes, REF_PROBE_MS) * slowdown(self.par_probes, REF_PAR_PROBE_MS)
-        return list(np.asarray(lat_ms) / both ** power)
-
     def check(self, ok: bool) -> None:
         if not ok:
             self.failed += 1
@@ -473,56 +455,46 @@ class Run:
         for i, (q, got) in enumerate(answers):
             self.check(check_bm25(q, got, lists_fn if i in sample else None))
 
-    def batch_jobs(self, make_df, queries) -> tuple[list, float]:
-        """BATCH_JOBS batches, each the plan (the driver-side call) and the
-        job, which collects its rows so that they can be checked. Returns
-        each job's rows and the fastest job's seconds."""
+    def batch_job(self, make_df, queries) -> list | None:
+        """One batch: the plan (the driver-side call) and the job, which
+        collects its rows so that they can be checked."""
         def op():
             with self.tr.span("batch.plan"):
                 df = make_df(queries)
             with self.tr.span("batch.job", spark_call=True):
                 return df.collect()
 
-        results, times = [], []
-        for _ in range(BATCH_JOBS):
-            rows, dt = self.probed(op)
-            results.append(rows)
-            times.append(dt)
-        return results, min(times)
+        return self.timed(op)[0]
 
     # ---- metrics -----------------------------------------------------------
-    def finish_metrics(self, setup_s: float, index, queries, batch, size_bytes: int) -> None:
+    def finish_metrics(self, setup_s: float, index, queries, size_bytes: int) -> None:
         """End-to-end metrics, unscaled into `raw_e2e` and at the reference
         speed (see REF_PROBE_MS) into `e2e`. index = (docs, s), queries =
-        (latencies ms, when each ended, family of each), batch = (queries,
-        s of the fastest job).
+        (latencies ms, family of each).
 
-        Each query is scaled by the probes nearest to it, the batch rate by
-        the run's median probe: a probe right after a Spark job still
-        shares the cores with the JVM winding down. Set-up and indexing are
-        not scaled: on ten seeds per workload, scaling widened the set-up
-        spread on both and gave indexing no steady gain."""
+        Every query latency is divided by the run's slowdown: the geometric
+        mean of its median one-thread and CORES-thread probe, each over its
+        reference. One factor per run, not one per query: each query's own
+        few probes are noisy, and the tail then picks the queries whose
+        factor came out low (README). Set-up and indexing are not scaled:
+        on ten seeds per workload, scaling widened the set-up spread on
+        both and gave indexing no steady gain."""
         docs, index_s = index
-        q_lat, q_stamps, q_fam = queries
-        batch_n, batch_s = batch
-        scaled = self.at_reference_speed(q_lat, q_stamps, 0.5)
-        tail_scaled = self.at_reference_speed(q_lat, q_stamps, 1.0)
+        q_lat, q_fam = queries
+        self.query_log = {"lat_ms": q_lat, "family": q_fam}
         self.probe_ms = statistics.median(v for _, v in self.probes)
         self.par_probe_ms = statistics.median(v for _, v in self.par_probes)
+        slowdown = math.sqrt(self.probe_ms / REF_PROBE_MS * self.par_probe_ms / REF_PAR_PROBE_MS)
+        scaled = [v / slowdown for v in q_lat]
         self.samples["query"] = len(q_lat)
-        for out, lat, tail_lat, speed in (
-            (self.raw_e2e, q_lat, q_lat, 1.0),
-            (self.e2e, scaled, tail_scaled, self.probe_ms / REF_PROBE_MS),
-        ):
-            p50 = percentile_tail(lat)[0]
-            _, tail, pct = percentile_tail(tail_lat)
+        for out, lat in ((self.raw_e2e, q_lat), (self.e2e, scaled)):
+            p50, tail, pct = percentile_tail(lat)
             out.update(
                 setup_s=setup_s,
                 index_docs_per_s=docs / index_s,
                 index_bytes_per_text_byte=size_bytes / self.text_bytes_indexed,
                 query_p50_ms=p50,
                 query_p99_ms=tail,
-                batch_queries_per_s=batch_n / batch_s * speed,
             )
         self.samples["query_tail_pct"] = pct
         # each family's scaled p50 (and its sample count), so that a change
@@ -532,7 +504,7 @@ class Run:
             self.samples[f"query.{fam}"] = len(xs)
             self.by_family[f"query.{fam}.p50_ms"] = statistics.median(xs) if xs else 0.0
 
-    def layer_metrics(self, phases: list[str], n_phrase: dict[str, int]) -> None:
+    def layer_metrics(self, phases: list[str], n_phrase: dict[str, int], n_batch: int = 0) -> None:
         """Per-layer numbers from the spans, lineage rows and the index dirs."""
         import pyarrow.dataset as ds
 
@@ -545,6 +517,8 @@ class Run:
                      "incremental.append_index", "incremental.compact_index",
                      "batch.plan", "batch.job"):
             L[f"{name}.s"] = tr.self_s(name)
+        batch_s = L["batch.plan.s"] + L["batch.job.s"]
+        L["batch.queries_per_s"] = n_batch / batch_s if batch_s else 0.0
         seg = merge = 0.0
         lineage_dirs = [
             os.path.join(dp, "lineage")
@@ -610,9 +584,10 @@ class Run:
         L["bench.probe_ms"] = self.probe_ms
         L.update(self.by_family)
 
-    def peak_rss_mb(self) -> float:
+    def peak_rss_mb(self) -> tuple[float, float]:
+        """(driver, JVM) VmHWM in MB."""
         jvm_pid = self.spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid()
-        return vm_hwm_mb("self") + vm_hwm_mb(jvm_pid)
+        return vm_hwm_mb("self"), vm_hwm_mb(jvm_pid)
 
     def stop(self) -> None:
         if self._pool is not None:
@@ -697,7 +672,6 @@ def check_batch(rows, batch_queries, answers) -> bool:
 
 
 def build_serve(run: Run) -> None:
-    import olaf_spark.batch as batch
     import olaf_spark.bigram as bigram
     import olaf_spark.indexer as indexer
     import olaf_spark.phrase as phrase
@@ -736,11 +710,9 @@ def build_serve(run: Run) -> None:
         ix = indexer.Index.load(ix_dir)
         tr.count("incremental.parts", 1)
 
-        # the first batch_size BM25 queries are the batch's texts: the loop
-        # serves each of them, so every batch row is checked
-        n_bm25 = max(sc.min_queries, sc.batch_size)
+        n_bm25 = sc.min_queries
         bm25 = query_mix(run.rng, run.corpus, live, n_bm25)
-        phr = query_mix(run.rng, run.corpus, live, n_bm25 // 6, phrase=True)
+        phr = query_mix(run.rng, run.corpus, live, n_bm25 // PHRASE_EVERY, phrase=True)
 
         def bm25_op(q):
             with tr.span("wand.query_index"):
@@ -753,21 +725,14 @@ def build_serve(run: Run) -> None:
 
         with tr.span("bench.serve"):
             # phrase latency is a per-layer mean: fewer samples suffice
-            (bm25_ans, phr_ans), (q_lat, p_lat), (q_stamps, _) = run.query_loop(
-                run.seconds, n_bm25, [(bm25, bm25_op, 1), (phr, phrase_op, 6)]
+            (bm25_ans, phr_ans), (q_lat, p_lat) = run.query_loop(
+                run.seconds, n_bm25, [(bm25, bm25_op, 1), (phr, phrase_op, PHRASE_EVERY)]
             )
         q_fam = [bm25[j % len(bm25)].family for j in range(len(q_lat))]
         n_phrase = {
             "head_head": sum(1 for i in range(len(p_lat)) if phr[i % len(phr)].family == "head_head")
         }
         n_phrase["rare"] = len(p_lat) - n_phrase["head_head"]
-
-        # ---- batch: B queries as one distributed job -----------------------
-        bq = [(i, bm25[i].text) for i in range(sc.batch_size)]
-        with tr.span("bench.batch"):
-            batches, batch_s = run.batch_jobs(
-                lambda qs: batch.batch_query_index(spark, ix, qs, k=K), bq
-            )
 
     # ---- checks (outside the timed loop) ----------------------------------
     if run.plant_wrong and bm25_ans:
@@ -778,16 +743,13 @@ def build_serve(run: Run) -> None:
         run.check_bm25_all(bm25_ans, lists_fn)
         for q, got in phr_ans:
             run.check(check_phrase(q, got, run.corpus))
-        for rows in batches:
-            run.check(check_batch(rows, bq, bm25_ans))
 
     run.finish_metrics(
-        setup_s, (len(run.doc_ids), build_s), (q_lat, q_stamps, q_fam),
-        (len(bq), batch_s), size_bytes,
+        setup_s, (len(run.doc_ids), build_s), (q_lat, q_fam), size_bytes,
     )
     run.samples["phrase"] = len(p_lat)
     if tr.enabled:
-        run.layer_metrics(["bench.build", "bench.serve", "bench.batch"], n_phrase)
+        run.layer_metrics(["bench.build", "bench.serve"], n_phrase)
 
 
 def ingest(run: Run) -> None:
@@ -821,21 +783,19 @@ def ingest(run: Run) -> None:
 
         tomb = run.pick_tombstones(base_ids)
         q_lat: list[float] = []
-        q_stamps: list[float] = []
         q_fam: list[str] = []
 
         def group_round(group, qs, budget, min_n):
             def op(q):
                 with tr.span("incremental.group_topk"):
                     return group.topk(q.text, K)
-            (ans,), (lat,), (stamps,) = run.query_loop(budget, min_n, [(qs, op, 1)])
+            (ans,), (lat,) = run.query_loop(budget, min_n, [(qs, op, 1)])
             q_lat.extend(lat)
-            q_stamps.extend(stamps)
             q_fam.extend(qs[j % len(qs)].family for j in range(len(lat)))
             return ans
 
-        # append a delta with positions, then group serving and a B=1024
-        # group batch
+        # append the delta with positions, then group serving and one group
+        # batch
         with tr.span("bench.append"):
             delta, append_s = run.timed(lambda: incremental.append_index(
                 spark, in_range(delta_ids), base_dir, n_buckets=CORES, with_positions=True,
@@ -851,7 +811,7 @@ def ingest(run: Run) -> None:
             ans1 = group_round(g1, qs1, run.seconds / 2, sc.batch_size)
         bq = [(i, qs1[i].text) for i in range(sc.batch_size)]
         with tr.span("bench.batch"):
-            batches, batch_s = run.batch_jobs(
+            rows = run.batch_job(
                 lambda qs: batch.batch_query_index_group(spark, g1, qs, k=K), bq
             )
         # these answers are checked before the deletes change the group
@@ -860,8 +820,7 @@ def ingest(run: Run) -> None:
             ans1[0] = (q0, [(d + 1, s) for d, s in (a0 or [(0, 1.0)])])
         with tr.span("bench.check"):
             run.check_bm25_all(ans1, g1.load_term_postings)
-            for rows in batches:
-                run.check(check_batch(rows, bq, ans1))
+            run.check(check_batch(rows, bq, ans1))
 
         # delete ~1% of the docs, then serve the group again
         with tr.span("bench.delete"):
@@ -895,13 +854,12 @@ def ingest(run: Run) -> None:
             run.check(got is not None and same_ranking(wand.query_index(spark, cix, q.text, K), got))
 
     run.finish_metrics(
-        setup_s, (len(delta_ids), append_s), (q_lat, q_stamps, q_fam),
-        (len(bq), batch_s), size_bytes,
+        setup_s, (len(delta_ids), append_s), (q_lat, q_fam), size_bytes,
     )
     if tr.enabled:
         run.layer_metrics(
             ["bench.append", "bench.group_queries", "bench.batch", "bench.delete", "bench.compact"],
-            {},
+            {}, len(bq),
         )
 
 
