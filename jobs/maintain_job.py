@@ -25,8 +25,8 @@ Hadoop-supported URI (s3://, hdfs://, ...).
 
 Reference analogue: Olaf's store / delete / re-store maintenance commands
 against the live LMDB store (README.md:245-272, src/olaf_db.c:309-311);
-compaction is the segment fold that makes single-index WAND serving valid
-again. Compaction is RESUMABLE: re-running a killed `compact` with the
+compaction is the segment fold that puts main + deltas back into one
+index. Compaction is RESUMABLE: re-running a killed `compact` with the
 same --out skips committed tb-range groups (per-group lineage).
 
 Each subcommand prints one JSON metrics line (the store-summary analogue,

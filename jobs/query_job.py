@@ -10,17 +10,17 @@ Results: (query_id, rank, doc_id, score) — Olaf's result-record shape
 parquet when --out is given, else printed as JSON lines.
 
 Two execution paths, rank-identical:
-  * few queries  -> driver-side serving scorer (vectorized / block-max WAND)
+  * few queries  -> driver-side serving scorer (vectorized / blockmax;
+    wand is an alias of blockmax; exhaustive is the test referent)
   * many queries -> --method distributed: the whole batch scored as ONE
     Spark job over the materialized index (olaf_spark.batch) — executors
     decode the packed posting rows of the broadcast query terms; no
     per-query job, no corpus re-tokenize.
 
-An index with live deltas (appended via jobs/maintain_job.py or the
-streaming sink) is served as an IndexGroup automatically: vectorized /
-blockmax / distributed all answer over main + deltas with group-global
-stats, rank- and score-identical to a compacted rebuild. wand/exhaustive
-are single-index referent scorers — compact first to use them.
+The index is always served as an IndexGroup: main plus any live deltas
+(appended via jobs/maintain_job.py or the streaming sink). Every method
+answers over the group with group-global stats, rank- and score-identical
+to a compacted rebuild.
 """
 
 from __future__ import annotations
@@ -41,6 +41,9 @@ def main() -> None:
         "--method",
         default="vectorized",
         choices=["vectorized", "blockmax", "wand", "exhaustive", "distributed"],
+        help="vectorized: eager decode; blockmax: block-max pruning with lazy "
+        "decode (wand is an alias); exhaustive: test referent; distributed: "
+        "the whole batch as one Spark job",
     )
     ap.add_argument("--out", default=None, help="parquet output path (default: stdout JSON)")
     ap.add_argument(
@@ -66,20 +69,10 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    from olaf_spark.incremental import IndexGroup, _delta_dirs
-    from olaf_spark.indexer import Index
-    from olaf_spark.wand import query_index
+    from olaf_spark.incremental import IndexGroup
 
     spark = SparkSession.builder.appName("olaf_spark_query").getOrCreate()
-    has_deltas = bool(_delta_dirs(args.index))
-    group = IndexGroup.load(args.index) if has_deltas else None
-    index = group.parts[0] if group is not None else Index.load(args.index)
-    if group is not None and args.method in ("wand", "exhaustive"):
-        raise SystemExit(
-            f"--method {args.method} is a single-index referent scorer; this "
-            "index has live deltas — use vectorized/blockmax/distributed, or "
-            "compact first (jobs/maintain_job.py compact)"
-        )
+    group = IndexGroup.load(args.index)
 
     if args.phrase and args.fuzzy:
         raise SystemExit(
@@ -101,7 +94,7 @@ def main() -> None:
 
             out_df = batch_phrase_topk(
                 spark, args.index, list(enumerate(queries)), k=args.k,
-                cfg=index.cfg, min_tf=args.min_tf,
+                cfg=group.cfg, min_tf=args.min_tf,
             ).select(
                 "query_id", "rank", "doc_id",
                 F.col("phrase_tf").cast("double").alias("score"),
@@ -119,7 +112,7 @@ def main() -> None:
         for qid, q in enumerate(queries):
             for rank, (doc_id, tf) in enumerate(
                 phrase_topk(
-                    args.index, q, k=args.k, cfg=index.cfg, min_tf=args.min_tf
+                    args.index, q, k=args.k, cfg=group.cfg, min_tf=args.min_tf
                 ),
                 start=1,
             ):
@@ -140,19 +133,17 @@ def main() -> None:
 
         queries = [
             " ".join(
-                sorted(set().union(*[edit1_variants(t) for t in tokenize_py(q, index.cfg)]) or set())
+                sorted(set().union(*[edit1_variants(t) for t in tokenize_py(q, group.cfg)]) or set())
             )
             for q in queries
         ]
 
     if args.method == "distributed":
-        from olaf_spark.batch import batch_query_index, batch_query_index_group
+        from olaf_spark.batch import batch_query_index_group
 
-        if group is not None:
-            out_df = batch_query_index_group(spark, group, list(enumerate(queries)), k=args.k)
-        else:
-            out_df = batch_query_index(spark, index, list(enumerate(queries)), k=args.k)
-        out_df = out_df.select("query_id", "rank", "doc_id", "score")
+        out_df = batch_query_index_group(
+            spark, group, list(enumerate(queries)), k=args.k
+        ).select("query_id", "rank", "doc_id", "score")
         if args.out:
             out_df.write.mode("overwrite").parquet(args.out)
         else:
@@ -163,11 +154,9 @@ def main() -> None:
 
     rows = []
     for qid, q in enumerate(queries):
-        if group is not None:
-            hits = group.topk(q, args.k, method=args.method)
-        else:
-            hits = query_index(spark, index, q, k=args.k, method=args.method)
-        for rank, (doc_id, score) in enumerate(hits, start=1):
+        for rank, (doc_id, score) in enumerate(
+            group.topk(q, args.k, method=args.method), start=1
+        ):
             rows.append((qid, rank, doc_id, float(score)))
 
     if args.out:

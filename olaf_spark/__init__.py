@@ -16,8 +16,8 @@ Layout:
   codec      — delta + varbyte posting-list compression (numpy, vectorized)
   indexer    — distributed index build: postings segments, merge, lineage, resume
   scorer     — BM25 top-k: ad-hoc DataFrame path
-  wand       — serving scorers over packed postings: vectorized exact,
-               vectorized block-max pruning with lazy block decode, DAAT WAND
+  wand       — serving scorers over packed postings: vectorized exact and
+               vectorized block-max pruning with lazy block decode
   batch      — distributed batch BM25: a whole query batch as ONE Spark job
   fuzzy      — edit-distance-1 term lookup (Olaf ±searchRange analogue)
   incremental— delta appends, merged-on-read groups, doc-range-parallel compaction

@@ -54,6 +54,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from olaf_spark.codec import decode_ids_blocked, varbyte_decode
+from olaf_spark.incremental import IndexGroup
 from olaf_spark.indexer import Index, in_expr_int, term_id_py, tombstone_keep_mask
 from olaf_spark.scorer import idf as idf_fn
 from olaf_spark.tokenize import tokenize_py
@@ -68,8 +69,7 @@ _MAX_ACC_CELLS = 16_000_000
 
 
 class _BatchPlan:
-    """Driver-side query-batch analysis shared by the single-index and
-    group batch paths.
+    """Driver-side query-batch analysis.
 
     tid_ord:   term_id -> ordinal of the term in ASCENDING-STRING order of
                the batch's distinct terms (folding by ordinal reproduces
@@ -113,7 +113,6 @@ class _BatchPlan:
 
 def _make_decode_proxies(
     bstate,
-    n_docs: int,
     avgdl: float,
     k1: float,
     b: float,
@@ -125,11 +124,10 @@ def _make_decode_proxies(
     per-subscriber duplication — queries attach after the doc exchange.
 
     bstate is a SparkContext BROADCAST of (tid_ord, ord_reps, tombstone
-    int64 array | None, idf_map | None) — captured by handle, not by value
+    int64 array | None, idf_map) — captured by handle, not by value
     (closure capture would re-pickle the maps into every task launch).
-    idf_map {term_id: w} overrides the per-row df-derived idf — the GROUP
-    path passes group-global weights there (a part row's df column is
-    part-local).
+    idf_map {term_id: w} holds the group-global weights (a part row's df
+    column is part-local).
     """
 
     def decode(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -139,7 +137,6 @@ def _make_decode_proxies(
                 continue
             out_doc, out_ord, out_contrib = [], [], []
             terms_np = pdf["term_id"].to_numpy(dtype=np.int64)
-            dfs_np = pdf["df"].to_numpy(dtype=np.int64)
             id_bufs = pdf["doc_ids_bin"].to_numpy()
             tf_bufs = pdf["tfs_bin"].to_numpy()
             dl_bufs = pdf["doc_lens_bin"].to_numpy()
@@ -156,7 +153,7 @@ def _make_decode_proxies(
                     ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
                 if ids.size == 0:
                     continue
-                w = idf_map[tid] if idf_map is not None else idf_fn(n_docs, int(dfs_np[i]))
+                w = idf_map[tid]
                 tfs_f = tfs.astype(np.float64)
                 dls_f = dls.astype(np.float64)
                 # association order matches oracle: idf * (tf*(k1+1)/denom)
@@ -262,35 +259,6 @@ def _make_score_topk(bstate, k: int, min_score: float):
     return score
 
 
-def _run_batch(
-    spark: SparkSession,
-    plan: _BatchPlan,
-    scan: DataFrame,
-    bstate,
-    n_docs: int,
-    avgdl: float,
-    cfg,
-    k: int,
-    min_score: float,
-) -> DataFrame:
-    proxies = scan.mapInPandas(
-        _make_decode_proxies(bstate, n_docs, avgdl, cfg.k1, cfg.b, cfg.block_size),
-        PROXY_SCHEMA,
-    )
-    candidates = proxies.repartition("doc_id").mapInPandas(
-        _make_score_topk(bstate, k, min_score), CANDIDATE_SCHEMA
-    )
-    w = Window.partitionBy("rep").orderBy(F.col("score").desc(), F.col("doc_id").asc())
-    ranked = (
-        candidates.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
-    mapping = spark.createDataFrame(plan.mapping, "rep long, query_id long")
-    return ranked.join(F.broadcast(mapping), "rep").select(
-        "query_id", "doc_id", "score", F.col("rank").cast("long").alias("rank")
-    )
-
-
 def batch_query_index(
     spark: SparkSession,
     index: Index,
@@ -299,48 +267,28 @@ def batch_query_index(
     min_score: float | None = None,
 ) -> DataFrame:
     """(query_id, doc_id, score, rank) — BM25 top-k for EVERY query in the
-    batch, as one distributed plan over the materialized index.
+    batch, as one distributed plan over the materialized index: the
+    one-part batch_query_index_group.
 
     queries: (query_id, query_text) pairs. k/min_score default to the
     index config's max_results / min_score (olaf_config.c:89-100).
     """
-    cfg = index.cfg
-    if k is None:
-        k = cfg.max_results
-    if min_score is None:
-        min_score = cfg.min_score
-
-    plan = _BatchPlan(queries, cfg)
-    if not plan.mapping:
-        return spark.createDataFrame(
-            [], "query_id long, doc_id long, score double, rank long"
-        )
-    qids_terms = plan.term_ids
-    tbs = sorted({t % cfg.n_segments for t in qids_terms})
-
-    # ---- one scan: hive pruning on tb, row-group pruning on term_id --------
-    postings = index.postings(spark).where(
-        in_expr_int("tb", tbs) & in_expr_int("term_id", qids_terms)
-    )
-    ts_arr = index.tombstones_arr()  # cached sorted array rides the broadcast
-    bstate = spark.sparkContext.broadcast((plan.tid_ord, plan.ord_reps, ts_arr, None))
-    return _run_batch(
-        spark, plan, postings, bstate, index.n_docs, index.avgdl, cfg, k, min_score
-    )
+    return batch_query_index_group(spark, IndexGroup([index]), queries, k, min_score)
 
 
 def batch_query_index_group(
     spark: SparkSession,
-    group,
+    group: IndexGroup,
     queries: Iterable[tuple[int, str]],
     k: int | None = None,
     min_score: float | None = None,
 ) -> DataFrame:
-    """Distributed batch BM25 over an IndexGroup (main + live deltas) — the
-    bulk path stays available BETWEEN appends and compaction, exactly like
-    driver-side group serving (incremental.IndexGroup.topk).
+    """Distributed batch BM25 over an IndexGroup (main + live deltas; a
+    single index is the one-part group) — the bulk path stays available
+    BETWEEN appends and compaction, exactly like driver-side group serving
+    (incremental.IndexGroup.topk).
 
-    Same one-job shape as batch_query_index, with two group twists:
+    Two group twists on the module's one-job shape:
       * the scan is the UNION of every part's pruned posting scan (each
         part prunes by hive tb + term_id row-group stats independently);
       * idf must be GROUP-global while a part row's df column is
@@ -351,7 +299,6 @@ def batch_query_index_group(
     each (query, doc) once per term — rank/score-identical to group
     serving and to a clean rebuild (tests/test_batch.py).
     """
-
     cfg = group.cfg
     if k is None:
         k = cfg.max_results
@@ -366,25 +313,39 @@ def batch_query_index_group(
     qids_terms = plan.term_ids
     tbs = sorted({t % cfg.n_segments for t in qids_terms})
 
-    # group-global df from the single shared source (concurrent header-only
-    # reads) — a part row's df column is part-local, so idf resolves
-    # driver-side and rides the broadcast
+    # group-global df from the single shared source (header-only reads) —
+    # a part row's df column is part-local, so idf resolves driver-side and
+    # rides the broadcast
     idf_map = {
         tid: idf_fn(group.n_docs, df)
         for tid, df in group.term_dfs(qids_terms).items()
     }
-
     ts_arr = group.tombstones_arr()  # sorted union across parts
     bstate = spark.sparkContext.broadcast(
         (plan.tid_ord, plan.ord_reps, ts_arr, idf_map)
     )
 
+    # ---- one scan per part: hive pruning on tb, row-group pruning on term_id
     scan = None
     for p in group.parts:
         part_scan = p.postings(spark).where(
             in_expr_int("tb", tbs) & in_expr_int("term_id", qids_terms)
         )
         scan = part_scan if scan is None else scan.unionByName(part_scan)
-    return _run_batch(
-        spark, plan, scan, bstate, group.n_docs, group.avgdl, cfg, k, min_score
+
+    proxies = scan.mapInPandas(
+        _make_decode_proxies(bstate, group.avgdl, cfg.k1, cfg.b, cfg.block_size),
+        PROXY_SCHEMA,
+    )
+    candidates = proxies.repartition("doc_id").mapInPandas(
+        _make_score_topk(bstate, k, min_score), CANDIDATE_SCHEMA
+    )
+    w = Window.partitionBy("rep").orderBy(F.col("score").desc(), F.col("doc_id").asc())
+    ranked = (
+        candidates.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+    )
+    mapping = spark.createDataFrame(plan.mapping, "rep long, query_id long")
+    return ranked.join(F.broadcast(mapping), "rep").select(
+        "query_id", "doc_id", "score", F.col("rank").cast("long").alias("rank")
     )

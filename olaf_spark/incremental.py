@@ -44,6 +44,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from olaf_spark import wand
 from olaf_spark.codec import (
     block_maxes,
     decode_ids_blocked,
@@ -58,12 +59,10 @@ from olaf_spark.indexer import (
     build_index,
     shard_from_id_col,
     sorted_tombstone_arr,
-    term_id_py,
     tombstone_keep_mask,
 )
 from olaf_spark.scorer import idf as idf_fn
-from olaf_spark.tokenize import tokenize_py
-from olaf_spark.wand import RawTermPostings, TermPostings, blockmax_topk, vectorized_topk
+from olaf_spark.wand import SERVING_METHODS, RawTermPostings, TermPostings, blockmax_topk
 
 _DELTAS = "deltas"
 
@@ -272,15 +271,26 @@ class IndexGroup:
             if p.tombstones() & ids:
                 p.undelete_docs(doc_ids)
 
+    def map_parts(self, fn) -> list:
+        """[fn(part) for every part]. Parts are independent parquet reads and
+        pyarrow releases the GIL, so several parts run concurrently — group
+        latency tracks the SLOWEST part, not the sum, as a steady append
+        stream accumulates deltas. One part (a single index) runs in the
+        calling thread: a pool would cost ~1 ms a query for nothing."""
+        if len(self.parts) == 1:
+            return [fn(self.parts[0])]
+        from concurrent.futures import ThreadPoolExecutor
+
+        with ThreadPoolExecutor(max_workers=min(8, len(self.parts))) as ex:
+            return list(ex.map(fn, self.parts))
+
     def term_dfs(self, term_ids: list[int]) -> dict[int, int]:
         """Group-global df per term: the per-(term, part) df recorded once
         per part (every chunk row of a term repeats its part's full df),
-        summed across parts. Header-only reads (term_id, df), fetched
-        concurrently per part — THE single source of group df semantics,
-        shared by driver serving (_fetch_rows derives the same sums from
-        its full-row fetch) and the distributed batch path."""
+        summed across parts. Header-only reads (term_id, df) — the batch
+        path's twin of the sums wand._fetch_posting_rows derives from its
+        full-row fetch."""
         import pyarrow.compute as pc
-        from concurrent.futures import ThreadPoolExecutor
 
         qids = sorted(set(int(t) for t in term_ids))
         tbs = sorted({i % self.cfg.n_segments for i in qids})
@@ -293,104 +303,23 @@ class IndexGroup:
                 part_df[tid] = int(df)  # dict assignment dedupes chunk rows
             return part_df
 
-        with ThreadPoolExecutor(max_workers=min(8, len(self.parts))) as ex:
-            per_part = list(ex.map(one, self.parts))
         out: dict[int, int] = {}
-        for part_df in per_part:
+        for part_df in self.map_parts(one):
             for tid, df in part_df.items():
                 out[tid] = out.get(tid, 0) + df
         return out
 
-    def _fetch_rows(self, query_text: str):
-        """Posting rows for the query terms from EVERY part, plus per-(term,
-        part) df. Returns (rows [(term, part_idx, row)], df_total {term: df}).
-        """
-        import pyarrow.compute as pc
-
-        cfg = self.cfg
-        qterms = sorted(set(tokenize_py(query_text, cfg)))
-        if not qterms:
-            return [], {}
-        id_to_term: dict[int, str] = {}
-        for t in qterms:
-            id_to_term.setdefault(term_id_py(t), t)
-        qids = sorted(id_to_term)
-        tbs = sorted({i % cfg.n_segments for i in qids})
-        flt = pc.field("tb").isin(tbs) & pc.field("term_id").isin(qids)
-        # parts are independent parquet reads and pyarrow releases the GIL —
-        # fetch them concurrently so group latency tracks the SLOWEST part,
-        # not the sum (a steady append stream accumulates many deltas)
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=min(8, len(self.parts))) as ex:
-            tables = list(
-                ex.map(lambda p: p.dataset().to_table(filter=flt), self.parts)
-            )
-        rows: list[tuple[str, int, dict]] = []
-        part_df: dict[tuple[str, int], int] = {}
-        for pi, tbl in enumerate(tables):
-            for r in tbl.to_pylist():
-                term = id_to_term[r["term_id"]]
-                rows.append((term, pi, r))
-                # every row of a term within one part carries that part's
-                # full df — record it once per (term, part)
-                part_df[(term, pi)] = int(r["df"])
-        df_total: dict[str, int] = {}
-        for (term, _), v in part_df.items():
-            df_total[term] = df_total.get(term, 0) + v
-        return rows, df_total
-
     def load_term_postings(self, query_text: str) -> list[TermPostings]:
-        """Merged-on-read decode: per term, concatenate every part's postings
-        and score with group-global (N, avgdl, df).
-
-        Mirrors wand.load_term_postings but with cross-part stats — the
-        exactness referent for the group's blockmax path (the default
-        serving path, load_term_postings_raw).
-        """
-        rows_all, df_total = self._fetch_rows(query_text)
-        per_term: dict[str, list[dict]] = {}
-        for term, _pi, r in rows_all:
-            per_term.setdefault(term, []).append(r)
-        cfg = self.cfg
-
-        ts_arr = self.tombstones_arr()
-        out: list[TermPostings] = []
-        for term in sorted(per_term):
-            rows = per_term[term]
-            w = idf_fn(self.n_docs, df_total[term])
-            ids_l, tfs_l, dls_l = [], [], []
-            for r in rows:
-                ids = decode_ids_blocked(bytes(r["doc_ids_bin"]), cfg.block_size)
-                ids_l.append(ids.astype(np.int64))
-                tfs_l.append(varbyte_decode(bytes(r["tfs_bin"])))
-                dls_l.append(varbyte_decode(bytes(r["doc_lens_bin"])))
-            ids = np.concatenate(ids_l)
-            tfs_f = np.concatenate(tfs_l).astype(np.float64)
-            dls_f = np.concatenate(dls_l).astype(np.float64)
-            if ts_arr is not None:
-                keep = tombstone_keep_mask(ids, ts_arr)
-                ids, tfs_f, dls_f = ids[keep], tfs_f[keep], dls_f[keep]
-            scores = w * (
-                tfs_f * (cfg.k1 + 1.0)
-                / (tfs_f + cfg.k1 * (1.0 - cfg.b + cfg.b * dls_f / self.avgdl))
-            )
-            out.append(
-                TermPostings(
-                    term=term, idf=w, doc_ids=ids, scores=scores,
-                    block_lasts=np.empty(0, dtype=np.int64),
-                    block_maxes=np.empty(0, dtype=np.float64),
-                    max_score=float(scores.max()) if scores.size else 0.0,
-                )
-            )
-        return out
+        """Merged-on-read eager decode — wand.load_term_postings over this
+        group."""
+        return wand.load_term_postings(None, self, query_text)
 
     def load_term_postings_raw(self, query_text: str) -> list[RawTermPostings]:
         """UNDECODED posting rows with group-valid block-max bounds — the
-        delta-phase scale path. Between appends and compaction, stored
-        block_maxes were computed with PART-local stats (w_p = idf over the
-        part's N/df, A_p = the part's avgdl); the group scores with
-        w_g / A_g. Rescaling is cheap math, no rebuild:
+        lazy-decode input of the blockmax scorer. Between appends and
+        compaction, stored block_maxes were computed with PART-local stats
+        (w_p = idf over the part's N/df, A_p = the part's avgdl); the group
+        scores with w_g / A_g. Rescaling is cheap math, no rebuild:
 
           contribution = idf * f(tf, dl; avgdl)   is linear in idf, and
           f(tf, dl; A_g) <= f(tf, dl; A_p) * max(1, A_g / A_p)
@@ -402,16 +331,18 @@ class IndexGroup:
         bound on any group-stat contribution in the block, and the lazy
         block-max scorer (wand.blockmax_topk) prunes the live group exactly
         like a compacted index. idf is strictly positive (ln(1 + x), x > 0),
-        so the quotient is always defined. Exact scores are still computed
-        from raw tf/dl with group stats at decode time — bounds only steer
-        the pruning, never the score. Olaf analogue: live appends share the
-        sorted B+tree read path with queries (src/olaf_db.c:309-311).
+        so the quotient is always defined. For one part the scale is exactly
+        (w/w) * max(1, A/A) = 1.0 (avgdl is total_tokens / n_docs in both),
+        so a single index keeps its stored bounds bit for bit. Exact scores
+        are still computed from raw tf/dl with group stats at decode time —
+        bounds only steer the pruning, never the score. Olaf analogue: live
+        appends share the sorted B+tree read path with queries
+        (src/olaf_db.c:309-311).
         """
-        rows_all, df_total = self._fetch_rows(query_text)
         out: list[RawTermPostings] = []
-        for term, pi, r in sorted(rows_all, key=lambda x: (x[0], x[1], x[2]["chunk"])):
+        for term, pi, df, r in wand._fetch_posting_rows(self, query_text):
             part = self.parts[pi]
-            w_g = idf_fn(self.n_docs, df_total[term])
+            w_g = idf_fn(self.n_docs, df)
             w_p = idf_fn(part.n_docs, int(r["df"]))
             scale = (w_g / w_p) * max(1.0, self.avgdl / part.avgdl)
             out.append(
@@ -438,28 +369,32 @@ class IndexGroup:
         min_score: float | None = None,
         _prune_stats: dict | None = None,
     ) -> list[tuple[int, float]]:
-        """Group top-k, rank- AND score-identical to a clean rebuild.
+        """Group top-k, rank- AND score-identical to a clean rebuild — the
+        one serving entry point (wand.query_index serves a single index as
+        the one-part group).
 
-        method="blockmax" (default): idf-rescaled block-max pruning + lazy
-        decode — only blocks that can beat theta are ever decoded, so the
-        delta-phase read path keeps its pruning exactly when the index is
-        biggest. method="vectorized": full decode, the exactness referent.
+        method (wand.SERVING_METHODS): "blockmax" (default) or its alias
+        "wand": idf-rescaled block-max pruning + lazy decode — only blocks
+        that can beat theta are ever decoded, so the delta-phase read path
+        keeps its pruning exactly when the index is biggest.
+        "vectorized": full decode, the exactness referent; "exhaustive":
+        the term-at-a-time test referent.
         """
-        if method not in ("blockmax", "vectorized"):
+        if method not in SERVING_METHODS:
             raise ValueError(
-                f"IndexGroup.topk method must be 'blockmax' or 'vectorized', "
-                f"got {method!r} (wand/exhaustive are single-index referent "
-                "scorers — compact first)"
+                f"unknown serving method {method!r}; expected one of "
+                f"{', '.join(SERVING_METHODS)}"
             )
         if min_score is None:
             min_score = self.cfg.min_score
-        if method == "blockmax":
+        if method in ("blockmax", "wand"):
             return blockmax_topk(
                 self.load_term_postings_raw(query_text),
                 k, self.cfg, self.avgdl, self.tombstones_arr(), min_score,
                 stats_out=_prune_stats,
             )
-        hits = vectorized_topk(self.load_term_postings(query_text), k)
+        score = wand.vectorized_topk if method == "vectorized" else wand.exhaustive_topk
+        hits = score(self.load_term_postings(query_text), k)
         if min_score > 0.0:
             hits = [(d, s) for d, s in hits if s >= min_score]
         return hits
@@ -678,8 +613,8 @@ def compact_index(
 
     Distributed pass per tb-range group: union every part's postings,
     shuffle by term shard, k-way merge per term, recompute block-max
-    metadata under group stats. After compaction the WAND serving path is
-    valid again for the whole corpus. The group's scoring statistics are
+    metadata under group stats, so the stored block maxes bound the folded
+    scores without rescaling. The group's scoring statistics are
     carried forward verbatim, so ranks and scores are unchanged by
     compaction.
 

@@ -792,6 +792,8 @@ def phrase_topk(
             at = np.searchsorted(cand, d)
             ok = (at < cand.size) & (cand[np.minimum(at, cand.size - 1)] == d)
             cand = d[ok]
+        if cand.size == 0:  # two units never share a doc: no phrase
+            return []
     # merge-on-read deletes apply here like every other query path: the
     # union of part tombstones drops candidates before any position decode
     ts_arr = _union_tombstones_arr(part_dirs)

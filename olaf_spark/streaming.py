@@ -228,19 +228,20 @@ def stream_bm25_queries(
     batch_threshold: int = 64,
 ):
     """foreachBatch BM25 serving: each micro-batch of (query_id, query_text)
-    rows is answered against the materialized index via the WAND scorer.
+    rows is answered against the materialized index via the block-max
+    scorer.
 
     LIVE-DELTA AWARE (Olaf analogue: the stdin query path reads the live
     store — every committed txn is visible to readers, src/olaf.c:213-220,
-    src/olaf_db.c:309-311): every micro-batch re-checks the index's delta
-    directory (a cheap listing, no data read) and serves through
-    IndexGroup when deltas exist — so queries streamed WHILE the append
-    sink (stream_index_appends) is committing deltas retrieve the newly
+    src/olaf_db.c:309-311): the index is always served as an IndexGroup,
+    and every micro-batch re-checks its delta directory (a cheap listing,
+    no data read) — so queries streamed WHILE the append sink
+    (stream_index_appends) is committing deltas retrieve the newly
     appended docs, exactly like the batch query_job already does. The
     group is rebuilt only when the delta set changes.
 
     FAT micro-batches (>= batch_threshold queries) route through the
-    distributed batch scorer (batch.batch_query_index[_group]) as ONE
+    distributed batch scorer (batch.batch_query_index_group) as ONE
     Spark job instead of the driver-serial per-row loop — the loop is
     right for a latency serving trickle, wrong for a bulk replay where
     per-query driver latency (~15 ms) times B dominates; results are
@@ -251,36 +252,29 @@ def stream_bm25_queries(
     same way: foreachBatch -> indexer.build_index(resume=True).
     """
     from olaf_spark.incremental import IndexGroup, _delta_dirs
-    from olaf_spark.wand import query_index
+    from olaf_spark.indexer import Index
 
     results: list[tuple] = []
     state: dict = {"sig": None, "group": None}
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
         deltas = tuple(_delta_dirs(index.index_dir))
-        if deltas and state["sig"] != deltas:
-            state["group"] = IndexGroup.load(index.index_dir)
+        if state["group"] is None or state["sig"] != deltas:
+            state["group"] = IndexGroup([index] + [Index.load(d) for d in deltas])
             state["sig"] = deltas
-        group = state["group"] if deltas else None
+        group = state["group"]
         queries = _dedup_query_rows(batch_df.collect(), "query_text")
         if len(queries) >= batch_threshold:
-            from olaf_spark.batch import batch_query_index, batch_query_index_group
+            from olaf_spark.batch import batch_query_index_group
 
-            if group is not None:
-                out = batch_query_index_group(spark, group, queries, k=k)
-            else:
-                out = batch_query_index(spark, index, queries, k=k)
+            out = batch_query_index_group(spark, group, queries, k=k)
             for r in sorted(
                 out.collect(), key=lambda r: (r["query_id"], r["rank"])
             ):
                 results.append((r["query_id"], r["rank"], r["doc_id"], r["score"]))
             return
         for qid, text in queries:
-            if group is not None:
-                hits = group.topk(text, k=k)
-            else:
-                hits = query_index(spark, index, text, k=k)
-            for rank, (doc_id, score) in enumerate(hits, start=1):
+            for rank, (doc_id, score) in enumerate(group.topk(text, k=k), start=1):
                 results.append((qid, rank, doc_id, score))
 
     return results, handle

@@ -1,4 +1,4 @@
-"""Document-at-a-time BM25 top-k with block-max WAND pruning.
+"""BM25 top-k serving: one read path and the vectorized scorers.
 
 Reference analogue: Olaf's query loop (`olaf_fp_matcher.c`) is a
 threshold-driven accumulator over sorted posting ranges: `minMatchCount`
@@ -6,156 +6,178 @@ is a score threshold that prunes low-evidence candidates, `maxResults`
 a bounded top-k heap (:275-341), and the sorted B+tree key layout is what
 makes range skipping possible (`olaf_fp_extractor.c:66-91`). Block-max
 WAND (Broder et al. 2003; Ding & Suel 2011 — public literature) is the
-principled version of that: per-block score upper bounds let the cursor
+principled version of that: per-block score upper bounds let the scorer
 skip whole blocks that cannot beat the current k-th best score.
 
-This scorer runs DRIVER-SIDE (or inside a single task for batch query
-sets) over the packed posting rows of the handful of query terms — the
-p50-latency serving path. The distributed DataFrame path (scorer.py)
-remains the bulk/batch path. Both are rank-identical to the oracle.
+Every index is served as an IndexGroup (incremental.py); a single index is
+the one-part group, so there is one read path:
 
-Determinism: a fully-evaluated doc sums its term contributions in
-ascending term order, float64 — the oracle's exact accumulation order.
-Top-k ordering: (score desc, doc_id asc), enforced via a heap keyed
-(score, -doc_id).
+  _fetch_posting_rows          the query terms' posting rows from every part
+  load_term_postings           eager decode, scored with group-global stats
+  IndexGroup.load_term_postings_raw
+                               undecoded rows with group-valid block maxes
+
+and one method table (SERVING_METHODS), shared by query_index and
+IndexGroup.topk:
+
+  vectorized   eager decode + one numpy accumulate (query_index default)
+  blockmax     block-max pruning in array operations + lazy block decode
+               (IndexGroup.topk default)
+  wand         alias of blockmax — block-max WAND, evaluated vectorized
+  exhaustive   term-at-a-time dict accumulate, the test referent
+
+There is no Python document-at-a-time loop: a cursor-per-list WAND loop
+measured ~16x slower than the vectorized scorer, so skipping happens in
+numpy (blockmax_topk).
+
+This runs DRIVER-SIDE — the p50-latency serving path. The distributed
+DataFrame paths (scorer.py, batch.py) remain the bulk paths. All are
+rank-identical to the oracle.
+
+Determinism: a doc sums its term contributions in ascending term order,
+float64 — the oracle's accumulation order. Top-k ordering: (score desc,
+doc_id asc).
 """
 
 from __future__ import annotations
 
-import heapq
+import itertools
 from dataclasses import dataclass
 
 import numpy as np
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
-from olaf_spark.codec import decode_block, decode_ids_blocked, varbyte_decode
+from olaf_spark.codec import decode_ids_blocked, varbyte_decode
 from olaf_spark.config import EngineConfig
-from olaf_spark.indexer import Index, sorted_tombstone_arr, tombstone_keep_mask
+from olaf_spark.indexer import sorted_tombstone_arr, tombstone_keep_mask
 from olaf_spark.scorer import idf as idf_fn
 from olaf_spark.tokenize import tokenize_py
+
+#: serving methods of query_index and IndexGroup.topk; "wand" is an alias
+#: of "blockmax"
+SERVING_METHODS = ("vectorized", "blockmax", "wand", "exhaustive")
 
 
 @dataclass
 class TermPostings:
     term: str
     idf: float
-    doc_ids: np.ndarray     # int64 ascending
+    doc_ids: np.ndarray     # int64, ascending within each posting row
     scores: np.ndarray      # float64 full BM25 contribution per posting
-    block_lasts: np.ndarray  # int64 last doc_id per block
-    block_maxes: np.ndarray  # float64 max contribution per block
-    max_score: float
 
 
-def _fetch_posting_rows(index: Index, qterms: list[str]) -> list[dict]:
-    """Read the ~|q| posting rows straight from parquet via pyarrow.
+def _as_group(index):
+    """A single Index is served as the one-part IndexGroup."""
+    from olaf_spark.incremental import IndexGroup
+
+    return index if isinstance(index, IndexGroup) else IndexGroup([index])
+
+
+def _fetch_posting_rows(group, query_text: str) -> list[tuple[str, int, int, dict]]:
+    """(term, part index, group df, row) for every posting row of the
+    query's distinct terms in every part, sorted by (term, part, chunk).
 
     The serving path does NOT launch a Spark job: like Olaf's query opening
     LMDB read-only (olaf_runner.c:34-39), it reads the index storage
-    directly. Postings are range-partitioned + sorted by term, so the isin
-    filter prunes via parquet row-group statistics. On a cluster this runs
-    wherever the server process lives; the Spark DataFrame path (scorer.py /
-    Index.postings) remains for batch jobs.
+    directly with pyarrow. Postings are range-partitioned + sorted by term,
+    so the filter prunes hive tb directories (~|q| of them) and then
+    row-group statistics within each file.
+
+    term is the query's term STRING, so accumulation order stays
+    ascending-by-term-string (the oracle's order — bit-identical float
+    sums); on a term_id collision the lexicographically first string labels
+    the merged postings. Group df sums each part's df (every chunk row of a
+    term within one part carries that part's full df).
     """
     import pyarrow.compute as pc
 
     from olaf_spark.indexer import term_id_py
 
-    dataset = index.dataset()
-    qids = sorted({term_id_py(t) for t in qterms})
-    tbs = sorted({i % index.cfg.n_segments for i in qids})
-    # hive partition pruning on tb -> reads ~|q| shard directories; row-group
-    # stats on the term_id-sorted shards prune further within each file
-    tbl = dataset.to_table(
-        filter=pc.field("tb").isin(tbs) & pc.field("term_id").isin(qids)
-    )
-    return tbl.to_pylist()
-
-
-def load_term_postings(
-    spark: SparkSession | None, index: Index, query_text: str
-) -> list[TermPostings]:
-    """Fetch + decode posting rows for the query's distinct terms.
-
-    `spark` is accepted for API symmetry but unused — see _fetch_posting_rows.
-    """
-    from olaf_spark.indexer import term_id_py
-
-    cfg = index.cfg
-    qterms = sorted(set(tokenize_py(query_text, cfg)))
+    qterms = sorted(set(tokenize_py(query_text, group.cfg)))
     if not qterms:
         return []
-    # id -> term STRING so accumulation order stays ascending-by-term-string
-    # (the oracle's order — bit-identical float sums); on an id collision the
-    # lexicographically first string labels the merged postings
     id_to_term: dict[int, str] = {}
     for t in qterms:
         id_to_term.setdefault(term_id_py(t), t)
-    rows = _fetch_posting_rows(index, qterms)
-    ts_arr = index.tombstones_arr()  # cached sorted array, no per-query build
+    qids = sorted(id_to_term)
+    tbs = sorted({i % group.cfg.n_segments for i in qids})
+    flt = pc.field("tb").isin(tbs) & pc.field("term_id").isin(qids)
+    tables = group.map_parts(lambda p: p.dataset().to_table(filter=flt))
+    rows = [
+        (id_to_term[r["term_id"]], pi, r)
+        for pi, tbl in enumerate(tables)
+        for r in tbl.to_pylist()
+    ]
+    part_df = {(term, pi): int(r["df"]) for term, pi, r in rows}
+    df: dict[str, int] = {}
+    for (term, _), v in part_df.items():
+        df[term] = df.get(term, 0) + v
+    rows.sort(key=lambda x: (x[0], x[1], x[2]["chunk"]))
+    return [(term, pi, df[term], r) for term, pi, r in rows]
+
+
+def load_term_postings(
+    spark: SparkSession | None, index, query_text: str
+) -> list[TermPostings]:
+    """Fetch + decode the query's postings: one TermPostings per term, every
+    part's rows concatenated, tombstones dropped, scored with group-global
+    (N, avgdl, df).
+
+    `index` is an Index or an IndexGroup. `spark` is accepted for API
+    symmetry but unused — see _fetch_posting_rows. A doc lives in exactly
+    one (part, chunk) per term, so per-doc accumulation order is still
+    term order for every scorer.
+    """
+    group = _as_group(index)
+    cfg = group.cfg
+    ts_arr = group.tombstones_arr()  # cached sorted array, no per-query build
     out = []
-    # chunked head terms arrive as several rows (chunk 0..n, doc-disjoint);
-    # one TermPostings per row is fine for every scorer — a doc lives in
-    # exactly one chunk, so per-doc accumulation order is still term order
-    for r in sorted(rows, key=lambda r: (id_to_term[r["term_id"]], r["chunk"])):
-        ids = decode_ids_blocked(bytes(r["doc_ids_bin"]), cfg.block_size)
-        tfs = varbyte_decode(bytes(r["tfs_bin"]))
-        dls = varbyte_decode(bytes(r["doc_lens_bin"]))
+    for term, entries in itertools.groupby(
+        _fetch_posting_rows(group, query_text), key=lambda e: e[0]
+    ):
+        entries = list(entries)
+        rows = [r for _, _, _, r in entries]
+        ids = np.concatenate([
+            decode_ids_blocked(bytes(r["doc_ids_bin"]), cfg.block_size).astype(np.int64)
+            for r in rows
+        ])
+        tfs = np.concatenate([varbyte_decode(bytes(r["tfs_bin"])) for r in rows])
+        dls = np.concatenate([varbyte_decode(bytes(r["doc_lens_bin"])) for r in rows])
         if ts_arr is not None:
-            # merge-on-read delete; block metadata stays valid: removing docs
-            # can only lower a block's true max, so stored maxes remain upper
-            # bounds and block_lasts remain sound skip targets.
-            keep = tombstone_keep_mask(ids.astype(np.int64), ts_arr)
+            keep = tombstone_keep_mask(ids, ts_arr)  # merge-on-read delete
             ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-        w = idf_fn(index.n_docs, int(r["df"]))
+        w = idf_fn(group.n_docs, entries[0][2])  # group df, same on every row
         tfs_f = tfs.astype(np.float64)
         dls_f = dls.astype(np.float64)
         # association order matches the oracle exactly: idf * (tf*(k1+1)/denom)
         scores = w * (
             tfs_f * (cfg.k1 + 1.0)
-            / (tfs_f + cfg.k1 * (1.0 - cfg.b + cfg.b * dls_f / index.avgdl))
+            / (tfs_f + cfg.k1 * (1.0 - cfg.b + cfg.b * dls_f / group.avgdl))
         )
-        bl = np.asarray(r["block_lasts"], dtype=np.int64)
-        bm = np.asarray(r["block_maxes"], dtype=np.float64)
-        out.append(
-            TermPostings(
-                term=id_to_term[r["term_id"]], idf=w,
-                doc_ids=ids.astype(np.int64), scores=scores,
-                block_lasts=bl, block_maxes=bm,
-                max_score=float(bm.max()) if bm.size else 0.0,
-            )
-        )
+        out.append(TermPostings(term=term, idf=w, doc_ids=ids, scores=scores))
     return out
 
 
-def vectorized_topk(lists: list[TermPostings], k: int) -> list[tuple[int, float]]:
-    """Exact BM25 top-k, fully vectorized — the default serving scorer.
+def _accumulate_topk(
+    ids: np.ndarray, scores: np.ndarray, k: int
+) -> list[tuple[int, float]]:
+    """Sum each doc's contributions, then exact top-k (score desc, doc_id
+    asc) — the one accumulate-and-select kernel of every vectorized scorer.
 
-    With postings decoded to contiguous numpy arrays, a vectorized
-    accumulate beats a Python document-at-a-time loop by ~100x at any list
-    length that fits in memory; block-max WAND (wand_topk) remains the
-    scale path for lazily-decoded block storage, and the two are
-    rank-identical (tests/test_index_wand.py).
-
-    Determinism: `lists` arrives sorted by term (load_term_postings), so
-    concatenation order == ascending term order; the STABLE sort keeps
-    equal doc_ids in that order, and np.add.reduceat folds each doc's
-    segment in that order. reduceat uses numpy's pairwise summation, so
-    sums sit within 1 ulp of the oracle's strict sequential fold (the 4dp
-    rounding of every oracle comparison absorbs this); results are still
-    run-to-run deterministic for a fixed segment.
+    Determinism: contributions arrive in ascending term order, the STABLE
+    sort keeps equal doc_ids in that order, and np.add.reduceat folds each
+    doc's segment in that order. reduceat uses numpy's pairwise summation,
+    so sums sit within 1 ulp of the oracle's strict sequential fold (the
+    4dp rounding of every oracle comparison absorbs this); results are
+    still run-to-run deterministic for a fixed segment.
 
     Cost shape: each posting list is already doc_id-sorted, so the stable
     argsort is a timsort run-merge (near-linear), and top-k selection is
     an argpartition + small exact re-sort instead of a full lexsort over
     every matched doc (a head-term query matches most of the corpus).
     """
-    if not lists or k <= 0:
-        return []
-    ids = np.concatenate([tp.doc_ids for tp in lists])
     if ids.size == 0:  # e.g. every posting tombstoned
         return []
-    scores = np.concatenate([tp.scores for tp in lists])
     order = np.argsort(ids, kind="stable")
     ids_s = ids[order]
     sc_s = scores[order]
@@ -179,8 +201,21 @@ def vectorized_topk(lists: list[TermPostings], k: int) -> list[tuple[int, float]
     return [(int(uniq[i]), float(acc[i])) for i in top]
 
 
+def vectorized_topk(lists: list[TermPostings], k: int) -> list[tuple[int, float]]:
+    """Exact BM25 top-k over eagerly decoded postings — query_index's
+    default scorer. `lists` arrives sorted by term (load_term_postings), so
+    concatenation order == ascending term order."""
+    if not lists or k <= 0:
+        return []
+    return _accumulate_topk(
+        np.concatenate([tp.doc_ids for tp in lists]),
+        np.concatenate([tp.scores for tp in lists]),
+        k,
+    )
+
+
 def exhaustive_topk(lists: list[TermPostings], k: int) -> list[tuple[int, float]]:
-    """Term-at-a-time exhaustive scoring — the referent for WAND tests.
+    """Term-at-a-time exhaustive scoring — the referent for the pruning tests.
 
     Accumulates per-term passes in ascending term order so each doc's float
     additions happen in oracle order.
@@ -191,83 +226,6 @@ def exhaustive_topk(lists: list[TermPostings], k: int) -> list[tuple[int, float]
             acc[d] = acc.get(d, 0.0) + s
     ranked = sorted(acc.items(), key=lambda x: (-x[1], x[0]))
     return ranked[:k]
-
-
-def wand_topk(lists: list[TermPostings], k: int) -> list[tuple[int, float]]:
-    """Block-max WAND: exact top-k, skipping blocks that can't beat theta."""
-    if not lists or k <= 0:
-        return []
-    n = len(lists)
-    cur = [0] * n                        # cursor per list
-    sizes = [tp.doc_ids.size for tp in lists]
-    heap: list[tuple[float, int]] = []   # (score, -doc_id) min-heap of k best
-    theta = -np.inf
-
-    def cur_doc(i: int) -> int:
-        return int(lists[i].doc_ids[cur[i]]) if cur[i] < sizes[i] else 2**62
-
-    while True:
-        order = sorted((i for i in range(n) if cur[i] < sizes[i]), key=cur_doc)
-        if not order:
-            break
-        # pivot: first list where cumulative (global) upper bound >= theta
-        ub = 0.0
-        pivot = -1
-        for pos, i in enumerate(order):
-            ub += lists[i].max_score
-            if ub > theta or (len(heap) < k):
-                pivot = pos
-                break
-        if pivot < 0:
-            break  # even all max scores together can't beat theta
-        pivot_doc = cur_doc(order[pivot])
-
-        # block-max refinement over P = ALL lists whose cursor is at or before
-        # pivot_doc (lists past the pivot position may still sit exactly on
-        # pivot_doc — they must count toward the bound or it isn't one).
-        P = [i for i in order if cur_doc(i) <= pivot_doc]
-        others = [cur_doc(i) for i in order if cur_doc(i) > pivot_doc]
-        next_doc = min(others) if others else 2**62
-        bub = 0.0
-        boundary = 2**62
-        for i in P:
-            tp = lists[i]
-            bi = int(np.searchsorted(tp.block_lasts, pivot_doc))
-            if bi < tp.block_maxes.size:
-                bub += float(tp.block_maxes[bi])
-                boundary = min(boundary, int(tp.block_lasts[bi]))
-        if len(heap) >= k and bub <= theta:
-            # no doc d in [pivot_doc, min(boundary, next_doc-1)] can beat
-            # theta: every list outside P starts at next_doc, and inside P the
-            # same block (max <= block_max) covers d up to its boundary.
-            target = max(pivot_doc + 1, min(boundary + 1, next_doc))
-            for i in P:
-                cur[i] = int(np.searchsorted(lists[i].doc_ids, target))
-            continue
-
-        if cur_doc(order[0]) == pivot_doc:
-            # fully evaluate pivot_doc: sum in ascending TERM order (lists
-            # are term-sorted by construction, order[] is doc-sorted)
-            score = 0.0
-            for i in range(n):
-                if cur[i] < sizes[i] and int(lists[i].doc_ids[cur[i]]) == pivot_doc:
-                    score += float(lists[i].scores[cur[i]])
-                    cur[i] += 1
-            key = (score, -pivot_doc)
-            if len(heap) < k:
-                heapq.heappush(heap, key)
-                if len(heap) == k:
-                    theta = heap[0][0]
-            elif key > heap[0]:
-                heapq.heapreplace(heap, key)
-                theta = heap[0][0]
-        else:
-            # advance lists before the pivot up to pivot_doc (galloping)
-            for i in order[:pivot]:
-                tp = lists[i]
-                cur[i] = int(np.searchsorted(tp.doc_ids, pivot_doc))
-    ranked = sorted(heap, key=lambda x: (-x[0], -x[1]))
-    return [(-d, s) for s, d in ranked]
 
 
 @dataclass
@@ -289,39 +247,6 @@ class RawTermPostings:
     dl_offs: np.ndarray
     block_lasts: np.ndarray   # int64 last doc_id per block
     block_maxes: np.ndarray   # float64 max contribution per block
-
-
-def load_term_postings_raw(
-    spark: SparkSession | None, index: Index, query_text: str
-) -> list[RawTermPostings]:
-    """Fetch posting rows WITHOUT decoding them (lazy path input)."""
-    from olaf_spark.indexer import term_id_py
-
-    cfg = index.cfg
-    qterms = sorted(set(tokenize_py(query_text, cfg)))
-    if not qterms:
-        return []
-    id_to_term: dict[int, str] = {}
-    for t in qterms:
-        id_to_term.setdefault(term_id_py(t), t)
-    rows = _fetch_posting_rows(index, qterms)
-    out = []
-    for r in sorted(rows, key=lambda r: (id_to_term[r["term_id"]], r["chunk"])):
-        out.append(
-            RawTermPostings(
-                term=id_to_term[r["term_id"]],
-                idf=idf_fn(index.n_docs, int(r["df"])),
-                id_buf=bytes(r["doc_ids_bin"]),
-                tf_buf=bytes(r["tfs_bin"]),
-                dl_buf=bytes(r["doc_lens_bin"]),
-                id_offs=np.asarray(r["id_offs"], dtype=np.int64),
-                tf_offs=np.asarray(r["tf_offs"], dtype=np.int64),
-                dl_offs=np.asarray(r["dl_offs"], dtype=np.int64),
-                block_lasts=np.asarray(r["block_lasts"], dtype=np.int64),
-                block_maxes=np.asarray(r["block_maxes"], dtype=np.float64),
-            )
-        )
-    return out
 
 
 def _decode_blocks(
@@ -350,8 +275,6 @@ def _decode_blocks(
             lo = int(offs[b0])
             hi = int(offs[b1]) if b1 < n_blocks else len(buf)
             out.append(buf[lo:hi])
-    from olaf_spark.codec import decode_ids_blocked
-
     ids = np.concatenate(
         [decode_ids_blocked(b, cfg.block_size) for b in ids_l]
     ).astype(np.int64)
@@ -374,9 +297,9 @@ def blockmax_topk(
 ) -> list[tuple[int, float]]:
     """Exact BM25 top-k with VECTORIZED block-max pruning + lazy decode.
 
-    Block-max WAND re-expressed numpy-first (the Python document-at-a-time
-    cursor loop in wand_topk is 10-100x slower than vectorized scoring —
-    measured; skipping must happen in array operations to pay off):
+    Block-max WAND re-expressed numpy-first (a Python document-at-a-time
+    cursor loop is 10-100x slower than vectorized scoring — measured;
+    skipping must happen in array operations to pay off):
 
       1. theta: fully decode only the SHORTEST list; the k-th largest of its
          (tombstone-filtered) contributions lower-bounds the final k-th
@@ -464,25 +387,7 @@ def blockmax_topk(
     if ts_arr is not None:
         keep = tombstone_keep_mask(ids, ts_arr)
         ids, scores = ids[keep], scores[keep]
-    if ids.size == 0:
-        return []
-    order = np.argsort(ids, kind="stable")
-    ids_s, sc_s = ids[order], scores[order]
-    d_new = np.empty(ids_s.size, dtype=bool)
-    d_new[0] = True
-    d_new[1:] = ids_s[1:] != ids_s[:-1]
-    starts = np.flatnonzero(d_new)
-    uniq = ids_s[starts]
-    acc = np.add.reduceat(sc_s, starts)
-    n = uniq.size
-    if n > k:
-        kth = np.partition(acc, n - k)[n - k]
-        sel = np.flatnonzero(acc >= kth)
-        sub = np.lexsort((uniq[sel], -acc[sel]))[:k]
-        top = sel[sub]
-    else:
-        top = np.lexsort((uniq, -acc))[:k]
-    out = [(int(uniq[i]), float(acc[i])) for i in top]
+    out = _accumulate_topk(ids, scores, k)
     if min_score > 0.0:
         # drops partially-scored riders from pruned segments too (their
         # partial sums are < theta <= min_score by construction)
@@ -492,18 +397,19 @@ def blockmax_topk(
 
 def query_index(
     spark: SparkSession,
-    index: Index,
+    index,
     query_text: str,
     k: int | None = 10,
     method: str = "vectorized",
     min_score: float | None = None,
 ) -> list[tuple[int, float]]:
-    """Top-k (doc_id, score) from a materialized index.
+    """Top-k (doc_id, score) from a materialized index: IndexGroup.topk over
+    the one-part group.
 
-    method: "vectorized" (default serving path), "blockmax" (vectorized
-    block-max pruning + LAZY block decode — the scale path: only blocks
-    that can beat theta are ever decoded), "wand" (Python DAAT block-max
-    referent), or "exhaustive" (test referent).
+    method (SERVING_METHODS): "vectorized" (default, eager decode),
+    "blockmax" (vectorized block-max pruning + LAZY block decode — only
+    blocks that can beat theta are ever decoded), "wand" (alias of
+    blockmax), or "exhaustive" (test referent).
 
     k=None uses cfg.max_results (Olaf maxResults=50, olaf_config.c:99-100);
     min_score=None uses cfg.min_score (minMatchCount analogue,
@@ -511,19 +417,4 @@ def query_index(
     """
     if k is None:
         k = index.cfg.max_results
-    if min_score is None:
-        min_score = index.cfg.min_score
-    if method == "blockmax":
-        raw = load_term_postings_raw(spark, index, query_text)
-        return blockmax_topk(
-            raw, k, index.cfg, index.avgdl, index.tombstones_arr(), min_score
-        )
-    else:
-        lists = load_term_postings(spark, index, query_text)
-        if not lists:
-            return []
-        fn = {"vectorized": vectorized_topk, "wand": wand_topk, "exhaustive": exhaustive_topk}[method]
-        hits = fn(lists, k)
-    if min_score > 0.0:
-        hits = [(d, s) for d, s in hits if s >= min_score]
-    return hits
+    return _as_group(index).topk(query_text, k, method, min_score)

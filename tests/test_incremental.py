@@ -95,7 +95,7 @@ def test_group_blockmax_thresholded_skips_blocks(spark, grouped):
 def test_group_topk_rejects_unknown_method(grouped):
     group, _ = grouped
     with pytest.raises(ValueError, match="blockmax"):
-        group.topk("w2", 5, method="wand")
+        group.topk("w2", 5, method="bm25f")
 
 
 def test_group_undelete_clears_delta_tombstones(spark, grouped):

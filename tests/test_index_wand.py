@@ -14,17 +14,17 @@ import shutil
 import pytest
 
 from olaf_spark.config import EngineConfig
+from olaf_spark.incremental import IndexGroup
 from olaf_spark.indexer import Index, build_index, completed_buckets
 from olaf_spark.oracle import OracleIndex
 from olaf_spark.synth import gen_pages, gen_queries
 from olaf_spark.wand import (
+    SERVING_METHODS,
     blockmax_topk,
     exhaustive_topk,
     load_term_postings,
-    load_term_postings_raw,
     query_index,
     vectorized_topk,
-    wand_topk,
 )
 
 N_DOCS = 200
@@ -44,6 +44,11 @@ def built(spark, tmp_path_factory):
     return pages, oracle, index
 
 
+def load_term_postings_raw(index, q):
+    """Lazy-decode input of a single index: its one-part group's rows."""
+    return IndexGroup([index]).load_term_postings_raw(q)
+
+
 def assert_identical(got, want):
     assert [d for d, _ in got] == [d for d, _ in want], (got, want)
     for (gd, gs), (od, osc) in zip(got, want):
@@ -57,6 +62,25 @@ def test_stats_match_oracle(built):
     assert index.stats["n_terms"] == len(oracle.postings)
 
 
+def test_avgdl_is_total_tokens_over_n_docs(spark, built, tmp_path):
+    """The one-part group scores with total_tokens / n_docs while a single
+    index stores avgdl: they must be the same float for a fresh build, an
+    appended delta and a compacted index, or single-index serving through
+    IndexGroup would drift from the stored block maxes."""
+    from olaf_spark.incremental import append_index, compact_index
+
+    _, _, index = built
+    base = str(tmp_path / "base")
+    shutil.copytree(index.index_dir, base)
+    extra = gen_pages(spark, N_DOCS + 40, seed=42).where(f"doc_id >= {N_DOCS}")
+    delta = append_index(spark, extra.select("doc_id", "text"), base, n_buckets=2)
+    compacted = compact_index(spark, base, str(tmp_path / "compacted"))
+    for ix in (index, delta, compacted):
+        st = ix.stats
+        assert st["avgdl"] == st["total_tokens"] / st["n_docs"], st
+    assert compacted.avgdl == IndexGroup.load(base).avgdl
+
+
 def test_wand_rank_identical_to_oracle(spark, built):
     pages, oracle, index = built
     queries = [r["query_text"] for r in gen_queries(spark, pages, 10).collect()]
@@ -65,14 +89,14 @@ def test_wand_rank_identical_to_oracle(spark, built):
         lists = load_term_postings(spark, index, q)
         want = oracle.topk(q, K)
         got_ex = exhaustive_topk(lists, K)
-        got_wand = wand_topk(lists, K)
         got_vec = vectorized_topk(lists, K)
-        raw = load_term_postings_raw(spark, index, q)
+        raw = load_term_postings_raw(index, q)
         got_bm = blockmax_topk(raw, K, index.cfg, index.avgdl)
         assert_identical(got_ex, want)
-        assert_identical(got_wand, want)
         assert_identical(got_vec, want)
         assert_identical(got_bm, want)
+        for m in SERVING_METHODS:  # "wand" is served by the blockmax scorer
+            assert_identical(query_index(spark, index, q, K, method=m), want)
 
 
 def test_wand_equals_exhaustive_small_k(spark, built):
@@ -80,9 +104,8 @@ def test_wand_equals_exhaustive_small_k(spark, built):
     pages, oracle, index = built
     for q in ["w2 w3 w5 w10", "w1 w100 w1000", "needle97 w2"]:
         lists = load_term_postings(spark, index, q)
-        raw = load_term_postings_raw(spark, index, q)
+        raw = load_term_postings_raw(index, q)
         for k in (1, 2, 3, 25):
-            assert_identical(wand_topk(lists, k), exhaustive_topk(lists, k))
             assert_identical(vectorized_topk(lists, k), exhaustive_topk(lists, k))
             assert_identical(
                 blockmax_topk(raw, k, index.cfg, index.avgdl), exhaustive_topk(lists, k)
@@ -107,9 +130,8 @@ def test_full_range_int64_doc_ids(spark, tmp_path):
         lists = load_term_postings(spark, index, q)
         want = oracle.topk(q, K)
         assert_identical(vectorized_topk(lists, K), want)
-        assert_identical(wand_topk(lists, K), want)
         assert_identical(
-            blockmax_topk(load_term_postings_raw(spark, index, q), K, index.cfg, index.avgdl),
+            blockmax_topk(load_term_postings_raw(index, q), K, index.cfg, index.avgdl),
             want,
         )
 
@@ -152,9 +174,8 @@ def test_head_term_row_chunking(spark, tmp_path):
         lists = load_term_postings(spark, index, q)
         want = oracle.topk(q, K)
         assert_identical(vectorized_topk(lists, K), want)
-        assert_identical(wand_topk(lists, K), want)
         assert_identical(
-            blockmax_topk(load_term_postings_raw(spark, index, q), K, index.cfg, index.avgdl),
+            blockmax_topk(load_term_postings_raw(index, q), K, index.cfg, index.avgdl),
             want,
         )
 
@@ -181,9 +202,8 @@ def test_merge_split_across_tasks(spark, tmp_path):
         lists = load_term_postings(spark, index, q)
         want = oracle.topk(q, K)
         assert_identical(vectorized_topk(lists, K), want)
-        assert_identical(wand_topk(lists, K), want)
         assert_identical(
-            blockmax_topk(load_term_postings_raw(spark, index, q), K, index.cfg, index.avgdl),
+            blockmax_topk(load_term_postings_raw(index, q), K, index.cfg, index.avgdl),
             want,
         )
 
@@ -208,9 +228,8 @@ def test_universal_head_term_no_truncation(spark, tmp_path):
         lists = load_term_postings(spark, index, q)
         want = oracle.topk(q, K)
         assert_identical(vectorized_topk(lists, K), want)
-        assert_identical(wand_topk(lists, K), want)
         assert_identical(
-            blockmax_topk(load_term_postings_raw(spark, index, q), K, index.cfg, index.avgdl),
+            blockmax_topk(load_term_postings_raw(index, q), K, index.cfg, index.avgdl),
             want,
         )
 
@@ -363,9 +382,14 @@ def test_blockmax_tombstones_and_knobs(spark, built, tmp_path):
     """The lazy block-max path under deletion: tombstoned docs vanish,
     survivors score exactly as the eager path scores them (stored block
     maxes stay upper bounds when docs are deleted), and min_score/k=None
-    behave identically to the vectorized path."""
+    behave identically to the vectorized path. A single index is served as
+    its one-part group: on the tombstoned index every method answers bit
+    for bit like IndexGroup.topk, and the batch job like per-query
+    serving."""
     pages, oracle, index = built
     import shutil
+
+    from olaf_spark.batch import batch_query_index
 
     d = str(tmp_path / "bm_ix")
     shutil.copytree(index.index_dir, d)
@@ -378,6 +402,21 @@ def test_blockmax_tombstones_and_knobs(spark, built, tmp_path):
     got = query_index(spark, ix, q, k=20, method="blockmax")
     assert all(dd != victim for dd, _ in got)
     assert_identical(got, query_index(spark, ix, q, k=20, method="vectorized"))
+
+    queries = [q, "w1 w50 w1000", "needle97 w2", "w3 w5 w7 w11", "zzqxnothere"]
+    for m in SERVING_METHODS:
+        for qq in queries:
+            single = query_index(spark, ix, qq, k=20, method=m)
+            assert single == IndexGroup([ix]).topk(qq, 20, method=m), (m, qq)
+            assert single == IndexGroup.load(d).topk(qq, 20, method=m), (m, qq)
+    rows = batch_query_index(spark, ix, list(enumerate(queries)), k=20).collect()
+    for qid, qq in enumerate(queries):
+        have = [
+            (r["doc_id"], r["score"])
+            for r in sorted(rows, key=lambda r: r["rank"]) if r["query_id"] == qid
+        ]
+        # batch folds sequentially, serving pairwise: within 1 ulp
+        assert_identical(have, query_index(spark, ix, qq, k=20))
     ix.undelete_docs([victim])
     theta = before[4][1]
     cut = query_index(spark, ix, q, k=20, method="blockmax", min_score=theta)

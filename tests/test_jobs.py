@@ -7,6 +7,7 @@ against the library path."""
 from __future__ import annotations
 
 import json
+import math
 import os
 import subprocess
 import sys
@@ -222,6 +223,9 @@ def test_maintenance_cycle_jobs_end_to_end(spark, tmp_path):
                "--queries", str(qfile), "--k", "5", "--method", "blockmax"])
     dist = run([f"{REPO}/jobs/query_job.py", "--index", ix_dir,
                 "--queries", str(qfile), "--k", "5", "--method", "distributed"])
+    # the referent scorer serves the live group too (one read path)
+    exh = run([f"{REPO}/jobs/query_job.py", "--index", ix_dir,
+               "--queries", str(qfile), "--k", "5", "--method", "exhaustive"])
     by_q = lambda rows: {  # noqa: E731
         q: [r["doc_id"] for r in sorted(rows, key=lambda r: (r["query_id"], r["rank"]))
             if r["query_id"] == q]
@@ -244,6 +248,13 @@ def test_maintenance_cycle_jobs_end_to_end(spark, tmp_path):
     post = run([f"{REPO}/jobs/query_job.py", "--index", out_dir,
                 "--queries", str(qfile), "--k", "5", "--method", "wand"])
     assert by_q(post) == by_q(grp)  # compaction changes no answer
+    scored = lambda rows: sorted(  # noqa: E731
+        (r["query_id"], r["rank"], r["doc_id"], r["score"]) for r in rows
+    )
+    assert len(scored(exh)) == len(scored(post))
+    for (eq, er, ed, es), (pq, pr, pd_, ps) in zip(scored(exh), scored(post)):
+        assert (eq, er, ed) == (pq, pr, pd_)
+        assert math.isclose(es, ps, rel_tol=1e-12), (es, ps)
 
     # fuzzy flag: a typo'd needle query still finds its doc via the ED-1 ball
     qfile2 = tmp_path / "q2.txt"

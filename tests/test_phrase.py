@@ -72,6 +72,21 @@ def test_absent_and_partial_phrases_empty(positional):
     assert phrase_topk(d, "") == []
 
 
+def test_phrase_units_never_cooccurring_empty(spark, tmp_path):
+    """A phrase whose first two terms never share a doc empties the
+    candidate intersection before the third unit is merged in: the answer
+    is no rows, on the serving and the batch path alike."""
+    from olaf_spark.phrase import batch_phrase_topk
+
+    rows = [(1, "alpha gamma one"), (2, "beta gamma two"), (3, "gamma delta alpha")]
+    pages = spark.createDataFrame(rows, "doc_id long, text string")
+    d = str(tmp_path / "disjoint")
+    build_positions(spark, pages, d, CFG, n_buckets=1)
+    assert phrase_topk(d, "alpha beta gamma") == []
+    assert phrase_topk(d, "alpha beta gamma", use_bigrams=False) == []
+    assert batch_phrase_topk(spark, d, [(0, "alpha beta gamma")], k=5).count() == 0
+
+
 def test_needle_phrase_unique_doc(positional):
     rows, d = positional
     # needle is appended at the doc's end: "<last zipf token> needle97"
