@@ -15,9 +15,9 @@ Layout: `<dir>/bigrams/` holds rows in the SAME packed format as the
 positional side index (phrase.POSITIONS_SCHEMA), with term_id = the pair
 id (xxhash64 of "t1 t2" — a space never appears inside a token, so pair
 keys cannot collide with single-term keys) and positions = the position of
-the pair's FIRST token. Reusing the positions row format means the pack
-and compaction-fold machinery (`phrase._make_pack_positions`,
-`phrase._make_fold_positions`) is shared verbatim.
+the pair's FIRST token. Reusing the positions row format means the build
+writer and the compaction fold (`phrase.write_positional_rows`,
+`phrase.fold_positional_rows`) are shared verbatim.
 
 Authoritativeness: serving may treat a bigram row as the COMPLETE answer
 for a pair only when both members are in the recorded head set — an absent
@@ -48,13 +48,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from olaf_spark.config import EngineConfig
-from olaf_spark.indexer import (
-    bucket_expr,
-    shard_from_id_col,
-    sorted_tombstone_arr,
-    term_id_col,
-    term_id_py,
-)
+from olaf_spark.indexer import doc_range, term_id_col, term_id_py
+from olaf_spark.phrase import fold_positional_rows, write_positional_rows
 from olaf_spark.tokenize import tokens_array
 from olaf_spark.xxh64 import xxh64
 
@@ -201,16 +196,7 @@ def build_bigrams(
     mfs = get_metafs()
     if os.path.exists(os.path.join(out_dir, "engine_config.json")):
         EngineConfig.load(out_dir).check_compatible(cfg)
-    # validate the input BEFORE any destructive step: a refused call
-    # (empty docs) must be a true no-op, never one that leaves a working
-    # committed bigram index destroyed
-    bounds = docs.agg(
-        F.min(F.col(id_col)).alias("lo"),
-        F.max(F.col(id_col)).alias("hi"),
-        F.count(F.lit(1)).alias("n"),
-    ).collect()[0]
-    if bounds["n"] == 0:
-        raise ValueError(f"refusing to build bigrams at {out_dir}: docs has no rows")
+    n, lo, hi, width = doc_range(docs, id_col, n_buckets, f"bigrams at {out_dir}")
     # REBUILD over committed bigrams: retract the commit marker (and the
     # stale rows) before any row lands — a crash mid-rebuild must leave
     # bigrams_usable() False (serving degrades to the positional path),
@@ -220,12 +206,10 @@ def build_bigrams(
     mfs.remove_file(os.path.join(out_dir, "bigram_meta.json"))
     if os.path.isdir(os.path.join(out_dir, "bigrams")):
         mfs.remove_dir(os.path.join(out_dir, "bigrams"), ignore_errors=True)
-    lo, hi = int(bounds["lo"]), int(bounds["hi"])
-    width = max(1, (hi - lo) // n_buckets + 1)
 
     if heads is None:
         if min_df is None:
-            min_df = max(16, int(bounds["n"]) // 100)
+            min_df = max(16, n // 100)
         heads = head_term_ids(docs, min_df, text_col, id_col, cfg)
     else:
         heads = np.sort(np.asarray(heads, dtype=np.int64))
@@ -256,25 +240,11 @@ def build_bigrams(
                 term_id_col(F.concat_ws(" ", F.col("t1"), F.col("t2"))).alias("term_id"),
             )
         )
-
-        from olaf_spark.phrase import POSITIONS_SCHEMA, _make_pack_positions
-
-        b_expr = bucket_expr(F.col("doc_id"), lo, width, n_buckets)
-        n_tasks = max(n_buckets, spark.sparkContext.defaultParallelism)
-        from olaf_spark.indexer import cluster_for_write
-
-        packed = (
-            occ.repartition(n_tasks, b_expr, F.col("term_id"))
-            .sortWithinPartitions("term_id", "doc_id", "pos")
-            .mapInPandas(_make_pack_positions(lo, width, n_buckets), POSITIONS_SCHEMA)
-            .withColumn("tb", shard_from_id_col(F.col("term_id"), cfg.n_segments))
-        )
-        packed = cluster_for_write(packed, "tb", n_tasks, cfg.n_segments)
-        packed.write.mode("overwrite").partitionBy("tb").parquet(
-            os.path.join(out_dir, "bigrams")
+        write_positional_rows(
+            spark, occ, os.path.join(out_dir, "bigrams"), lo, width, n_buckets, cfg
         )
         # an empty head-head pair set writes only _SUCCESS under bigrams/
-        # — fine: readers branch on has_bigram_rows before opening it
+        # — fine: readers branch on phrase.has_rows before opening it
     cfg.save(out_dir)
     _write_heads(out_dir, heads)
     # meta lands LAST (atomic publish) — it is the commit marker; a crash
@@ -283,18 +253,23 @@ def build_bigrams(
     # instead of trusting a partial pair row
     mfs.publish_json(
         os.path.join(out_dir, "bigram_meta.json"),
-        {
-            "format_version": BIGRAM_FORMAT_VERSION,
-            "n_buckets": n_buckets,
-            "lo": lo,
-            "hi": hi,
-            "width": width,
-            "min_df": int(min_df),
-            "n_heads": int(heads.size),
-            "heads_fingerprint": _heads_fingerprint(heads),
-        },
+        _bigram_meta(lo, hi, n_buckets, width, min_df, heads),
     )
     return out_dir
+
+
+def _bigram_meta(lo, hi, n_buckets, width, min_df, heads) -> dict:
+    """bigram_meta.json — the bigram index's commit marker."""
+    return {
+        "format_version": BIGRAM_FORMAT_VERSION,
+        "n_buckets": n_buckets,
+        "lo": lo,
+        "hi": hi,
+        "width": width,
+        "min_df": int(min_df),
+        "n_heads": int(heads.size),
+        "heads_fingerprint": _heads_fingerprint(heads),
+    }
 
 
 #: per-dir meta cache keyed by bigram_meta.json's (inode, mtime_ns) sig —
@@ -340,42 +315,6 @@ def bigrams_usable(d: str) -> bool:
     )
 
 
-#: per-dir row-presence cache keyed by the bigrams/ root dir's
-#: (inode, mtime_ns) sig — every committed (re)build removes + recreates
-#: the root (new inode) or creates/removes tb= partition dirs directly
-#: under it (new mtime), so the key invalidates on rebuild. Saves an
-#: os.walk per part per pair-unit query.
-_ROWS_CACHE: dict[str, tuple] = {}
-
-
-def has_bigram_rows(d: str) -> bool:
-    """True when <d>/bigrams holds at least one COMMITTED parquet file
-    (hidden/_-prefixed dirs and files — Spark _temporary task attempts,
-    _SUCCESS, dot-tmp strays — are ignored, matching what the parquet
-    readers themselves skip). An empty DataFrame written with partitionBy
-    materializes only _SUCCESS — unreadable by spark.read.parquet AND
-    schemaless for pyarrow dataset filters — so every reader must branch
-    on this instead of opening the directory blind."""
-    from olaf_spark.lru import file_sig, lru_get
-
-    root = os.path.join(d, "bigrams")
-    sig = file_sig(root)
-    if sig is None:
-        return False
-
-    def load() -> bool:
-        for _cur, dirs, files in os.walk(root):
-            dirs[:] = [x for x in dirs if not x.startswith(("_", "."))]
-            if any(
-                f.endswith(".parquet") and not f.startswith(("_", "."))
-                for f in files
-            ):
-                return True
-        return False
-
-    return lru_get(_ROWS_CACHE, d, sig, load, _HEADS_CACHE_MAX)
-
-
 def group_heads(part_dirs: list[str]) -> np.ndarray | None:
     """The group's shared head set, or None when the bigram fast path must
     not be used: some part lacks bigrams, or the parts' head sets differ
@@ -402,12 +341,15 @@ def compact_bigrams(
     n_merge_tasks: int | None = None,
 ) -> str:
     """Fold every part's bigram rows into <out_dir>/bigrams — the pair twin
-    of phrase.compact_positions, byte-level identical machinery (the row
-    format is shared; positions restart absolute per doc, so the fold
-    copies position bytes VERBATIM). Requires a uniform head set across
-    parts (the append path inherits it, so this holds for any group built
-    through the public API); refuses loudly otherwise — the caller
-    degrades to 'rebuild with build_bigrams'."""
+    of phrase.compact_positions through the same fold
+    (phrase.fold_positional_rows: the row format is shared; positions
+    restart absolute per doc, so the fold copies position bytes VERBATIM).
+    Requires a uniform head set across parts (the append path inherits it,
+    so this holds for any group built through the public API); refuses
+    loudly otherwise — the caller degrades to 'rebuild with build_bigrams'.
+    The fold retracts out_dir's marker and stale rows first, so folding
+    all-rowless parts never leaves some earlier index's rows under the new
+    marker."""
     metas = []
     for d in part_dirs:
         meta = _read_meta(d)
@@ -423,71 +365,14 @@ def compact_bigrams(
             f"bigram head sets differ across parts ({sorted(fps)}) — "
             "fold would mix authoritativeness; rebuild with build_bigrams"
         )
-    from olaf_spark.metafs import get_metafs
+    heads = load_heads(part_dirs[0])
 
-    # same rebuild-retraction as build_bigrams: if out_dir already carries
-    # committed bigrams, kill the marker AND the stale rows before the
-    # fold — the all-rowless-parts case below skips the bigrams/ write
-    # entirely, and a fresh meta over leftover rows from some earlier
-    # index would serve them as authoritative (silently wrong head-head
-    # answers)
-    get_metafs().remove_file(os.path.join(out_dir, "bigram_meta.json"))
-    if os.path.isdir(os.path.join(out_dir, "bigrams")):
-        get_metafs().remove_dir(
-            os.path.join(out_dir, "bigrams"), ignore_errors=True
-        )
-    lo = min(m["lo"] for m in metas)
-    hi = max(m["hi"] for m in metas)
-    n_buckets = max(m["n_buckets"] for m in metas)
-    width = max(1, (hi - lo) // n_buckets + 1)
-    bts = spark.sparkContext.broadcast(sorted_tombstone_arr(tombstones))
+    def make_meta(lo, hi, n_buckets, width):
+        _write_heads(out_dir, heads)
+        return _bigram_meta(lo, hi, n_buckets, width, metas[0]["min_df"], heads)
 
-    from olaf_spark.incremental import _first_doc_udf
-    from olaf_spark.phrase import POSITIONS_SCHEMA, _make_fold_positions
-
-    rows = None
-    for d in part_dirs:
-        if not has_bigram_rows(d):
-            continue  # committed-but-rowless part: authoritative empty
-        r = spark.read.parquet(os.path.join(d, "bigrams"))
-        rows = r if rows is None else rows.unionByName(r)
-    if rows is not None:
-        if n_merge_tasks is None:
-            from olaf_spark.indexer import dir_bytes, merge_task_count
-
-            n_merge_tasks = merge_task_count(
-                spark, dir_bytes(*(os.path.join(d, "bigrams") for d in part_dirs))
-            )
-        folded = (
-            rows.select(
-                "term_id", "doc_ids_bin", "pos_counts_bin", "pos_bin", "pos_offs", "tb"
-            )
-            .withColumn("first_doc", _first_doc_udf()(F.col("doc_ids_bin")))
-            .repartitionByRange(n_merge_tasks, "tb", "term_id", "first_doc")
-            .sortWithinPartitions("term_id", "first_doc")
-            .mapInPandas(
-                _make_fold_positions(lo, width, n_buckets, bts), POSITIONS_SCHEMA
-            )
-            .withColumn("tb", shard_from_id_col(F.col("term_id"), cfg.n_segments))
-        )
-        folded.write.mode("overwrite").partitionBy("tb").parquet(
-            os.path.join(out_dir, "bigrams")
-        )
-    _write_heads(out_dir, load_heads(part_dirs[0]))
-    base_meta = metas[0]
-    from olaf_spark.metafs import get_metafs
-
-    get_metafs().publish_json(
-        os.path.join(out_dir, "bigram_meta.json"),
-        {
-            "format_version": BIGRAM_FORMAT_VERSION,
-            "n_buckets": n_buckets,
-            "lo": lo,
-            "hi": hi,
-            "width": width,
-            "min_df": base_meta["min_df"],
-            "n_heads": base_meta["n_heads"],
-            "heads_fingerprint": base_meta["heads_fingerprint"],
-        },
+    fold_positional_rows(
+        spark, part_dirs, out_dir, "bigrams", "bigram_meta.json", metas,
+        make_meta, tombstones, cfg, n_merge_tasks,
     )
     return out_dir

@@ -37,6 +37,7 @@ overwrites metadata; here you delete + append instead).
 from __future__ import annotations
 
 import os
+import time
 
 import numpy as np
 import pandas as pd
@@ -45,18 +46,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from olaf_spark import wand
-from olaf_spark.codec import (
-    block_maxes,
-    decode_ids_blocked,
-    encode_grouped_blocked,
-    varbyte_decode,
-)
+from olaf_spark.codec import decode_ids_blocked, varbyte_decode
 from olaf_spark.config import EngineConfig
 from olaf_spark.indexer import (
     POSTINGS_SCHEMA,
     Index,
-    _iter_term_chunks,
+    _write_lineage,
     build_index,
+    done_partitions,
+    make_posting_fold,
     shard_from_id_col,
     sorted_tombstone_arr,
     tombstone_keep_mask,
@@ -160,27 +158,16 @@ def append_index(
     # positions (if requested) land BEFORE build_index so stats.json — the
     # delta's commit marker — implies the positional rows exist too (a
     # replayed committed delta must never be missing its positions)
+    # build_positions / build_bigrams / build_index each refuse an empty
+    # batch (doc_range) before writing anything into the claimed delta
     if with_positions:
         from olaf_spark.phrase import build_positions
 
-        # empty-input guard hoisted above build_positions: its min/max
-        # doc_id collect would die with a bare TypeError on an empty batch,
-        # leaving the claimed delta dir with partial positions state —
-        # surface the same clear refusal build_index gives instead
-        if new_docs.limit(1).count() == 0:
-            raise ValueError(
-                f"refusing to append an empty batch to {base_dir}: "
-                "new_docs has no rows (n_docs=0)"
-            )
         build_positions(
             spark, new_docs, delta_dir, base.cfg,
             text_col=text_col, id_col=id_col, n_buckets=n_buckets,
         )
     if with_bigrams:
-        # no empty-batch pre-guard here (unlike positions): build_bigrams
-        # counts rows in its own bounds agg and refuses with a clean
-        # message, so a second limit(1).count() job per append would be
-        # pure overhead
         _append_bigrams(
             spark, new_docs, base_dir, delta_dir, base.cfg,
             text_col, id_col, n_buckets,
@@ -401,117 +388,38 @@ class IndexGroup:
 
 
 def _make_compact_fn(n_docs: int, avgdl: float, cfg: EngineConfig, tombstones: set[int]):
-    k1, b, block_size = cfg.k1, cfg.b, cfg.block_size
+    """mapInPandas fn of the compaction fold: one range-partitioned slice
+    of posting rows -> merged chunk rows (indexer.make_posting_fold).
+
+    Parts overlap in doc_id range, so unlike the build merge
+    (bucket-disjoint concat) this is a true k-way merge — decode, argsort
+    by doc_id, drop tombstoned postings, re-encode. Doc-range parallel: the
+    shuffle range-partitions on (tb, term_id, first_doc), so a head term's
+    rows may SPLIT across tasks — each task merges only the rows it
+    received and no task ever materializes a whole 10^12-scale term.
+    Output chunks of one term are then doc-DISJOINT but not globally
+    doc-ordered across tasks; every scorer only needs each chunk
+    internally sorted + each posting in exactly one chunk (doc_ids are
+    unique across parts), both of which hold. df/N/avgdl are the group's
+    stored stats (NOT shrunk by tombstones), so post-compaction scores
+    equal pre-compaction ones."""
+    block_size = cfg.block_size
     ts_arr = sorted_tombstone_arr(tombstones)
 
-    def _compact_stream(pdf_iter):
-        """One range-partitioned slice of posting rows -> merged chunk rows.
-
-        Parts overlap in doc_id range, so unlike the build merge
-        (bucket-disjoint concat) this is a true k-way merge — decode,
-        argsort by doc_id, re-encode. Doc-range parallel: the shuffle
-        range-partitions on (tb, term_id, first_doc), so a head term's rows
-        may SPLIT across tasks — each task merges only the rows it received
-        and no task ever materializes a whole 10^12-scale term. Output
-        chunks of one term are then doc-DISJOINT but not globally
-        doc-ordered across tasks; every scorer only needs each chunk
-        internally sorted + each posting in exactly one chunk (doc_ids are
-        unique across parts), both of which hold. df arrives precomputed on
-        every row (df_full, the per-part-df pre-agg sum), so idf and block
-        maxes are exact regardless of task boundaries.
-
-        Streams complete term groups via _iter_term_chunks — resident
-        memory is O(arrow batch + one term's slice), never the partition.
-        """
-        for pdf in _iter_term_chunks(pdf_iter):
-            out = _compact_chunk(pdf)
-            if out is not None:
-                yield out
-
-    def _compact_chunk(pdf: pd.DataFrame) -> pd.DataFrame | None:
-        terms = pdf["term_id"].to_numpy(dtype=np.int64)
-        df_fulls = pdf["df_full"].to_numpy(dtype=np.int64)
-        id_bufs = pdf["doc_ids_bin"].to_numpy()
-        tf_bufs = pdf["tfs_bin"].to_numpy()
-        dl_bufs = pdf["doc_lens_bin"].to_numpy()
-        row_new = np.empty(len(pdf), dtype=bool)
-        row_new[0] = True
-        row_new[1:] = terms[1:] != terms[:-1]
-        row_starts = np.flatnonzero(row_new)
-        row_ends = np.append(row_starts[1:], len(pdf))
-
-        cap = max(block_size, (cfg.max_row_postings // block_size) * block_size)
-        out_terms, dfs, chunks, group_starts = [], [], [], []
-        all_ids, all_tfs, all_dls = [], [], []
-        blk_lasts, blk_maxes = [], []
-        pos = 0
-        for s, e in zip(row_starts, row_ends):
-            ids_p, tfs_p, dls_p = [], [], []
-            for i in range(s, e):
-                ids_p.append(decode_ids_blocked(bytes(id_bufs[i]), block_size).astype(np.int64))
-                tfs_p.append(varbyte_decode(bytes(tf_bufs[i])))
-                dls_p.append(varbyte_decode(bytes(dl_bufs[i])))
-            ids = np.concatenate(ids_p)
-            tfs = np.concatenate(tfs_p)
-            dls = np.concatenate(dls_p)
-            order = np.argsort(ids, kind="stable")
-            ids, tfs, dls = ids[order], tfs[order], dls[order]
-            if ts_arr is not None:
-                keep = tombstone_keep_mask(ids, ts_arr)
-                ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-            if ids.size == 0:
-                continue
-            # df/N/avgdl carried from the group's stored stats (NOT shrunk by
-            # tombstones) so post-compaction scores equal pre-compaction ones
-            df = int(df_fulls[s])
-            w = idf_fn(n_docs, df)
-            for ci, c0 in enumerate(range(0, int(ids.size), cap)):
-                c1 = min(c0 + cap, int(ids.size))
-                c_ids, c_tfs, c_dls = ids[c0:c1], tfs[c0:c1], dls[c0:c1]
-                lasts, bmax = block_maxes(
-                    c_ids.astype(np.uint64), c_tfs.astype(np.float64),
-                    c_dls.astype(np.float64), w, k1, b, avgdl, block_size,
-                )
-                out_terms.append(terms[s])
-                dfs.append(df)
-                chunks.append(ci)
-                group_starts.append(pos)
-                pos += c_ids.size
-                all_ids.append(c_ids.astype(np.uint64))
-                all_tfs.append(c_tfs)
-                all_dls.append(c_dls)
-                blk_lasts.append(lasts.tolist())
-                blk_maxes.append(bmax.tolist())
-
-        if not out_terms:
-            return None  # every posting in this slice tombstoned away
-        gs = np.asarray(group_starts, dtype=np.int64)
-        id_bin, id_offs = encode_grouped_blocked(
-            np.concatenate(all_ids), gs, block_size, delta=True
+    def _merge_parts(id_bufs, tf_bufs, dl_bufs):
+        ids = np.concatenate(
+            [decode_ids_blocked(bytes(buf), block_size).astype(np.int64) for buf in id_bufs]
         )
-        tf_bin, tf_offs = encode_grouped_blocked(
-            np.concatenate(all_tfs), gs, block_size, delta=False
-        )
-        dl_bin, dl_offs = encode_grouped_blocked(
-            np.concatenate(all_dls), gs, block_size, delta=False
-        )
-        return pd.DataFrame(
-            {
-                "term_id": np.asarray(out_terms, dtype=np.int64),
-                "df": np.asarray(dfs, dtype=np.int64),
-                "chunk": np.asarray(chunks, dtype=np.int32),
-                "doc_ids_bin": id_bin,
-                "tfs_bin": tf_bin,
-                "doc_lens_bin": dl_bin,
-                "block_lasts": blk_lasts,
-                "block_maxes": blk_maxes,
-                "id_offs": id_offs,
-                "tf_offs": tf_offs,
-                "dl_offs": dl_offs,
-            }
-        )
+        tfs = np.concatenate([varbyte_decode(bytes(buf)) for buf in tf_bufs])
+        dls = np.concatenate([varbyte_decode(bytes(buf)) for buf in dl_bufs])
+        order = np.argsort(ids, kind="stable")
+        ids, tfs, dls = ids[order], tfs[order], dls[order]
+        if ts_arr is not None:
+            keep = tombstone_keep_mask(ids, ts_arr)
+            ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
+        return ids, tfs, dls
 
-    return _compact_stream
+    return make_posting_fold(n_docs, avgdl, cfg, _merge_parts)
 
 
 def _first_doc_udf():
@@ -541,64 +449,27 @@ def _first_doc_udf():
     return first_doc
 
 
-def _positions_fold_done(out_dir: str) -> bool:
-    """Resume check: the positional fold committed (lineage row + meta)."""
-    import pyarrow.dataset as ds
-
-    lin_dir = os.path.join(out_dir, "lineage")
-    if not os.path.isdir(lin_dir) or not os.path.exists(
-        os.path.join(out_dir, "positions_meta.json")
+def _fold_side_index(out_dir: str, stage: str, marker: str, fold) -> None:
+    """Run one side-index fold of compact_index unless a resume finds it
+    committed (a `stage` lineage row AND its marker), then commit it with a
+    lineage row."""
+    if done_partitions(out_dir, stage) and os.path.exists(
+        os.path.join(out_dir, marker)
     ):
-        return False
-    dataset = ds.dataset(lin_dir, format="parquet")
-    if not dataset.schema.names:
-        return False
-    tbl = dataset.to_table(columns=["stage", "status"])
-    return any(
-        s == "compact_positions" and st == "done"
-        for s, st in zip(tbl["stage"].to_pylist(), tbl["status"].to_pylist())
+        return
+    t0 = time.time()
+    fold()
+    _write_lineage(
+        [
+            dict(
+                stage=stage, partition_id=-1,
+                input_rows=-1, output_rows=-1,
+                wall_s=time.time() - t0, rows_per_s=0.0,
+                bytes_out=-1, status="done", ts=time.time(),
+            )
+        ],
+        os.path.join(out_dir, "lineage"),
     )
-
-
-def _bigram_fold_done(out_dir: str) -> bool:
-    """Resume check: the bigram fold committed (lineage row + meta)."""
-    import pyarrow.dataset as ds
-
-    lin_dir = os.path.join(out_dir, "lineage")
-    if not os.path.isdir(lin_dir) or not os.path.exists(
-        os.path.join(out_dir, "bigram_meta.json")
-    ):
-        return False
-    dataset = ds.dataset(lin_dir, format="parquet")
-    if not dataset.schema.names:
-        return False
-    tbl = dataset.to_table(columns=["stage", "status"])
-    return any(
-        s == "compact_bigrams" and st == "done"
-        for s, st in zip(tbl["stage"].to_pylist(), tbl["status"].to_pylist())
-    )
-
-
-def _completed_compact_groups(out_dir: str) -> set[int]:
-    """Driver-side lineage read: which tb-range groups already committed."""
-    import pyarrow.dataset as ds
-
-    lin_dir = os.path.join(out_dir, "lineage")
-    if not os.path.isdir(lin_dir):
-        return set()
-    dataset = ds.dataset(lin_dir, format="parquet")
-    if not dataset.schema.names:
-        return set()
-    tbl = dataset.to_table(columns=["stage", "status", "partition_id"])
-    return {
-        int(p)
-        for s, st, p in zip(
-            tbl["stage"].to_pylist(),
-            tbl["status"].to_pylist(),
-            tbl["partition_id"].to_pylist(),
-        )
-        if s == "compact_group" and st == "done"
-    }
 
 
 def compact_index(
@@ -642,12 +513,8 @@ def compact_index(
     exactly one tb, so per-group pre-aggs see every row of their terms).
     """
     import json
-    import shutil
-    import time
 
     import pyarrow.dataset as pads
-
-    from olaf_spark.indexer import _write_lineage
 
     group = IndexGroup.load(base_dir)
     cfg = group.cfg
@@ -725,7 +592,7 @@ def compact_index(
             dir_bytes(*(os.path.join(p.index_dir, "postings") for p in group.parts)),
         )
 
-    done = _completed_compact_groups(out_dir)
+    done = done_partitions(out_dir, "compact_group")
     for g in range(n_groups):
         if g in done:
             continue
@@ -800,34 +667,21 @@ def compact_index(
     # to the skip branch below — raising inside compact_positions AFTER the
     # postings groups committed but BEFORE stats.json would leave the
     # compaction permanently un-completable (every resume re-raises)
-    from olaf_spark.phrase import positions_usable
+    from olaf_spark.phrase import compact_positions, positions_usable
 
-    pos_have = [positions_usable(p.index_dir) for p in group.parts]
+    part_dirs = [p.index_dir for p in group.parts]
+    pos_have = [positions_usable(d) for d in part_dirs]
     pos_exist = [
-        os.path.exists(os.path.join(p.index_dir, "positions_meta.json"))
-        for p in group.parts
+        os.path.exists(os.path.join(d, "positions_meta.json")) for d in part_dirs
     ]
     if all(pos_have):
-        # resume: a committed fold (lineage row + meta) is not redone
-        if not _positions_fold_done(out_dir):
-            from olaf_spark.phrase import compact_positions
-
-            p_t0 = time.time()
-            compact_positions(
-                spark, [p.index_dir for p in group.parts], out_dir,
-                tombstones, cfg, n_merge_tasks=n_merge_tasks,
-            )
-            _write_lineage(
-                [
-                    dict(
-                        stage="compact_positions", partition_id=-1,
-                        input_rows=-1, output_rows=-1,
-                        wall_s=time.time() - p_t0, rows_per_s=0.0,
-                        bytes_out=-1, status="done", ts=time.time(),
-                    )
-                ],
-                lin_dir,
-            )
+        _fold_side_index(
+            out_dir, "compact_positions", "positions_meta.json",
+            lambda: compact_positions(
+                spark, part_dirs, out_dir, tombstones, cfg,
+                n_merge_tasks=n_merge_tasks,
+            ),
+        )
     elif any(pos_exist):
         # SOME parts have a positions_meta.json but not all are usable
         # (a positionless delta, a stale pre-v3 layout, or a corrupt meta)
@@ -850,30 +704,19 @@ def compact_index(
     # so any group built through the public API passes).
     from olaf_spark.bigram import bigrams_usable, compact_bigrams, group_heads
 
-    bg_part_dirs = [p.index_dir for p in group.parts]
     bg_exist = [
-        os.path.exists(os.path.join(d, "bigram_meta.json")) for d in bg_part_dirs
+        os.path.exists(os.path.join(d, "bigram_meta.json")) for d in part_dirs
     ]
-    if group_heads(bg_part_dirs) is not None:
-        if not _bigram_fold_done(out_dir):
-            b_t0 = time.time()
-            compact_bigrams(
-                spark, bg_part_dirs, out_dir, tombstones, cfg,
+    if group_heads(part_dirs) is not None:
+        _fold_side_index(
+            out_dir, "compact_bigrams", "bigram_meta.json",
+            lambda: compact_bigrams(
+                spark, part_dirs, out_dir, tombstones, cfg,
                 n_merge_tasks=n_merge_tasks,
-            )
-            _write_lineage(
-                [
-                    dict(
-                        stage="compact_bigrams", partition_id=-1,
-                        input_rows=-1, output_rows=-1,
-                        wall_s=time.time() - b_t0, rows_per_s=0.0,
-                        bytes_out=-1, status="done", ts=time.time(),
-                    )
-                ],
-                lin_dir,
-            )
+            ),
+        )
     elif any(bg_exist):
-        n_ok = sum(bigrams_usable(d) for d in bg_part_dirs)
+        n_ok = sum(bigrams_usable(d) for d in part_dirs)
         print(
             f"compact_index: {n_ok}/{len(bg_exist)} parts carry a usable "
             "bigram side index (or head sets differ) — bigrams NOT folded "

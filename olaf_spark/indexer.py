@@ -42,7 +42,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import time
 
 import numpy as np
@@ -241,6 +240,40 @@ def bucket_expr(id_col, lo: int, width: int, n_buckets: int):
     )
 
 
+def _bucket_width(lo: int, hi: int, n_buckets: int) -> int:
+    return max(1, (hi - lo) // n_buckets + 1)
+
+
+def doc_range(
+    docs: DataFrame, id_col: str, n_buckets: int, target: str
+) -> tuple[int, int, int, int]:
+    """(n, lo, hi, width) of a build's doc-range bucketing, from ONE agg
+    over the input (count + id bounds). Every build (postings, positions,
+    bigrams) calls this BEFORE its first destructive step, so a refused
+    call (empty docs, e.g. a mis-filtered source) is a true no-op: nothing
+    committed under `target` is retracted or overwritten."""
+    row = docs.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.min(F.col(id_col)).alias("lo"),
+        F.max(F.col(id_col)).alias("hi"),
+    ).collect()[0]
+    n = int(row["n"])
+    if n == 0:
+        raise ValueError(f"refusing to build {target}: docs has no rows (n_docs=0)")
+    lo, hi = int(row["lo"]), int(row["hi"])
+    return n, lo, hi, _bucket_width(lo, hi, n_buckets)
+
+
+def fold_range(metas: list[dict]) -> tuple[int, int, int, int]:
+    """(lo, hi, n_buckets, width) of a compaction fold's output bucketing,
+    from the parts' recorded metas: the union of their doc ranges under the
+    largest part's bucket count, with the same width formula as doc_range."""
+    lo = min(m["lo"] for m in metas)
+    hi = max(m["hi"] for m in metas)
+    n_buckets = max(m["n_buckets"] for m in metas)
+    return lo, hi, n_buckets, _bucket_width(lo, hi, n_buckets)
+
+
 def _iter_term_chunks(pdf_iter):
     """Regroup an Arrow batch stream (rows sorted by term_id within the
     partition) into frames of COMPLETE term groups.
@@ -340,36 +373,34 @@ def _make_pack_stage1(lo: int, width: int, n_buckets: int):
     return _pack
 
 
-def _make_merge_fn(n_docs: int, avgdl: float, cfg: EngineConfig):
+def make_posting_fold(n_docs: int, avgdl: float, cfg: EngineConfig, decode):
+    """mapInPandas fn shared by the build merge and compaction: a stream of
+    packed rows sorted by term_id, each carrying its term's exact df
+    (df_full) -> chunked global POSTINGS_SCHEMA rows.
+
+    decode(id_bufs, tf_bufs, dl_bufs) receives one term's packed buffers
+    (the rows of it this task holds) and returns its (ids, tfs, dls) in
+    doc order — the one step the callers differ in: the merge concatenates
+    bucket-disjoint runs, compaction sorts the parts' rows by doc and drops
+    tombstones. A term that decodes empty is skipped. df arrives on every
+    row, so idf and block maxes are exact regardless of which task packs
+    which doc range; `chunk` is a task-local ordinal (rows of one term are
+    doc-range disjoint; nothing depends on chunk numbering).
+
+    Streams complete term groups via _iter_term_chunks — resident memory is
+    O(arrow batch + one term's rows), never the partition.
+    """
     k1, b, block_size = cfg.k1, cfg.b, cfg.block_size
-    max_row_postings = cfg.max_row_postings
+    # head-term row cap, aligned to block_size so block metadata stays
+    # chunk-local (config docstring: no task/read depends on one term
+    # fitting one row at 10^12 docs)
+    cap = max(block_size, (cfg.max_row_postings // block_size) * block_size)
 
-    def _merge_stream(pdf_iter) -> "pd.DataFrame":
-        """One sorted partition of segment rows -> chunked global posting
-        rows. Runs are sorted by doc_id within a bucket and buckets are
-        disjoint doc_id ranges, so concatenation in (term, bucket) order IS
-        the merge (Olaf's store_cached bulk load / sorted B+tree insert).
-
-        Doc-range parallel: the shuffle range-partitions on (tb, term_id,
-        bucket), so a head term's runs may SPLIT across tasks — each task
-        merges its contiguous bucket range only, and no task ever holds a
-        whole 10^12-scale term. df arrives precomputed on every run row
-        (df_full, an exact sum of run n_docs done as a cheap pre-agg), so
-        idf and block maxes are exact regardless of which task packs which
-        range. `chunk` is a task-local ordinal (rows of one term are
-        doc-range disjoint; nothing depends on chunk numbering).
-
-        Streams complete term groups via _iter_term_chunks — resident
-        memory is O(arrow batch + one term's runs), never the partition.
-        """
-        for pdf in _iter_term_chunks(pdf_iter):
-            yield _merge_chunk(pdf)
-
-    def _merge_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
+    def _pack_chunk(pdf: pd.DataFrame) -> pd.DataFrame | None:
         terms = pdf["term_id"].to_numpy(dtype=np.int64)
         df_fulls = pdf["df_full"].to_numpy(dtype=np.int64)
         # plain object arrays: .iloc in the hot loop costs ~10us per access,
-        # which at millions of segment rows turned the merge superlinear
+        # which at millions of rows turned the merge superlinear
         id_bufs = pdf["doc_ids_bin"].to_numpy()
         tf_bufs = pdf["tfs_bin"].to_numpy()
         dl_bufs = pdf["doc_lens_bin"].to_numpy()
@@ -379,26 +410,19 @@ def _make_merge_fn(n_docs: int, avgdl: float, cfg: EngineConfig):
         row_starts = np.flatnonzero(row_new)
         row_ends = np.append(row_starts[1:], len(pdf))
 
-        # head-term row cap, aligned to block_size so block metadata stays
-        # chunk-local (config docstring: no task/read depends on one term
-        # fitting one row at 10^12 docs)
-        cap = max(block_size, (max_row_postings // block_size) * block_size)
-
         all_ids, all_tfs, all_dls = [], [], []
         out_terms, dfs, chunks, group_starts = [], [], [], []
         blk_lasts, blk_maxes = [], []
         pos = 0
         for s, e in zip(row_starts, row_ends):
-            ids = np.concatenate(
-                [delta_decode(varbyte_decode(id_bufs[i])) for i in range(s, e)]
-            )
-            tfs = np.concatenate([varbyte_decode(tf_bufs[i]) for i in range(s, e)])
-            dls = np.concatenate([varbyte_decode(dl_bufs[i]) for i in range(s, e)])
+            ids, tfs, dls = decode(id_bufs[s:e], tf_bufs[s:e], dl_bufs[s:e])
+            if ids.size == 0:
+                continue  # every posting of this term slice tombstoned away
+            ids = ids.astype(np.uint64, copy=False)
             df_full = int(df_fulls[s])
             w = idf(n_docs, df_full)
-            local_n = int(ids.size)  # this task's doc-range portion, <= df_full
-            for ci, c0 in enumerate(range(0, local_n, cap)):
-                c1 = min(c0 + cap, local_n)
+            for ci, c0 in enumerate(range(0, int(ids.size), cap)):
+                c1 = min(c0 + cap, int(ids.size))
                 c_ids, c_tfs, c_dls = ids[c0:c1], tfs[c0:c1], dls[c0:c1]
                 lasts, bmax = block_maxes(
                     c_ids, c_tfs.astype(np.float64), c_dls.astype(np.float64),
@@ -415,6 +439,8 @@ def _make_merge_fn(n_docs: int, avgdl: float, cfg: EngineConfig):
                 blk_lasts.append(lasts.tolist())
                 blk_maxes.append(bmax.tolist())
 
+        if not out_terms:
+            return None
         cat = np.concatenate
         gs = np.asarray(group_starts, dtype=np.int64)
         id_bin, id_offs = encode_grouped_blocked(cat(all_ids), gs, block_size, delta=True)
@@ -436,7 +462,24 @@ def _make_merge_fn(n_docs: int, avgdl: float, cfg: EngineConfig):
             }
         )
 
-    return _merge_stream
+    def _fold(pdf_iter):
+        for pdf in _iter_term_chunks(pdf_iter):
+            out = _pack_chunk(pdf)
+            if out is not None:
+                yield out
+
+    return _fold
+
+
+def _concat_runs(id_bufs, tf_bufs, dl_bufs):
+    """The build merge's decode: a term's segment runs are sorted by doc_id
+    within a bucket and buckets are disjoint doc_id ranges, so
+    concatenation in bucket order IS the merge (Olaf's store_cached bulk
+    load / sorted B+tree insert)."""
+    ids = np.concatenate([delta_decode(varbyte_decode(buf)) for buf in id_bufs])
+    tfs = np.concatenate([varbyte_decode(buf) for buf in tf_bufs])
+    dls = np.concatenate([varbyte_decode(buf) for buf in dl_bufs])
+    return ids, tfs, dls
 
 
 class Index:
@@ -671,12 +714,15 @@ def _write_lineage(rows: list[dict], lin_dir: str) -> None:
     mfs.publish_new(tmp, final)
 
 
-def completed_buckets(spark: SparkSession, index_dir: str) -> set[int]:
-    """Read lineage driver-side (tiny metadata; no Spark job on resume)."""
+def done_partitions(index_dir: str, stage: str) -> set[int]:
+    """partition_ids of the `stage` rows committed (status done) in
+    <index_dir>/lineage — the one resume check of every build and
+    compaction stage. Read driver-side (tiny metadata; no Spark job on
+    resume); empty when no manifest has landed."""
     import pyarrow.dataset as ds
 
     lin_dir = os.path.join(index_dir, "lineage")
-    if not os.path.exists(lin_dir):
+    if not os.path.isdir(lin_dir):
         return set()
     dataset = ds.dataset(lin_dir, format="parquet")
     if not dataset.schema.names:  # dir created but no manifest landed (crash
@@ -687,7 +733,7 @@ def completed_buckets(spark: SparkSession, index_dir: str) -> set[int]:
         for s, st, p in zip(
             tbl["stage"].to_pylist(), tbl["status"].to_pylist(), tbl["partition_id"].to_pylist()
         )
-        if s == "segments" and st == "done"
+        if s == stage and st == "done"
     }
 
 
@@ -707,6 +753,10 @@ def build_index(
 
     cfg = cfg or EngineConfig()
     t_start = time.time()
+    # corpus stats: ONE scan for count + id bounds, before anything is removed
+    n_docs, lo, _hi, bucket_width = doc_range(
+        docs, id_col, n_buckets, f"an index at {index_dir}"
+    )
     mfs = get_metafs()
     if not resume and os.path.exists(index_dir):
         mfs.remove_dir(index_dir)
@@ -716,21 +766,6 @@ def build_index(
     seg_dir = os.path.join(index_dir, "segments")
     post_dir = os.path.join(index_dir, "postings")
     lin_dir = os.path.join(index_dir, "lineage")
-
-    # ---- corpus stats: ONE scan for count + id bounds ----------------------
-    bounds = docs.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min(F.col(id_col)).alias("lo"),
-        F.max(F.col(id_col)).alias("hi"),
-    ).collect()[0]
-    n_docs = int(bounds["n"])
-    if n_docs == 0:
-        raise ValueError(
-            f"build_index: input corpus is empty (0 rows in {id_col}/{text_col} "
-            "input) — refusing to write an index with n_docs=0"
-        )
-    lo, hi = int(bounds["lo"]), int(bounds["hi"])
-    bucket_width = max(1, (hi - lo) // n_buckets + 1)
 
     # parallelize the tokenize feeding the bucket exchange: a single-file
     # corpus scans as one task otherwise (session.rebalance_scan — no-op
@@ -746,7 +781,7 @@ def build_index(
     b_expr = bucket_expr(F.col("doc_id"), lo, bucket_width, n_buckets)
 
     # ---- stage 1: partition-local packed segments (resumable) -------------
-    done = completed_buckets(spark, index_dir) if resume else set()
+    done = done_partitions(index_dir, "segments") if resume else set()
     todo_pf = pf.where(~b_expr.isin(sorted(done))) if done else pf
 
     t0 = time.time()
@@ -797,7 +832,7 @@ def build_index(
 
     # ---- stage 2: merge bucket-runs into global postings -------------------
     t0 = time.time()
-    merge_fn = _make_merge_fn(n_docs, avgdl, cfg)
+    merge_fn = make_posting_fold(n_docs, avgdl, cfg, _concat_runs)
     segments = spark.read.parquet(seg_dir)
     from pyspark.sql import Observation
 

@@ -24,7 +24,7 @@ def file_sig(path: str) -> tuple[int, int] | None:
     """(st_ino, st_mtime_ns) of path, or None when it cannot be stat'd.
 
     Catches OSError, not just FileNotFoundError: callers documented as
-    never-raise (bigrams_usable, has_bigram_rows, group_heads) reach this
+    never-raise (bigrams_usable, phrase.has_rows, group_heads) reach this
     with paths where a stray FILE may sit in a directory position
     (NotADirectoryError) or permissions may forbid the stat — any of
     those means "treat as absent", matching positions_usable's posture."""

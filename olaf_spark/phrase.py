@@ -39,9 +39,13 @@ corpus statistics, so group serving is just "read every part's position
 rows" — phrase_topk automatically includes any delta that carries its own
 positions (append_index(..., with_positions=True) builds them alongside
 the delta's postings), and refuses loudly if some delta lacks them
-(silent partial answers would be worse). After compact_index, rebuild
-positions once for the folded corpus (one shuffle, ~3x faster than the
-main index build — no merge stage).
+(silent partial answers would be worse). compact_index folds every
+part's positional rows into the compacted index (compact_positions), so
+phrase serving resumes the moment it commits — no positions rebuild.
+
+One skeleton for every doc-range-bucketed positional kind (positions
+here, bigram pairs in bigram.py): write_positional_rows is the one build
+writer and fold_positional_rows the one compaction fold + commit.
 """
 
 from __future__ import annotations
@@ -59,7 +63,12 @@ from olaf_spark.indexer import (
     _iter_term_chunks,
     bucket_expr,
     bucket_of_np,
+    cluster_for_write,
+    dir_bytes,
+    doc_range,
+    fold_range,
     in_expr_int,
+    merge_task_count,
     shard_from_id_col,
     sorted_tombstone_arr,
     term_id_col,
@@ -163,6 +172,43 @@ def _make_pack_positions(lo: int, width: int, n_buckets: int):
     return _pack
 
 
+def write_positional_rows(
+    spark: SparkSession,
+    occ: DataFrame,
+    rows_dir: str,
+    lo: int,
+    width: int,
+    n_buckets: int,
+    cfg: EngineConfig,
+) -> None:
+    """The one build writer of positional rows (positions and bigram
+    pairs): (doc_id, pos, term_id) occurrence rows -> one packed
+    POSITIONS_SCHEMA row per (term, doc-range bucket), clustered on tb
+    (one file per tb) and written hive-partitioned by tb under rows_dir.
+    The bucket exchange is the only wide shuffle of the raw occurrences."""
+    b_expr = bucket_expr(F.col("doc_id"), lo, width, n_buckets)
+    n_tasks = max(n_buckets, spark.sparkContext.defaultParallelism)
+    packed = (
+        occ.repartition(n_tasks, b_expr, F.col("term_id"))
+        .sortWithinPartitions("term_id", "doc_id", "pos")
+        .mapInPandas(_make_pack_positions(lo, width, n_buckets), POSITIONS_SCHEMA)
+        .withColumn("tb", shard_from_id_col(F.col("term_id"), cfg.n_segments))
+    )
+    packed = cluster_for_write(packed, "tb", n_tasks, cfg.n_segments)
+    packed.write.mode("overwrite").partitionBy("tb").parquet(rows_dir)
+
+
+def _positions_meta(lo: int, hi: int, n_buckets: int, width: int) -> dict:
+    """positions_meta.json — the positional index's commit marker."""
+    return {
+        "n_buckets": n_buckets,
+        "format_version": POSITIONS_FORMAT_VERSION,
+        "lo": lo,
+        "hi": hi,
+        "width": width,
+    }
+
+
 def build_positions(
     spark: SparkSession,
     docs: DataFrame,
@@ -173,6 +219,8 @@ def build_positions(
     n_buckets: int = 16,
 ) -> str:
     """Materialize the positional side index under <out_dir>/positions."""
+    from olaf_spark.metafs import get_metafs
+    from olaf_spark.session import rebalance_scan
 
     cfg = cfg or EngineConfig()
     # config-freeze invariant (olaf_config.h:46-50): when out_dir already
@@ -181,28 +229,13 @@ def build_positions(
     # the main postings under a different contract on the next load
     if os.path.exists(os.path.join(out_dir, "engine_config.json")):
         EngineConfig.load(out_dir).check_compatible(cfg)
-    # validate BEFORE any destructive step: a refused call (empty docs)
-    # must be a true no-op — retract-then-validate would destroy a working
-    # committed positional index on a mis-filtered rebuild input and
-    # leave every phrase query on the group raising until a real rebuild
-    bounds = docs.agg(
-        F.min(F.col(id_col)).alias("lo"), F.max(F.col(id_col)).alias("hi")
-    ).collect()[0]
-    if bounds["lo"] is None:
-        raise ValueError(
-            f"refusing to build positions at {out_dir}: docs has no rows"
-        )
+    _n, lo, hi, width = doc_range(docs, id_col, n_buckets, f"positions at {out_dir}")
     # REBUILD over committed positions: retract the commit marker before
     # any row lands — a crash mid-rebuild must leave _check_positions
     # refusing loudly, never the old meta over partially-overwritten rows
     # (which would serve silently wrong phrase answers)
-    from olaf_spark.metafs import get_metafs
-
-    get_metafs().remove_file(os.path.join(out_dir, "positions_meta.json"))
-    lo, hi = int(bounds["lo"]), int(bounds["hi"])
-    width = max(1, (hi - lo) // n_buckets + 1)
-
-    from olaf_spark.session import rebalance_scan
+    mfs = get_metafs()
+    mfs.remove_file(os.path.join(out_dir, "positions_meta.json"))
 
     toks = tokens_df(
         rebalance_scan(spark, docs, id_col), text_col, id_col, cfg, with_pos=True
@@ -211,33 +244,17 @@ def build_positions(
         "doc_id", F.col("pos").cast("long").alias("pos"),
         term_id_col(F.col("term")).alias("term_id"),
     )
-    b_expr = bucket_expr(F.col("doc_id"), lo, width, n_buckets)
-    n_tasks = max(n_buckets, spark.sparkContext.defaultParallelism)
-    packed = (
-        occ.repartition(n_tasks, b_expr, F.col("term_id"))
-        .sortWithinPartitions("term_id", "doc_id", "pos")
-        .mapInPandas(_make_pack_positions(lo, width, n_buckets), POSITIONS_SCHEMA)
-        .withColumn("tb", shard_from_id_col(F.col("term_id"), cfg.n_segments))
+    write_positional_rows(
+        spark, occ, os.path.join(out_dir, "positions"), lo, width, n_buckets, cfg
     )
-    from olaf_spark.indexer import cluster_for_write
-
-    packed = cluster_for_write(packed, "tb", n_tasks, cfg.n_segments)
-    pos_dir = os.path.join(out_dir, "positions")
-    packed.write.mode("overwrite").partitionBy("tb").parquet(pos_dir)
     cfg.save(out_dir)
     # atomic publish: the meta IS the commit marker (_check_positions
     # refuses without it) — a crash mid-dump must not leave a truncated
     # json that turns the clean 'rebuild with build_positions' refusal
     # into a JSONDecodeError on every phrase query
-    get_metafs().publish_json(
+    mfs.publish_json(
         os.path.join(out_dir, "positions_meta.json"),
-        {
-            "n_buckets": n_buckets,
-            "format_version": POSITIONS_FORMAT_VERSION,
-            "lo": lo,
-            "hi": hi,
-            "width": width,
-        },
+        _positions_meta(lo, hi, n_buckets, width),
     )
     return out_dir
 
@@ -250,7 +267,7 @@ def _make_fold_positions(lo: int, width: int, n_buckets: int, bts):
     a position byte: doc headers are re-sorted, tombstoned docs dropped,
     and each surviving doc's position byte-slice is gathered VERBATIM into
     the new buffer (one vectorized fancy-index per term). The same
-    doc-range-parallel shape as the postings fold (_compact_chunk): a head
+    doc-range-parallel shape as the postings fold (make_posting_fold): a head
     term's rows may split across tasks, yielding multiple doc-disjoint
     output rows per (term, bucket), which the read path already merges.
 
@@ -351,6 +368,101 @@ def _make_fold_positions(lo: int, width: int, n_buckets: int, bts):
     return _fold
 
 
+#: per-root row-presence cache keyed by the <d>/<kind> root dir's
+#: (inode, mtime_ns) sig — every committed (re)build removes + recreates
+#: the root (new inode) or creates/removes tb= partition dirs directly
+#: under it (new mtime), so the key invalidates on rebuild. Saves an
+#: os.walk per part per query.
+_ROWS_CACHE: dict[str, tuple] = {}
+_ROWS_CACHE_MAX = 256
+
+
+def has_rows(d: str, kind: str) -> bool:
+    """True when <d>/<kind> holds at least one COMMITTED parquet file
+    (hidden/_-prefixed dirs and files — Spark _temporary task attempts,
+    _SUCCESS, dot-tmp strays — are ignored, matching what the parquet
+    readers themselves skip). An empty DataFrame written with partitionBy
+    materializes only _SUCCESS — unreadable by spark.read.parquet AND
+    schemaless for pyarrow dataset filters. Never raises."""
+    from olaf_spark.lru import file_sig, lru_get
+
+    root = os.path.join(d, kind)
+    sig = file_sig(root)
+    if sig is None:
+        return False
+
+    def load() -> bool:
+        for _cur, dirs, files in os.walk(root):
+            dirs[:] = [x for x in dirs if not x.startswith(("_", "."))]
+            if any(
+                f.endswith(".parquet") and not f.startswith(("_", "."))
+                for f in files
+            ):
+                return True
+        return False
+
+    return lru_get(_ROWS_CACHE, root, sig, load, _ROWS_CACHE_MAX)
+
+
+def fold_positional_rows(
+    spark: SparkSession,
+    part_dirs: list[str],
+    out_dir: str,
+    kind: str,
+    marker: str,
+    metas: list[dict],
+    make_meta,
+    tombstones: set[int],
+    cfg: EngineConfig,
+    n_merge_tasks: int | None = None,
+) -> None:
+    """The one compaction fold + commit of positional rows (positions and
+    bigram pairs): every part's <d>/<kind> rows -> <out_dir>/<kind> under
+    the folded corpus's bucket layout (fold_range over the parts' metas),
+    then make_meta(lo, hi, n_buckets, width) is published as <marker>.
+
+    One Spark job, doc-range parallel via the same (tb, term_id, first_doc)
+    range shuffle as the postings fold; tombstoned docs are physically
+    dropped. Commit protocol: the marker and any stale rows in out_dir are
+    retracted FIRST (a failed fold must leave the kind unusable — serving
+    refuses or degrades — never the old marker over cleared or partial
+    rows), and the marker lands LAST. Parts with no committed row file
+    (rowless but committed) contribute nothing. make_meta runs after the
+    rows land, so sidecars the marker covers are written there."""
+    from olaf_spark.incremental import _first_doc_udf
+    from olaf_spark.metafs import get_metafs
+
+    mfs = get_metafs()
+    marker_path = os.path.join(out_dir, marker)
+    rows_dir = os.path.join(out_dir, kind)
+    mfs.remove_file(marker_path)
+    if os.path.isdir(rows_dir):
+        mfs.remove_dir(rows_dir, ignore_errors=True)
+    lo, hi, n_buckets, width = fold_range(metas)
+    srcs = [os.path.join(d, kind) for d in part_dirs if has_rows(d, kind)]
+    if srcs:
+        if n_merge_tasks is None:
+            n_merge_tasks = merge_task_count(spark, dir_bytes(*srcs))
+        bts = spark.sparkContext.broadcast(sorted_tombstone_arr(tombstones))
+        rows = spark.read.parquet(srcs[0])
+        for src in srcs[1:]:
+            rows = rows.unionByName(spark.read.parquet(src))
+        folded = (
+            rows.select(
+                "term_id", "doc_ids_bin", "pos_counts_bin", "pos_bin", "pos_offs", "tb"
+            )
+            .withColumn("first_doc", _first_doc_udf()(F.col("doc_ids_bin")))
+            .repartitionByRange(n_merge_tasks, "tb", "term_id", "first_doc")
+            .sortWithinPartitions("term_id", "first_doc")
+            .mapInPandas(
+                _make_fold_positions(lo, width, n_buckets, bts), POSITIONS_SCHEMA
+            )
+            .withColumn("tb", shard_from_id_col(F.col("term_id"), cfg.n_segments))
+        )
+        folded.write.mode("overwrite").partitionBy("tb").parquet(rows_dir)
+    mfs.publish_json(marker_path, make_meta(lo, hi, n_buckets, width))
+
+
 def compact_positions(
     spark: SparkSession,
     part_dirs: list[str],
@@ -365,12 +477,8 @@ def compact_positions(
     reference analogue: Olaf's t1 timestamps live INSIDE every packed
     posting and ride each store/merge automatically,
     src/olaf_fp_db_writer.c:54-59, src/olaf_fp_db_writer_cache.c:92-114).
-
-    One Spark job, doc-range parallel via the same (tb, term_id, first_doc)
-    range shuffle as the postings fold; tombstoned docs are physically
-    dropped using the SAME snapshot the postings fold used. positions_meta
-    lands LAST (tmp + rename) — the fold either completed or phrase_topk
-    still refuses loudly."""
+    Tombstoned docs are dropped using the SAME snapshot the postings fold
+    used; fold and commit protocol: fold_positional_rows."""
 
     metas = []
     for d in part_dirs:
@@ -383,50 +491,9 @@ def compact_positions(
                 f"v{POSITIONS_FORMAT_VERSION} — rebuild with build_positions"
             )
         metas.append(meta)
-    lo = min(m["lo"] for m in metas)
-    hi = max(m["hi"] for m in metas)
-    n_buckets = max(m["n_buckets"] for m in metas)
-    width = max(1, (hi - lo) // n_buckets + 1)
-    bts = spark.sparkContext.broadcast(sorted_tombstone_arr(tombstones))
-
-    from olaf_spark.incremental import _first_doc_udf
-
-    rows = None
-    for d in part_dirs:
-        r = spark.read.parquet(os.path.join(d, "positions"))
-        rows = r if rows is None else rows.unionByName(r)
-    if n_merge_tasks is None:
-        from olaf_spark.indexer import dir_bytes, merge_task_count
-
-        n_merge_tasks = merge_task_count(
-            spark, dir_bytes(*(os.path.join(d, "positions") for d in part_dirs))
-        )
-    folded = (
-        rows.select(
-            "term_id", "doc_ids_bin", "pos_counts_bin", "pos_bin", "pos_offs", "tb"
-        )
-        .withColumn("first_doc", _first_doc_udf()(F.col("doc_ids_bin")))
-        .repartitionByRange(n_merge_tasks, "tb", "term_id", "first_doc")
-        .sortWithinPartitions("term_id", "first_doc")
-        .mapInPandas(
-            _make_fold_positions(lo, width, n_buckets, bts), POSITIONS_SCHEMA
-        )
-        .withColumn("tb", shard_from_id_col(F.col("term_id"), cfg.n_segments))
-    )
-    folded.write.mode("overwrite").partitionBy("tb").parquet(
-        os.path.join(out_dir, "positions")
-    )
-    from olaf_spark.metafs import get_metafs
-
-    get_metafs().publish_json(
-        os.path.join(out_dir, "positions_meta.json"),
-        {
-            "n_buckets": n_buckets,
-            "format_version": POSITIONS_FORMAT_VERSION,
-            "lo": lo,
-            "hi": hi,
-            "width": width,
-        },
+    fold_positional_rows(
+        spark, part_dirs, out_dir, "positions", "positions_meta.json", metas,
+        _positions_meta, tombstones, cfg, n_merge_tasks,
     )
     return out_dir
 
@@ -712,13 +779,11 @@ def phrase_topk(
         for d in part_dirs:
             fetch_tasks.append(("s", os.path.join(d, "positions"), single_ids))
     if pair_ids:
-        from olaf_spark.bigram import has_bigram_rows
-
         for d in part_dirs:
             # a committed-but-rowless part (no head-head pair occurred in
             # it) contributes nothing — and its bigrams/ dir holds only
             # _SUCCESS, which a blind dataset open would choke on
-            if has_bigram_rows(d):
+            if has_rows(d, "bigrams"):
                 fetch_tasks.append(("p", os.path.join(d, "bigrams"), pair_ids))
 
     def _fetch(task):
@@ -1232,14 +1297,12 @@ def batch_phrase_topk(
             )
             scan = r if scan is None else scan.unionByName(r)
     if pair_ids:
-        from olaf_spark.bigram import has_bigram_rows
-
         ptbs = sorted({t % cfg.n_segments for t in pair_ids})
         for pi, d in enumerate(part_dirs):
             # committed-but-rowless parts hold only _SUCCESS under bigrams/
             # — unreadable by a blind parquet open, and they contribute
             # nothing (authoritative empty)
-            if not has_bigram_rows(d):
+            if not has_rows(d, "bigrams"):
                 continue
             r = (
                 spark.read.parquet(os.path.join(d, "bigrams"))

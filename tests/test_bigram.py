@@ -438,7 +438,7 @@ def test_has_bigram_rows_ignores_uncommitted_files(bg_index, tmp_path):
     count as committed pair rows (the readers skip them too)."""
     import os
 
-    from olaf_spark.bigram import has_bigram_rows
+    from olaf_spark.phrase import has_rows
 
     d = str(tmp_path / "hb")
     os.makedirs(f"{d}/bigrams/_temporary/0", exist_ok=True)
@@ -448,12 +448,12 @@ def test_has_bigram_rows_ignores_uncommitted_files(bg_index, tmp_path):
         pass
     with open(f"{d}/bigrams/.part-1.parquet.tmp.abc", "wb") as f:
         f.write(b"x")
-    assert not has_bigram_rows(d)
+    assert not has_rows(d, "bigrams")
     os.makedirs(f"{d}/bigrams/tb=0", exist_ok=True)
     with open(f"{d}/bigrams/tb=0/part-0.parquet", "wb") as f:
         f.write(b"x")
     # the root mtime changed when tb=0 was created -> cache invalidates
-    assert has_bigram_rows(d)
+    assert has_rows(d, "bigrams")
 
 
 def test_heads_cache_tracks_mtime(bg_index, tmp_path):
@@ -507,7 +507,8 @@ def test_compact_bigrams_clears_stale_out_dir_rows(spark, bg_index, tmp_path):
     committed bigram index with ROWS must not leave those stale rows
     committed under the fresh marker (absence-is-authoritative would
     serve them as answers for a different corpus)."""
-    from olaf_spark.bigram import compact_bigrams, has_bigram_rows
+    from olaf_spark.bigram import compact_bigrams
+    from olaf_spark.phrase import has_rows
 
     rows, _ = bg_index
     pages = spark.createDataFrame(rows[:100], "doc_id long, text string")
@@ -515,15 +516,15 @@ def test_compact_bigrams_clears_stale_out_dir_rows(spark, bg_index, tmp_path):
     src = str(tmp_path / "src")
     build_positions(spark, pages, src, CFG, n_buckets=2)
     build_bigrams(spark, pages, src, CFG, n_buckets=2, min_df=10_000)
-    assert bigrams_usable(src) and not has_bigram_rows(src)
+    assert bigrams_usable(src) and not has_rows(src, "bigrams")
     # out_dir: previously committed bigram index WITH rows (different corpus)
     out = str(tmp_path / "out")
     build_positions(spark, pages, out, CFG, n_buckets=2)
     build_bigrams(spark, pages, out, CFG, n_buckets=2, min_df=5)
-    assert has_bigram_rows(out)
+    assert has_rows(out, "bigrams")
     compact_bigrams(spark, [src], out, set(), CFG)
     assert bigrams_usable(out)
-    assert not has_bigram_rows(out)  # stale rows cleared, authoritative empty
+    assert not has_rows(out, "bigrams")  # stale rows cleared, authoritative empty
     # and serving answers from the (authoritatively empty) pair set match
     # the positional referent: head set is src's, which indexes no pair
     assert group_heads([out]) is not None and group_heads([out]).size == 0

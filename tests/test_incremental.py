@@ -142,6 +142,12 @@ def test_multiple_deltas(spark, halves, tmp_path):
     oracle = OracleIndex.build([(r["doc_id"], r["text"]) for r in pages.collect()], CFG)
     for q in QUERIES[:2]:
         assert_identical(group.topk(q, K), oracle.topk(q, K))
+    # an empty positional batch is refused before any delta commits: the
+    # group keeps exactly its parts
+    with pytest.raises(ValueError, match="docs has no rows"):
+        append_index(spark, b.where("doc_id < 0"), base, n_buckets=2, with_positions=True)
+    after = IndexGroup.load(base)
+    assert [p.index_dir for p in after.parts] == [p.index_dir for p in group.parts]
 
 
 def test_compact_preserves_results_and_enables_wand(spark, grouped, tmp_path):
@@ -211,7 +217,7 @@ def test_compact_resume_after_kill(spark, grouped, tmp_path):
     merged-on-read through both scorers."""
     import os
 
-    from olaf_spark.incremental import _completed_compact_groups
+    from olaf_spark.indexer import done_partitions
 
     group, base = grouped
     out = str(tmp_path / "resume")
@@ -225,7 +231,7 @@ def test_compact_resume_after_kill(spark, grouped, tmp_path):
     with pytest.raises(Boom):
         compact_index(spark, base, out, n_groups=4, _after_group=bomb)
     assert not os.path.exists(os.path.join(out, "stats.json"))  # uncommitted
-    assert _completed_compact_groups(out) == {0}
+    assert done_partitions(out, "compact_group") == {0}
 
     resumed_groups: list[int] = []
     compacted = compact_index(
@@ -361,6 +367,12 @@ def test_concurrent_appends_get_distinct_deltas(spark, halves, tmp_path):
     oracle = OracleIndex.build([(r["doc_id"], r["text"]) for r in pages.collect()], CFG)
     for q in QUERIES[:2]:
         assert_identical(group.topk(q, K), oracle.topk(q, K))
+    # an empty positional batch is refused before any delta commits: the
+    # group keeps exactly its parts
+    with pytest.raises(ValueError, match="docs has no rows"):
+        append_index(spark, b.where("doc_id < 0"), base, n_buckets=2, with_positions=True)
+    after = IndexGroup.load(base)
+    assert [p.index_dir for p in after.parts] == [p.index_dir for p in group.parts]
 
 
 def test_append_refuses_config_mismatch(spark, halves, tmp_path):

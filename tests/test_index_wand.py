@@ -15,7 +15,7 @@ import pytest
 
 from olaf_spark.config import EngineConfig
 from olaf_spark.incremental import IndexGroup
-from olaf_spark.indexer import Index, build_index, completed_buckets
+from olaf_spark.indexer import Index, build_index, done_partitions
 from olaf_spark.oracle import OracleIndex
 from olaf_spark.synth import gen_pages, gen_queries
 from olaf_spark.wand import (
@@ -366,7 +366,7 @@ def test_resume_skips_done_buckets_and_matches_clean(spark, built, tmp_path):
         os.path.join(resume_dir, "lineage")
     )
 
-    assert completed_buckets(spark, resume_dir) == {0, 1, 3, 4, 6}
+    assert done_partitions(resume_dir, "segments") == {0, 1, 3, 4, 6}
     resumed = build_index(
         spark, pages, resume_dir, CFG, n_buckets=8, resume=True
     )

@@ -361,19 +361,61 @@ def test_batch_phrase_one_job_and_plan_shape(spark, positional):
     assert "PushedFilters: [In(term_id" in p, p
 
 
-def test_positions_write_one_file_per_tb(spark, positional):
+def test_positions_write_one_file_per_tb(spark, positional, tmp_path):
     """The pre-write tb clustering (indexer.cluster_for_write) must hold:
     without it every pack task writes one file per tb it holds —
     n_tasks x n_segments files (measured 1024 at bench scale, each paying
     open/footer/commit on write and a footer on every serving read). With
-    the clustering exchange and n_tasks <= n_segments, each non-empty tb
-    is written by exactly one task: at most n_segments files."""
+    the clustering exchange each tb is salted over k = n_tasks //
+    n_segments tasks (k = 1 while n_tasks <= n_segments): at most
+    n_segments * k files. Positions and bigram pairs share the one writer
+    (phrase.write_positional_rows), so both dirs are checked."""
     import glob
     import os
 
-    _, d = positional
-    files = glob.glob(os.path.join(d, "positions", "tb=*", "*.parquet"))
-    assert 0 < len(files) <= CFG.n_segments, len(files)
+    from olaf_spark.bigram import build_bigrams
+
+    rows, d = positional
+    n_buckets = 4  # the fixture's
+    n_tasks = max(n_buckets, spark.sparkContext.defaultParallelism)
+    cap = CFG.n_segments * max(1, n_tasks // CFG.n_segments)
+    bg = str(tmp_path / "bg")
+    pages = spark.createDataFrame(rows, "doc_id long, text string")
+    build_bigrams(spark, pages, bg, CFG, n_buckets=n_buckets, min_df=10)
+    for rows_dir in (os.path.join(d, "positions"), os.path.join(bg, "bigrams")):
+        files = glob.glob(os.path.join(rows_dir, "tb=*", "*.parquet"))
+        assert 0 < len(files) <= cap, (rows_dir, len(files), cap)
+
+
+def test_failed_positions_fold_retracts_marker(spark, positional, tmp_path, monkeypatch):
+    """A compact_positions fold that dies after Spark's overwrite has
+    cleared <out>/positions must leave out NOT positions-usable: the fold
+    retracts positions_meta.json before any row is touched, so phrase
+    serving refuses cleanly ('run build_positions') instead of reading a
+    committed marker over missing rows."""
+    import olaf_spark.phrase as phrase
+    from olaf_spark.phrase import compact_positions, positions_usable
+
+    rows, src = positional
+    out = str(tmp_path / "fold_fail")
+    pages = spark.createDataFrame(rows[:100], "doc_id long, text string")
+    build_positions(spark, pages, out, CFG, n_buckets=2)
+    assert positions_usable(out) and phrase_topk(out, "w2 w3", k=5)
+
+    def failing_fold(*_args):
+        def fold(pdf_iter):
+            raise RuntimeError("simulated fold failure")
+            yield  # a generator, like the real mapInPandas fn
+
+        return fold
+
+    monkeypatch.setattr(phrase, "_make_fold_positions", failing_fold)
+    with pytest.raises(Exception, match="simulated fold failure"):
+        compact_positions(spark, [src], out, set(), CFG)
+    monkeypatch.undo()
+    assert not positions_usable(out)
+    with pytest.raises(FileNotFoundError, match="run build_positions"):
+        phrase_topk(out, "w2 w3", k=5)
 
 
 def test_positions_survive_small_arrow_batches(spark, positional, tmp_path):
