@@ -244,7 +244,8 @@ def build_bigrams(
             spark, occ, os.path.join(out_dir, "bigrams"), lo, width, n_buckets, cfg
         )
         # an empty head-head pair set writes only _SUCCESS under bigrams/
-        # — fine: readers branch on phrase.has_rows before opening it
+        # — fine: serving lists no row files there, and the Spark readers
+        # branch on phrase.has_rows before opening it
     cfg.save(out_dir)
     _write_heads(out_dir, heads)
     # meta lands LAST (atomic publish) — it is the commit marker; a crash

@@ -60,6 +60,7 @@ from olaf_spark.indexer import (
     tombstone_keep_mask,
 )
 from olaf_spark.scorer import idf as idf_fn
+from olaf_spark.termrows import term_rows
 from olaf_spark.wand import SERVING_METHODS, RawTermPostings, TermPostings, blockmax_topk
 
 _DELTAS = "deltas"
@@ -258,40 +259,20 @@ class IndexGroup:
             if p.tombstones() & ids:
                 p.undelete_docs(doc_ids)
 
-    def map_parts(self, fn) -> list:
-        """[fn(part) for every part]. Parts are independent parquet reads and
-        pyarrow releases the GIL, so several parts run concurrently — group
-        latency tracks the SLOWEST part, not the sum, as a steady append
-        stream accumulates deltas. One part (a single index) runs in the
-        calling thread: a pool would cost ~1 ms a query for nothing."""
-        if len(self.parts) == 1:
-            return [fn(self.parts[0])]
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=min(8, len(self.parts))) as ex:
-            return list(ex.map(fn, self.parts))
-
     def term_dfs(self, term_ids: list[int]) -> dict[int, int]:
         """Group-global df per term: the per-(term, part) df recorded once
         per part (every chunk row of a term repeats its part's full df),
-        summed across parts. Header-only reads (term_id, df) — the batch
-        path's twin of the sums wand._fetch_posting_rows derives from its
-        full-row fetch."""
-        import pyarrow.compute as pc
-
+        summed across parts. Read through the same cached term rows as
+        wand._fetch_posting_rows — the batch path's twin of the sums that
+        fetch derives."""
         qids = sorted(set(int(t) for t in term_ids))
-        tbs = sorted({i % self.cfg.n_segments for i in qids})
-        flt = pc.field("tb").isin(tbs) & pc.field("term_id").isin(qids)
-
-        def one(p: Index) -> dict[int, int]:
-            tbl = p.dataset().to_table(filter=flt, columns=["term_id", "df"])
-            part_df: dict[int, int] = {}
-            for tid, df in zip(tbl["term_id"].to_pylist(), tbl["df"].to_pylist()):
-                part_df[tid] = int(df)  # dict assignment dedupes chunk rows
-            return part_df
-
         out: dict[int, int] = {}
-        for part_df in self.map_parts(one):
+        for p in self.parts:
+            tbl = term_rows(os.path.join(p.index_dir, "postings"), qids, self.cfg.n_segments)
+            if not tbl.num_rows:
+                continue
+            # dict() dedupes a part's chunk rows before the cross-part sum
+            part_df = dict(zip(tbl["term_id"].to_pylist(), tbl["df"].to_pylist()))
             for tid, df in part_df.items():
                 out[tid] = out.get(tid, 0) + df
         return out

@@ -489,28 +489,8 @@ class Index:
         self.index_dir = index_dir
         self.cfg = cfg
         self.stats = stats
-        self._dataset = None
         self._tombstones: set[int] | None = None
         self._tombstones_arr: np.ndarray | None = None
-
-    def dataset(self):
-        """Cached pyarrow dataset over the postings dir — the serving path
-        keeps the index open across queries like Olaf keeps LMDB open
-        (olaf_runner.c:34-39); invalidated by delete/undelete/merge."""
-        if self._dataset is None:
-            import pyarrow.dataset as ds
-
-            self._dataset = ds.dataset(
-                os.path.join(self.index_dir, "postings"),
-                format="parquet",
-                partitioning="hive",
-            )
-        return self._dataset
-
-    def invalidate_caches(self) -> None:
-        self._dataset = None
-        self._tombstones = None
-        self._tombstones_arr = None
 
     @property
     def n_docs(self) -> int:

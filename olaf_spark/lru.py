@@ -1,8 +1,9 @@
-"""Tiny signature-keyed LRU for the serving-gate caches.
+"""Tiny signature-keyed LRU for the serving caches.
 
-One idiom, one place (previously hand-rolled in four spots across
-bigram/phrase/similarity): pop (recency bump), compare the freshness
-signature, reload on miss, reinsert, evict oldest past the bound.
+One idiom, one place (bigram heads and metas, similarity scans, and the
+term-row reader's listings, footers and row groups): pop (recency bump),
+compare the freshness signature, reload on miss, reinsert, evict oldest
+past the bound — an entry count, or a summed weight such as bytes.
 
 The freshness signature is (st_ino, st_mtime_ns) of the backing file or
 directory (`file_sig`), NOT a bare float mtime: every commit in this
@@ -24,7 +25,7 @@ def file_sig(path: str) -> tuple[int, int] | None:
     """(st_ino, st_mtime_ns) of path, or None when it cannot be stat'd.
 
     Catches OSError, not just FileNotFoundError: callers documented as
-    never-raise (bigrams_usable, phrase.has_rows, group_heads) reach this
+    never-raise (bigrams_usable, group_heads, termrows) reach this
     with paths where a stray FILE may sit in a directory position
     (NotADirectoryError) or permissions may forbid the stat — any of
     those means "treat as absent", matching positions_usable's posture."""
@@ -35,16 +36,28 @@ def file_sig(path: str) -> tuple[int, int] | None:
     return (st.st_ino, st.st_mtime_ns)
 
 
-def lru_get(cache: dict, key, sig, load: Callable, max_size: int = 256):
-    """cache[key] holds (sig, value); calls load() when absent or stale.
+def lru_get(
+    cache: dict, key, sig, load: Callable, max_size: int = 256,
+    weight: Callable | None = None,
+):
+    """cache[key] holds (sig, value, weight); calls load() when absent or
+    stale.
 
     Popping before reinsert makes dict order the recency order; eviction
-    drops the least-recently-used entry once the bound is crossed.
+    drops the least-recently-used entries once the bound is crossed. The
+    bound counts entries, or, given weight (value -> int, e.g. bytes), the
+    summed weights; a value heavier than the whole bound is returned but
+    not retained.
     """
     hit = cache.pop(key, None)
-    if hit is None or hit[0] != sig:
-        hit = (sig, load())
-    cache[key] = hit
-    while len(cache) > max_size:
-        cache.pop(next(iter(cache)))
-    return hit[1]
+    if hit is not None and hit[0] == sig:
+        cache[key] = hit
+        return hit[1]
+    value = load()
+    w = 1 if weight is None else weight(value)
+    if w <= max_size:
+        cache[key] = (sig, value, w)
+        total = len(cache) if weight is None else sum(e[2] for e in cache.values())
+        while total > max_size:
+            total -= cache.pop(next(iter(cache)))[2]
+    return value

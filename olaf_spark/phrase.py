@@ -20,10 +20,13 @@ Spark-first shape:
                     (phrase support is additive, like Olaf keeping metadata
                     in a separate LMDB database, olaf_db.c:64-71).
 
-  phrase_topk       driver-side serving read (pyarrow, tb pruning +
-                    term_id row-group stats — the same access shape as
-                    wand._fetch_posting_rows): decode each phrase term's
-                    (doc, positions), then verify adjacency fully
+  phrase_topk       driver-side serving read, no Spark job: every part's
+                    position (and bigram pair) rows come from the same
+                    process-wide term-row cache as wand._fetch_posting_rows
+                    (termrows.term_rows — each row group decoded once, a
+                    lookup is a searchsorted; a rowless bigrams dir lists
+                    no files and contributes nothing). Decode each phrase
+                    term's (doc, positions), then verify adjacency fully
                     vectorized — term i's (doc, pos - i) keys intersect
                     across terms; surviving keys ARE the phrase
                     occurrences. phrase_tf per doc ranks the result.
@@ -75,6 +78,7 @@ from olaf_spark.indexer import (
     term_id_py,
     tombstone_keep_mask,
 )
+from olaf_spark.termrows import term_rows
 from olaf_spark.tokenize import tokenize_py, tokens_df
 
 POSITIONS_SCHEMA = (
@@ -368,40 +372,23 @@ def _make_fold_positions(lo: int, width: int, n_buckets: int, bts):
     return _fold
 
 
-#: per-root row-presence cache keyed by the <d>/<kind> root dir's
-#: (inode, mtime_ns) sig — every committed (re)build removes + recreates
-#: the root (new inode) or creates/removes tb= partition dirs directly
-#: under it (new mtime), so the key invalidates on rebuild. Saves an
-#: os.walk per part per query.
-_ROWS_CACHE: dict[str, tuple] = {}
-_ROWS_CACHE_MAX = 256
-
-
 def has_rows(d: str, kind: str) -> bool:
     """True when <d>/<kind> holds at least one COMMITTED parquet file
     (hidden/_-prefixed dirs and files — Spark _temporary task attempts,
     _SUCCESS, dot-tmp strays — are ignored, matching what the parquet
     readers themselves skip). An empty DataFrame written with partitionBy
-    materializes only _SUCCESS — unreadable by spark.read.parquet AND
-    schemaless for pyarrow dataset filters. Never raises."""
-    from olaf_spark.lru import file_sig, lru_get
-
-    root = os.path.join(d, kind)
-    sig = file_sig(root)
-    if sig is None:
-        return False
-
-    def load() -> bool:
-        for _cur, dirs, files in os.walk(root):
-            dirs[:] = [x for x in dirs if not x.startswith(("_", "."))]
-            if any(
-                f.endswith(".parquet") and not f.startswith(("_", "."))
-                for f in files
-            ):
-                return True
-        return False
-
-    return lru_get(_ROWS_CACHE, root, sig, load, _ROWS_CACHE_MAX)
+    materializes only _SUCCESS, which spark.read.parquet cannot read, so
+    the Spark-side readers (the positional fold, batch phrase) check this
+    first; driver-side serving needs no check (termrows lists no files).
+    Never raises: os.walk ignores a missing or unreadable root."""
+    for _cur, dirs, files in os.walk(os.path.join(d, kind)):
+        dirs[:] = [x for x in dirs if not x.startswith(("_", "."))]
+        if any(
+            f.endswith(".parquet") and not f.startswith(("_", "."))
+            for f in files
+        ):
+            return True
+    return False
 
 
 def fold_positional_rows(
@@ -498,15 +485,14 @@ def compact_positions(
     return out_dir
 
 
-def _fetch_term_rows(dataset, term_ids: list[int], n_segments: int) -> dict[int, list[dict]]:
-    """term_id -> rows with doc_ids/counts DECODED but positions RAW
-    (buffer + per-doc offsets) — positions decode lazily per candidate."""
-    import pyarrow.compute as pc
-
-    qids = sorted(set(term_ids))
-    tbs = sorted({i % n_segments for i in qids})
-    flt = pc.field("tb").isin(tbs) & pc.field("term_id").isin(qids)
-    tbl = dataset.to_table(filter=flt)
+def _fetch_term_rows(root: str, term_ids: list[int], n_segments: int) -> dict[int, list[dict]]:
+    """term_id -> rows of <root> (positions or bigrams, read through the
+    cached term rows, termrows.term_rows) with doc_ids/counts DECODED but
+    positions RAW (buffer + per-doc offsets) — positions decode lazily per
+    candidate."""
+    tbl = term_rows(root, term_ids, n_segments)
+    if not tbl.num_rows:
+        return {}
     per: dict[int, list[dict]] = {}
     tids_col = tbl["term_id"].to_pylist()
     id_col = tbl["doc_ids_bin"]
@@ -736,8 +722,6 @@ def phrase_topk(
     can't reach the floor are never decoded at all — a skip criterion,
     not a post-filter.
     """
-    import pyarrow.dataset as ds
-
     cfg = cfg or EngineConfig.load(index_dir)
 
     # group serving: every live delta must carry its own positions (phrase
@@ -770,36 +754,15 @@ def phrase_topk(
     single_ids = sorted({key[1] for key, _ in units if key[0] == "s"})
     pair_ids = sorted({key[1] for key, _ in units if key[0] == "p"})
 
-    # parts fetch concurrently (pyarrow releases the GIL) — group latency
-    # tracks the slowest part, not the sum, as deltas accumulate
-    from concurrent.futures import ThreadPoolExecutor
-
-    fetch_tasks = []
-    if single_ids:
-        for d in part_dirs:
-            fetch_tasks.append(("s", os.path.join(d, "positions"), single_ids))
-    if pair_ids:
-        for d in part_dirs:
-            # a committed-but-rowless part (no head-head pair occurred in
-            # it) contributes nothing — and its bigrams/ dir holds only
-            # _SUCCESS, which a blind dataset open would choke on
-            if has_rows(d, "bigrams"):
-                fetch_tasks.append(("p", os.path.join(d, "bigrams"), pair_ids))
-
-    def _fetch(task):
-        tag, path, ids = task
-        dd = ds.dataset(path, format="parquet", partitioning="hive")
-        return tag, _fetch_term_rows(dd, ids, cfg.n_segments)
-
-    if fetch_tasks:
-        with ThreadPoolExecutor(max_workers=min(8, len(fetch_tasks))) as ex:
-            fetched = list(ex.map(_fetch, fetch_tasks))
-    else:  # every unit is a pair and no part holds a single pair row
-        fetched = []
+    # parts are read serially: with the row groups cached, a thread pool
+    # per query cost more than the reads it overlapped. A committed-but-
+    # rowless bigrams dir (no head-head pair occurred in the part) lists no
+    # row files and contributes nothing.
     data: dict = {}
-    for tag, part_rows in fetched:
-        for tid, rows in part_rows.items():
-            data.setdefault((tag, tid), []).extend(rows)
+    for tag, kind, ids in (("s", "positions", single_ids), ("p", "bigrams", pair_ids)):
+        for d in part_dirs:
+            for tid, rows in _fetch_term_rows(os.path.join(d, kind), ids, cfg.n_segments).items():
+                data.setdefault((tag, tid), []).extend(rows)
     if _stats is not None:
         _stats["n_pair_units"] = len(pair_ids)
     if any(key not in data for key, _ in units):

@@ -7,6 +7,8 @@ DataFrame partitioning, never driver-side loops.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import SparkSession
 
 
@@ -57,20 +59,20 @@ def rebalance_scan(spark: SparkSession, df, key: str):
     sort-before-repartition pass (SPARK-23207)."""
     from pyspark.sql import functions as F
 
-    want = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= want:
-        return df
     # tiny inputs keep their partitioning: below a few MB of source bytes
     # the exchange's fixed cost exceeds any parallelism win (measured at
-    # sf0.1: bigrams build 3.9 s -> 4.8 s with an unconditional rebalance)
+    # sf0.1: bigrams build 3.9 s -> 4.8 s with an unconditional rebalance).
+    # Decided from inputFiles() first: it needs no physical plan, where
+    # getNumPartitions() converts the plan to an RDD.
     try:
-        import os
-
         total = sum(os.path.getsize(f[7:] if f.startswith("file:") else f)
                     for f in df.inputFiles())
     except OSError:
         total = None
     if total is not None and 0 < total < (4 << 20):
+        return df
+    want = spark.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() >= want:
         return df
     return df.repartition(want, F.col(key))
 

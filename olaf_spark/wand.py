@@ -12,7 +12,10 @@ skip whole blocks that cannot beat the current k-th best score.
 Every index is served as an IndexGroup (incremental.py); a single index is
 the one-part group, so there is one read path:
 
-  _fetch_posting_rows          the query terms' posting rows from every part
+  _fetch_posting_rows          the query terms' posting rows from every part,
+                               read through the process-wide term-row cache
+                               (termrows.term_rows: each parquet row group is
+                               decoded once, a lookup is a searchsorted)
   load_term_postings           eager decode, scored with group-global stats
   IndexGroup.load_term_postings_raw
                                undecoded rows with group-valid block maxes
@@ -30,7 +33,9 @@ There is no Python document-at-a-time loop: a cursor-per-list WAND loop
 measured ~16x slower than the vectorized scorer, so skipping happens in
 numpy (blockmax_topk).
 
-This runs DRIVER-SIDE — the p50-latency serving path. The distributed
+This runs DRIVER-SIDE and launches no Spark job — the p50-latency serving
+path; parts are read serially (a thread pool per query cost more than the
+cached reads it overlapped). The distributed
 DataFrame paths (scorer.py, batch.py) remain the bulk paths. All are
 rank-identical to the oracle.
 
@@ -42,6 +47,7 @@ doc_id asc).
 from __future__ import annotations
 
 import itertools
+import os
 from dataclasses import dataclass
 
 import numpy as np
@@ -51,6 +57,7 @@ from olaf_spark.codec import decode_ids_blocked, varbyte_decode
 from olaf_spark.config import EngineConfig
 from olaf_spark.indexer import sorted_tombstone_arr, tombstone_keep_mask
 from olaf_spark.scorer import idf as idf_fn
+from olaf_spark.termrows import term_rows
 from olaf_spark.tokenize import tokenize_py
 
 #: serving methods of query_index and IndexGroup.topk; "wand" is an alias
@@ -78,10 +85,10 @@ def _fetch_posting_rows(group, query_text: str) -> list[tuple[str, int, int, dic
     query's distinct terms in every part, sorted by (term, part, chunk).
 
     The serving path does NOT launch a Spark job: like Olaf's query opening
-    LMDB read-only (olaf_runner.c:34-39), it reads the index storage
-    directly with pyarrow. Postings are range-partitioned + sorted by term,
-    so the filter prunes hive tb directories (~|q| of them) and then
-    row-group statistics within each file.
+    LMDB read-only once (olaf_runner.c:34-39), every part's postings are
+    read through the process-wide term-row cache (termrows.term_rows): the
+    query's tb dirs are listed once, a row group is decoded once, and a
+    lookup is an np.searchsorted over its sorted term_ids.
 
     term is the query's term STRING, so accumulation order stays
     ascending-by-term-string (the oracle's order — bit-identical float
@@ -89,8 +96,6 @@ def _fetch_posting_rows(group, query_text: str) -> list[tuple[str, int, int, dic
     the merged postings. Group df sums each part's df (every chunk row of a
     term within one part carries that part's full df).
     """
-    import pyarrow.compute as pc
-
     from olaf_spark.indexer import term_id_py
 
     qterms = sorted(set(tokenize_py(query_text, group.cfg)))
@@ -99,14 +104,12 @@ def _fetch_posting_rows(group, query_text: str) -> list[tuple[str, int, int, dic
     id_to_term: dict[int, str] = {}
     for t in qterms:
         id_to_term.setdefault(term_id_py(t), t)
-    qids = sorted(id_to_term)
-    tbs = sorted({i % group.cfg.n_segments for i in qids})
-    flt = pc.field("tb").isin(tbs) & pc.field("term_id").isin(qids)
-    tables = group.map_parts(lambda p: p.dataset().to_table(filter=flt))
     rows = [
         (id_to_term[r["term_id"]], pi, r)
-        for pi, tbl in enumerate(tables)
-        for r in tbl.to_pylist()
+        for pi, p in enumerate(group.parts)
+        for r in term_rows(
+            os.path.join(p.index_dir, "postings"), list(id_to_term), group.cfg.n_segments
+        ).to_pylist()
     ]
     part_df = {(term, pi): int(r["df"]) for term, pi, r in rows}
     df: dict[str, int] = {}

@@ -481,3 +481,32 @@ def test_tombstone_sidecar_and_searchsorted_mask(tmp_path):
     assert tombstone_keep_mask(np.array([1, 2, 3, 4, 5]), arr3).tolist() == [
         False, True, False, True, False,
     ]
+
+
+def test_term_rows_cache_is_byte_bounded(built, monkeypatch):
+    """The decoded row groups stay within termrows' byte bound: past it the
+    least-recently-used ones are evicted, and a row group heavier than the
+    whole bound is served but not retained. Answers never change."""
+    from olaf_spark import termrows
+
+    _, oracle, index = built
+    qs = ["w2 w15 w300", "needle7 w3", "w1 w40", "w9 w22 w31"]
+    termrows.clear_caches()
+    for q in qs:
+        query_index(None, index, q, K)
+    weights = [e[2] for e in termrows._ROWS_CACHE.values()]
+    assert len(weights) > 2  # the queries touch several row groups
+
+    bound = max(weights) + min(weights)
+    monkeypatch.setattr(termrows, "_ROWS_CACHE_MAX_BYTES", bound)
+    termrows.clear_caches()
+    for q in qs:
+        assert_identical(query_index(None, index, q, K), oracle.topk(q, K))
+        assert sum(e[2] for e in termrows._ROWS_CACHE.values()) <= bound
+    assert termrows._ROWS_CACHE
+
+    monkeypatch.setattr(termrows, "_ROWS_CACHE_MAX_BYTES", min(weights) - 1)
+    termrows.clear_caches()
+    for q in qs:
+        assert_identical(query_index(None, index, q, K), oracle.topk(q, K))
+    assert not termrows._ROWS_CACHE

@@ -432,3 +432,122 @@ def test_positions_survive_small_arrow_batches(spark, positional, tmp_path):
     finally:
         spark.conf.set(key, old)
     assert_matches_referent(rows, d, "w2 w3")
+
+
+def _resplit_rows(src_root: str, dst_root: str, n_files: int = 3, rg_rows: int = 2) -> None:
+    """Copy a tb-partitioned row root with each tb's rows reversed and dealt
+    round-robin into n_files files of rg_rows-row groups: several files
+    and row groups per tb, term_ids unsorted within each file."""
+    import glob
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    for tb_dir in glob.glob(os.path.join(src_root, "tb=*")):
+        tbl = pa.concat_tables(
+            [pq.ParquetFile(f).read() for f in sorted(glob.glob(os.path.join(tb_dir, "*.parquet")))]
+        )
+        tbl = tbl.take(list(range(tbl.num_rows - 1, -1, -1)))
+        out = os.path.join(dst_root, os.path.basename(tb_dir))
+        os.makedirs(out)
+        for j in range(n_files):
+            part = tbl.take(list(range(j, tbl.num_rows, n_files)))
+            pq.write_table(part, os.path.join(out, f"part-{j}.parquet"), row_group_size=rg_rows)
+
+
+def test_term_rows_match_dataset_filter(spark, positional, tmp_path):
+    """termrows.term_rows returns exactly the rows a pyarrow dataset filter
+    on (tb, term_id) returns, in the same per-term order, for postings,
+    positions and bigram pairs — over tb dirs holding several files of
+    several row groups each, term_ids unsorted within a file."""
+    import glob
+    import os
+
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+
+    from olaf_spark.bigram import build_bigrams
+    from olaf_spark.indexer import build_index
+    from olaf_spark.termrows import term_rows
+
+    rows, _ = positional
+    pages = spark.createDataFrame(rows, "doc_id long, text string")
+    d = str(tmp_path / "ix")
+    build_index(spark, pages, d, CFG, n_buckets=4)
+    build_positions(spark, pages, d, CFG, n_buckets=4)
+    build_bigrams(spark, pages, d, CFG, n_buckets=4, min_df=10)
+
+    def by_term(tbl):
+        out: dict[int, list] = {}
+        for r in tbl.to_pylist():
+            r.pop("tb", None)
+            out.setdefault(r["term_id"], []).append(r)
+        return out
+
+    for kind in ("postings", "positions", "bigrams"):
+        root = str(tmp_path / "split" / kind)
+        _resplit_rows(os.path.join(d, kind), root)
+        files = glob.glob(os.path.join(root, "tb=*", "*.parquet"))
+        assert max(pq.read_metadata(f).num_row_groups for f in files) > 1
+        dset = ds.dataset(root, format="parquet", partitioning="hive")
+        ids = sorted(set(dset.to_table(columns=["term_id"])["term_id"].to_pylist()))
+        assert len(ids) > 1
+        absent = max(ids) + 1
+        for qids in (ids[:1], ids[::7], ids, [absent], []):
+            tbs = sorted({i % CFG.n_segments for i in qids})
+            want = dset.to_table(
+                filter=pc.field("tb").isin(tbs) & pc.field("term_id").isin(qids)
+            )
+            got = term_rows(root, qids, CFG.n_segments)
+            assert got.num_rows == want.num_rows, (kind, len(qids))
+            assert by_term(got) == by_term(want), (kind, len(qids))
+
+
+def test_rebuilt_dirs_never_serve_stale_rows(spark, positional, tmp_path):
+    """In one process, rebuilding positions, bigrams and postings into the
+    same dir with other docs: the next query equals the answer with the
+    term-row cache cleared, and differs from the answer before. The cache
+    keys every listing, footer and row group by path AND file signature; a
+    path-only key would keep serving the old listing."""
+    from olaf_spark import termrows
+    from olaf_spark.bigram import build_bigrams
+    from olaf_spark.incremental import IndexGroup
+    from olaf_spark.indexer import Index, build_index, term_id_py
+    from olaf_spark.wand import query_index
+
+    rows, _ = positional
+    pages = spark.createDataFrame(rows, "doc_id long, text string")
+    old, new = pages.where("doc_id % 2 = 0"), pages.where("doc_id % 2 = 1")
+    d = str(tmp_path / "ix")
+    qs = ["w2 w3", "w3 w2 w2", "w17 w2", "w2"]
+
+    def bm25():
+        ix = Index.load(d)
+        return (
+            [query_index(None, ix, q, 10, method=m) for q in qs for m in ("vectorized", "blockmax")],
+            IndexGroup([ix]).term_dfs([term_id_py(t) for t in ("w2", "w3", "w17")]),
+        )
+
+    def phrases(use_bigrams):
+        return [phrase_topk(d, q, 10, use_bigrams=use_bigrams) for q in qs]
+
+    def check_rebuild(answers, rebuild):
+        stale = answers()  # caches the old rows
+        rebuild()
+        got = answers()
+        termrows.clear_caches()
+        assert got == answers() and got != stale
+
+    build_index(spark, old, d, CFG, n_buckets=4)
+    build_positions(spark, old, d, CFG, n_buckets=4)
+    build_bigrams(spark, old, d, CFG, n_buckets=4, min_df=5)
+    check_rebuild(
+        lambda: phrases(False), lambda: build_positions(spark, new, d, CFG, n_buckets=4)
+    )
+    check_rebuild(
+        lambda: phrases(True),
+        lambda: build_bigrams(spark, new, d, CFG, n_buckets=4, min_df=5),
+    )
+    check_rebuild(bm25, lambda: build_index(spark, new, d, CFG, n_buckets=4))
