@@ -45,8 +45,10 @@ def main() -> None:
     from olaf_spark.config import EngineConfig
     from olaf_spark.extract import extract_text_udf
     from olaf_spark.indexer import build_index
+    from olaf_spark.session import jvm_lower_conf
 
     spark = SparkSession.builder.appName("olaf_spark_build").getOrCreate()
+    jvm_lower_conf(spark)  # tokenizes in the JVM: lowercase without ICU
     pages = (
         spark.read.table(args.pages)
         if args.format == "iceberg"

@@ -116,7 +116,10 @@ def main() -> None:
         p.add_argument("--urls-file", default=None, help="one url per line -> xxhash64")
     args = ap.parse_args()
 
+    from olaf_spark.session import jvm_lower_conf
+
     spark = SparkSession.builder.appName(f"olaf_spark_{args.cmd}").getOrCreate()
+    jvm_lower_conf(spark)  # tokenizes in the JVM: lowercase without ICU
     t0 = time.time()
 
     if args.cmd == "append":

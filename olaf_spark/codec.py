@@ -173,11 +173,13 @@ def block_starts_for_groups(
 ) -> np.ndarray:
     """Concatenated per-group block-start indices (each group's blocks start
     at its own offset 0, block_size, 2*block_size, ...) — the delta-restart
-    points for independently decodable blocks."""
+    points for independently decodable blocks. One vectorized pass: an
+    empty group contributes no block."""
     gs = np.asarray(group_starts, dtype=np.int64)
-    ge = np.append(gs[1:], total)
-    out = [np.arange(s, e, block_size, dtype=np.int64) for s, e in zip(gs, ge)]
-    return np.concatenate(out) if out else np.empty(0, dtype=np.int64)
+    ge = np.append(gs[1:], total)[: gs.size]
+    nb = (ge - gs + block_size - 1) // block_size
+    first = np.repeat(np.cumsum(nb) - nb, nb)
+    return np.repeat(gs, nb) + (np.arange(first.size, dtype=np.int64) - first) * block_size
 
 
 def encode_grouped_blocked(
@@ -212,26 +214,43 @@ def encode_grouped_blocked(
     block_abs = value_byte_starts[bstarts]
     group_of_block = np.searchsorted(gs, bstarts, side="right") - 1
     rel = block_abs - gb[group_of_block]
-    offs: list[list[int]] = [[] for _ in range(n_groups)]
-    for g, o in zip(group_of_block.tolist(), rel.tolist()):
-        offs[g].append(int(o))
-    return bufs, offs
+    return bufs, split_lists(rel, np.searchsorted(group_of_block, np.arange(1, n_groups)))
+
+
+def split_lists(values: np.ndarray, cuts: np.ndarray) -> list[list]:
+    """np.split(values, cuts) as Python lists: one tolist, then list slices
+    (np.split costs microseconds a piece, which adds up over a batch)."""
+    flat = values.tolist()
+    b = [0, *cuts.tolist(), len(flat)]
+    return [flat[i:j] for i, j in zip(b[:-1], b[1:])]
+
+
+def varbyte_decode_rows(bufs) -> tuple[np.ndarray, np.ndarray]:
+    """Decode a whole column of LEB128 buffers in ONE pass: (values, counts),
+    values concatenated in row order and counts[i] the number of values in
+    bufs[i], read off its terminator bytes (every buffer ends a value, so
+    none straddles two rows)."""
+    joined = b"".join(bufs)
+    lens = np.fromiter(map(len, bufs), dtype=np.int64, count=len(bufs))
+    ends = np.cumsum((np.frombuffer(joined, dtype=np.uint8) & 0x80) == 0)
+    counts = np.diff(np.concatenate([[0], ends])[np.concatenate([[0], np.cumsum(lens)])])
+    return varbyte_decode(joined), counts
+
+
+def segmented_cumsum(v: np.ndarray, starts: np.ndarray) -> np.ndarray:
+    """uint64 cumsum of v restarted at each index in `starts` (sorted, first
+    one 0; a repeated start is an empty run): delta decode of many gap runs
+    that each open absolute."""
+    c = np.cumsum(v, dtype=np.uint64)
+    base = np.concatenate([np.zeros(1, dtype=np.uint64), c])[starts]
+    return c - np.repeat(base, np.diff(np.append(starts, v.size)))
 
 
 def decode_ids_blocked(buf: bytes, block_size: int) -> np.ndarray:
     """Full decode of a block-restart delta buffer: varbyte -> segmented
-    cumsum (each block's first value is absolute). Vectorized: global
-    cumsum minus the running total at each block start."""
+    cumsum (each block's first value is absolute)."""
     v = varbyte_decode(buf)
-    n = v.size
-    if n == 0:
-        return v
-    c = np.cumsum(v, dtype=np.uint64)
-    starts = np.arange(0, n, block_size, dtype=np.int64)
-    cpad = np.concatenate([np.zeros(1, dtype=np.uint64), c])
-    base = cpad[starts]  # sum of gaps before each block
-    reps = np.minimum(starts + block_size, n) - starts
-    return c - np.repeat(base, reps)
+    return segmented_cumsum(v, np.arange(0, v.size, block_size, dtype=np.int64))
 
 
 def decode_block(buf: bytes, offs: np.ndarray, b: int, delta: bool) -> np.ndarray:

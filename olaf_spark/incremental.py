@@ -46,13 +46,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from olaf_spark import wand
-from olaf_spark.codec import decode_ids_blocked, varbyte_decode
+from olaf_spark.codec import varbyte_decode_rows
 from olaf_spark.config import EngineConfig
 from olaf_spark.indexer import (
     POSTINGS_SCHEMA,
     Index,
     _write_lineage,
     build_index,
+    decode_posting_rows,
     done_partitions,
     make_posting_fold,
     shard_from_id_col,
@@ -373,58 +374,46 @@ def _make_compact_fn(n_docs: int, avgdl: float, cfg: EngineConfig, tombstones: s
     of posting rows -> merged chunk rows (indexer.make_posting_fold).
 
     Parts overlap in doc_id range, so unlike the build merge
-    (bucket-disjoint concat) this is a true k-way merge — decode, argsort
-    by doc_id, drop tombstoned postings, re-encode. Doc-range parallel: the
-    shuffle range-partitions on (tb, term_id, first_doc), so a head term's
-    rows may SPLIT across tasks — each task merges only the rows it
-    received and no task ever materializes a whole 10^12-scale term.
-    Output chunks of one term are then doc-DISJOINT but not globally
+    (bucket-disjoint concat) this is a true k-way merge — decode the batch,
+    sort by (term, doc_id), drop tombstoned postings, re-encode. Doc-range
+    parallel: the shuffle range-partitions on (tb, term_id, first_doc), so
+    a head term's rows may SPLIT across tasks — each task merges only the
+    rows it received and no task ever materializes a whole 10^12-scale
+    term. Output chunks of one term are then doc-DISJOINT but not globally
     doc-ordered across tasks; every scorer only needs each chunk
     internally sorted + each posting in exactly one chunk (doc_ids are
     unique across parts), both of which hold. df/N/avgdl are the group's
     stored stats (NOT shrunk by tombstones), so post-compaction scores
     equal pre-compaction ones."""
-    block_size = cfg.block_size
     ts_arr = sorted_tombstone_arr(tombstones)
 
-    def _merge_parts(id_bufs, tf_bufs, dl_bufs):
-        ids = np.concatenate(
-            [decode_ids_blocked(bytes(buf), block_size).astype(np.int64) for buf in id_bufs]
-        )
-        tfs = np.concatenate([varbyte_decode(bytes(buf)) for buf in tf_bufs])
-        dls = np.concatenate([varbyte_decode(bytes(buf)) for buf in dl_bufs])
-        order = np.argsort(ids, kind="stable")
-        ids, tfs, dls = ids[order], tfs[order], dls[order]
+    def _merge_parts(pdf: pd.DataFrame, row_term: np.ndarray):
+        ids, tfs, dls, counts = decode_posting_rows(pdf, cfg.block_size)
+        term = np.repeat(row_term, counts)
+        order = np.lexsort((ids.view(np.int64), term))
         if ts_arr is not None:
-            keep = tombstone_keep_mask(ids, ts_arr)
-            ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-        return ids, tfs, dls
+            order = order[tombstone_keep_mask(ids.view(np.int64)[order], ts_arr)]
+        return ids[order], tfs[order], dls[order], term[order]
 
     return make_posting_fold(n_docs, avgdl, cfg, _merge_parts)
 
 
 def _first_doc_udf():
     """Pandas UDF: absolute first doc_id of a packed posting row (the first
-    LEB128 value of doc_ids_bin — delta encoding keeps it absolute). Only
-    the leading <=10 bytes of each buffer are touched; this is the
-    compaction shuffle's doc-range key, O(rows) not O(postings)."""
+    LEB128 value of doc_ids_bin — delta encoding keeps it absolute), from
+    one column decode per Arrow batch (codec.varbyte_decode_rows); an empty
+    buffer reads 0. This is the compaction shuffle's doc-range key."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("long")
     def first_doc(bufs: pd.Series) -> pd.Series:
+        vals, counts = varbyte_decode_rows(bufs)
         out = np.zeros(len(bufs), dtype=np.int64)
-        for i, buf in enumerate(bufs):
-            if buf:
-                v, shift = 0, 0
-                for byte in bytes(buf):
-                    v |= (byte & 0x7F) << shift
-                    if not (byte & 0x80):
-                        break
-                    shift += 7
-                # doc_ids travel as uint64; reinterpret as int64 — any
-                # deterministic total order works for SPLITTING a term's
-                # rows (chunks need not be globally doc-ordered)
-                out[i] = np.uint64(v & 0xFFFFFFFFFFFFFFFF).astype(np.int64)
+        has = counts > 0
+        # doc_ids travel as uint64; reinterpret as int64 — any
+        # deterministic total order works for SPLITTING a term's rows
+        # (chunks need not be globally doc-ordered)
+        out[has] = vals.view(np.int64)[(np.cumsum(counts) - counts)[has]]
         return pd.Series(out)
 
     return first_doc

@@ -16,6 +16,7 @@ from __future__ import annotations
 import math
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -1011,9 +1012,14 @@ def ann_ivf_batch_topk(
             probe_rows.append((int(qid), int(c), [float(x) for x in qv]))
     if not probe_rows:
         raise ValueError("ann_ivf_batch_topk: empty query batch")
-    probes = spark.createDataFrame(
-        probe_rows, "query_id long, cluster int, qv array<double>"
-    )
+    # built from Arrow: a driver-side relation, where a list of rows would
+    # re-pickle in one Python worker per task (indexer.rep_query_df)
+    qid, cell, qv = zip(*probe_rows)
+    probes = spark.createDataFrame(pa.table({
+        "query_id": pa.array(qid, pa.int64()),
+        "cluster": pa.array(cell, pa.int32()),
+        "qv": pa.array(qv, pa.list_(pa.float64())),
+    }))
     all_cells = sorted({r[1] for r in probe_rows})
     v = _ivf_vector_scan(spark, index_dir, all_cells)
     sim = _dot(F.col("v"), F.col("qv")) / (_norm(F.col("v")) * _norm(F.col("qv")))

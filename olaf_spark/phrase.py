@@ -72,6 +72,7 @@ from olaf_spark.indexer import (
     fold_range,
     in_expr_int,
     merge_task_count,
+    rep_query_df,
     shard_from_id_col,
     sorted_tombstone_arr,
     term_id_col,
@@ -1295,7 +1296,7 @@ def batch_phrase_topk(
         .where(F.col("rank") <= k)
         .withColumnRenamed("query_id", "rep")
     )
-    mapping_df = spark.createDataFrame(mapping, "rep long, query_id long")
+    mapping_df = rep_query_df(spark, mapping)
     return ranked.join(F.broadcast(mapping_df), "rep").select(
         "query_id", "doc_id", "phrase_tf", F.col("rank").cast("long").alias("rank")
     )

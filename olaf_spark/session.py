@@ -3,6 +3,26 @@
 Local-mode sessions sized for the sandbox (single JVM); the engine itself
 is written for multi-executor clusters — all parallelism flows through
 DataFrame partitioning, never driver-side loops.
+
+Every session that tokenizes in the JVM lowercases WITHOUT ICU
+(`spark.sql.icu.caseMappings.enabled=false`, set by `jvm_lower_conf`).
+With ICU on, Spark 4.1's `lower` codegen calls
+`CollationSupport.Lower.execBinaryICU`, whose first call runs the static
+initializer of `CollationAwareUTF8String`: it fills a title-case table by
+calling ICU `UCharacter.toTitleCase` for every code point, a table `lower`
+never reads. Measured on a 4-core box: the benchmark build's first
+tokenize stage (`indexer.segments`, 1,000 docs) took 4.4 s with ICU and
+1.5 s without; a cold `lower` over 200k non-ASCII rows in an otherwise
+warm session 2.0 s against 0.67 s; warm, both take ~0.4 s. ASCII rows take
+`UTF8String.toLowerCaseAscii` on both paths. The two mappings do differ on
+a few code points (U+2C2F, a Unicode 14 letter, is unknown to the JDK 17
+tables), but never on one that lowercases into the token alphabet: over
+every non-surrogate code point, ICU, the JDK and `tokenize.tokenize_py`
+split the same tokens (tests/test_tokenize.py). The exception is a JVM
+whose default locale is Turkish, Azeri or Lithuanian, where
+`String.toLowerCase()` follows that language (`I` -> dotless `ı`); there
+ICU's root-locale mapping stays on. The check reads the driver's locale;
+executors are assumed to share it.
 """
 
 from __future__ import annotations
@@ -41,7 +61,18 @@ def get_spark(
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    jvm_lower_conf(spark)
     return spark
+
+
+ICU_CASE_MAPPINGS = "spark.sql.icu.caseMappings.enabled"
+
+
+def jvm_lower_conf(spark: SparkSession) -> None:
+    """Lowercase with the JDK instead of ICU (module docstring), unless the
+    JVM's default locale has its own lowercase rules."""
+    lang = spark._jvm.java.util.Locale.getDefault().getLanguage()
+    spark.conf.set(ICU_CASE_MAPPINGS, "true" if lang in ("tr", "az", "lt") else "false")
 
 
 def rebalance_scan(spark: SparkSession, df, key: str):

@@ -10,11 +10,13 @@ import pytest
 
 from olaf_spark.codec import (
     block_maxes,
+    block_starts_for_groups,
     delta_decode,
     delta_encode,
     pack_postings,
     unpack_postings,
     varbyte_decode,
+    varbyte_decode_rows,
     varbyte_encode,
 )
 
@@ -77,3 +79,20 @@ def test_block_maxes_exact():
     # brute-force check
     scores = 2.0 * tfs * 2.2 / (tfs + 1.2 * (0.25 + 0.75))
     assert np.allclose(bm, [scores[:4].max(), scores[4:8].max(), scores[8:].max()])
+
+
+def test_column_decode_matches_per_buffer_decode():
+    """varbyte_decode_rows decodes a column in one pass; empty buffers and
+    values up to 2^63 must split back into the per-buffer answers."""
+    vals = [rng.integers(0, 2**63, int(n), dtype=np.uint64) for n in rng.integers(0, 40, 200)]
+    vals[0] = vals[7] = np.empty(0, dtype=np.uint64)
+    got, counts = varbyte_decode_rows([varbyte_encode(v) for v in vals])
+    assert counts.tolist() == [v.size for v in vals]
+    assert np.array_equal(got, np.concatenate(vals))
+
+
+def test_block_starts_for_groups_with_empty_groups():
+    gs = np.array([0, 5, 5, 21, 22], dtype=np.int64)
+    want = [0, 4, 5, 9, 13, 17, 21, 22, 26]
+    assert block_starts_for_groups(gs, 30, 4).tolist() == want
+    assert block_starts_for_groups(np.empty(0, dtype=np.int64), 0, 4).size == 0

@@ -287,6 +287,39 @@ def test_group_delete_then_compact_drops_postings(spark, halves, tmp_path):
     assert_identical(got, [x for x in group.topk("needle97", K)])
 
 
+def test_compact_fold_rows_match_per_term_reference(spark, halves, tmp_path, check_posting_rows):
+    """Compaction folds each batch of terms in one numpy pass (sort by doc
+    within each term, drop tombstones); every row it writes must equal the
+    per-term reference under the group's stored stats, with chunked head
+    terms and a term whose every posting is tombstoned left out."""
+    from olaf_spark.indexer import term_id_py
+
+    pages, a, b = halves
+    cfg = EngineConfig(block_size=8, max_row_postings=16)
+    base = str(tmp_path / "ref")
+    build_index(spark, a, base, cfg, n_buckets=4)
+    append_index(spark, b, base, n_buckets=4)
+    group = IndexGroup.load(base)
+    oracle = OracleIndex.build([(r["doc_id"], r["text"]) for r in pages.collect()], cfg)
+    (needle_doc, _), = oracle.postings["needle97"]
+    dead = {needle_doc} | set(sorted(oracle.doc_len)[::7])
+    group.delete_docs(sorted(dead))
+    compacted = compact_index(spark, base, str(tmp_path / "refc"), n_merge_tasks=16)
+
+    dfs = {term_id_py(t): len(p) for t, p in oracle.postings.items()}
+    postings = {}
+    for t, plist in oracle.postings.items():
+        live = [(d, tf, oracle.doc_len[d]) for d, tf in plist if d not in dead]
+        if live:
+            postings[term_id_py(t)] = live
+    assert term_id_py("needle97") not in postings
+    rows = compacted.postings(spark).collect()
+    assert max(sum(r["term_id"] == t for r in rows) for t in postings) > 1  # chunked
+    check_posting_rows(
+        [r.asDict() for r in rows], postings, dfs, group.n_docs, group.avgdl, cfg,
+    )
+
+
 def test_streaming_append_equals_clean_rebuild(spark, halves, tmp_path):
     """Structured Streaming ingestion: micro-batches append deltas via
     foreachBatch (streaming.stream_index_appends); the group then answers

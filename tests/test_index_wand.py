@@ -180,6 +180,44 @@ def test_head_term_row_chunking(spark, tmp_path):
         )
 
 
+def test_merge_fold_rows_match_per_term_reference(spark, tmp_path, check_posting_rows):
+    """The build merge folds each batch of terms in one numpy pass; every
+    posting row it writes must equal the per-term reference (the codec's
+    single-buffer decoders and block_maxes). A tiny row cap splits terms
+    into many chunk rows, and 'everywhere' has a segment run in every
+    bucket."""
+    import pyarrow.dataset as ds
+
+    from pyspark.sql import functions as F
+
+    from olaf_spark.indexer import term_id_py
+
+    cfg = EngineConfig(block_size=8, max_row_postings=16)
+    pages = (
+        gen_pages(spark, 240, seed=23)
+        .select("doc_id", F.concat(F.col("text"), F.lit(" everywhere")).alias("text"))
+    )
+    oracle = OracleIndex.build([(r["doc_id"], r["text"]) for r in pages.collect()], cfg)
+    index = build_index(spark, pages, str(tmp_path / "ix"), cfg, n_buckets=4)
+
+    def table(kind):
+        path = os.path.join(index.index_dir, kind)
+        return ds.dataset(path, format="parquet", partitioning="hive").to_table().to_pylist()
+
+    every = term_id_py("everywhere")
+    assert sorted(r["bucket"] for r in table("segments") if r["term_id"] == every) == [0, 1, 2, 3]
+    rows = table("postings")
+    assert sum(r["term_id"] == every for r in rows) >= 240 // 16
+    postings = {
+        term_id_py(t): [(d, tf, oracle.doc_len[d]) for d, tf in plist]
+        for t, plist in oracle.postings.items()
+    }
+    check_posting_rows(
+        rows, postings, {t: len(p) for t, p in postings.items()},
+        index.n_docs, index.avgdl, cfg,
+    )
+
+
 def test_merge_split_across_tasks(spark, tmp_path):
     """Doc-range-parallel merge: with far more merge ranges than (tb, term,
     bucket) keys, head terms' runs split across merge tasks — df comes from
