@@ -13,7 +13,8 @@ Layout:
   synth      — deterministic synthetic `pages` corpus generator
   extract    — html -> text extraction (vectorized pandas UDF + pure-Python twin)
   tokenize   — tokenizer: pure-DataFrame and pandas-UDF variants
-  codec      — delta + varbyte posting-list compression (numpy, vectorized)
+  codec      — the packed posting and positional row formats: batch encode and
+               decode (numpy delta + varbyte), and the BM25 contribution kernel
   indexer    — distributed index build: postings segments, merge, lineage, resume
   scorer     — BM25 top-k: ad-hoc DataFrame path
   wand       — serving scorers over packed postings: vectorized exact and

@@ -19,7 +19,7 @@ rewrite (optimization guide §2.3/§8):
   scan      postings parquet pruned by hive partition (tb) AND row-group
             stats (term_id isin) -> ~|distinct terms| rows read, not the
             corpus; NO join — the query side rides the broadcast
-  decode    mapInPandas: numpy varbyte decode once per posting row,
+  decode    mapInPandas: one batch decode per Arrow batch of posting rows,
             emitting ONE (doc_id, term_ord, contrib) proxy row per
             (term, doc) — NOT one per subscribing query: the round-5 shape
             shuffled every head term's postings once PER SUBSCRIBER
@@ -53,7 +53,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from olaf_spark.codec import decode_ids_blocked, varbyte_decode
+from olaf_spark.codec import bm25_contrib, decode_posting_rows
 from olaf_spark.incremental import IndexGroup
 from olaf_spark.indexer import (
     Index,
@@ -139,43 +139,28 @@ def _make_decode_proxies(
     def decode(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         tid_ord, _, ts_arr, idf_map = bstate.value
         for pdf in pdf_iter:
-            if not len(pdf):
+            # row-group stats pruning is approximate: keep the batch's rows
+            # whose term the batch asked for
+            tids = pdf["term_id"].tolist()
+            rows = [i for i, t in enumerate(tids) if t in tid_ord]
+            if not rows:
                 continue
-            out_doc, out_ord, out_contrib = [], [], []
-            terms_np = pdf["term_id"].to_numpy(dtype=np.int64)
-            id_bufs = pdf["doc_ids_bin"].to_numpy()
-            tf_bufs = pdf["tfs_bin"].to_numpy()
-            dl_bufs = pdf["doc_lens_bin"].to_numpy()
-            for i in range(len(pdf)):
-                tid = int(terms_np[i])
-                ord_ = tid_ord.get(tid)
-                if ord_ is None:
-                    continue  # row-group stats pruning is approximate
-                ids = decode_ids_blocked(bytes(id_bufs[i]), block_size).astype(np.int64)
-                tfs = varbyte_decode(bytes(tf_bufs[i]))
-                dls = varbyte_decode(bytes(dl_bufs[i]))
-                if ts_arr is not None:
-                    keep = tombstone_keep_mask(ids, ts_arr)
-                    ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-                if ids.size == 0:
-                    continue
-                w = idf_map[tid]
-                tfs_f = tfs.astype(np.float64)
-                dls_f = dls.astype(np.float64)
-                # association order matches oracle: idf * (tf*(k1+1)/denom)
-                contrib = w * (
-                    tfs_f * (k1 + 1.0)
-                    / (tfs_f + k1 * (1.0 - b + b * dls_f / avgdl))
-                )
-                out_doc.append(ids)
-                out_ord.append(np.full(ids.size, ord_, dtype=np.int32))
-                out_contrib.append(contrib)
-            if out_doc:
+            sub = pdf.iloc[rows]
+            ids, tfs, dls, counts = decode_posting_rows(
+                sub["doc_ids_bin"], sub["tfs_bin"], sub["doc_lens_bin"], block_size
+            )
+            ids = ids.view(np.int64)
+            ords = np.repeat([tid_ord[tids[i]] for i in rows], counts).astype(np.int32)
+            w = np.repeat([idf_map[tids[i]] for i in rows], counts)
+            if ts_arr is not None:
+                keep = tombstone_keep_mask(ids, ts_arr)
+                ids, tfs, dls, ords, w = ids[keep], tfs[keep], dls[keep], ords[keep], w[keep]
+            if ids.size:
                 yield pd.DataFrame(
                     {
-                        "doc_id": np.concatenate(out_doc),
-                        "term_ord": np.concatenate(out_ord),
-                        "contrib": np.concatenate(out_contrib),
+                        "doc_id": ids,
+                        "term_ord": ords,
+                        "contrib": bm25_contrib(w, tfs, dls, k1, b, avgdl),
                     }
                 )
 

@@ -342,7 +342,7 @@ def compact_bigrams(
     spark: SparkSession,
     part_dirs: list[str],
     out_dir: str,
-    tombstones: set[int],
+    tombstones: np.ndarray | None,
     cfg: EngineConfig,
     n_merge_tasks: int | None = None,
 ) -> str:

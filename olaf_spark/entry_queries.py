@@ -77,7 +77,38 @@ def _spread(spark: SparkSession, df: DataFrame, key: str) -> DataFrame:
     return rebalance_scan(spark, df, key)
 
 
-_ADHOC_CACHE: dict[str, object] = {}
+#: the fixtures the entry queries share (ad-hoc index, materialized
+#: indexes, clusters), built once per key by _memo
+_MEMO: dict[tuple, object] = {}
+#: temp dirs behind memoized indexes, removed when the process exits
+_TEMP_DIRS: list[str] = []
+
+
+def _memo(key: tuple, make):
+    """make() once per key; every later call reuses its result."""
+    if key not in _MEMO:
+        _MEMO[key] = make()
+    return _MEMO[key]
+
+
+def _remove_temp_dirs() -> None:
+    import shutil
+
+    for d in _TEMP_DIRS:
+        shutil.rmtree(d, ignore_errors=True)
+    _TEMP_DIRS.clear()
+
+
+def _temp_dir(prefix: str) -> str:
+    """A fresh temp dir that dies with the process."""
+    import atexit
+    import tempfile
+
+    d = tempfile.mkdtemp(prefix=prefix)
+    if not _TEMP_DIRS:
+        atexit.register(_remove_temp_dirs)
+    _TEMP_DIRS.append(d)
+    return d
 
 
 def _get_adhoc(spark: SparkSession, sf_dir: str):
@@ -88,9 +119,7 @@ def _get_adhoc(spark: SparkSession, sf_dir: str):
     round-2 bench log)."""
     from olaf_spark.scorer import AdhocIndex
 
-    if sf_dir not in _ADHOC_CACHE:
-        _ADHOC_CACHE[sf_dir] = AdhocIndex(spark, _docs(spark, sf_dir), CFG)
-    return _ADHOC_CACHE[sf_dir]
+    return _memo(("adhoc", sf_dir), lambda: AdhocIndex(spark, _docs(spark, sf_dir), CFG))
 
 
 # --------------------------------------------------------------------------
@@ -599,20 +628,12 @@ LIMIT {K}
 # must reproduce the DataFrame path bit-for-bit (after 4dp rounding).
 # --------------------------------------------------------------------------
 
-_INDEX_CACHE: dict[str, object] = {}
-
-
 def _get_index(spark: SparkSession, sf_dir: str):
     from olaf_spark.indexer import build_index
 
-    if sf_dir not in _INDEX_CACHE:
-        import tempfile
-
-        d = tempfile.mkdtemp(prefix="entry_ix_")
-        _INDEX_CACHE[sf_dir] = build_index(
-            spark, _docs(spark, sf_dir), d, CFG, n_buckets=8
-        )
-    return _INDEX_CACHE[sf_dir]
+    return _memo(("index", sf_dir), lambda: build_index(
+        spark, _docs(spark, sf_dir), _temp_dir("entry_ix_"), CFG, n_buckets=8
+    ))
 
 
 # --------------------------------------------------------------------------
@@ -664,15 +685,6 @@ FROM tokpos GROUP BY doc_id, pos // {FRAGMENT_LEN}
 # trigram present at sf0.01 with a multi-occurrence doc — exercises the
 # ordered adjacency verify AND phrase_tf ranking (not just membership)
 PHRASE_QUERY = "slow hash batch"
-_PHRASE_CACHE: dict[str, str] = {}
-
-
-def _cleanup_phrase_cache() -> None:
-    import shutil
-
-    for d in _PHRASE_CACHE.values():
-        shutil.rmtree(d, ignore_errors=True)
-    _PHRASE_CACHE.clear()
 
 
 #: bigram head threshold for the entry index — FIXED (not n_docs-derived)
@@ -687,22 +699,17 @@ def _get_phrase_dir(spark: SparkSession, sf_dir: str) -> str:
     shared by the serving and batch phrase entries. The serving entries
     run in auto mode, so phrase_match / phrase_match_thresholded exercise
     pair-unit verification whenever their terms are heads."""
-    import atexit
-
     from olaf_spark.bigram import build_bigrams
     from olaf_spark.phrase import build_positions
 
-    if sf_dir not in _PHRASE_CACHE:
-        import tempfile
-
-        d = tempfile.mkdtemp(prefix="entry_phrase_")
-        if not _PHRASE_CACHE:
-            atexit.register(_cleanup_phrase_cache)
+    def make() -> str:
+        d = _temp_dir("entry_phrase_")
         docs = _docs(spark, sf_dir).select("doc_id", "text")
         build_positions(spark, docs, d, CFG, n_buckets=4)
         build_bigrams(spark, docs, d, CFG, n_buckets=4, min_df=PHRASE_BIGRAM_MIN_DF)
-        _PHRASE_CACHE[sf_dir] = d
-    return _PHRASE_CACHE[sf_dir]
+        return d
+
+    return _memo(("phrase", sf_dir), make)
 
 
 def q_phrase_match(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -892,24 +899,20 @@ FROM ({SQL_BM25_TOPK}) res LEFT JOIN documents d ON res.doc_id = d.doc_id
 """
 
 
-_GROUP_CACHE: dict[str, object] = {}
-
-
 def _get_group(spark: SparkSession, sf_dir: str):
     """main-index + one-delta group over the sf corpus (half built, half
     appended) — shared by the incremental serving and group-batch entries."""
     from olaf_spark.incremental import IndexGroup, append_index
     from olaf_spark.indexer import build_index
 
-    if sf_dir not in _GROUP_CACHE:
-        import tempfile
-
-        d = tempfile.mkdtemp(prefix="entry_inc_") + "/ix"
+    def make():
+        d = _temp_dir("entry_inc_") + "/ix"
         docs = _docs(spark, sf_dir).select("doc_id", "text")
         build_index(spark, docs.where("doc_id % 2 = 0"), d, CFG, n_buckets=4)
         append_index(spark, docs.where("doc_id % 2 = 1"), d, n_buckets=4)
-        _GROUP_CACHE[sf_dir] = IndexGroup.load(d)
-    return _GROUP_CACHE[sf_dir]
+        return IndexGroup.load(d)
+
+    return _memo(("group", sf_dir), make)
 
 
 def q_bm25_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1239,29 +1242,23 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     same pair CTE + a recursive reachability closure (min reachable id)."""
     from olaf_spark.ops.dedup import connected_components, minhash_lsh_pairs
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _CLUSTERS_CACHE.get(key)
-    if hit is not None:
-        return hit
-    docs = _docs(spark, sf_dir)
-    pairs = minhash_lsh_pairs(docs, n_hashes=N_MINHASH, bands=LSH_BANDS, n=3)
-    comp = connected_components(pairs)
-    out = docs.select("doc_id").join(
-        comp, docs["doc_id"] == comp["node"], "left"
-    ).select(
-        "doc_id",
-        F.coalesce(F.col("component"), F.col("doc_id")).cast("long").alias("cluster_id"),
-    )
+    def make() -> DataFrame:
+        docs = _docs(spark, sf_dir)
+        pairs = minhash_lsh_pairs(docs, n_hashes=N_MINHASH, bands=LSH_BANDS, n=3)
+        comp = connected_components(pairs)
+        return docs.select("doc_id").join(
+            comp, docs["doc_id"] == comp["node"], "left"
+        ).select(
+            "doc_id",
+            F.coalesce(F.col("component"), F.col("doc_id")).cast("long").alias("cluster_id"),
+        )
+
     # comp is localCheckpoint-materialized inside connected_components, so
-    # the cached frame re-serves without re-running the iterative closure
-    # (curation_keep_list calls this right after the driver's own
-    # dedup_clusters row — the loop would otherwise run twice per gate)
-    _CLUSTERS_CACHE[key] = out
-    return out
-
-
-#: (applicationId, sf_dir) -> clusters DataFrame; see q_dedup_clusters
-_CLUSTERS_CACHE: dict[tuple, DataFrame] = {}
+    # the memoized frame (per session and sf_dir) re-serves without
+    # re-running the iterative closure (curation_keep_list calls this right
+    # after the dedup_clusters entry itself ran — the loop would otherwise
+    # run twice per gate)
+    return _memo(("clusters", spark.sparkContext.applicationId, sf_dir), make)
 
 
 #: the reachability-closure CTE chain, shared by dedup_clusters and the
@@ -1426,7 +1423,6 @@ SELECT query_id, vec_id, cosine_sim, rank FROM (
 """
 
 
-_ANN_CACHE: dict[str, str] = {}
 ANN_PLANES = 6
 ANN_PROBES = 3
 
@@ -1439,33 +1435,20 @@ ANN_PROBES = 3
 ORACLE_SF_DIR = os.environ.get("OLAF_ORACLE_SF_DIR", "/root/testdata/sf0.01")
 
 
-def _cleanup_ann_cache() -> None:
-    import shutil
-
-    for d in _ANN_CACHE.values():
-        shutil.rmtree(d, ignore_errors=True)
-    _ANN_CACHE.clear()
-
-
 def _get_ann_index(spark: SparkSession, sf_dir: str) -> str:
     """One materialized ANN index (vec_id != 0) per sf_dir, built in a
     temp dir that dies with the process."""
-    import atexit
-
     from olaf_spark.ops.similarity import build_ann_index
 
-    if sf_dir not in _ANN_CACHE:
-        import tempfile
-
-        d = tempfile.mkdtemp(prefix="entry_ann_")
-        if not _ANN_CACHE:
-            atexit.register(_cleanup_ann_cache)  # temp indexes die with us
+    def make() -> str:
+        d = _temp_dir("entry_ann_")
         emb = _read(spark, sf_dir, "embeddings")
         build_ann_index(
             spark, emb.where(F.col("vec_id") != 0), d, n_planes=ANN_PLANES, seed=42
         )
-        _ANN_CACHE[sf_dir] = d
-    return _ANN_CACHE[sf_dir]
+        return d
+
+    return _memo(("ann", sf_dir), make)
 
 
 def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1596,31 +1579,16 @@ LIMIT 10
 # --------------------------------------------------------------------------
 
 IVF_CENTROIDS = 8
-_IVF_CACHE: dict[tuple, str] = {}
-
-
-def _cleanup_ivf_cache() -> None:
-    import shutil
-
-    for d in _IVF_CACHE.values():
-        shutil.rmtree(d, ignore_errors=True)
-    _IVF_CACHE.clear()
 
 
 def _get_ivf_index(spark: SparkSession, sf_dir: str, which: str) -> str:
     """One materialized IVF index per (sf_dir, corpus slice), temp-dir
-    lifetime like _ANN_CACHE. `which` selects the corpus slice so the two
+    lifetime like the ANN index. `which` selects the corpus slice so the two
     entries mirror their brute-force oracles' filters exactly."""
-    import atexit
-    import tempfile
-
     from olaf_spark.ops.similarity import build_ivf_index
 
-    key = (sf_dir, which)
-    if key not in _IVF_CACHE:
-        d = tempfile.mkdtemp(prefix="entry_ivf_")
-        if not _IVF_CACHE:
-            atexit.register(_cleanup_ivf_cache)
+    def make() -> str:
+        d = _temp_dir("entry_ivf_")
         emb = _read(spark, sf_dir, "embeddings")
         corpus = (
             emb.where(F.col("vec_id") != 0)
@@ -1630,8 +1598,9 @@ def _get_ivf_index(spark: SparkSession, sf_dir: str, which: str) -> str:
         build_ivf_index(
             spark, corpus, d, n_centroids=IVF_CENTROIDS, sample_size=20_000, seed=42
         )
-        _IVF_CACHE[key] = d
-    return _IVF_CACHE[key]
+        return d
+
+    return _memo(("ivf", sf_dir, which), make)
 
 
 def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

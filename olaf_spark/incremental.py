@@ -46,19 +46,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from olaf_spark import wand
-from olaf_spark.codec import varbyte_decode_rows
+from olaf_spark.codec import decode_posting_rows, first_doc_ids
 from olaf_spark.config import EngineConfig
 from olaf_spark.indexer import (
     POSTINGS_SCHEMA,
     Index,
     _write_lineage,
     build_index,
-    decode_posting_rows,
     done_partitions,
     make_posting_fold,
     shard_from_id_col,
-    sorted_tombstone_arr,
     tombstone_keep_mask,
+    union_tombstones_arr,
 )
 from olaf_spark.scorer import idf as idf_fn
 from olaf_spark.termrows import term_rows
@@ -227,23 +226,13 @@ class IndexGroup:
         return cls(parts)
 
     def tombstones(self) -> set[int]:
-        out: set[int] = set()
-        for p in self.parts:
-            out |= p.tombstones()
-        return out
+        arr = self.tombstones_arr()
+        return set() if arr is None else set(arr.tolist())
 
     def tombstones_arr(self) -> np.ndarray | None:
-        """Sorted union of every part's cached tombstone array (the scale
-        filter path — see Index.tombstones_arr); None when no deletes."""
-        arrs = [a for a in (p.tombstones_arr() for p in self.parts) if a is not None]
-        if not arrs:
-            return None
-        if len(arrs) == 1:
-            return arrs[0]
-        out = arrs[0]
-        for a in arrs[1:]:
-            out = np.union1d(out, a)
-        return out
+        """Sorted union of every part's tombstones as committed on disk now
+        (indexer.union_tombstones_arr); None when no deletes."""
+        return union_tombstones_arr([p.index_dir for p in self.parts])
 
     def delete_docs(self, doc_ids: list[int]) -> None:
         # a doc lives in exactly one part but WHICH is not tracked; the
@@ -369,7 +358,9 @@ class IndexGroup:
         return hits
 
 
-def _make_compact_fn(n_docs: int, avgdl: float, cfg: EngineConfig, tombstones: set[int]):
+def _make_compact_fn(
+    n_docs: int, avgdl: float, cfg: EngineConfig, ts_arr: np.ndarray | None
+):
     """mapInPandas fn of the compaction fold: one range-partitioned slice
     of posting rows -> merged chunk rows (indexer.make_posting_fold).
 
@@ -384,11 +375,13 @@ def _make_compact_fn(n_docs: int, avgdl: float, cfg: EngineConfig, tombstones: s
     internally sorted + each posting in exactly one chunk (doc_ids are
     unique across parts), both of which hold. df/N/avgdl are the group's
     stored stats (NOT shrunk by tombstones), so post-compaction scores
-    equal pre-compaction ones."""
-    ts_arr = sorted_tombstone_arr(tombstones)
+    equal pre-compaction ones. ts_arr: the sorted tombstone snapshot, or
+    None."""
 
     def _merge_parts(pdf: pd.DataFrame, row_term: np.ndarray):
-        ids, tfs, dls, counts = decode_posting_rows(pdf, cfg.block_size)
+        ids, tfs, dls, counts = decode_posting_rows(
+            pdf["doc_ids_bin"], pdf["tfs_bin"], pdf["doc_lens_bin"], cfg.block_size
+        )
         term = np.repeat(row_term, counts)
         order = np.lexsort((ids.view(np.int64), term))
         if ts_arr is not None:
@@ -399,22 +392,14 @@ def _make_compact_fn(n_docs: int, avgdl: float, cfg: EngineConfig, tombstones: s
 
 
 def _first_doc_udf():
-    """Pandas UDF: absolute first doc_id of a packed posting row (the first
-    LEB128 value of doc_ids_bin — delta encoding keeps it absolute), from
-    one column decode per Arrow batch (codec.varbyte_decode_rows); an empty
-    buffer reads 0. This is the compaction shuffle's doc-range key."""
+    """Pandas UDF: first doc_id of a packed row's doc_ids_bin, one batch
+    decode per Arrow batch (codec.first_doc_ids) — the fold shuffles'
+    doc-range key."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("long")
     def first_doc(bufs: pd.Series) -> pd.Series:
-        vals, counts = varbyte_decode_rows(bufs)
-        out = np.zeros(len(bufs), dtype=np.int64)
-        has = counts > 0
-        # doc_ids travel as uint64; reinterpret as int64 — any
-        # deterministic total order works for SPLITTING a term's rows
-        # (chunks need not be globally doc-ordered)
-        out[has] = vals.view(np.int64)[(np.cumsum(counts) - counts)[has]]
-        return pd.Series(out)
+        return pd.Series(first_doc_ids(bufs))
 
     return first_doc
 
@@ -536,15 +521,18 @@ def compact_index(
                 "with the original settings and source index, or remove the "
                 "out_dir to restart"
             )
-        tombstones = set(manifest["tombstones"])
+        ts_arr = np.asarray(manifest["tombstones"], dtype=np.int64)
     else:
-        tombstones = group.tombstones()
+        ts_arr = group.tombstones_arr()
+        if ts_arr is None:
+            ts_arr = np.empty(0, dtype=np.int64)
         manifest = dict(
-            tombstones=sorted(tombstones),
+            tombstones=ts_arr.tolist(),
             n_groups=n_groups,
             source=source,
         )
         mfs.publish_json(snap_path, manifest)
+    ts_arr = ts_arr if ts_arr.size else None
 
     dfs = [p.postings(spark) for p in group.parts]
     all_rows = dfs[0].withColumn("part", F.lit(0))
@@ -553,7 +541,7 @@ def compact_index(
     all_rows = all_rows.withColumn(
         "tb", shard_from_id_col(F.col("term_id"), cfg.n_segments)
     )
-    compact_fn = _make_compact_fn(group.n_docs, group.avgdl, cfg, tombstones)
+    compact_fn = _make_compact_fn(group.n_docs, group.avgdl, cfg, ts_arr)
     if n_merge_tasks is None:
         from olaf_spark.indexer import dir_bytes, merge_task_count
 
@@ -648,7 +636,7 @@ def compact_index(
         _fold_side_index(
             out_dir, "compact_positions", "positions_meta.json",
             lambda: compact_positions(
-                spark, part_dirs, out_dir, tombstones, cfg,
+                spark, part_dirs, out_dir, ts_arr, cfg,
                 n_merge_tasks=n_merge_tasks,
             ),
         )
@@ -681,7 +669,7 @@ def compact_index(
         _fold_side_index(
             out_dir, "compact_bigrams", "bigram_meta.json",
             lambda: compact_bigrams(
-                spark, part_dirs, out_dir, tombstones, cfg,
+                spark, part_dirs, out_dir, ts_arr, cfg,
                 n_merge_tasks=n_merge_tasks,
             ),
         )

@@ -9,15 +9,15 @@ single sorted LMDB store (reduce). Here the same shape, Spark-first:
       -> bucket by doc_id RANGE  (so per-(term,bucket) runs are sorted AND
          disjoint — merging is concatenation, not a k-way merge)
       -> repartition(bucket, term) + sortWithinPartitions + mapInPandas
-         single-pass vectorized pack (numpy delta+varbyte, encode_grouped)
+         single-pass vectorized pack (codec.encode_posting_rows)
       -> parquet append, partitioned by bucket, one lineage row per bucket
 
   stage 2 (merge): read segments -> range-partition on (tb, term, bucket)
       + sortWithinPartitions(term, bucket) + mapInPandas streaming fold
       (make_posting_fold, shared with compaction): each Arrow batch of
-      complete terms is decoded one binary column at a time, runs
-      concatenate in bucket order, and idf, chunking, block maxes and the
-      re-encode are numpy passes over the whole batch — no Python work per
+      complete terms is decoded in one codec pass, runs concatenate in
+      bucket order, and idf, chunking, block maxes and the re-encode are
+      numpy passes over the whole batch — no Python work per
       term (the per-term loop cost ~175 us a term: 2.8-3.0 s serial for the
       13.7k terms of the 1,000-doc benchmark corpus)
       -> global postings parquet, hive-partitioned by tb, term-sorted
@@ -54,15 +54,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from olaf_spark.codec import (
-    block_starts_for_groups,
-    encode_grouped,
-    encode_grouped_blocked,
-    segmented_cumsum,
-    split_lists,
-    varbyte_decode_rows,
-)
+from olaf_spark.codec import bm25_contrib, decode_posting_rows, encode_posting_rows
 from olaf_spark.config import EngineConfig
+from olaf_spark.lru import file_sig, lru_get
 from olaf_spark.scorer import idf
 
 SEGMENT_SCHEMA = (
@@ -70,10 +64,8 @@ SEGMENT_SCHEMA = (
     "doc_ids_bin binary, tfs_bin binary, doc_lens_bin binary"
 )
 
-# Posting rows are chunk-aligned to block_size: doc_ids_bin gap-encodes with
-# a RESTART (absolute value) at every block boundary, and *_offs hold each
-# block's byte offset inside its buffer — so the serving path can decode ONE
-# block without touching the rest (lazy block decode for block-max pruning).
+# Posting rows are chunk-aligned to block_size, so block metadata stays
+# row-local; the byte layout is codec.py's posting row.
 POSTINGS_SCHEMA = (
     "term_id long, df long, chunk int, "
     "doc_ids_bin binary, tfs_bin binary, doc_lens_bin binary, "
@@ -379,9 +371,7 @@ def _make_pack_stage1(lo: int, width: int, n_buckets: int):
                 "bucket": buckets[g_starts_rows],
                 "n_docs": n_docs.astype("int64"),
                 "sum_tf": sum_tf.astype("int64"),
-                "doc_ids_bin": encode_grouped(ids, g_starts, delta=True),
-                "tfs_bin": encode_grouped(tfs, g_starts, delta=False),
-                "doc_lens_bin": encode_grouped(dls, g_starts, delta=False),
+                **encode_posting_rows(ids, tfs, dls, g_starts),
             }
         )
 
@@ -398,20 +388,19 @@ def make_posting_fold(n_docs: int, avgdl: float, cfg: EngineConfig, decode):
     (df_full) -> chunked global POSTINGS_SCHEMA rows.
 
     Each batch of complete term groups is folded in ONE numpy pass, with no
-    Python work per term: decode(pdf, row_term) decodes the batch's three
-    binary columns (codec.varbyte_decode_rows) and returns (ids, tfs, dls,
-    term), every posting tagged with its term's group index (row_term is
-    the per-row index) and sorted by (term, doc). That decode is the one
-    step the callers differ in: the merge concatenates bucket-disjoint runs,
+    Python work per term: decode(pdf, row_term) decodes the batch
+    (codec.decode_posting_rows) and returns (ids, tfs, dls, term), every
+    posting tagged with its term's group index (row_term is the per-row
+    index) and sorted by (term, doc). That decode is the one step the
+    callers differ in: the merge concatenates bucket-disjoint runs,
     compaction sorts the parts' rows by doc and drops tombstones. A term
     that decodes empty is skipped. Then, for the whole batch: each term's
     idf (from df_full, which arrives on every row, so idf and block maxes
     are exact regardless of which task packs which doc range) is broadcast
-    to its postings, terms are cut into rows of at most `cap` postings,
-    block maxes come from one np.maximum.reduceat over the block starts,
-    and each column is encoded by one encode_grouped_blocked call. `chunk`
-    is a task-local ordinal (rows of one term are doc-range disjoint;
-    nothing depends on chunk numbering).
+    to its postings, terms are cut into rows of at most `cap` postings, and
+    one codec.encode_posting_rows call packs the rows and their block
+    metadata. `chunk` is a task-local ordinal (rows of one term are
+    doc-range disjoint; nothing depends on chunk numbering).
 
     Streams complete term groups via _iter_term_chunks — resident memory is
     O(arrow batch + one term's rows), never the partition.
@@ -446,36 +435,16 @@ def make_posting_fold(n_docs: int, avgdl: float, cfg: EngineConfig, decode):
         chunk -= np.repeat(np.cumsum(n_chunks) - n_chunks, n_chunks)
         c_starts = np.repeat(g_starts, n_chunks) + chunk * cap
 
-        # per-posting BM25 contribution, in block_maxes' association order;
         # idf once per distinct df (scorer.idf, so bit-identical to it)
         uniq, inv = np.unique(df_full, return_inverse=True)
         w = np.asarray([idf(n_docs, int(d)) for d in uniq], dtype=np.float64)[inv]
-        tf_f, dl_f = tfs.astype(np.float64), dls.astype(np.float64)
-        scores = np.repeat(w, g_len) * (
-            tf_f * (k1 + 1.0) / (tf_f + k1 * (1.0 - b + b * dl_f / avgdl))
-        )
-        b_starts = block_starts_for_groups(c_starts, n, block_size)
-        b_ends = np.append(b_starts[1:], n)
-        cuts = np.searchsorted(b_starts, c_starts[1:])
-        lasts = split_lists(ids[b_ends - 1].astype(np.int64), cuts)
-        maxes = split_lists(np.maximum.reduceat(scores, b_starts), cuts)
-
-        id_bin, id_offs = encode_grouped_blocked(ids, c_starts, block_size, delta=True)
-        tf_bin, tf_offs = encode_grouped_blocked(tfs, c_starts, block_size, delta=False)
-        dl_bin, dl_offs = encode_grouped_blocked(dls, c_starts, block_size, delta=False)
+        scores = bm25_contrib(np.repeat(w, g_len), tfs, dls, k1, b, avgdl)
         return pd.DataFrame(
             {
                 "term_id": np.repeat(terms[g_rows], n_chunks),
                 "df": np.repeat(df_full, n_chunks),  # FULL df on every chunk
                 "chunk": chunk.astype(np.int32),
-                "doc_ids_bin": id_bin,
-                "tfs_bin": tf_bin,
-                "doc_lens_bin": dl_bin,
-                "block_lasts": lasts,
-                "block_maxes": maxes,
-                "id_offs": id_offs,
-                "tf_offs": tf_offs,
-                "dl_offs": dl_offs,
+                **encode_posting_rows(ids, tfs, dls, c_starts, block_size, scores),
             }
         )
 
@@ -488,26 +457,14 @@ def make_posting_fold(n_docs: int, avgdl: float, cfg: EngineConfig, decode):
     return _fold
 
 
-def decode_posting_rows(pdf: pd.DataFrame, block_size: int | None = None):
-    """(ids, tfs, dls, counts) of a batch of packed posting rows, each
-    binary column decoded in one pass: counts[i] postings per row, and the
-    doc-id gaps restart absolute at every row start and, for blocked rows
-    (block_size given), at every block start within a row."""
-    gaps, counts = varbyte_decode_rows(pdf["doc_ids_bin"])
-    tfs, _ = varbyte_decode_rows(pdf["tfs_bin"])
-    dls, _ = varbyte_decode_rows(pdf["doc_lens_bin"])
-    restarts = np.cumsum(counts) - counts  # row starts; an empty row adds none
-    if block_size is not None:
-        restarts = block_starts_for_groups(restarts, gaps.size, block_size)
-    return segmented_cumsum(gaps, restarts), tfs, dls, counts
-
-
 def _concat_runs(pdf: pd.DataFrame, row_term: np.ndarray):
     """The build merge's decode: a term's segment runs are sorted by doc_id
     within a bucket and buckets are disjoint doc_id ranges, so
     concatenation in bucket order IS the merge (Olaf's store_cached bulk
     load / sorted B+tree insert)."""
-    ids, tfs, dls, counts = decode_posting_rows(pdf)
+    ids, tfs, dls, counts = decode_posting_rows(
+        pdf["doc_ids_bin"], pdf["tfs_bin"], pdf["doc_lens_bin"]
+    )
     return ids, tfs, dls, np.repeat(row_term, counts)
 
 
@@ -518,8 +475,6 @@ class Index:
         self.index_dir = index_dir
         self.cfg = cfg
         self.stats = stats
-        self._tombstones: set[int] | None = None
-        self._tombstones_arr: np.ndarray | None = None
 
     @property
     def n_docs(self) -> int:
@@ -562,33 +517,17 @@ class Index:
     def _tombstone_path(self) -> str:
         return os.path.join(self.index_dir, "tombstones.json")
 
-    def _read_tombstones_disk(self) -> set[int]:
-        try:
-            with open(self._tombstone_path) as f:
-                return set(json.load(f))
-        except FileNotFoundError:
-            return set()
-
     def tombstones(self) -> set[int]:
-        if self._tombstones is None:
-            self._tombstones = self._read_tombstones_disk()
-        return self._tombstones
+        arr = self.tombstones_arr()
+        return set() if arr is None else set(arr.tolist())
 
     def tombstones_arr(self) -> np.ndarray | None:
-        """SORTED int64 tombstone array for the scorers' filter path,
-        cached on the instance (None when empty). At millions of deletes
-        the set/JSON path costs a full JSON int parse per load plus an
-        np.fromiter + isin re-sort per query; this reads the parquet
-        sidecar (columnar, already sorted) once and every query filters
-        with one searchsorted (tombstone_keep_mask)."""
-        if self._tombstones_arr is None:
-            self._tombstones_arr = read_tombstones_arr(self.index_dir)
-        return self._tombstones_arr if self._tombstones_arr.size else None
+        """SORTED int64 tombstone array for the scorers' filter path (None
+        when empty), as committed on disk now — union_tombstones_arr."""
+        return union_tombstones_arr([self.index_dir])
 
     def _mutate_tombstones(self, fn) -> None:
-        ts = locked_mutate_id_set(self._tombstone_path, fn)
-        self._tombstones = ts
-        self._tombstones_arr = np.asarray(sorted(ts), dtype=np.int64)
+        locked_mutate_id_set(self._tombstone_path, fn)
 
     def delete_docs(self, doc_ids: list[int]) -> None:
         """Merge-on-read deletion: doc_ids are tombstoned, not rewritten —
@@ -667,17 +606,38 @@ def read_tombstones_arr(index_dir: str) -> np.ndarray:
         return np.sort(np.asarray(json.load(f), dtype=np.int64))
 
 
-def sorted_tombstone_arr(ts) -> np.ndarray | None:
-    """Normalize a tombstone collection (set/list, or an already-sorted
-    int64 array from tombstones_arr) to the sorted-array form the scorers
-    filter with; None/empty -> None."""
-    if ts is None:
+#: per-dir tombstone arrays, LRU-bounded (a long-lived driver touching many
+#: index dirs must not accumulate dead arrays)
+_TS_CACHE: dict[str, tuple] = {}
+_TS_CACHE_MAX = 256
+
+
+def union_tombstones_arr(dirs: list[str]) -> np.ndarray | None:
+    """Sorted int64 union of the dirs' tombstones (None when no deletes) —
+    the one tombstone reader of serving, batch, phrase and compaction.
+
+    Each dir's array (read_tombstones_arr: the parquet sidecar, no JSON
+    parse of a large delete set) is cached under the (inode, mtime_ns)
+    signatures of both tombstone files (olaf_spark.lru): every mutate
+    commits via tmp + rename, so a delete committed through ANY handle is
+    seen by the next read, and an unchanged delete set is not re-read per
+    query. Every query then filters with one searchsorted
+    (tombstone_keep_mask)."""
+    arrs = []
+    for d in dirs:
+        sig = tuple(
+            file_sig(os.path.join(d, name))
+            for name in ("tombstones.json", "tombstones.parquet")
+        )
+        arr = lru_get(_TS_CACHE, d, sig, lambda: read_tombstones_arr(d), _TS_CACHE_MAX)
+        if arr.size:
+            arrs.append(arr)
+    if not arrs:
         return None
-    if isinstance(ts, np.ndarray):
-        return ts if ts.size else None
-    if not ts:
-        return None
-    return np.asarray(sorted(int(x) for x in ts), dtype=np.int64)
+    out = arrs[0]
+    for a in arrs[1:]:
+        out = np.union1d(out, a)
+    return out
 
 
 def tombstone_keep_mask(ids: np.ndarray, ts_sorted: np.ndarray) -> np.ndarray:

@@ -11,11 +11,10 @@ fingerprint sequence: term i must occur at position p+i of the SAME doc.
 Spark-first shape:
 
   build_positions   one wide shuffle (same doc-id-range bucketing as the
-                    main build) -> mapInPandas pack: per (term, bucket) row
-                    holds doc_ids (delta+varbyte), per-doc position counts
-                    (varbyte), and per-doc delta-encoded positions (one
-                    buffer, restart at each doc boundary — encode_grouped's
-                    delta_starts) -> parquet hive-partitioned by tb.
+                    main build) -> mapInPandas pack: one positional row
+                    (codec.py's layout: doc headers plus one position run
+                    per doc, so serving decodes only candidate docs) per
+                    (term, bucket) -> parquet hive-partitioned by tb.
                     A SIDE index: the main postings format is untouched
                     (phrase support is additive, like Olaf keeping metadata
                     in a separate LMDB database, olaf_db.c:64-71).
@@ -60,7 +59,14 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from olaf_spark.codec import delta_decode, encode_grouped, varbyte_decode
+from olaf_spark.codec import (
+    decode_doc_positions,
+    decode_positional_rows,
+    encode_positional_rows,
+    position_extents,
+    position_runs,
+    ranges_index,
+)
 from olaf_spark.config import EngineConfig
 from olaf_spark.indexer import (
     _iter_term_chunks,
@@ -74,10 +80,10 @@ from olaf_spark.indexer import (
     merge_task_count,
     rep_query_df,
     shard_from_id_col,
-    sorted_tombstone_arr,
     term_id_col,
     term_id_py,
     tombstone_keep_mask,
+    union_tombstones_arr,
 )
 from olaf_spark.termrows import term_rows
 from olaf_spark.tokenize import tokenize_py, tokens_df
@@ -97,19 +103,6 @@ POSITIONS_SCHEMA = (
 POSITIONS_FORMAT_VERSION = 3
 
 _DEFAULT = EngineConfig()
-
-
-def _seg_cumsum(vals: np.ndarray, counts: np.ndarray) -> np.ndarray:
-    """Segmented cumsum: each segment's first value is absolute, the rest
-    are gaps (the decode twin of encode_grouped's delta_starts restarts)."""
-    if vals.size == 0:
-        return vals
-    cts = np.asarray(counts, dtype=np.int64)
-    c = np.cumsum(vals, dtype=np.uint64)
-    starts = np.concatenate([[0], np.cumsum(cts)[:-1]]).astype(np.int64)
-    cpad = np.concatenate([np.zeros(1, dtype=np.uint64), c])
-    base = cpad[starts]
-    return c - np.repeat(base, cts)
 
 
 def _make_pack_positions(lo: int, width: int, n_buckets: int):
@@ -132,41 +125,17 @@ def _make_pack_positions(lo: int, width: int, n_buckets: int):
         d_new[1:] |= docs_[1:] != docs_[:-1]
 
         doc_starts = np.flatnonzero(d_new)               # occurrence space
-        counts = np.diff(np.append(doc_starts, n)).astype(np.uint64)
-        doc_ids = docs_[doc_starts].astype(np.uint64)
-
+        counts = np.diff(np.append(doc_starts, n))
         g_rows = np.flatnonzero(g_new)                   # occurrence space
         g_docs = np.searchsorted(doc_starts, g_rows)     # doc space
-        n_docs = np.diff(np.append(g_docs, doc_starts.size))
-
-        # positions: ONE buffer per group, gap-encoded with an ABSOLUTE
-        # restart at every doc boundary, plus each doc's byte offset inside
-        # its group buffer — the lazy-decode seek table (phrase serving
-        # decodes ONLY candidate docs' position runs, like the blocked
-        # posting codec decodes only surviving blocks)
-        from olaf_spark.codec import _varbyte_encode_arr, delta_encode_grouped
-
-        pv = delta_encode_grouped(pos, doc_starts)
-        buf, nbytes = _varbyte_encode_arr(pv)
-        vstarts = np.concatenate([[0], np.cumsum(nbytes)])
-        g_bytes = vstarts[g_rows]
-        g_ends = np.append(g_bytes[1:], vstarts[-1])
-        raw = buf.tobytes()
-        pos_bufs = [raw[int(s):int(e)] for s, e in zip(g_bytes, g_ends)]
-        doc_abs = vstarts[doc_starts]
-        group_of_doc = np.searchsorted(g_rows, doc_starts, side="right") - 1
-        rel = (doc_abs - g_bytes[group_of_doc]).astype(np.int64)
-        pos_offs = [a.tolist() for a in np.split(rel, g_docs[1:])]
-
         return pd.DataFrame(
             {
                 "term_id": terms[g_rows],
                 "bucket": buckets[g_rows].astype("int32"),
-                "n_docs": n_docs.astype("int64"),
-                "doc_ids_bin": encode_grouped(doc_ids, g_docs, delta=True),
-                "pos_counts_bin": encode_grouped(counts, g_docs, delta=False),
-                "pos_bin": pos_bufs,
-                "pos_offs": pos_offs,
+                "n_docs": np.diff(np.append(g_docs, doc_starts.size)),
+                **encode_positional_rows(
+                    docs_[doc_starts], counts, g_docs, *position_runs(pos, counts)
+                ),
             }
         )
 
@@ -267,12 +236,11 @@ def build_positions(
 def _make_fold_positions(lo: int, width: int, n_buckets: int, bts):
     """mapInPandas fn for compaction: each task's slice of positional rows
     (sorted by term_id, first_doc) -> folded rows under the COMPACTED
-    corpus's bucket layout. Docs are disjoint across parts, and every doc's
-    position run restarts absolute (v2+ layout), so the merge never decodes
-    a position byte: doc headers are re-sorted, tombstoned docs dropped,
-    and each surviving doc's position byte-slice is gathered VERBATIM into
-    the new buffer (one vectorized fancy-index per term). The same
-    doc-range-parallel shape as the postings fold (make_posting_fold): a head
+    corpus's bucket layout — make_posting_fold's shape, one numpy pass per
+    batch of complete terms: decode the doc headers, lexsort by (term,
+    doc), drop tombstoned docs, gather each surviving doc's position bytes
+    VERBATIM (every run restarts absolute, so no position byte is
+    decoded), re-bucket, encode. Docs are disjoint across parts. A head
     term's rows may split across tasks, yielding multiple doc-disjoint
     output rows per (term, bucket), which the read path already merges.
 
@@ -284,83 +252,32 @@ def _make_fold_positions(lo: int, width: int, n_buckets: int, bts):
     def _fold_chunk(pdf: pd.DataFrame) -> pd.DataFrame | None:
         ts_sorted = bts.value
         terms = pdf["term_id"].to_numpy(dtype=np.int64)
-        id_bins = pdf["doc_ids_bin"].to_numpy()
-        cnt_bins = pdf["pos_counts_bin"].to_numpy()
-        pos_bins = pdf["pos_bin"].to_numpy()
-        offs_col = pdf["pos_offs"].to_numpy()
         row_new = np.empty(len(pdf), dtype=bool)
         row_new[0] = True
         row_new[1:] = terms[1:] != terms[:-1]
-        row_starts = np.flatnonzero(row_new)
-        row_ends = np.append(row_starts[1:], len(pdf))
-
-        cols = ("term_id", "bucket", "n_docs", "doc_ids_bin",
-                "pos_counts_bin", "pos_bin", "pos_offs")
-        out: dict[str, list] = {c: [] for c in cols}
-        for s, e in zip(row_starts, row_ends):
-            ids_l, cnt_l, starts_l, lens_l, bufs = [], [], [], [], []
-            base = 0
-            for i in range(s, e):
-                ids_r = delta_decode(varbyte_decode(bytes(id_bins[i]))).astype(np.int64)
-                cnt_r = varbyte_decode(bytes(cnt_bins[i])).astype(np.int64)
-                buf_r = bytes(pos_bins[i])
-                offs_r = np.asarray(offs_col[i], dtype=np.int64)
-                ids_l.append(ids_r)
-                cnt_l.append(cnt_r)
-                starts_l.append(offs_r + base)
-                lens_l.append(np.append(offs_r[1:], len(buf_r)) - offs_r)
-                bufs.append(buf_r)
-                base += len(buf_r)
-            ids = np.concatenate(ids_l)
-            cnts = np.concatenate(cnt_l)
-            starts = np.concatenate(starts_l)
-            lens = np.concatenate(lens_l)
-            big = b"".join(bufs)
-            order = np.argsort(ids, kind="stable")
-            if ts_sorted is not None and ts_sorted.size:
-                order = order[tombstone_keep_mask(ids[order], ts_sorted)]
-            if order.size == 0:
-                continue  # every posting of this term slice tombstoned away
-            ids_f = ids[order]
-            cnts_f = cnts[order]
-            lens_f = lens[order]
-            gat = _ranges_gather_index(starts[order], lens_f)
-            new_buf = np.frombuffer(big, dtype=np.uint8)[gat].tobytes()
-            doc_offs = np.concatenate([[0], np.cumsum(lens_f)[:-1]]).astype(np.int64)
-            buckets = bucket_of_np(ids_f, lo, width, n_buckets)
-            b_new = np.empty(ids_f.size, dtype=bool)
-            b_new[0] = True
-            b_new[1:] = buckets[1:] != buckets[:-1]
-            g_docs = np.flatnonzero(b_new)  # doc-space group starts
-            g_ends = np.append(g_docs[1:], ids_f.size)
-            g_bytes = doc_offs[g_docs]
-            g_byte_ends = np.append(g_bytes[1:], len(new_buf))
-            out["term_id"].extend([int(terms[s])] * g_docs.size)
-            out["bucket"].extend(buckets[g_docs].tolist())
-            out["n_docs"].extend((g_ends - g_docs).tolist())
-            out["doc_ids_bin"].extend(
-                encode_grouped(ids_f.astype(np.uint64), g_docs, delta=True)
-            )
-            out["pos_counts_bin"].extend(
-                encode_grouped(cnts_f.astype(np.uint64), g_docs, delta=False)
-            )
-            out["pos_bin"].extend(
-                new_buf[int(a):int(b)] for a, b in zip(g_bytes, g_byte_ends)
-            )
-            group_of_doc = np.searchsorted(g_docs, np.arange(ids_f.size), side="right") - 1
-            rel = doc_offs - g_bytes[group_of_doc]
-            out["pos_offs"].extend(a.tolist() for a in np.split(rel, g_docs[1:]))
-        if not out["term_id"]:
-            return None
+        ids, counts, n_docs = decode_positional_rows(pdf["doc_ids_bin"], pdf["pos_counts_bin"])
+        runs, starts, lens = position_extents(pdf["pos_bin"], pdf["pos_offs"], n_docs)
+        term = np.repeat(np.cumsum(row_new) - 1, n_docs)
+        ids = ids.view(np.int64)
+        order = np.lexsort((ids, term))
+        if ts_sorted is not None:
+            order = order[tombstone_keep_mask(ids[order], ts_sorted)]
+        if order.size == 0:
+            return None  # every doc of these terms tombstoned away
+        ids, counts, term, lens = ids[order], counts[order], term[order], lens[order]
+        buckets = bucket_of_np(ids, lo, width, n_buckets)
+        g_new = np.empty(ids.size, dtype=bool)
+        g_new[0] = True
+        g_new[1:] = (term[1:] != term[:-1]) | (buckets[1:] != buckets[:-1])
+        g_docs = np.flatnonzero(g_new)
         return pd.DataFrame(
             {
-                "term_id": np.asarray(out["term_id"], dtype=np.int64),
-                "bucket": np.asarray(out["bucket"], dtype=np.int32),
-                "n_docs": np.asarray(out["n_docs"], dtype=np.int64),
-                "doc_ids_bin": out["doc_ids_bin"],
-                "pos_counts_bin": out["pos_counts_bin"],
-                "pos_bin": out["pos_bin"],
-                "pos_offs": out["pos_offs"],
+                "term_id": terms[np.flatnonzero(row_new)][term[g_docs]],
+                "bucket": buckets[g_docs].astype(np.int32),
+                "n_docs": np.diff(np.append(g_docs, ids.size)),
+                **encode_positional_rows(
+                    ids, counts, g_docs, runs[ranges_index(starts[order], lens)], lens
+                ),
             }
         )
 
@@ -400,7 +317,7 @@ def fold_positional_rows(
     marker: str,
     metas: list[dict],
     make_meta,
-    tombstones: set[int],
+    tombstones: np.ndarray | None,
     cfg: EngineConfig,
     n_merge_tasks: int | None = None,
 ) -> None:
@@ -411,7 +328,8 @@ def fold_positional_rows(
 
     One Spark job, doc-range parallel via the same (tb, term_id, first_doc)
     range shuffle as the postings fold; tombstoned docs are physically
-    dropped. Commit protocol: the marker and any stale rows in out_dir are
+    dropped (tombstones: the sorted snapshot array, or None). Commit
+    protocol: the marker and any stale rows in out_dir are
     retracted FIRST (a failed fold must leave the kind unusable — serving
     refuses or degrades — never the old marker over cleared or partial
     rows), and the marker lands LAST. Parts with no committed row file
@@ -431,7 +349,7 @@ def fold_positional_rows(
     if srcs:
         if n_merge_tasks is None:
             n_merge_tasks = merge_task_count(spark, dir_bytes(*srcs))
-        bts = spark.sparkContext.broadcast(sorted_tombstone_arr(tombstones))
+        bts = spark.sparkContext.broadcast(tombstones)
         rows = spark.read.parquet(srcs[0])
         for src in srcs[1:]:
             rows = rows.unionByName(spark.read.parquet(src))
@@ -455,7 +373,7 @@ def compact_positions(
     spark: SparkSession,
     part_dirs: list[str],
     out_dir: str,
-    tombstones: set[int],
+    tombstones: np.ndarray | None,
     cfg: EngineConfig,
     n_merge_tasks: int | None = None,
 ) -> str:
@@ -486,91 +404,41 @@ def compact_positions(
     return out_dir
 
 
+def _decoded_rows(id_bufs, count_bufs, pos_bufs, pos_offs) -> list[dict]:
+    """One dict per positional row — doc ids and counts DECODED (one batch
+    decode for all rows), positions RAW (buffer + int64 per-doc offsets) —
+    the input of the lazy candidate decode (_phrase_tfs)."""
+    ids, counts, n_docs = decode_positional_rows(id_bufs, count_bufs)
+    ids, counts = ids.view(np.int64), counts.astype(np.int64)
+    ends = np.cumsum(n_docs)
+    return [
+        dict(ids=ids[lo:hi], counts=counts[lo:hi], buf=buf, offs=offs)
+        for lo, hi, buf, offs in zip(
+            (ends - n_docs).tolist(), ends.tolist(), pos_bufs, pos_offs
+        )
+    ]
+
+
 def _fetch_term_rows(root: str, term_ids: list[int], n_segments: int) -> dict[int, list[dict]]:
-    """term_id -> rows of <root> (positions or bigrams, read through the
-    cached term rows, termrows.term_rows) with doc_ids/counts DECODED but
-    positions RAW (buffer + per-doc offsets) — positions decode lazily per
-    candidate."""
+    """term_id -> decoded-header rows (_decoded_rows) of <root> (positions
+    or bigrams, read through the cached term rows, termrows.term_rows)."""
     tbl = term_rows(root, term_ids, n_segments)
     if not tbl.num_rows:
         return {}
-    per: dict[int, list[dict]] = {}
-    tids_col = tbl["term_id"].to_pylist()
-    id_col = tbl["doc_ids_bin"]
-    cnt_col = tbl["pos_counts_bin"]
-    pos_col = tbl["pos_bin"]
-    offs_col = tbl["pos_offs"]
-    for i, tid in enumerate(tids_col):
+    rows = _decoded_rows(
+        tbl["doc_ids_bin"].to_pylist(),
+        tbl["pos_counts_bin"].to_pylist(),
+        tbl["pos_bin"].to_pylist(),
         # arrow-native access: a head term's pos_offs holds one long per doc
         # (hundreds of thousands) — .values.to_numpy() is a buffer view,
         # where a to_pylist() round-trip built million-element Python lists
         # per query (measured ~2x on head-term phrases)
-        per.setdefault(tid, []).append(
-            dict(
-                ids=delta_decode(varbyte_decode(id_col[i].as_py())).astype(np.int64),
-                counts=varbyte_decode(cnt_col[i].as_py()).astype(np.int64),
-                buf=pos_col[i].as_py(),
-                offs=offs_col[i].values.to_numpy().astype(np.int64),
-            )
-        )
+        [o.values.to_numpy().astype(np.int64) for o in tbl["pos_offs"]],
+    )
+    per: dict[int, list[dict]] = {}
+    for tid, row in zip(tbl["term_id"].to_pylist(), rows):
+        per.setdefault(tid, []).append(row)
     return per
-
-
-def _ranges_gather_index(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
-    """Fancy-index array selecting the concatenation of [start, start+len)
-    byte ranges — the vectorized twin of a per-range Python slice loop.
-    Built as a cumsum of unit steps with a jump at every range boundary."""
-    total = int(lens.sum())
-    if total == 0:
-        return np.empty(0, dtype=np.int64)
-    ends = starts + lens
-    gat = np.ones(total, dtype=np.int64)
-    gat[0] = starts[0]
-    cl = np.cumsum(lens)
-    gat[cl[:-1]] = starts[1:] - ends[:-1] + 1
-    return np.cumsum(gat)
-
-
-def _positions_for_docs(
-    row: dict, idx: np.ndarray
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """(kept doc_ids, kept counts, kept positions) for SORTED doc indices
-    `idx` into the row.
-
-    VECTORIZED SCATTERED DECODE: every doc's position run restarts absolute
-    and its byte extent is known (pos_offs), so the kept docs' byte ranges
-    are gathered with ONE fancy-index into one contiguous buffer and
-    decoded with ONE varbyte_decode call — O(kept docs' bytes), regardless
-    of how scattered the kept set is. This replaced the round-3 hybrid
-    (per-run Python decode calls, measured 4x slower when the kept set
-    shattered into thousands of runs, falling back to an O(total bytes)
-    full decode when dense): the head-head dense case now decodes only
-    candidate docs' bytes. Taking INDICES (not a row-length bool mask)
-    keeps the cost independent of the row's size — the chunked serving
-    loop calls this per candidate chunk, and an O(row) mask per chunk per
-    row made chunking QUADRATIC on head terms (measured: 688 ms where the
-    round-3 full decode took 502 ms). A nearly-full keep still short-cuts
-    to one full decode + occurrence mask.
-    """
-    if idx.size == 0:
-        e = np.empty(0, dtype=np.int64)
-        return e, e, np.empty(0, dtype=np.uint64)
-    ids, counts, buf, offs = row["ids"], row["counts"], row["buf"], row["offs"]
-    n = ids.size
-    if idx.size * 1.25 >= n:
-        keep = np.zeros(n, dtype=bool)
-        keep[idx] = True
-        pos_all = _seg_cumsum(varbyte_decode(buf), counts)
-        occ_keep = np.repeat(keep, counts)
-        return ids[idx], counts[idx], pos_all[occ_keep]
-    starts = offs[idx]
-    ends = np.empty(idx.size, dtype=np.int64)
-    interior = idx < (n - 1)
-    ends[interior] = offs[idx[interior] + 1]
-    ends[~interior] = len(buf)
-    gat = _ranges_gather_index(starts, ends - starts)
-    sel = np.frombuffer(buf, dtype=np.uint8)[gat]
-    return ids[idx], counts[idx], _seg_cumsum(varbyte_decode(sel.tobytes()), counts[idx])
 
 
 def _check_positions(d: str) -> None:
@@ -609,45 +477,6 @@ def positions_usable(d: str) -> bool:
         )
     except (FileNotFoundError, json.JSONDecodeError):
         return False
-
-
-#: per-dir tombstone-array cache keyed by (json mtime, sidecar mtime) — the
-#: phrase paths take directory strings (no Index instance to cache on), and
-#: without this every phrase query re-reads each part's delete set.
-#: LRU-bounded: a long-lived driver touching many index dirs must not
-#: accumulate dead arrays (same lifetime class as the atexit-cleaned
-#: _ANN_CACHE; pop+reinsert keeps dict insertion order = recency order)
-_TS_ARR_CACHE: dict[str, tuple[tuple, np.ndarray]] = {}
-_TS_ARR_CACHE_MAX = 256
-
-
-def _union_tombstones_arr(part_dirs: list[str]):
-    """Sorted union of every part's tombstone array (None when no deletes)
-    — reads the parquet sidecar via indexer.read_tombstones_arr (no JSON
-    parse of a large delete set per query) and caches per dir keyed by
-    both tombstone files' (inode, mtime_ns) sigs (olaf_spark.lru — every
-    mutate commits via tmp + rename, so the inode always changes)."""
-    from olaf_spark.indexer import read_tombstones_arr
-    from olaf_spark.lru import file_sig, lru_get
-
-    arrs = []
-    for d in part_dirs:
-        sig = tuple(
-            file_sig(os.path.join(d, name))
-            for name in ("tombstones.json", "tombstones.parquet")
-        )
-        arr = lru_get(
-            _TS_ARR_CACHE, d, sig, lambda: read_tombstones_arr(d),
-            _TS_ARR_CACHE_MAX,
-        )
-        if arr.size:
-            arrs.append(arr)
-    if not arrs:
-        return None
-    out = arrs[0]
-    for a in arrs[1:]:
-        out = np.union1d(out, a)
-    return out
 
 
 def phrase_units(
@@ -781,7 +610,7 @@ def phrase_topk(
         cnt_u = np.concatenate([r["counts"] for r in rows_u])
         order_u = np.argsort(ids_u, kind="stable")
         ids_u, cnt_u = ids_u[order_u], cnt_u[order_u]
-        ts_arr = _union_tombstones_arr(part_dirs)
+        ts_arr = union_tombstones_arr(part_dirs)
         if ts_arr is not None and ids_u.size:
             keep = tombstone_keep_mask(ids_u, ts_arr)
             ids_u, cnt_u = ids_u[keep], cnt_u[keep]
@@ -825,7 +654,7 @@ def phrase_topk(
             return []
     # merge-on-read deletes apply here like every other query path: the
     # union of part tombstones drops candidates before any position decode
-    ts_arr = _union_tombstones_arr(part_dirs)
+    ts_arr = union_tombstones_arr(part_dirs)
     if ts_arr is not None and cand.size:
         cand = cand[tombstone_keep_mask(cand, ts_arr)]
     if cand.size == 0:
@@ -967,10 +796,11 @@ def _phrase_tfs(
             sub = live[lo:hi]
             at = np.searchsorted(ids_r, sub)
             ok = (at < ids_r.size) & (ids_r[np.minimum(at, ids_r.size - 1)] == sub)
-            kids, kcounts, kpos = _positions_for_docs(row, at[ok])
-            if kids.size == 0:
+            sel = at[ok]
+            if sel.size == 0:
                 continue
-            ords_l.append(np.repeat(live_ords[lo + np.flatnonzero(ok)], kcounts))
+            kpos = decode_doc_positions(row["buf"], row["offs"], row["counts"], sel)
+            ords_l.append(np.repeat(live_ords[lo + np.flatnonzero(ok)], row["counts"][sel]))
             pos_l.append(kpos.astype(np.int64))
         if not ords_l:
             return empty
@@ -1017,7 +847,7 @@ def _make_phrase_fanout(bsubs):
         # sorted term_ids + per-term (offset, len) into flat qid/ppos — the
         # per-row fan-out is then a searchsorted + repeat + one gather
         # (no Python loop over rows; each subscribed term has >= 1 entry,
-        # so every gathered range is non-empty as _ranges_gather_index
+        # so every gathered range is non-empty as codec.ranges_index
         # requires)
         subs = bsubs.value[0]
         items = sorted(subs.items())
@@ -1043,7 +873,7 @@ def _make_phrase_fanout(bsubs):
                 continue  # row-group stats pruning is approximate
             sidx = at[rows]
             take = np.repeat(rows, sub_lens[sidx])
-            g = _ranges_gather_index(sub_offs[sidx], sub_lens[sidx])
+            g = ranges_index(sub_offs[sidx], sub_lens[sidx])
             sub = pdf.iloc[take]
             yield pd.DataFrame(
                 {
@@ -1082,20 +912,14 @@ def _make_phrase_verify(bsubs):
         offs_q = qoffs[qid]  # the query's unit OFFSETS (not 0..nt-1 when a
         #                      pair unit covers two adjacent positions)
         data: dict[int, list[dict]] = {}
-        ppos_np = pdf["ppos"].to_numpy(dtype=np.int64)
-        for i in range(len(pdf)):
-            data.setdefault(int(ppos_np[i]), []).append(
-                dict(
-                    ids=delta_decode(
-                        varbyte_decode(bytes(pdf["doc_ids_bin"].iloc[i]))
-                    ).astype(np.int64),
-                    counts=varbyte_decode(
-                        bytes(pdf["pos_counts_bin"].iloc[i])
-                    ).astype(np.int64),
-                    buf=bytes(pdf["pos_bin"].iloc[i]),
-                    offs=np.asarray(pdf["pos_offs"].iloc[i], dtype=np.int64),
-                )
-            )
+        rows = _decoded_rows(
+            pdf["doc_ids_bin"],
+            pdf["pos_counts_bin"],
+            pdf["pos_bin"],
+            [np.asarray(o, dtype=np.int64) for o in pdf["pos_offs"]],
+        )
+        for ppos, row in zip(pdf["ppos"].tolist(), rows):
+            data.setdefault(ppos, []).append(row)
         if set(data) != set(offs_q):
             return empty  # some phrase unit absent from this doc range
         cand = None
@@ -1245,7 +1069,7 @@ def batch_phrase_topk(
     if not subs:
         return spark.createDataFrame([], out_schema)
 
-    ts_sorted = _union_tombstones_arr(part_dirs)
+    ts_sorted = union_tombstones_arr(part_dirs)
     bsubs = spark.sparkContext.broadcast((subs, qoffs, ts_sorted))
 
     single_ids = sorted(set(subs) - pair_keys)

@@ -46,16 +46,15 @@ doc_id asc).
 
 from __future__ import annotations
 
-import itertools
 import os
 from dataclasses import dataclass
 
 import numpy as np
 from pyspark.sql import SparkSession
 
-from olaf_spark.codec import decode_ids_blocked, varbyte_decode
+from olaf_spark.codec import bm25_contrib, decode_posting_rows
 from olaf_spark.config import EngineConfig
-from olaf_spark.indexer import sorted_tombstone_arr, tombstone_keep_mask
+from olaf_spark.indexer import tombstone_keep_mask
 from olaf_spark.scorer import idf as idf_fn
 from olaf_spark.termrows import term_rows
 from olaf_spark.tokenize import tokenize_py
@@ -127,38 +126,36 @@ def load_term_postings(
     (N, avgdl, df).
 
     `index` is an Index or an IndexGroup. `spark` is accepted for API
-    symmetry but unused — see _fetch_posting_rows. A doc lives in exactly
-    one (part, chunk) per term, so per-doc accumulation order is still
-    term order for every scorer.
+    symmetry but unused — see _fetch_posting_rows. Every row of the query
+    is decoded and scored in ONE batch call. A doc lives in exactly one
+    (part, chunk) per term, so per-doc accumulation order is still term
+    order for every scorer.
     """
     group = _as_group(index)
     cfg = group.cfg
-    ts_arr = group.tombstones_arr()  # cached sorted array, no per-query build
-    out = []
-    for term, entries in itertools.groupby(
-        _fetch_posting_rows(group, query_text), key=lambda e: e[0]
-    ):
-        entries = list(entries)
-        rows = [r for _, _, _, r in entries]
-        ids = np.concatenate([
-            decode_ids_blocked(bytes(r["doc_ids_bin"]), cfg.block_size).astype(np.int64)
-            for r in rows
-        ])
-        tfs = np.concatenate([varbyte_decode(bytes(r["tfs_bin"])) for r in rows])
-        dls = np.concatenate([varbyte_decode(bytes(r["doc_lens_bin"])) for r in rows])
-        if ts_arr is not None:
-            keep = tombstone_keep_mask(ids, ts_arr)  # merge-on-read delete
-            ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-        w = idf_fn(group.n_docs, entries[0][2])  # group df, same on every row
-        tfs_f = tfs.astype(np.float64)
-        dls_f = dls.astype(np.float64)
-        # association order matches the oracle exactly: idf * (tf*(k1+1)/denom)
-        scores = w * (
-            tfs_f * (cfg.k1 + 1.0)
-            / (tfs_f + cfg.k1 * (1.0 - cfg.b + cfg.b * dls_f / group.avgdl))
-        )
-        out.append(TermPostings(term=term, idf=w, doc_ids=ids, scores=scores))
-    return out
+    entries = _fetch_posting_rows(group, query_text)
+    if not entries:
+        return []
+    ids, tfs, dls, counts = decode_posting_rows(
+        *([e[3][c] for e in entries] for c in ("doc_ids_bin", "tfs_bin", "doc_lens_bin")),
+        cfg.block_size,
+    )
+    ids = ids.view(np.int64)
+    terms = list(dict.fromkeys(e[0] for e in entries))  # rows arrive term-sorted
+    ordinal = {t: i for i, t in enumerate(terms)}
+    idf = {e[0]: idf_fn(group.n_docs, e[2]) for e in entries}  # group df per term
+    term = np.repeat([ordinal[e[0]] for e in entries], counts)
+    w = np.repeat([idf[e[0]] for e in entries], counts)
+    ts_arr = group.tombstones_arr()
+    if ts_arr is not None:
+        keep = tombstone_keep_mask(ids, ts_arr)  # merge-on-read delete
+        ids, tfs, dls, term, w = ids[keep], tfs[keep], dls[keep], term[keep], w[keep]
+    scores = bm25_contrib(w, tfs, dls, cfg.k1, cfg.b, group.avgdl)
+    bounds = np.searchsorted(term, np.arange(len(terms) + 1)).tolist()
+    return [
+        TermPostings(term=t, idf=idf[t], doc_ids=ids[lo:hi], scores=scores[lo:hi])
+        for t, lo, hi in zip(terms, bounds[:-1], bounds[1:])
+    ]
 
 
 def _accumulate_topk(
@@ -233,11 +230,9 @@ def exhaustive_topk(lists: list[TermPostings], k: int) -> list[tuple[int, float]
 
 @dataclass
 class RawTermPostings:
-    """Undecoded posting row + block seek tables — the lazy-decode handle.
-
-    Blocks are independently decodable (doc_ids gap-encode with an absolute
-    restart at each block boundary; *_offs give byte offsets), so the
-    block-max scorer touches only the bytes of blocks that survive pruning.
+    """Undecoded posting row + block seek tables — the lazy-decode handle:
+    the block-max scorer touches only the bytes of blocks that survive
+    pruning (blocks decode independently; codec.py's posting row).
     """
 
     term: str
@@ -253,40 +248,38 @@ class RawTermPostings:
 
 
 def _decode_blocks(
-    rp: RawTermPostings, blocks: np.ndarray, cfg: EngineConfig, avgdl: float
-) -> tuple[np.ndarray, np.ndarray]:
-    """(doc_ids int64, contributions float64) of the given blocks ONLY.
+    items: list[tuple[RawTermPostings, np.ndarray]], cfg: EngineConfig, avgdl: float
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(doc_ids int64, contributions float64, postings per item) of the
+    given blocks ONLY of each (row, sorted unique block indices) item, in
+    item order, decoded in ONE batch call.
 
-    Blocks are decoded as CONTIGUOUS RUNS, one numpy pass per run, not one
-    per block: a slice starting at a block boundary is itself a valid
-    blocked buffer (restarts every block_size), so a run decodes exactly
-    like a whole buffer. Per-block Python calls were the difference between
-    a win and a 5x loss — measured at 400k docs.
+    Blocks are sliced as CONTIGUOUS RUNS, not one slice per block: a slice
+    starting at a block boundary decodes like a whole blocked row, so every
+    run is one more row of the batch decode. Per-block Python calls were
+    the difference between a win and a 5x loss — measured at 400k docs.
     """
-    n_blocks = rp.block_lasts.size
-    # contiguous runs of the (sorted, unique) block list
-    cuts = np.flatnonzero(np.diff(blocks) > 1) + 1
-    runs = np.split(blocks, cuts)
-    ids_l, tf_l, dl_l = [], [], []
-    for run in runs:
-        b0, b1 = int(run[0]), int(run[-1]) + 1
-        for buf, offs, out in (
-            (rp.id_buf, rp.id_offs, ids_l),
-            (rp.tf_buf, rp.tf_offs, tf_l),
-            (rp.dl_buf, rp.dl_offs, dl_l),
+    cols: tuple[list, list, list] = ([], [], [])
+    w_runs: list[float] = []
+    n_runs: list[int] = []
+    for rp, blocks in items:
+        runs, bl = [], blocks.tolist()  # [b0, b1) runs of consecutive blocks
+        for b in bl:
+            if runs and runs[-1][1] == b:
+                runs[-1][1] = b + 1
+            else:
+                runs.append([b, b + 1])
+        for out, buf, offs in zip(
+            cols, (rp.id_buf, rp.tf_buf, rp.dl_buf), (rp.id_offs, rp.tf_offs, rp.dl_offs)
         ):
-            lo = int(offs[b0])
-            hi = int(offs[b1]) if b1 < n_blocks else len(buf)
-            out.append(buf[lo:hi])
-    ids = np.concatenate(
-        [decode_ids_blocked(b, cfg.block_size) for b in ids_l]
-    ).astype(np.int64)
-    tfs = np.concatenate([varbyte_decode(b) for b in tf_l]).astype(np.float64)
-    dls = np.concatenate([varbyte_decode(b) for b in dl_l]).astype(np.float64)
-    scores = rp.idf * (
-        tfs * (cfg.k1 + 1.0) / (tfs + cfg.k1 * (1.0 - cfg.b + cfg.b * dls / avgdl))
-    )
-    return ids, scores
+            o = offs.tolist() + [len(buf)]
+            out.extend(buf[o[b0]:o[b1]] for b0, b1 in runs)
+        w_runs += [rp.idf] * len(runs)
+        n_runs.append(len(runs))
+    ids, tfs, dls, counts = decode_posting_rows(*cols, cfg.block_size)
+    scores = bm25_contrib(np.repeat(w_runs, counts), tfs, dls, cfg.k1, cfg.b, avgdl)
+    per_item = np.add.reduceat(counts, np.cumsum(n_runs) - n_runs) if n_runs else counts
+    return ids.view(np.int64), scores, per_item
 
 
 def blockmax_topk(
@@ -294,7 +287,7 @@ def blockmax_topk(
     k: int,
     cfg: EngineConfig,
     avgdl: float,
-    tombstones=None,  # set/list, or a SORTED int64 array (tombstones_arr)
+    tombstones: np.ndarray | None = None,  # SORTED int64 (tombstones_arr)
     min_score: float = 0.0,
     stats_out: dict | None = None,
 ) -> list[tuple[int, float]]:
@@ -330,20 +323,19 @@ def blockmax_topk(
     """
     if not raw_lists or k <= 0:
         return []
-    ts_arr = sorted_tombstone_arr(tombstones)
+    ts_arr = tombstones
     bs = cfg.block_size
     n_all = np.array([rp.block_lasts.size for rp in raw_lists])
 
     # ---- 1. theta from the shortest list that can hold >= k postings -------
     eligible = np.flatnonzero(n_all * bs >= k)
     theta = float(min_score) if min_score > 0.0 else -np.inf
-    theta_decoded: dict[int, tuple[np.ndarray, np.ndarray]] = {}
+    shortest = -1
     if eligible.size:
         shortest = int(eligible[np.argmin(n_all[eligible])])
         sp = raw_lists[shortest]
         all_blocks = np.arange(sp.block_lasts.size, dtype=np.int64)
-        s_ids, s_scores = _decode_blocks(sp, all_blocks, cfg, avgdl)
-        theta_decoded[shortest] = (s_ids, s_scores)
+        s_ids, s_scores, _ = _decode_blocks([(sp, all_blocks)], cfg, avgdl)
         sc = s_scores
         if ts_arr is not None:
             sc = sc[tombstone_keep_mask(s_ids, ts_arr)]
@@ -363,30 +355,28 @@ def blockmax_topk(
         block_idx.append((idx, valid))
     surviving = ub >= theta if np.isfinite(theta) else np.ones(grid.size, dtype=bool)
 
-    # ---- 3. decode surviving blocks, exact score, top-k --------------------
+    # ---- 3. decode surviving blocks (one batch call), exact score, top-k ---
     n_decoded = 0
-    ids_l, sc_l = [], []
+    items, before = [], 0  # before: items that precede the theta list
     for li, (rp, (idx, valid)) in enumerate(zip(raw_lists, block_idx)):
-        if li in theta_decoded:
-            ids, scores = theta_decoded[li]  # already fully decoded for theta
+        if li == shortest:  # already fully decoded for theta
             n_decoded += int(rp.block_lasts.size)
-            ids_l.append(ids)
-            sc_l.append(scores)
+            before = len(items)
             continue
         blocks = np.unique(idx[surviving & valid])
         n_decoded += int(blocks.size)
-        if blocks.size == 0:
-            continue
-        ids, scores = _decode_blocks(rp, blocks, cfg, avgdl)
-        ids_l.append(ids)
-        sc_l.append(scores)
+        if blocks.size:
+            items.append((rp, blocks))
     if stats_out is not None:
         stats_out["n_blocks_total"] = int(n_all.sum())
         stats_out["n_blocks_decoded"] = n_decoded
-    if not ids_l:
-        return []
-    ids = np.concatenate(ids_l)
-    scores = np.concatenate(sc_l)
+    ids, scores, per_item = _decode_blocks(items, cfg, avgdl)
+    if shortest >= 0:
+        # splice the theta list back at its place: a doc's contributions
+        # must arrive in ascending term order
+        cut = int(per_item[:before].sum())
+        ids = np.concatenate([ids[:cut], s_ids, ids[cut:]])
+        scores = np.concatenate([scores[:cut], s_scores, scores[cut:]])
     if ts_arr is not None:
         keep = tombstone_keep_mask(ids, ts_arr)
         ids, scores = ids[keep], scores[keep]

@@ -31,33 +31,24 @@ def _check_posting_rows(rows, postings, dfs, n_docs, avgdl, cfg):
     offset tables re-encode its decoded postings, its block metadata is
     codec.block_maxes under the term's idf, and each term's rows together
     hold exactly `postings[term_id]` ([(doc_id, tf, doc_len)], doc-sorted)
-    with df `dfs[term_id]`. A term absent from `postings` has no row."""
+    with df `dfs[term_id]`. A term absent from `postings` has no row. Rows
+    are read and re-encoded with the plain-Python reference (codec_ref)."""
     import numpy as np
 
-    from olaf_spark.codec import (
-        block_maxes,
-        decode_ids_blocked,
-        encode_grouped_blocked,
-        varbyte_decode,
-    )
+    import codec_ref as ref
+    from olaf_spark.codec import block_maxes
     from olaf_spark.scorer import idf
 
     bs = cfg.block_size
     cap = max(bs, (cfg.max_row_postings // bs) * bs)
     got: dict[int, list] = {}
     for r in rows:
-        ids = decode_ids_blocked(bytes(r["doc_ids_bin"]), bs)
-        tfs = varbyte_decode(bytes(r["tfs_bin"]))
-        dls = varbyte_decode(bytes(r["doc_lens_bin"]))
+        ids, tfs, dls = (np.array(v, dtype=np.uint64) for v in ref.decode_posting_row(r, bs))
         assert 0 < ids.size <= cap and tfs.size == dls.size == ids.size
         assert np.all(np.diff(ids.astype(np.int64)) > 0)
-        for col, offs, vals, delta in (
-            ("doc_ids_bin", "id_offs", ids, True),
-            ("tfs_bin", "tf_offs", tfs, False),
-            ("doc_lens_bin", "dl_offs", dls, False),
-        ):
-            bufs, want_offs = encode_grouped_blocked(vals, np.zeros(1, np.int64), bs, delta)
-            assert bytes(r[col]) == bufs[0] and list(r[offs]) == want_offs[0]
+        want = ref.posting_row(ids, tfs, dls, bs)
+        for col in ("doc_ids_bin", "tfs_bin", "doc_lens_bin", "id_offs", "tf_offs", "dl_offs"):
+            assert (bytes(r[col]) if col.endswith("_bin") else list(r[col])) == want[col]
         assert r["df"] == dfs[r["term_id"]]
         lasts, bmax = block_maxes(
             ids, tfs.astype(np.float64), dls.astype(np.float64),

@@ -321,7 +321,7 @@ def test_mixed_head_sets_degrade_or_refuse(spark, bg_index, tmp_path):
     with pytest.raises(ValueError, match="cannot serve from bigrams"):
         phrase_topk(base, "w2 w3", k=10, use_bigrams=True)
     with pytest.raises(ValueError, match="head sets differ"):
-        compact_bigrams(spark, [base, delta], str(tmp_path / "mx_out"), set(), CFG)
+        compact_bigrams(spark, [base, delta], str(tmp_path / "mx_out"), None, CFG)
 
 
 def test_bigrams_usable_never_raises(tmp_path, bg_index):
@@ -522,7 +522,7 @@ def test_compact_bigrams_clears_stale_out_dir_rows(spark, bg_index, tmp_path):
     build_positions(spark, pages, out, CFG, n_buckets=2)
     build_bigrams(spark, pages, out, CFG, n_buckets=2, min_df=5)
     assert has_rows(out, "bigrams")
-    compact_bigrams(spark, [src], out, set(), CFG)
+    compact_bigrams(spark, [src], out, None, CFG)
     assert bigrams_usable(out)
     assert not has_rows(out, "bigrams")  # stale rows cleared, authoritative empty
     # and serving answers from the (authoritatively empty) pair set match

@@ -1,6 +1,8 @@
 """Codec round-trip property tests (seeded), mirroring the reference's
 48/16 pack/unpack test (tests/olaf_tests.c:168-182) with the edge cases
 FIXTURES.md §4 lists: 0, 2^32-1, runs of equal gaps, singletons, empties.
+The row encoders and batch decoders are checked against the plain-Python
+per-row reference in codec_ref.py.
 """
 
 from __future__ import annotations
@@ -8,13 +10,23 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
+import codec_ref as ref
 from olaf_spark.codec import (
     block_maxes,
     block_starts_for_groups,
+    bm25_contrib,
+    decode_doc_positions,
+    decode_positional_rows,
+    decode_positions,
+    decode_posting_rows,
     delta_decode,
     delta_encode,
-    pack_postings,
-    unpack_postings,
+    encode_positional_rows,
+    encode_posting_rows,
+    first_doc_ids,
+    position_extents,
+    position_runs,
+    ranges_index,
     varbyte_decode,
     varbyte_decode_rows,
     varbyte_encode,
@@ -59,17 +71,6 @@ def test_delta_roundtrip(ids):
     assert np.array_equal(delta_decode(delta_encode(ids)), ids)
 
 
-def test_pack_unpack_postings():
-    ids = np.sort(rng.choice(10**8, 4096, replace=False)).astype(np.uint64)
-    tfs = rng.integers(1, 50, 4096).astype(np.uint64)
-    id_buf, tf_buf = pack_postings(ids, tfs)
-    got_ids, got_tfs = unpack_postings(id_buf, tf_buf)
-    assert np.array_equal(got_ids, ids)
-    assert np.array_equal(got_tfs, tfs)
-    # compression sanity: gaps ~ 24k avg -> ~2-3 bytes each vs 8 raw
-    assert len(id_buf) < 4096 * 4
-
-
 def test_block_maxes_exact():
     ids = np.arange(10, dtype=np.uint64)
     tfs = np.array([1, 2, 3, 4, 5, 1, 1, 9, 1, 1], dtype=np.float64)
@@ -96,3 +97,142 @@ def test_block_starts_for_groups_with_empty_groups():
     want = [0, 4, 5, 9, 13, 17, 21, 22, 26]
     assert block_starts_for_groups(gs, 30, 4).tolist() == want
     assert block_starts_for_groups(np.empty(0, dtype=np.int64), 0, 4).size == 0
+
+
+# ---------------------------------------------------------------- row formats
+BS = 4
+
+
+def _ascending(rng, n: int, big: bool) -> np.ndarray:
+    """n distinct ascending uint64 values; big ones sit just under 2^63, so
+    absolute values take 9 varbyte bytes."""
+    top = 2**63 - 1 if big else 10**7
+    offs = np.sort(rng.choice(10**6, size=n, replace=False))
+    return np.array([top - 10**6 + int(o) for o in offs], dtype=np.uint64)
+
+
+def _row_sizes(rng) -> list[int]:
+    sizes = [0, 1, BS - 1, BS, BS + 1, 0, 3 * BS + 2, *rng.integers(0, 4 * BS, 10).tolist()]
+    rng.shuffle(sizes)
+    return sizes
+
+
+def _posting_batch(seed: int):
+    rng = np.random.default_rng(seed)
+    rows = []
+    for n in _row_sizes(rng):
+        big = bool(rng.random() < 0.4)
+        hi = 2**63 if big else 100
+        rows.append((
+            _ascending(rng, n, big),
+            rng.integers(1, hi, n, dtype=np.uint64),
+            rng.integers(1, hi, n, dtype=np.uint64),
+            rng.random(n),
+        ))
+    return rows
+
+
+@pytest.mark.parametrize("seed", [0, 1, 2])
+@pytest.mark.parametrize("block_size", [None, BS])
+def test_posting_rows_match_per_row_reference(seed, block_size):
+    """encode_posting_rows over a batch == the per-row reference, column by
+    column (bytes, offs tables, block metadata); decode_posting_rows
+    round-trips it with per-row counts; a byte slice from a block boundary
+    decodes as a row of its own; first_doc_ids reads each row's first id."""
+    rows = _posting_batch(seed)
+    sizes = np.array([r[0].size for r in rows], dtype=np.int64)
+    ids, tfs, dls, scores = (np.concatenate([r[i] for r in rows]) for i in range(4))
+    got = encode_posting_rows(
+        ids, tfs, dls, np.cumsum(sizes) - sizes, block_size,
+        scores if block_size else None,
+    )
+    want = [ref.posting_row(*r[:3], block_size, r[3] if block_size else None) for r in rows]
+    assert sorted(got) == sorted(want[0])
+    for name in got:
+        assert got[name] == [w[name] for w in want], name
+
+    d_ids, d_tfs, d_dls, counts = decode_posting_rows(
+        got["doc_ids_bin"], got["tfs_bin"], got["doc_lens_bin"], block_size
+    )
+    assert counts.tolist() == sizes.tolist()
+    assert d_ids.tolist() == ids.tolist()
+    assert d_tfs.tolist() == tfs.tolist() and d_dls.tolist() == dls.tolist()
+    for w, r in zip(want, rows):
+        assert ref.decode_posting_row(w, block_size) == tuple(a.tolist() for a in r[:3])
+
+    assert first_doc_ids(got["doc_ids_bin"]).tolist() == [
+        int(r[0][0]) if r[0].size else 0 for r in rows
+    ]
+    if block_size:
+        i = int(np.argmax(sizes))
+        cut = got["id_offs"][i][1]
+        tail, _, _, _ = decode_posting_rows(
+            [got["doc_ids_bin"][i][cut:]], [b""], [b""], block_size
+        )
+        assert tail.tolist() == rows[i][0][block_size:].tolist()
+
+
+@pytest.mark.parametrize("seed", [0, 1, 2])
+def test_positional_rows_match_per_row_reference(seed):
+    """encode_positional_rows (runs from position_runs) == the per-row
+    reference; decode_positional_rows reads the doc headers back with
+    per-row doc counts; position_extents + decode_positions and
+    decode_doc_positions (sparse and dense picks) read the positions."""
+    rng = np.random.default_rng(seed)
+    rows = []
+    for n in _row_sizes(rng):
+        docs = _ascending(rng, n, bool(rng.random() < 0.4))
+        pos = [_ascending(rng, int(c), bool(rng.random() < 0.3))
+               for c in rng.integers(1, 2 * BS, n)]
+        rows.append((docs, pos))
+    n_docs = np.array([r[0].size for r in rows], dtype=np.int64)
+    doc_ids = np.concatenate([r[0] for r in rows])
+    per_doc = [p for r in rows for p in r[1]]
+    counts = np.array([p.size for p in per_doc], dtype=np.int64)
+    pos = np.concatenate(per_doc)
+    got = encode_positional_rows(
+        doc_ids, counts, np.cumsum(n_docs) - n_docs, *position_runs(pos, counts)
+    )
+    want = [ref.positional_row(*r) for r in rows]
+    assert sorted(got) == sorted(want[0])
+    for name in got:
+        assert got[name] == [w[name] for w in want], name
+    for w, (docs, p) in zip(want, rows):
+        assert ref.decode_positional_row(w) == (docs.tolist(), [x.tolist() for x in p])
+
+    d_ids, d_counts, d_n = decode_positional_rows(got["doc_ids_bin"], got["pos_counts_bin"])
+    assert d_n.tolist() == n_docs.tolist()
+    assert d_ids.tolist() == doc_ids.tolist() and d_counts.tolist() == counts.tolist()
+    runs, starts, lens = position_extents(got["pos_bin"], got["pos_offs"], d_n)
+    assert decode_positions(runs[ranges_index(starts, lens)], counts).tolist() == pos.tolist()
+
+    for i, (docs, p) in enumerate(rows):
+        if not docs.size:
+            continue
+        for frac in (0.3, 1.0):
+            idx = np.flatnonzero(rng.random(docs.size) < frac)
+            kept = decode_doc_positions(
+                got["pos_bin"][i], np.asarray(got["pos_offs"][i]), counts_of(p), idx
+            )
+            want_pos = [v for j in idx for v in p[j].tolist()]
+            assert kept.tolist() == want_pos
+
+
+def counts_of(positions) -> np.ndarray:
+    return np.array([x.size for x in positions], dtype=np.int64)
+
+
+def test_bm25_contrib_matches_oracle_order():
+    """The one contribution kernel is bit-identical to the oracle's scalar
+    expression, with a scalar or a per-posting weight."""
+    rng = np.random.default_rng(3)
+    tf = rng.integers(1, 30, 500).astype(np.uint64)
+    dl = rng.integers(1, 900, 500).astype(np.uint64)
+    w = rng.random(500) * 5
+    k1, b, avgdl = 1.2, 0.75, 123.456
+    want = [
+        float(wi) * (t * (k1 + 1.0) / (t + k1 * (1.0 - b + b * d / avgdl)))
+        for wi, t, d in zip(w.tolist(), tf.tolist(), dl.tolist())
+    ]
+    assert bm25_contrib(w, tf, dl, k1, b, avgdl).tolist() == want
+    assert bm25_contrib(float(w[0]), tf[:1], dl[:1], k1, b, avgdl).tolist() == want[:1]

@@ -170,7 +170,7 @@ def test_compact_splits_head_terms_doc_range_parallel(spark, halves, tmp_path):
     and the (recomputed-block-max) WAND scorers."""
     import numpy as np
 
-    from olaf_spark.codec import decode_ids_blocked
+    import codec_ref as ref
     from olaf_spark.indexer import term_id_py
 
     pages, a, b = halves
@@ -191,7 +191,7 @@ def test_compact_splits_head_terms_doc_range_parallel(spark, halves, tmp_path):
     assert len(rows) > 4, len(rows)  # head term split into many chunk rows
     all_ids: list[int] = []
     for r in rows:
-        ids = decode_ids_blocked(bytes(r["doc_ids_bin"]), cfg.block_size).astype(np.int64)
+        ids = np.array(ref.decode_posting_row(r, cfg.block_size)[0], dtype=np.int64)
         assert np.all(np.diff(ids) > 0)  # each chunk internally sorted
         assert len(r["block_lasts"]) == -(-ids.size // cfg.block_size)
         all_ids.extend(ids.tolist())

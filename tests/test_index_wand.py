@@ -338,6 +338,28 @@ def test_build_streams_small_arrow_batches(spark, built, tmp_path):
         )
 
 
+def test_long_lived_group_sees_deletes_from_another_handle(spark, built, tmp_path):
+    """A group built (and queried) before a delete made through ANOTHER
+    handle stops returning the deleted doc on every serving method — the
+    tombstone read is keyed by the files' signatures, not cached on the
+    handle that happened to read first (streaming keeps such a group for
+    its whole run). Undelete through the other handle restores it."""
+    _, _, index = built
+    d = str(tmp_path / "handles_ix")
+    shutil.copytree(index.index_dir, d)
+    reader, writer = Index.load(d), Index.load(d)
+    group = IndexGroup([reader])
+    q = "needle97 w2"
+    before = {m: group.topk(q, 10, method=m) for m in SERVING_METHODS}
+    assert all(97 in [doc for doc, _ in hits] for hits in before.values())
+    writer.delete_docs([97])
+    for m in SERVING_METHODS:
+        assert 97 not in [doc for doc, _ in group.topk(q, 10, method=m)], m
+    assert reader.tombstones() == group.tombstones() == {97}
+    writer.undelete_docs([97])
+    assert {m: group.topk(q, 10, method=m) for m in SERVING_METHODS} == before
+
+
 def test_tombstone_commits_atomic_and_union_survives(spark, built, tmp_path):
     """Two independent writers (separate Index handles with stale caches)
     deleting different docs: the commit protocol re-reads disk before the

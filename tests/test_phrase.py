@@ -411,7 +411,7 @@ def test_failed_positions_fold_retracts_marker(spark, positional, tmp_path, monk
 
     monkeypatch.setattr(phrase, "_make_fold_positions", failing_fold)
     with pytest.raises(Exception, match="simulated fold failure"):
-        compact_positions(spark, [src], out, set(), CFG)
+        compact_positions(spark, [src], out, None, CFG)
     monkeypatch.undo()
     assert not positions_usable(out)
     with pytest.raises(FileNotFoundError, match="run build_positions"):
