@@ -151,15 +151,16 @@ def main() -> None:
             "wall_s": round(time.time() - t0, 2),
         }))
     elif args.cmd == "bigrams":
-        from olaf_spark.bigram import _read_meta, build_bigrams
+        from olaf_spark.bigram import build_bigrams
         from olaf_spark.config import EngineConfig
+        from olaf_spark.phrase import BIGRAMS, require_meta
 
         cfg = EngineConfig.load(args.index)
         build_bigrams(
             spark, _load_pages(spark, args), args.index, cfg,
             n_buckets=args.n_buckets, min_df=args.min_df,
         )
-        meta = _read_meta(args.index)
+        meta = require_meta(args.index, BIGRAMS)
         print(json.dumps({
             "cmd": "bigrams", "index": args.index,
             "min_df": meta["min_df"], "n_heads": meta["n_heads"],

@@ -17,19 +17,19 @@ id (xxhash64 of "t1 t2" — a space never appears inside a token, so pair
 keys cannot collide with single-term keys) and positions = the position of
 the pair's FIRST token. Reusing the positions row format means the build
 writer and the compaction fold (`phrase.write_positional_rows`,
-`phrase.fold_positional_rows`) are shared verbatim.
+`phrase.fold_positional_rows`) and the commit protocol are phrase.py's.
 
 Authoritativeness: serving may treat a bigram row as the COMPLETE answer
 for a pair only when both members are in the recorded head set — an absent
 row for a head-head pair means the pair occurs nowhere (a real, useful
 answer), while pairs outside the head set were simply never indexed. The
 head set is a property of the index LINEAGE, not of each part: deltas
-INHERIT the base's head set (`append_index(..., with_bigrams=True)` indexes
-the same pairs over the delta's docs), so authoritativeness is uniform
+inherit the base's (inherited_heads), so authoritativeness is uniform
 across a live group and the compaction fold is a verbatim doc-level merge
 with no per-pair bookkeeping. The recorded `heads_fingerprint` (xxh64 of
-the sorted head-id array) makes that invariant checkable: serving and
-compaction refuse to mix parts whose head sets differ.
+the sorted head-id array) makes that invariant checkable. Marker, sidecar,
+commit order, and what serving, append and compaction do with a missing,
+stale or mismatched part: the side-index table in phrase.py.
 
 Size bound: only pairs with BOTH members' df >= min_df are indexed. The
 head vocabulary is tiny (Zipf: ~1% of terms carry most occurrences), so
@@ -40,7 +40,6 @@ of the positional index's bytes.
 
 from __future__ import annotations
 
-import json
 import os
 
 import numpy as np
@@ -49,14 +48,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from olaf_spark.config import EngineConfig
-from olaf_spark.indexer import doc_range, term_id_col, term_id_py
-from olaf_spark.phrase import fold_positional_rows, write_positional_rows
+from olaf_spark.indexer import term_id_col, term_id_py
+from olaf_spark.phrase import (
+    BIGRAMS,
+    build_side,
+    fold_positional_rows,
+    group_metas,
+    side_meta,
+    side_usable,
+)
 from olaf_spark.tokenize import tokens_array
 from olaf_spark.xxh64 import xxh64
-
-#: bigram layout version — bumped independently of the positions version
-#: (the row SCHEMA is shared, but the head-set contract is this module's).
-BIGRAM_FORMAT_VERSION = 1
 
 
 def pair_key(t1: str, t2: str) -> str:
@@ -139,7 +141,7 @@ def _write_heads(out_dir: str, heads: np.ndarray) -> None:
     from olaf_spark.metafs import get_metafs
 
     mfs = get_metafs()
-    final = os.path.join(out_dir, "bigram_heads.parquet")
+    final = os.path.join(out_dir, BIGRAMS.sidecar)
     tmp = mfs.tmp_path(final)
     pq.write_table(
         pa.table({"term_id": pa.array(heads.tolist(), type=pa.int64())}), tmp
@@ -147,10 +149,9 @@ def _write_heads(out_dir: str, heads: np.ndarray) -> None:
     mfs.commit_file(tmp, final)
 
 
-#: per-dir head-array cache keyed by the sidecar's (inode, mtime_ns)
-#: signature — serving checks pair authoritativeness on every phrase
-#: query and must not re-read parquet. LRU mechanics + the
-#: coarse-mtime-staleness rationale live in olaf_spark.lru.
+#: per-dir head-array cache keyed by the sidecar's lru.file_sig — serving
+#: checks pair authoritativeness on every phrase query and must not
+#: re-read parquet
 _HEADS_CACHE: dict[str, tuple] = {}
 _HEADS_CACHE_MAX = 256
 
@@ -161,7 +162,7 @@ def load_heads(d: str) -> np.ndarray:
 
     from olaf_spark.lru import file_sig, lru_get
 
-    path = os.path.join(d, "bigram_heads.parquet")
+    path = os.path.join(d, BIGRAMS.sidecar)
     sig = file_sig(path)
     if sig is None:
         raise FileNotFoundError(path)
@@ -183,159 +184,92 @@ def build_bigrams(
     min_df: int | None = None,
     heads: np.ndarray | None = None,
 ) -> str:
-    """Materialize the bigram side index under <out_dir>/bigrams.
+    """Materialize the bigram side index under <out_dir>/bigrams
+    (phrase.build_side).
 
     heads: explicit sorted head term_id array — the append path passes the
-    BASE index's heads so a delta indexes the same pairs (uniform
-    authoritativeness across the group). When None, heads are computed
-    from this corpus: df >= min_df (default: max(16, n_docs // 100)).
-
-    Same bucketing contract as build_positions (lo/hi from the docs' id
-    bounds, identical width formula), so within one part the bigram rows
-    and the positional rows share doc-range buckets — the batch phrase
-    path's co-location key works across both."""
-    from olaf_spark.metafs import get_metafs
-
+    BASE index's heads (inherited_heads). When None, heads are computed
+    from this corpus: df >= min_df (default: max(16, n_docs // 100))."""
     cfg = cfg or EngineConfig()
-    mfs = get_metafs()
-    if os.path.exists(os.path.join(out_dir, "engine_config.json")):
-        EngineConfig.load(out_dir).check_compatible(cfg)
-    n, lo, hi, width = doc_range(docs, id_col, n_buckets, f"bigrams at {out_dir}")
-    # REBUILD over committed bigrams: retract the commit marker (and the
-    # stale rows) before any row lands — a crash mid-rebuild must leave
-    # bigrams_usable() False (serving degrades to the positional path),
-    # never a committed meta over partial pair rows, which
-    # absence-is-authoritative would turn into silently wrong head-head
-    # answers
-    mfs.remove_file(os.path.join(out_dir, "bigram_meta.json"))
-    if os.path.isdir(os.path.join(out_dir, "bigrams")):
-        mfs.remove_dir(os.path.join(out_dir, "bigrams"), ignore_errors=True)
 
-    if heads is None:
-        if min_df is None:
-            min_df = max(16, n // 100)
-        heads = head_term_ids(docs, min_df, text_col, id_col, cfg)
-    else:
-        heads = np.sort(np.asarray(heads, dtype=np.int64))
-        min_df = -1 if min_df is None else int(min_df)  # inherited set
+    def emit(n_docs):
+        if heads is None:
+            mdf = max(16, n_docs // 100) if min_df is None else min_df
+            hs = head_term_ids(docs, mdf, text_col, id_col, cfg)
+        else:
+            hs = np.sort(np.asarray(heads, dtype=np.int64))
+            mdf = -1 if min_df is None else int(min_df)  # inherited set
+        extra = dict(
+            min_df=int(mdf), n_heads=int(hs.size), heads_fingerprint=_heads_fingerprint(hs)
+        )
+        # no heads, no rows; heads but no head-head pair writes only
+        # _SUCCESS under bigrams/ — serving lists no row files there, and
+        # the Spark readers branch on phrase.has_rows before opening it
+        occ = _head_pairs(spark, docs, hs, text_col, id_col, cfg) if hs.size else None
+        return occ, extra, lambda: _write_heads(out_dir, hs)
 
-    if heads.size:
-        from olaf_spark.session import rebalance_scan
+    return build_side(spark, BIGRAMS, docs, out_dir, cfg, id_col, n_buckets, emit)
 
-        # parallelize the pair emission feeding the bucket exchange (a
-        # single-file corpus scans as one task; no-op on many-split scans)
-        pairs = adjacent_pairs_df(
-            rebalance_scan(spark, docs, id_col), text_col, id_col, cfg
+
+def _head_pairs(spark, docs, heads, text_col, id_col, cfg) -> DataFrame:
+    """(doc_id, pos, term_id = pair id) of every adjacent head-head pair."""
+    from olaf_spark.session import rebalance_scan
+
+    # parallelize the pair emission feeding the bucket exchange (a
+    # single-file corpus scans as one task; no-op on many-split scans)
+    pairs = adjacent_pairs_df(rebalance_scan(spark, docs, id_col), text_col, id_col, cfg)
+    # from Arrow, not a Python list: see head_term_ids
+    heads_df = spark.createDataFrame(pa.table({"head_id": heads}))
+    return (
+        pairs.withColumn("t1_id", term_id_col(F.col("t1")))
+        .withColumn("t2_id", term_id_col(F.col("t2")))
+        .join(
+            F.broadcast(heads_df.withColumnRenamed("head_id", "t1_id")),
+            "t1_id", "leftsemi",
         )
-        # from Arrow, not a Python list: see head_term_ids
-        heads_df = spark.createDataFrame(pa.table({"head_id": heads}))
-        occ = (
-            pairs.withColumn("t1_id", term_id_col(F.col("t1")))
-            .withColumn("t2_id", term_id_col(F.col("t2")))
-            .join(
-                F.broadcast(heads_df.withColumnRenamed("head_id", "t1_id")),
-                "t1_id", "leftsemi",
-            )
-            .join(
-                F.broadcast(heads_df.withColumnRenamed("head_id", "t2_id")),
-                "t2_id", "leftsemi",
-            )
-            .select(
-                "doc_id", "pos",
-                term_id_col(F.concat_ws(" ", F.col("t1"), F.col("t2"))).alias("term_id"),
-            )
+        .join(
+            F.broadcast(heads_df.withColumnRenamed("head_id", "t2_id")),
+            "t2_id", "leftsemi",
         )
-        write_positional_rows(
-            spark, occ, os.path.join(out_dir, "bigrams"), lo, width, n_buckets, cfg
+        .select(
+            "doc_id", "pos",
+            term_id_col(F.concat_ws(" ", F.col("t1"), F.col("t2"))).alias("term_id"),
         )
-        # an empty head-head pair set writes only _SUCCESS under bigrams/
-        # — fine: serving lists no row files there, and the Spark readers
-        # branch on phrase.has_rows before opening it
-    cfg.save(out_dir)
-    _write_heads(out_dir, heads)
-    # meta lands LAST (atomic publish) — it is the commit marker; a crash
-    # mid-build (first build OR rebuild, see the retraction above) leaves
-    # bigrams_usable() False and serving falls back to the positional path
-    # instead of trusting a partial pair row
-    mfs.publish_json(
-        os.path.join(out_dir, "bigram_meta.json"),
-        _bigram_meta(lo, hi, n_buckets, width, min_df, heads),
     )
-    return out_dir
-
-
-def _bigram_meta(lo, hi, n_buckets, width, min_df, heads) -> dict:
-    """bigram_meta.json — the bigram index's commit marker."""
-    return {
-        "format_version": BIGRAM_FORMAT_VERSION,
-        "n_buckets": n_buckets,
-        "lo": lo,
-        "hi": hi,
-        "width": width,
-        "min_df": int(min_df),
-        "n_heads": int(heads.size),
-        "heads_fingerprint": _heads_fingerprint(heads),
-    }
-
-
-#: per-dir meta cache keyed by bigram_meta.json's (inode, mtime_ns) sig —
-#: the serving gate (group_heads -> _read_meta) runs on EVERY phrase
-#: query; without this a long-lived driver pays one json open+parse per
-#: part per query (an NFS round trip each in the documented deployment).
-_META_CACHE: dict[str, tuple] = {}
-
-
-def _read_meta(d: str) -> dict | None:
-    from olaf_spark.lru import file_sig, lru_get
-
-    path = os.path.join(d, "bigram_meta.json")
-    sig = file_sig(path)
-
-    def load() -> dict | None:
-        if sig is None:
-            return None
-        try:
-            with open(path) as f:
-                meta = json.load(f)
-            if (
-                isinstance(meta, dict)
-                and meta.get("format_version") == BIGRAM_FORMAT_VERSION
-                and isinstance(meta.get("heads_fingerprint"), str)
-            ):
-                return meta
-        except (FileNotFoundError, json.JSONDecodeError):
-            pass
-        return None
-
-    return lru_get(_META_CACHE, d, sig, load, _HEADS_CACHE_MAX)
 
 
 def bigrams_usable(d: str) -> bool:
-    """True when the dir carries a committed bigram side index in THIS
-    engine's layout. Must NEVER raise (graceful-degradation contract, like
-    phrase.positions_usable). A usable index may hold ZERO pair rows (tiny
-    corpus, no head-head pairs observed) — that is an authoritative 'no
-    pair occurs anywhere', not a missing index."""
-    return _read_meta(d) is not None and os.path.exists(
-        os.path.join(d, "bigram_heads.parquet")
-    )
+    """True when d carries a committed bigram side index in this engine's
+    layout (phrase.side_usable). Never raises. A usable index may hold
+    ZERO pair rows (tiny corpus, no head-head pairs observed) — that is an
+    authoritative 'no pair occurs anywhere', not a missing index."""
+    return side_usable(d, BIGRAMS)
 
 
 def group_heads(part_dirs: list[str]) -> np.ndarray | None:
     """The group's shared head set, or None when the bigram fast path must
-    not be used: some part lacks bigrams, or the parts' head sets differ
-    (mixed authoritativeness — a pair trusted in one part but unindexed in
-    another would silently drop that part's docs). Never raises."""
-    metas = [_read_meta(d) for d in part_dirs]
-    if any(m is None for m in metas):
-        return None
-    fps = {m["heads_fingerprint"] for m in metas}
-    if len(fps) != 1:
+    not be used (phrase.group_metas: some part lacks bigrams, or head sets
+    differ — a pair trusted in one part but unindexed in another would
+    silently drop that part's docs). Never raises."""
+    if group_metas(part_dirs, BIGRAMS) is None:
         return None
     try:
         return load_heads(part_dirs[0])
     except (FileNotFoundError, OSError):
         return None
+
+
+def inherited_heads(base_dir: str) -> dict:
+    """build_bigrams keywords of a delta: the base's head set and min_df.
+    Refuses when the base has no bigram index — building one from the
+    delta's own dfs would break uniform authoritativeness."""
+    if not side_usable(base_dir, BIGRAMS):
+        raise ValueError(
+            f"with_bigrams=True but {base_dir} has no bigram side index — "
+            "run build_bigrams on the base first (the delta inherits its "
+            "head set)"
+        )
+    return dict(min_df=side_meta(base_dir, BIGRAMS)["min_df"], heads=load_heads(base_dir))
 
 
 def compact_bigrams(
@@ -346,39 +280,11 @@ def compact_bigrams(
     cfg: EngineConfig,
     n_merge_tasks: int | None = None,
 ) -> str:
-    """Fold every part's bigram rows into <out_dir>/bigrams — the pair twin
-    of phrase.compact_positions through the same fold
-    (phrase.fold_positional_rows: the row format is shared; positions
-    restart absolute per doc, so the fold copies position bytes VERBATIM).
-    Requires a uniform head set across parts (the append path inherits it,
-    so this holds for any group built through the public API); refuses
-    loudly otherwise — the caller degrades to 'rebuild with build_bigrams'.
-    The fold retracts out_dir's marker and stale rows first, so folding
-    all-rowless parts never leaves some earlier index's rows under the new
-    marker."""
-    metas = []
-    for d in part_dirs:
-        meta = _read_meta(d)
-        if meta is None:
-            raise ValueError(
-                f"bigrams at {d} are missing or not format "
-                f"v{BIGRAM_FORMAT_VERSION} — rebuild with build_bigrams"
-            )
-        metas.append(meta)
-    fps = {m["heads_fingerprint"] for m in metas}
-    if len(fps) != 1:
-        raise ValueError(
-            f"bigram head sets differ across parts ({sorted(fps)}) — "
-            "fold would mix authoritativeness; rebuild with build_bigrams"
-        )
-    heads = load_heads(part_dirs[0])
-
-    def make_meta(lo, hi, n_buckets, width):
-        _write_heads(out_dir, heads)
-        return _bigram_meta(lo, hi, n_buckets, width, metas[0]["min_df"], heads)
-
+    """Fold every part's bigram rows into <out_dir>/bigrams
+    (phrase.fold_positional_rows: positions restart absolute per doc, so
+    the fold copies position bytes verbatim). Refuses loudly when a part
+    lacks bigrams or head sets differ."""
     fold_positional_rows(
-        spark, part_dirs, out_dir, "bigrams", "bigram_meta.json", metas,
-        make_meta, tombstones, cfg, n_merge_tasks,
+        spark, BIGRAMS, part_dirs, out_dir, tombstones, cfg, n_merge_tasks
     )
     return out_dir

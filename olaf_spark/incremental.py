@@ -93,10 +93,9 @@ def append_index(
     The delta is built with the BASE index's config — the config-freeze
     invariant (olaf_config.h:46-50) spans the whole group.
 
-    with_bigrams=True requires the BASE to carry a bigram side index: the
-    delta INHERITS the base's head set (the same pairs are indexed over
-    the delta's docs), so pair authoritativeness stays uniform across the
-    group — olaf_spark/bigram.py's core invariant.
+    with_positions / with_bigrams also build the delta's side indexes
+    (phrase.append_sides; with_bigrams inherits the base's head set and
+    refuses when the base has none — the side-index table in phrase.py).
 
     Commit protocol (Olaf analogue: LMDB's writer mutex + txn commit,
     olaf_db.c:28-37): the delta directory is CLAIMED atomically via
@@ -115,40 +114,21 @@ def append_index(
     uncoordinated into a half-claimed directory.
     """
     from olaf_spark.metafs import get_metafs
+    from olaf_spark.phrase import BIGRAMS, POSITIONS, append_sides
 
     mfs = get_metafs()
     base = Index.load(base_dir)
     root = os.path.join(base_dir, _DELTAS)
     mfs.ensure_dir(root)
+    committed = None
     if delta_name is not None:
         delta_dir = os.path.join(root, delta_name)
-        # atomic claim, same as the numbered path
-        if not mfs.claim_dir(delta_dir):
-            if os.path.exists(os.path.join(delta_dir, "stats.json")):
-                # committed replay: near-no-op — but honor with_positions,
-                # which an earlier run may not have requested (a committed
-                # delta without positional rows makes phrase_topk refuse for
-                # the WHOLE group; 'committed + with_positions=True implies
-                # positions exist' must hold on every return path)
-                committed = Index.load(delta_dir)
-                if with_positions and not os.path.exists(
-                    os.path.join(delta_dir, "positions_meta.json")
-                ):
-                    from olaf_spark.phrase import build_positions
-
-                    build_positions(
-                        spark, new_docs, delta_dir, base.cfg,
-                        text_col=text_col, id_col=id_col, n_buckets=n_buckets,
-                    )
-                if with_bigrams and not os.path.exists(
-                    os.path.join(delta_dir, "bigram_meta.json")
-                ):
-                    _append_bigrams(
-                        spark, new_docs, base_dir, delta_dir, base.cfg,
-                        text_col, id_col, n_buckets,
-                    )
-                return committed
-            # uncommitted claim = crashed prior epoch -> resume from lineage
+        # atomic claim, same as the numbered path; an uncommitted existing
+        # claim is a crashed prior epoch and resumes from its lineage
+        if not mfs.claim_dir(delta_dir) and os.path.exists(
+            os.path.join(delta_dir, "stats.json")
+        ):
+            committed = Index.load(delta_dir)  # replay: near-no-op
     else:
         n = len(os.listdir(root))  # count ALL entries incl. in-flight claims
         while True:
@@ -156,52 +136,24 @@ def append_index(
             if mfs.claim_dir(delta_dir):  # atomic claim (metafs contract)
                 break
             n += 1
-    # positions (if requested) land BEFORE build_index so stats.json — the
-    # delta's commit marker — implies the positional rows exist too (a
-    # replayed committed delta must never be missing its positions)
-    # build_positions / build_bigrams / build_index each refuse an empty
-    # batch (doc_range) before writing anything into the claimed delta
-    if with_positions:
-        from olaf_spark.phrase import build_positions
-
-        build_positions(
-            spark, new_docs, delta_dir, base.cfg,
-            text_col=text_col, id_col=id_col, n_buckets=n_buckets,
-        )
-    if with_bigrams:
-        _append_bigrams(
-            spark, new_docs, base_dir, delta_dir, base.cfg,
-            text_col, id_col, n_buckets,
-        )
+    # side indexes land BEFORE build_index, so stats.json — the delta's
+    # commit marker — implies them; on a replay this honors a with_* flag
+    # the committed run did not request (a positionless committed delta
+    # makes phrase_topk refuse for the WHOLE group). Every builder refuses
+    # an empty batch (doc_range) before writing into the claimed delta.
+    kinds = [k for k, on in ((POSITIONS, with_positions), (BIGRAMS, with_bigrams)) if on]
+    append_sides(
+        spark, new_docs, base_dir, delta_dir, base.cfg, kinds,
+        text_col=text_col, id_col=id_col, n_buckets=n_buckets,
+    )
+    if committed is not None:
+        return committed
     # resume=True: never rmtree the claimed dir (re-creating it would open a
     # window where a concurrent append re-claims the same name); a replayed
     # half-built epoch delta resumes from its lineage instead.
     return build_index(
         spark, new_docs, delta_dir, base.cfg,
         text_col=text_col, id_col=id_col, n_buckets=n_buckets, resume=True,
-    )
-
-
-def _append_bigrams(
-    spark, new_docs, base_dir, delta_dir, cfg, text_col, id_col, n_buckets
-) -> None:
-    """Build the delta's bigram rows under the BASE's inherited head set —
-    refuses when the base has no bigram index (there is no head set to
-    inherit; building one from the delta's own dfs would break the
-    uniform-authoritativeness invariant)."""
-    from olaf_spark.bigram import _read_meta, bigrams_usable, build_bigrams, load_heads
-
-    if not bigrams_usable(base_dir):
-        raise ValueError(
-            f"with_bigrams=True but {base_dir} has no bigram side index — "
-            "run build_bigrams on the base first (the delta inherits its "
-            "head set)"
-        )
-    base_meta = _read_meta(base_dir)
-    build_bigrams(
-        spark, new_docs, delta_dir, cfg,
-        text_col=text_col, id_col=id_col, n_buckets=n_buckets,
-        min_df=base_meta["min_df"], heads=load_heads(base_dir),
     )
 
 
@@ -404,29 +356,6 @@ def _first_doc_udf():
     return first_doc
 
 
-def _fold_side_index(out_dir: str, stage: str, marker: str, fold) -> None:
-    """Run one side-index fold of compact_index unless a resume finds it
-    committed (a `stage` lineage row AND its marker), then commit it with a
-    lineage row."""
-    if done_partitions(out_dir, stage) and os.path.exists(
-        os.path.join(out_dir, marker)
-    ):
-        return
-    t0 = time.time()
-    fold()
-    _write_lineage(
-        [
-            dict(
-                stage=stage, partition_id=-1,
-                input_rows=-1, output_rows=-1,
-                wall_s=time.time() - t0, rows_per_s=0.0,
-                bytes_out=-1, status="done", ts=time.time(),
-            )
-        ],
-        os.path.join(out_dir, "lineage"),
-    )
-
-
 def compact_index(
     spark: SparkSession,
     base_dir: str,
@@ -602,7 +531,6 @@ def compact_index(
                     stage="compact_group", partition_id=g,
                     input_rows=-1, output_rows=out_rows,
                     wall_s=time.time() - g_t0,
-                    rows_per_s=(out_rows / (time.time() - g_t0) if time.time() > g_t0 else 0.0),
                     bytes_out=out_bytes, status="done", ts=time.time(),
                 )
             ],
@@ -613,74 +541,15 @@ def compact_index(
             _after_group(g)
     mfs.remove_dir(staging_root, ignore_errors=True)
 
-    # carry the positional side index through compaction (Olaf analogue:
-    # t1 timestamps ride every posting through store/merge automatically,
-    # src/olaf_fp_db_writer.c:54-59): positional rows are doc-disjoint
-    # across parts, so the fold is a doc-level header merge with VERBATIM
-    # position-byte copies — phrase serving resumes the moment stats.json
-    # lands, with no manual positions rebuild and no dark window. Runs
-    # before stats.json so the overall commit marker covers it; a resume
-    # that died mid-fold simply re-runs the fold (mode=overwrite).
-    # positions_usable (not bare existence): a v2-format part must degrade
-    # to the skip branch below — raising inside compact_positions AFTER the
-    # postings groups committed but BEFORE stats.json would leave the
-    # compaction permanently un-completable (every resume re-raises)
-    from olaf_spark.phrase import compact_positions, positions_usable
+    # side indexes fold before stats.json, so the overall commit marker
+    # covers them (Olaf analogue: t1 timestamps ride every posting through
+    # store/merge, src/olaf_fp_db_writer.c:54-59): phrase serving resumes
+    # the moment stats.json lands; a resume that died mid-fold re-runs it
+    from olaf_spark.phrase import compact_sides
 
-    part_dirs = [p.index_dir for p in group.parts]
-    pos_have = [positions_usable(d) for d in part_dirs]
-    pos_exist = [
-        os.path.exists(os.path.join(d, "positions_meta.json")) for d in part_dirs
-    ]
-    if all(pos_have):
-        _fold_side_index(
-            out_dir, "compact_positions", "positions_meta.json",
-            lambda: compact_positions(
-                spark, part_dirs, out_dir, ts_arr, cfg,
-                n_merge_tasks=n_merge_tasks,
-            ),
-        )
-    elif any(pos_exist):
-        # SOME parts have a positions_meta.json but not all are usable
-        # (a positionless delta, a stale pre-v3 layout, or a corrupt meta)
-        # — phrase serving was already refusing on this group; skip the
-        # fold and SAY so (keyed on existence, not usability: an all-stale
-        # group must not be silently indistinguishable from
-        # 'positions were never built')
-        print(
-            f"compact_index: {sum(pos_have)}/{len(pos_have)} parts carry "
-            "positional rows in the current layout — positions NOT folded "
-            "(phrase queries were already refusing on this group); run "
-            f"build_positions on {out_dir} to restore phrase serving"
-        )
-
-    # bigram fold: same contract as the positions fold (run before
-    # stats.json so the commit marker covers it; degrade, never raise,
-    # when the group can't fold — serving already falls back to the
-    # positional path for such groups). group_heads() is the gate: all
-    # parts usable AND one shared head set (the append path inherits it,
-    # so any group built through the public API passes).
-    from olaf_spark.bigram import bigrams_usable, compact_bigrams, group_heads
-
-    bg_exist = [
-        os.path.exists(os.path.join(d, "bigram_meta.json")) for d in part_dirs
-    ]
-    if group_heads(part_dirs) is not None:
-        _fold_side_index(
-            out_dir, "compact_bigrams", "bigram_meta.json",
-            lambda: compact_bigrams(
-                spark, part_dirs, out_dir, ts_arr, cfg,
-                n_merge_tasks=n_merge_tasks,
-            ),
-        )
-    elif any(bg_exist):
-        n_ok = sum(bigrams_usable(d) for d in part_dirs)
-        print(
-            f"compact_index: {n_ok}/{len(bg_exist)} parts carry a usable "
-            "bigram side index (or head sets differ) — bigrams NOT folded "
-            "(phrase serving falls back to the positional path); run "
-            f"build_bigrams on {out_dir} to restore the pair fast path"
-        )
+    compact_sides(
+        spark, [p.index_dir for p in group.parts], out_dir, ts_arr, cfg, n_merge_tasks
+    )
 
     # chunk ordinals are task-local (a split term emits chunk 0 in several
     # tasks), so count terms/postings via a distinct-term agg, not chunk==0
@@ -699,15 +568,13 @@ def compact_index(
         "n_postings": trow["n_postings"],
         "bytes": brow["bytes"],
     }
-    wall = time.time() - t0
     _write_lineage(
         [
             dict(
                 stage="compact", partition_id=-1,
                 input_rows=sum(p.stats["n_postings"] for p in group.parts),
                 output_rows=int(post_stats["n_terms"]),
-                wall_s=wall,
-                rows_per_s=(int(post_stats["n_postings"] or 0) / wall if wall > 0 else 0.0),
+                wall_s=time.time() - t0,
                 bytes_out=int(post_stats["bytes"] or 0), status="done", ts=time.time(),
             )
         ],
@@ -724,7 +591,6 @@ def compact_index(
         n_buckets=max(p.stats.get("n_buckets", 1) for p in group.parts),
         bucket_width=0,  # compacted postings are term-merged; buckets retired
         compacted_from=len(group.parts),
-        build_wall_s=round(time.time() - t0, 3),
     )
     # stats.json is the compaction's COMMIT MARKER (readers and the
     # re-run refusal above both gate on it) — atomic publish

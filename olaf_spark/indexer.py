@@ -98,11 +98,6 @@ def term_id_col(term_col):
     return F.xxhash64(term_col)
 
 
-def term_shard(term: str, n_shards: int) -> int:
-    """Serving-side shard lookup: tb = term_id % n_shards."""
-    return term_id_py(term) % n_shards
-
-
 def shard_from_id_col(term_id_col_, n_shards: int):
     return F.pmod(term_id_col_, F.lit(n_shards)).cast("int")
 
@@ -651,7 +646,7 @@ def tombstone_keep_mask(ids: np.ndarray, ts_sorted: np.ndarray) -> np.ndarray:
 
 _LINEAGE_SCHEMA_PD = {
     "stage": "string", "partition_id": "int64", "input_rows": "int64",
-    "output_rows": "int64", "wall_s": "float64", "rows_per_s": "float64",
+    "output_rows": "int64", "wall_s": "float64",
     "bytes_out": "int64", "status": "string", "ts": "float64",
 }
 
@@ -721,7 +716,6 @@ def build_index(
     from olaf_spark.metafs import get_metafs
 
     cfg = cfg or EngineConfig()
-    t_start = time.time()
     # corpus stats: ONE scan for count + id bounds, before anything is removed
     n_docs, lo, _hi, bucket_width = doc_range(
         docs, id_col, n_buckets, f"an index at {index_dir}"
@@ -786,7 +780,7 @@ def build_index(
             dict(
                 stage="segments", partition_id=bkt,
                 input_rows=int(r["n_postings"]), output_rows=int(r["n_terms"]),
-                wall_s=seg_wall, rows_per_s=(int(r["n_postings"]) / seg_wall if seg_wall > 0 else 0.0),
+                wall_s=seg_wall,
                 bytes_out=int(r["bytes_out"]), status="done", ts=time.time(),
             )
         )
@@ -866,7 +860,6 @@ def build_index(
                 input_rows=total_postings_in,
                 output_rows=int(post_stats["n_terms"]),
                 wall_s=merge_wall,
-                rows_per_s=(int(post_stats["n_postings"] or 0) / merge_wall if merge_wall > 0 else 0.0),
                 bytes_out=int(post_stats["bytes"] or 0), status="done", ts=time.time(),
             )
         ],
@@ -883,8 +876,6 @@ def build_index(
         packed_bytes=int(post_stats["bytes"] or 0),
         n_buckets=n_buckets,
         bucket_width=bucket_width,
-        build_wall_s=time.time() - t_start,
-        docs_per_s=(n_docs / (time.time() - t_start)),
     )
     # stats.json is the build's COMMIT MARKER (Index.load and the delta
     # replay path both gate on it) — publish atomically so a crash

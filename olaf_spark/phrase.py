@@ -36,24 +36,61 @@ its terms' rows; positions add ~1 varbyte per occurrence next to the main
 index's ~1.2 bytes/posting. Candidate verification is per-query numpy over
 the decoded lists — the same latency class as the BM25 serving scorer.
 
-Delta phase: positional rows are doc-disjoint and phrase_tf needs no
-corpus statistics, so group serving is just "read every part's position
-rows" — phrase_topk automatically includes any delta that carries its own
-positions (append_index(..., with_positions=True) builds them alongside
-the delta's postings), and refuses loudly if some delta lacks them
-(silent partial answers would be worse). compact_index folds every
-part's positional rows into the compacted index (compact_positions), so
-phrase serving resumes the moment it commits — no positions rebuild.
+Side indexes and their one commit protocol (this module owns it). The
+positional kinds share codec.py's positional row layout, one writer
+(write_positional_rows) and one fold (fold_positional_rows); each kind is
+one SideKind row (POSITIONS, BIGRAMS), and every other module reads,
+builds, gates, appends and folds them only through this module:
 
-One skeleton for every doc-range-bucketed positional kind (positions
-here, bigram pairs in bigram.py): write_positional_rows is the one build
-writer and fold_positional_rows the one compaction fold + commit.
+                  positions                       bigrams (bigram.py)
+  rows            <d>/positions/tb=*/, one row    <d>/bigrams/tb=*/, one row
+                  per (term, bucket)              per (head-head pair, bucket)
+  marker          positions_meta.json             bigram_meta.json
+  format_version  3                               1
+  marker fields   n_buckets, format_version,      format_version, n_buckets,
+                  lo, hi, width                   lo, hi, width, min_df,
+                                                  n_heads, heads_fingerprint
+  sidecar         -                               bigram_heads.parquet
+  group key       -                               heads_fingerprint
+  part missing    phrase serving refuses          serving degrades to the
+  or stale        (FileNotFoundError for a        positional path;
+                  missing marker, ValueError      use_bigrams=True refuses
+                  for a stale one)                (ValueError)
+  compaction      folded when every part is usable (bigrams: and all share
+                  one head set), else skipped, with one printed line when
+                  some part has the marker
+  delta (append)  built over the delta's docs     built over the delta's docs
+                                                  under the base's head set
+                                                  and min_df; refuses when
+                                                  the base has no bigrams
+
+Bucketing: (lo, hi, width, n_buckets) come from doc_range for a build and
+from fold_range over the parts' markers for a fold. Both kinds of a part
+bucket alike when built over the same docs with the same n_buckets; the
+batch phrase path checks that (_bigram_buckets_match) before it lets pair
+rows share the positional (query, part, bucket) exchange key.
+
+Commit order (build_side, fold_positional_rows): a build first checks the
+config freeze and takes doc_range, which refuses empty input before
+anything is touched; then both retract the marker, then the old rows,
+write the rows (a build also engine_config.json), the sidecar, and the
+marker LAST. Readers trust rows only under a marker in this engine's
+layout (side_meta, cached under lru.file_sig), so a crash at any step
+leaves the kind missing (positions refuse, bigrams degrade), never an old
+marker over new partial rows: bigram absence is authoritative, so that
+would serve silently wrong head-head answers. A delta's side indexes land
+before its stats.json, so a committed delta implies them; compaction folds
+them before the compacted stats.json. Phrase answers need no cross-part
+statistics, so group serving is "read every part's rows".
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
+import time
+from dataclasses import dataclass
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
@@ -70,11 +107,13 @@ from olaf_spark.codec import (
 from olaf_spark.config import EngineConfig
 from olaf_spark.indexer import (
     _iter_term_chunks,
+    _write_lineage,
     bucket_expr,
     bucket_of_np,
     cluster_for_write,
     dir_bytes,
     doc_range,
+    done_partitions,
     fold_range,
     in_expr_int,
     merge_task_count,
@@ -85,6 +124,8 @@ from olaf_spark.indexer import (
     tombstone_keep_mask,
     union_tombstones_arr,
 )
+from olaf_spark.lru import file_sig, lru_get
+from olaf_spark.metafs import get_metafs
 from olaf_spark.termrows import term_rows
 from olaf_spark.tokenize import tokenize_py, tokens_df
 
@@ -94,15 +135,162 @@ POSITIONS_SCHEMA = (
     "pos_offs array<long>"
 )
 
+
+@dataclass(frozen=True)
+class SideKind:
+    """One column of the side-index table (module docstring)."""
+
+    name: str                 # rows dir under the index dir
+    marker: str               # commit marker, published last
+    version: int              # the marker format_version this engine reads
+    fields: tuple[str, ...]   # marker fields, in published order
+    builder: str              # the build function every refusal names
+    label: str                # "positional" / "bigram", in messages
+    refuses: bool             # phrase serving refuses (else degrades)
+    degraded: str             # what phrase serving does without the kind
+    sidecar: str | None = None
+    group_key: str | None = None  # marker field every part must share
+
+
+#: marker fields every kind has; the rest are the kind's own
+_SHARED_FIELDS = ("format_version", "n_buckets", "lo", "hi", "width")
+
 #: positional layout version; 2 = per-doc byte offsets (lazy candidate
 #: decode); 3 = v2 + the doc-range bucket as an explicit column (the
-#: co-location key of the distributed batch phrase path — all terms of the
-#: same doc range group together) + (lo, width) recorded in positions_meta
-#: so compaction can re-bucket folded rows. Checked at read so a stale
-#: layout fails loudly.
+#: co-location key of the distributed batch phrase path) + (lo, width)
+#: in the marker so compaction can re-bucket folded rows.
 POSITIONS_FORMAT_VERSION = 3
 
-_DEFAULT = EngineConfig()
+POSITIONS = SideKind(
+    "positions", "positions_meta.json", POSITIONS_FORMAT_VERSION,
+    ("n_buckets", "format_version", "lo", "hi", "width"),
+    "build_positions", "positional", True,
+    "phrase queries were already refusing on this group",
+)
+#: bigram layout version 1 — bumped independently of the positions version
+#: (the row schema is shared, the head-set contract is bigram.py's)
+BIGRAMS = SideKind(
+    "bigrams", "bigram_meta.json", 1,
+    (*_SHARED_FIELDS, "min_df", "n_heads", "heads_fingerprint"),
+    "build_bigrams", "bigram", False,
+    "phrase serving falls back to the positional path",
+    sidecar="bigram_heads.parquet", group_key="heads_fingerprint",
+)
+SIDE_KINDS = (POSITIONS, BIGRAMS)
+
+#: parsed markers keyed by path, fresh under lru.file_sig — the serving
+#: gates run on every phrase query and must not re-open json per part
+_META_CACHE: dict[str, tuple] = {}
+_META_CACHE_MAX = 1024
+
+
+def _read_marker(d: str, kind: SideKind):
+    """kind's parsed marker at d (any JSON value), or None when it is
+    missing or unreadable. Never raises."""
+    path = os.path.join(d, kind.marker)
+    sig = file_sig(path)
+    if sig is None:
+        return None
+
+    def load():
+        try:
+            with open(path) as f:
+                return json.load(f)
+        except (OSError, ValueError):
+            return None
+
+    return lru_get(_META_CACHE, path, sig, load, _META_CACHE_MAX)
+
+
+def side_meta(d: str, kind: SideKind) -> dict | None:
+    """kind's committed marker at d when it is in this engine's layout,
+    else None. Never raises."""
+    meta = _read_marker(d, kind)
+    if (
+        isinstance(meta, dict)
+        and meta.get("format_version") == kind.version
+        and (kind.group_key is None or isinstance(meta.get(kind.group_key), str))
+    ):
+        return meta
+    return None
+
+
+def _sidecar_ok(d: str, kind: SideKind) -> bool:
+    return kind.sidecar is None or os.path.exists(os.path.join(d, kind.sidecar))
+
+
+def side_usable(d: str, kind: SideKind) -> bool:
+    """True when d carries kind in this engine's layout: marker and
+    sidecar. Never raises."""
+    return side_meta(d, kind) is not None and _sidecar_ok(d, kind)
+
+
+def require_meta(d: str, kind: SideKind, reader: str = "this engine reads") -> dict:
+    """side_meta, or the loud refusal. A refusing kind tells a missing
+    marker (FileNotFoundError) from a stale or unreadable one (ValueError,
+    naming the `reader` that needs this engine's layout); a degrading kind
+    is only ever required explicitly and has one ValueError for both."""
+    meta = side_meta(d, kind)
+    if meta is not None:
+        return meta
+    if not kind.refuses:
+        raise ValueError(
+            f"{kind.name} at {d} are missing or not format v{kind.version} — "
+            f"rebuild with {kind.builder}"
+        )
+    if not os.path.exists(os.path.join(d, kind.marker)):
+        raise FileNotFoundError(
+            f"{d} has no {kind.label} side index — run {kind.builder} "
+            f"(or append with with_{kind.name}=True)"
+        )
+    raw = _read_marker(d, kind)
+    found = raw.get("format_version", 1) if isinstance(raw, dict) else "?"
+    raise ValueError(
+        f"{kind.name} at {d} are format v{found}; {reader} v{kind.version} — "
+        f"rebuild with {kind.builder}"
+    )
+
+
+def group_metas(part_dirs: list[str], kind: SideKind) -> list[dict] | None:
+    """Every part's marker when the group can serve and fold kind as one
+    (every part usable, one group key), else None. Never raises."""
+    metas = [side_meta(d, kind) for d in part_dirs]
+    if any(m is None for m in metas) or not all(_sidecar_ok(d, kind) for d in part_dirs):
+        return None
+    if kind.group_key and len({m[kind.group_key] for m in metas}) != 1:
+        return None
+    return metas
+
+
+def _require_group(part_dirs: list[str], kind: SideKind) -> list[dict]:
+    """group_metas' loud twin, for the fold."""
+    metas = [require_meta(d, kind, "compaction folds") for d in part_dirs]
+    keys = {m[kind.group_key] for m in metas} if kind.group_key else set()
+    if len(keys) > 1:
+        raise ValueError(
+            f"{kind.label} head sets differ across parts ({sorted(keys)}) — "
+            f"fold would mix authoritativeness; rebuild with {kind.builder}"
+        )
+    return metas
+
+
+def _retract(out_dir: str, kind: SideKind) -> None:
+    """Marker first, then the old rows: from here the kind is missing."""
+    mfs = get_metafs()
+    mfs.remove_file(os.path.join(out_dir, kind.marker))
+    rows_dir = os.path.join(out_dir, kind.name)
+    if os.path.isdir(rows_dir):
+        mfs.remove_dir(rows_dir, ignore_errors=True)
+
+
+def _publish(out_dir, kind: SideKind, lo, hi, n_buckets, width, extra: dict) -> None:
+    """Atomic publish of the marker (the last step of every commit)."""
+    vals = dict(
+        extra, format_version=kind.version, n_buckets=n_buckets, lo=lo, hi=hi, width=width
+    )
+    get_metafs().publish_json(
+        os.path.join(out_dir, kind.marker), {k: vals[k] for k in kind.fields}
+    )
 
 
 def _make_pack_positions(lo: int, width: int, n_buckets: int):
@@ -172,15 +360,37 @@ def write_positional_rows(
     packed.write.mode("overwrite").partitionBy("tb").parquet(rows_dir)
 
 
-def _positions_meta(lo: int, hi: int, n_buckets: int, width: int) -> dict:
-    """positions_meta.json — the positional index's commit marker."""
-    return {
-        "n_buckets": n_buckets,
-        "format_version": POSITIONS_FORMAT_VERSION,
-        "lo": lo,
-        "hi": hi,
-        "width": width,
-    }
+def build_side(
+    spark: SparkSession,
+    kind: SideKind,
+    docs: DataFrame,
+    out_dir: str,
+    cfg: EngineConfig,
+    id_col: str,
+    n_buckets: int,
+    emit,
+) -> str:
+    """The one build-and-commit skeleton of every side kind, in the commit
+    order of the module docstring. emit(n_docs) runs after the retraction
+    and returns (occ, extra, write_sidecar): the (doc_id, pos, term_id)
+    occurrence rows for write_positional_rows (None: no rows), the kind's
+    own marker fields, and its sidecar writer (or None)."""
+    # config-freeze invariant (olaf_config.h:46-50): a side index added to
+    # an existing index must be tokenized under the index's own config
+    if os.path.exists(os.path.join(out_dir, "engine_config.json")):
+        EngineConfig.load(out_dir).check_compatible(cfg)
+    n, lo, hi, width = doc_range(docs, id_col, n_buckets, f"{kind.name} at {out_dir}")
+    _retract(out_dir, kind)
+    occ, extra, write_sidecar = emit(n)
+    if occ is not None:
+        write_positional_rows(
+            spark, occ, os.path.join(out_dir, kind.name), lo, width, n_buckets, cfg
+        )
+    cfg.save(out_dir)
+    if write_sidecar is not None:
+        write_sidecar()
+    _publish(out_dir, kind, lo, hi, n_buckets, width, extra)
+    return out_dir
 
 
 def build_positions(
@@ -193,44 +403,21 @@ def build_positions(
     n_buckets: int = 16,
 ) -> str:
     """Materialize the positional side index under <out_dir>/positions."""
-    from olaf_spark.metafs import get_metafs
     from olaf_spark.session import rebalance_scan
 
     cfg = cfg or EngineConfig()
-    # config-freeze invariant (olaf_config.h:46-50): when out_dir already
-    # holds an index config (positions added to an existing index), the
-    # caller's cfg must EQUAL it — silently overwriting would re-tokenize
-    # the main postings under a different contract on the next load
-    if os.path.exists(os.path.join(out_dir, "engine_config.json")):
-        EngineConfig.load(out_dir).check_compatible(cfg)
-    _n, lo, hi, width = doc_range(docs, id_col, n_buckets, f"positions at {out_dir}")
-    # REBUILD over committed positions: retract the commit marker before
-    # any row lands — a crash mid-rebuild must leave _check_positions
-    # refusing loudly, never the old meta over partially-overwritten rows
-    # (which would serve silently wrong phrase answers)
-    mfs = get_metafs()
-    mfs.remove_file(os.path.join(out_dir, "positions_meta.json"))
 
-    toks = tokens_df(
-        rebalance_scan(spark, docs, id_col), text_col, id_col, cfg, with_pos=True
-    )
-    occ = toks.select(
-        "doc_id", F.col("pos").cast("long").alias("pos"),
-        term_id_col(F.col("term")).alias("term_id"),
-    )
-    write_positional_rows(
-        spark, occ, os.path.join(out_dir, "positions"), lo, width, n_buckets, cfg
-    )
-    cfg.save(out_dir)
-    # atomic publish: the meta IS the commit marker (_check_positions
-    # refuses without it) — a crash mid-dump must not leave a truncated
-    # json that turns the clean 'rebuild with build_positions' refusal
-    # into a JSONDecodeError on every phrase query
-    mfs.publish_json(
-        os.path.join(out_dir, "positions_meta.json"),
-        _positions_meta(lo, hi, n_buckets, width),
-    )
-    return out_dir
+    def emit(_n_docs):
+        toks = tokens_df(
+            rebalance_scan(spark, docs, id_col), text_col, id_col, cfg, with_pos=True
+        )
+        occ = toks.select(
+            "doc_id", F.col("pos").cast("long").alias("pos"),
+            term_id_col(F.col("term")).alias("term_id"),
+        )
+        return occ, {}, None
+
+    return build_side(spark, POSITIONS, docs, out_dir, cfg, id_col, n_buckets, emit)
 
 
 def _make_fold_positions(lo: int, width: int, n_buckets: int, bts):
@@ -311,41 +498,33 @@ def has_rows(d: str, kind: str) -> bool:
 
 def fold_positional_rows(
     spark: SparkSession,
+    kind: SideKind,
     part_dirs: list[str],
     out_dir: str,
-    kind: str,
-    marker: str,
-    metas: list[dict],
-    make_meta,
     tombstones: np.ndarray | None,
     cfg: EngineConfig,
     n_merge_tasks: int | None = None,
 ) -> None:
-    """The one compaction fold + commit of positional rows (positions and
-    bigram pairs): every part's <d>/<kind> rows -> <out_dir>/<kind> under
-    the folded corpus's bucket layout (fold_range over the parts' metas),
-    then make_meta(lo, hi, n_buckets, width) is published as <marker>.
+    """The one compaction fold + commit of a side kind: every part's
+    <d>/<kind> rows -> <out_dir>/<kind> under the folded corpus's bucket
+    layout (fold_range over the parts' markers), in the commit order of the
+    module docstring. Refuses (require_meta, head sets) before touching
+    out_dir.
 
     One Spark job, doc-range parallel via the same (tb, term_id, first_doc)
     range shuffle as the postings fold; tombstoned docs are physically
-    dropped (tombstones: the sorted snapshot array, or None). Commit
-    protocol: the marker and any stale rows in out_dir are
-    retracted FIRST (a failed fold must leave the kind unusable — serving
-    refuses or degrades — never the old marker over cleared or partial
-    rows), and the marker lands LAST. Parts with no committed row file
-    (rowless but committed) contribute nothing. make_meta runs after the
-    rows land, so sidecars the marker covers are written there."""
+    dropped (tombstones: the sorted snapshot array, or None). Parts with
+    no committed row file (rowless but committed) contribute nothing. The
+    sidecar is group-wide (one group key), so part 0's is copied; the
+    folded marker carries part 0's own fields."""
     from olaf_spark.incremental import _first_doc_udf
-    from olaf_spark.metafs import get_metafs
 
+    metas = _require_group(part_dirs, kind)
     mfs = get_metafs()
-    marker_path = os.path.join(out_dir, marker)
-    rows_dir = os.path.join(out_dir, kind)
-    mfs.remove_file(marker_path)
-    if os.path.isdir(rows_dir):
-        mfs.remove_dir(rows_dir, ignore_errors=True)
+    _retract(out_dir, kind)
     lo, hi, n_buckets, width = fold_range(metas)
-    srcs = [os.path.join(d, kind) for d in part_dirs if has_rows(d, kind)]
+    rows_dir = os.path.join(out_dir, kind.name)
+    srcs = [os.path.join(d, kind.name) for d in part_dirs if has_rows(d, kind.name)]
     if srcs:
         if n_merge_tasks is None:
             n_merge_tasks = merge_task_count(spark, dir_bytes(*srcs))
@@ -366,7 +545,13 @@ def fold_positional_rows(
             .withColumn("tb", shard_from_id_col(F.col("term_id"), cfg.n_segments))
         )
         folded.write.mode("overwrite").partitionBy("tb").parquet(rows_dir)
-    mfs.publish_json(marker_path, make_meta(lo, hi, n_buckets, width))
+    if kind.sidecar is not None:
+        final = os.path.join(out_dir, kind.sidecar)
+        tmp = mfs.tmp_path(final)
+        shutil.copyfile(os.path.join(part_dirs[0], kind.sidecar), tmp)
+        mfs.commit_file(tmp, final)
+    extra = {k: metas[0][k] for k in kind.fields if k not in _SHARED_FIELDS}
+    _publish(out_dir, kind, lo, hi, n_buckets, width, extra)
 
 
 def compact_positions(
@@ -377,31 +562,87 @@ def compact_positions(
     cfg: EngineConfig,
     n_merge_tasks: int | None = None,
 ) -> str:
-    """Fold every part's positional rows into <out_dir>/positions — the
-    phrase twin of compact_index's postings fold, so phrase serving resumes
-    the moment the compacted index commits (no manual positions rebuild;
-    reference analogue: Olaf's t1 timestamps live INSIDE every packed
-    posting and ride each store/merge automatically,
-    src/olaf_fp_db_writer.c:54-59, src/olaf_fp_db_writer_cache.c:92-114).
-    Tombstoned docs are dropped using the SAME snapshot the postings fold
-    used; fold and commit protocol: fold_positional_rows."""
-
-    metas = []
-    for d in part_dirs:
-        with open(os.path.join(d, "positions_meta.json")) as f:
-            meta = json.load(f)
-        found = meta.get("format_version", 1)
-        if found != POSITIONS_FORMAT_VERSION:
-            raise ValueError(
-                f"positions at {d} are format v{found}; compaction folds "
-                f"v{POSITIONS_FORMAT_VERSION} — rebuild with build_positions"
-            )
-        metas.append(meta)
+    """Fold every part's positional rows into <out_dir>/positions
+    (fold_positional_rows; reference analogue: Olaf's t1 timestamps live
+    inside every packed posting and ride each store/merge automatically,
+    src/olaf_fp_db_writer.c:54-59, src/olaf_fp_db_writer_cache.c:92-114)."""
     fold_positional_rows(
-        spark, part_dirs, out_dir, "positions", "positions_meta.json", metas,
-        _positions_meta, tombstones, cfg, n_merge_tasks,
+        spark, POSITIONS, part_dirs, out_dir, tombstones, cfg, n_merge_tasks
     )
     return out_dir
+
+
+def compact_sides(
+    spark: SparkSession,
+    part_dirs: list[str],
+    out_dir: str,
+    tombstones: np.ndarray | None,
+    cfg: EngineConfig,
+    n_merge_tasks: int | None,
+) -> None:
+    """compact_index's side-index step: fold every kind the whole group
+    carries (group_metas), skipping a kind a resume finds committed (its
+    lineage row and marker); say so when some part has the kind but the
+    group cannot fold it. Never refuses: a raise here, after the postings
+    committed and before stats.json, would leave the compaction
+    permanently un-completable."""
+    for kind in SIDE_KINDS:
+        stage = f"compact_{kind.name}"
+        if group_metas(part_dirs, kind) is None:
+            if any(os.path.exists(os.path.join(d, kind.marker)) for d in part_dirs):
+                n_ok = sum(side_usable(d, kind) for d in part_dirs)
+                print(
+                    f"compact_index: {n_ok}/{len(part_dirs)} parts carry a usable "
+                    f"{kind.label} side index"
+                    + (" (or head sets differ)" if kind.group_key else "")
+                    + f" — {kind.name} NOT folded ({kind.degraded}); run "
+                    f"{kind.builder} on {out_dir} to restore it"
+                )
+            continue
+        if done_partitions(out_dir, stage) and os.path.exists(
+            os.path.join(out_dir, kind.marker)
+        ):
+            continue
+        t0 = time.time()
+        fold_positional_rows(
+            spark, kind, part_dirs, out_dir, tombstones, cfg, n_merge_tasks
+        )
+        _write_lineage(
+            [
+                dict(
+                    stage=stage, partition_id=-1, input_rows=-1, output_rows=-1,
+                    wall_s=time.time() - t0, bytes_out=-1, status="done",
+                    ts=time.time(),
+                )
+            ],
+            os.path.join(out_dir, "lineage"),
+        )
+
+
+def append_sides(
+    spark: SparkSession,
+    new_docs: DataFrame,
+    base_dir: str,
+    delta_dir: str,
+    cfg: EngineConfig,
+    kinds: list[SideKind],
+    **build_kw,
+) -> None:
+    """append_index's side-index step, on the fresh and the replay path
+    alike: build every requested kind the delta does not already carry
+    usable, before the delta's stats.json lands. Bigrams inherit the
+    base's head set (bigram.inherited_heads, which refuses without one)."""
+    from olaf_spark.bigram import build_bigrams, inherited_heads
+
+    for kind in kinds:
+        if side_usable(delta_dir, kind):
+            continue
+        if kind is POSITIONS:
+            build_positions(spark, new_docs, delta_dir, cfg, **build_kw)
+        else:
+            build_bigrams(
+                spark, new_docs, delta_dir, cfg, **build_kw, **inherited_heads(base_dir)
+            )
 
 
 def _decoded_rows(id_bufs, count_bufs, pos_bufs, pos_offs) -> list[dict]:
@@ -441,42 +682,10 @@ def _fetch_term_rows(root: str, term_ids: list[int], n_segments: int) -> dict[in
     return per
 
 
-def _check_positions(d: str) -> None:
-    """Refuse loudly when a part has no (or a stale-layout) positional side
-    index — a silent partial phrase answer would be worse."""
-
-    meta_path = os.path.join(d, "positions_meta.json")
-    if not os.path.exists(meta_path):
-        raise FileNotFoundError(
-            f"{d} has no positional side index — run build_positions "
-            "(or append with with_positions=True)"
-        )
-    with open(meta_path) as f:
-        found = json.load(f).get("format_version", 1)
-    if found != POSITIONS_FORMAT_VERSION:
-        raise ValueError(
-            f"positions at {d} are format v{found}; this engine reads "
-            f"v{POSITIONS_FORMAT_VERSION} — rebuild with build_positions"
-        )
-
-
 def positions_usable(d: str) -> bool:
-    """True when the dir carries positional rows in THIS engine's layout
-    (exists + format_version match) — the graceful-degradation twin of
-    _check_positions for callers that should skip, not raise (compaction).
-    Any malformed meta (truncated json, wrong JSON shape) counts as not
-    usable — this function must NEVER raise."""
-
-    meta_path = os.path.join(d, "positions_meta.json")
-    try:
-        with open(meta_path) as f:
-            meta = json.load(f)
-        return (
-            isinstance(meta, dict)
-            and meta.get("format_version", 1) == POSITIONS_FORMAT_VERSION
-        )
-    except (FileNotFoundError, json.JSONDecodeError):
-        return False
+    """True when d carries positional rows in this engine's layout
+    (side_usable). Never raises."""
+    return side_usable(d, POSITIONS)
 
 
 def phrase_units(
@@ -562,7 +771,7 @@ def phrase_topk(
 
     part_dirs = [index_dir] + _delta_dirs(index_dir)
     for d in part_dirs:
-        _check_positions(d)
+        require_meta(d, POSITIONS)
     qterms = tokenize_py(phrase, cfg)  # ORDER MATTERS — not deduped/sorted
     if not qterms:
         return []
@@ -948,16 +1157,10 @@ def _bigram_buckets_match(d: str) -> bool:
     """True when the part's bigram rows bucket EXACTLY like its positional
     rows ((lo, width, n_buckets) equal) — the precondition for sharing the
     batch path's (query, part, bucket) co-location key. Never raises."""
-    from olaf_spark.bigram import _read_meta
-
-    bm = _read_meta(d)
-    if bm is None:
-        return False
+    pm, bm = side_meta(d, POSITIONS), side_meta(d, BIGRAMS)
     try:
-        with open(os.path.join(d, "positions_meta.json")) as f:
-            pm = json.load(f)
         return all(bm[k] == pm[k] for k in ("lo", "width", "n_buckets"))
-    except (FileNotFoundError, json.JSONDecodeError, KeyError, TypeError):
+    except (KeyError, TypeError):
         return False
 
 
@@ -1009,7 +1212,7 @@ def batch_phrase_topk(
     cfg = cfg or EngineConfig.load(base_dir)
     part_dirs = [base_dir] + _delta_dirs(base_dir)
     for d in part_dirs:
-        _check_positions(d)
+        require_meta(d, POSITIONS)
 
     heads = None
     if use_bigrams is not False:

@@ -204,9 +204,9 @@ def test_delta_inherits_head_set_and_group_serves(spark, bg_index, tmp_path):
     """append_index(with_bigrams=True): the delta indexes the SAME pairs as
     the base (inherited head set, equal fingerprints) and group serving
     from bigrams equals the full-corpus referent."""
-    from olaf_spark.bigram import _read_meta
     from olaf_spark.incremental import _delta_dirs, append_index
     from olaf_spark.indexer import build_index
+    from olaf_spark.phrase import BIGRAMS, side_meta
 
     rows, _ = bg_index
     pages = spark.createDataFrame(rows, "doc_id long, text string")
@@ -221,8 +221,8 @@ def test_delta_inherits_head_set_and_group_serves(spark, bg_index, tmp_path):
     )
     (delta,) = _delta_dirs(base)
     assert (
-        _read_meta(delta)["heads_fingerprint"]
-        == _read_meta(base)["heads_fingerprint"]
+        side_meta(delta, BIGRAMS)["heads_fingerprint"]
+        == side_meta(base, BIGRAMS)["heads_fingerprint"]
     )
     assert group_heads([base, delta]) is not None
     for p in ("w2 w3", "w3 w2 w2", "w2 w3 w2"):
@@ -256,9 +256,9 @@ def test_compaction_folds_bigrams(spark, bg_index, tmp_path):
     is bigram-usable with the group's fingerprint, answers are identical to
     the pre-compact group (still header-only), and tombstoned docs are
     physically gone."""
-    from olaf_spark.bigram import _read_meta
     from olaf_spark.incremental import append_index, compact_index
     from olaf_spark.indexer import Index, build_index
+    from olaf_spark.phrase import BIGRAMS, side_meta
 
     rows, _ = bg_index
     pages = spark.createDataFrame(rows, "doc_id long, text string")
@@ -275,11 +275,11 @@ def test_compaction_folds_bigrams(spark, bg_index, tmp_path):
     victim = before[0][0]
     Index.load(base).delete_docs([victim])
     want = {p: phrase_topk(base, p, k=10) for p in ("w2 w3", "w3 w2 w2")}
-    fp = _read_meta(base)["heads_fingerprint"]
+    fp = side_meta(base, BIGRAMS)["heads_fingerprint"]
     out = str(tmp_path / "cf_out")
     compact_index(spark, base, out, n_groups=2)
     assert bigrams_usable(out)
-    assert _read_meta(out)["heads_fingerprint"] == fp
+    assert side_meta(out, BIGRAMS)["heads_fingerprint"] == fp
     for p, w in want.items():
         st: dict = {}
         got = phrase_topk(out, p, k=10, use_bigrams=True, _stats=st)

@@ -1,6 +1,7 @@
-"""Structural guards: the packed row formats have one owner (codec.py), and
-every layer boundary the benchmark's traced run wraps still exists under
-the name it looks up."""
+"""Structural guards: the packed row formats have one owner (codec.py), the
+side-index commit protocol has one owner (phrase.py), and every layer
+boundary the benchmark's traced run wraps still exists under the name it
+looks up."""
 
 from __future__ import annotations
 
@@ -16,6 +17,13 @@ CODEC_INTERNALS = {
     "decode_ids_blocked", "segmented_cumsum",
 }
 
+#: the side indexes' on-disk names; only phrase.py's kind table spells them
+SIDE_INDEX_FILES = ("positions_meta.json", "bigram_meta.json", "bigram_heads.parquet")
+
+
+def _engine_files() -> list[pathlib.Path]:
+    return sorted(ROOT.glob("olaf_spark/**/*.py")) + sorted(ROOT.glob("jobs/*.py"))
+
 
 def _is_internal(name: str) -> bool:
     name = name.lstrip("_")
@@ -27,7 +35,7 @@ def test_codec_is_the_only_owner_of_the_row_formats():
     oracle, which never touches packed rows) imports, names or calls the
     codec's layout internals — every other reader and writer goes through
     codec's row-level functions."""
-    files = sorted(ROOT.glob("olaf_spark/**/*.py")) + sorted(ROOT.glob("jobs/*.py"))
+    files = _engine_files()
     assert len(files) > 20
     hits = []
     for path in files:
@@ -47,6 +55,26 @@ def test_codec_is_the_only_owner_of_the_row_formats():
             hits += [
                 f"{path.relative_to(ROOT)}:{node.lineno} {n}" for n in names if _is_internal(n)
             ]
+    assert hits == []
+
+
+def test_phrase_is_the_only_owner_of_the_side_index_files():
+    """No string constant (docstrings included) of olaf_spark/ or jobs/
+    outside phrase.py names a side-index marker or sidecar — every other
+    module reads, builds, gates, appends and folds side indexes through
+    phrase.py's SideKind table and functions."""
+    files = _engine_files()
+    assert len(files) > 20
+    hits = []
+    for path in files:
+        if path.name == "phrase.py" and path.parent.name == "olaf_spark":
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, ast.Constant) and isinstance(node.value, str):
+                hits += [
+                    f"{path.relative_to(ROOT)}:{node.lineno} {name}"
+                    for name in SIDE_INDEX_FILES if name in node.value
+                ]
     assert hits == []
 
 

@@ -162,6 +162,38 @@ def test_compact_preserves_results_and_enables_wand(spark, grouped, tmp_path):
         assert_identical(query_index(spark, compacted, q, K, method="wand"), want)
 
 
+#: stats.json holds deterministic facts only (no wall-clock fields), so two
+#: builds of one corpus can be compared byte for byte
+STATS_KEYS = {
+    "format_version", "n_docs", "avgdl", "total_tokens", "n_terms",
+    "n_postings", "packed_bytes", "n_buckets", "bucket_width",
+}
+
+
+def test_stats_and_lineage_key_sets(spark, grouped, tmp_path):
+    """The key set of stats.json for a build, an appended delta and a
+    compaction, and the lineage columns: wall_s is lineage's one timing
+    field (perfbench reads it per stage)."""
+    import json
+    import os
+
+    import pyarrow.dataset as ds
+
+    group, base = grouped
+    out = str(tmp_path / "keys")
+    compact_index(spark, base, out, n_groups=1)
+    for d, keys in [(p.index_dir, STATS_KEYS) for p in group.parts] + [
+        (out, STATS_KEYS | {"compacted_from"})
+    ]:
+        with open(os.path.join(d, "stats.json")) as f:
+            assert set(json.load(f)) == keys, d
+        lin = ds.dataset(os.path.join(d, "lineage"), format="parquet").schema.names
+        assert set(lin) == {
+            "stage", "partition_id", "input_rows", "output_rows", "wall_s",
+            "bytes_out", "status", "ts",
+        }, d
+
+
 def test_compact_splits_head_terms_doc_range_parallel(spark, halves, tmp_path):
     """Doc-range-parallel compaction: with a tiny row cap and many range
     tasks, the head term 'w1' must come out as MANY doc-disjoint chunk rows

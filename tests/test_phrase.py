@@ -263,6 +263,43 @@ def test_positions_usable_never_raises(tmp_path):
     assert not positions_usable(d)  # stale layout
 
 
+def test_warm_group_phrase_parses_no_json(spark, positional, tmp_path, monkeypatch):
+    """The side-index gates read every part's marker through phrase.py's
+    lru.file_sig-keyed cache: a warm phrase_topk over a two-part group
+    (base + delta, each with positions and bigrams) calls json.load zero
+    times."""
+    import json
+
+    from olaf_spark.bigram import build_bigrams, group_heads
+    from olaf_spark.incremental import _delta_dirs, append_index
+    from olaf_spark.indexer import build_index
+
+    rows, _ = positional
+    pages = spark.createDataFrame(rows[:120], "doc_id long, text string")
+    base = str(tmp_path / "warm")
+    even = pages.where("doc_id % 2 = 0")
+    build_index(spark, even, base, CFG, n_buckets=2)
+    build_positions(spark, even, base, CFG, n_buckets=2)
+    build_bigrams(spark, even, base, CFG, n_buckets=2, min_df=5)
+    append_index(
+        spark, pages.where("doc_id % 2 = 1"), base, n_buckets=2,
+        with_positions=True, with_bigrams=True,
+    )
+    assert group_heads([base] + _delta_dirs(base)) is not None
+    want = phrase_topk(base, "w2 w3", k=10)
+    assert want
+    calls = []
+    real_load = json.load
+
+    def counting_load(*args, **kwargs):
+        calls.append(args)
+        return real_load(*args, **kwargs)
+
+    monkeypatch.setattr(json, "load", counting_load)
+    assert phrase_topk(base, "w2 w3", k=10) == want
+    assert calls == []
+
+
 def test_batch_phrase_min_tf(spark, positional):
     """Batch phrase min_tf gate agrees with the serving path per query."""
     from olaf_spark.phrase import batch_phrase_topk
