@@ -53,7 +53,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from olaf_spark.codec import bm25_contrib, decode_posting_rows
+from olaf_spark.codec import bm25_contrib, decode_posting_rows, joined
 from olaf_spark.incremental import IndexGroup
 from olaf_spark.indexer import (
     Index,
@@ -147,7 +147,7 @@ def _make_decode_proxies(
                 continue
             sub = pdf.iloc[rows]
             ids, tfs, dls, counts = decode_posting_rows(
-                sub["doc_ids_bin"], sub["tfs_bin"], sub["doc_lens_bin"], block_size
+                *(joined(sub[c]) for c in ("doc_ids_bin", "tfs_bin", "doc_lens_bin")), block_size
             )
             ids = ids.view(np.int64)
             ords = np.repeat([tid_ord[tids[i]] for i in rows], counts).astype(np.int32)

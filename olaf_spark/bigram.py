@@ -49,6 +49,7 @@ from pyspark.sql import functions as F
 
 from olaf_spark.config import EngineConfig
 from olaf_spark.indexer import term_id_col, term_id_py
+from olaf_spark.lru import LruCache, file_sig, lru_get
 from olaf_spark.phrase import (
     BIGRAMS,
     build_side,
@@ -152,15 +153,13 @@ def _write_heads(out_dir: str, heads: np.ndarray) -> None:
 #: per-dir head-array cache keyed by the sidecar's lru.file_sig — serving
 #: checks pair authoritativeness on every phrase query and must not
 #: re-read parquet
-_HEADS_CACHE: dict[str, tuple] = {}
+_HEADS_CACHE = LruCache()
 _HEADS_CACHE_MAX = 256
 
 
 def load_heads(d: str) -> np.ndarray:
     """Sorted head term_id array for an index part (sig-keyed cache)."""
     import pyarrow.parquet as pq
-
-    from olaf_spark.lru import file_sig, lru_get
 
     path = os.path.join(d, BIGRAMS.sidecar)
     sig = file_sig(path)

@@ -52,9 +52,17 @@ position runs plus pos_offs let phrase serving decode only candidate docs'
 positions, and let compaction copy a doc's positions without decoding
 them; doc lengths ride in the posting row, so scoring needs no side table.
 
-Every function works on whole batches in numpy passes — a batch of rows is
-joined, one terminator scan finds every value boundary and each row's
-value count, and delta runs decode with one segmented cumsum.
+Every function works on whole batches in numpy passes. A batch of rows of
+one binary column enters as ONE (buffer, row_ends) pair:
+
+    buffer     uint8 array (or bytes): the rows' bytes back to back
+    row_ends   int64, row_ends[i] = end offset of row i (row 0 starts at 0)
+
+That is Arrow's own binary layout, so driver-side serving decodes the
+cached columns of termrows without a copy; a list of byte strings (a Spark
+batch's pandas column) enters through the `joined` adapter. One
+terminator scan (varbyte_decode_rows) finds every value boundary and each
+row's value count, and delta runs decode with one segmented cumsum.
 bm25_contrib is the one BM25 contribution kernel of the packed paths
 (oracle.py and block_maxes, the test referent, keep their own copies).
 """
@@ -147,18 +155,27 @@ def varbyte_decode(buf) -> np.ndarray:
     return _decode_values(b, np.flatnonzero(b < 0x80))
 
 
-def varbyte_decode_rows(bufs) -> tuple[np.ndarray, np.ndarray]:
-    """Decode a whole column of LEB128 buffers in ONE pass: (values, counts),
+def varbyte_decode_rows(buf, row_ends: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Decode a whole column of LEB128 rows in ONE pass: (values, counts),
     values concatenated in row order and counts[i] the number of values in
-    bufs[i]. The one terminator scan that finds the value boundaries also
-    yields the counts (every buffer ends a value, so none straddles two
-    rows)."""
-    b = np.frombuffer(b"".join(bufs), dtype=np.uint8)
-    ends = np.flatnonzero(b < 0x80)
-    row_ends = np.cumsum(np.fromiter(map(len, bufs), dtype=np.int64, count=len(bufs)))
-    counts = np.searchsorted(ends, row_ends)  # values ending before each row's end
+    row i. The column is one byte buffer (a uint8 array, or bytes) holding
+    the rows back to back, and row_ends[i] is the end offset of row i in it
+    (the first row starts at 0) — Arrow's own binary layout, so a cached
+    column decodes without a copy. The one terminator scan that finds the
+    value boundaries also yields the counts (every row ends a value, so
+    none straddles two rows)."""
+    b = np.frombuffer(buf, dtype=np.uint8)
+    ends = (b < 0x80).nonzero()[0]
+    counts = ends.searchsorted(row_ends)  # values ending before each row's end
     counts[1:] -= counts[:-1].copy()
     return _decode_values(b, ends), counts
+
+
+def joined(bufs) -> tuple[np.ndarray, np.ndarray]:
+    """(buffer, row_ends) of a list of byte strings (a pandas column of a
+    Spark batch): the adapter from per-row bytes to the batch decoders."""
+    lens = np.fromiter(map(len, bufs), dtype=np.int64, count=len(bufs))
+    return np.frombuffer(b"".join(bufs), dtype=np.uint8), np.cumsum(lens)
 
 
 # ------------------------------------------------------------- delta runs
@@ -247,7 +264,10 @@ def _encode_column(
 def ranges_index(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
     """Fancy-index array selecting the concatenation of [start, start+len)
     ranges — the vectorized twin of a per-range Python slice loop. Built as
-    a cumsum of unit steps with a jump at every range boundary."""
+    a cumsum of unit steps with a jump at every range boundary; empty
+    ranges are dropped first."""
+    if not lens.all():
+        starts, lens = starts[lens > 0], lens[lens > 0]
     total = int(lens.sum())
     if total == 0:
         return np.empty(0, dtype=np.int64)
@@ -298,27 +318,29 @@ def encode_posting_rows(
     return {**out, **offs}  # POSTINGS_SCHEMA's column order
 
 
-def decode_posting_rows(id_bufs, tf_bufs, dl_bufs, block_size: int | None = None):
+def decode_posting_rows(id_col, tf_col, dl_col, block_size: int | None = None):
     """(ids, tfs, dls, counts) of a batch of posting rows, uint64, each
-    column decoded in one pass: counts[i] postings in row i. Doc-id gaps
-    restart at every row start and, for blocked rows (block_size given),
-    at every block start — so a byte slice that starts at a block boundary
-    decodes as a row of its own."""
-    gaps, counts = varbyte_decode_rows(id_bufs)
-    tfs, _ = varbyte_decode_rows(tf_bufs)
-    dls, _ = varbyte_decode_rows(dl_bufs)
+    column — a (buffer, row_ends) pair, see varbyte_decode_rows — decoded
+    in one pass: counts[i] postings in row i. Doc-id gaps restart at every
+    row start and, for blocked rows (block_size given), at every block
+    start — so a byte range that starts at a block boundary decodes as a
+    row of its own."""
+    gaps, counts = varbyte_decode_rows(*id_col)
+    tfs, _ = varbyte_decode_rows(*tf_col)
+    dls, _ = varbyte_decode_rows(*dl_col)
     restarts = np.cumsum(counts) - counts  # row starts; an empty row adds none
     if block_size is not None:
         restarts = block_starts_for_groups(restarts, gaps.size, block_size)
     return _segmented_cumsum(gaps, restarts), tfs, dls, counts
 
 
-def first_doc_ids(id_bufs) -> np.ndarray:
-    """int64 first doc id of each row's doc_ids_bin (posting or positional:
-    the first value is absolute), 0 for an empty row. uint64 ids are
-    reinterpreted as int64 — a deterministic total order for splitting a
-    term's rows, which is all the fold shuffles need."""
-    vals, counts = varbyte_decode_rows(id_bufs)
+def first_doc_ids(id_col) -> np.ndarray:
+    """int64 first doc id of each row's doc_ids_bin (a (buffer, row_ends)
+    pair; posting or positional: the first value is absolute), 0 for an
+    empty row. uint64 ids are reinterpreted as int64 — a deterministic
+    total order for splitting a term's rows, which is all the fold
+    shuffles need."""
+    vals, counts = varbyte_decode_rows(*id_col)
     out = np.zeros(len(counts), dtype=np.int64)
     has = counts > 0
     out[has] = vals.view(np.int64)[(np.cumsum(counts) - counts)[has]]
@@ -374,23 +396,25 @@ def encode_positional_rows(
     }
 
 
-def decode_positional_rows(id_bufs, count_bufs):
+def decode_positional_rows(id_col, count_col):
     """(doc_ids, counts, n_docs) of a batch of positional rows, uint64,
-    each column decoded in one pass: n_docs[i] docs in row i."""
-    gaps, n_docs = varbyte_decode_rows(id_bufs)
-    counts, _ = varbyte_decode_rows(count_bufs)
+    each column — a (buffer, row_ends) pair — decoded in one pass: n_docs[i]
+    docs in row i."""
+    gaps, n_docs = varbyte_decode_rows(*id_col)
+    counts, _ = varbyte_decode_rows(*count_col)
     return _segmented_cumsum(gaps, np.cumsum(n_docs) - n_docs), counts, n_docs
 
 
-def position_extents(pos_bufs, pos_offs, n_docs: np.ndarray):
-    """(all rows' pos_bin bytes joined as a uint8 array, each doc's run
-    start in it, each run's length) for a batch of positional rows, docs in
-    row order — a run ends where the next one starts."""
-    lens = np.fromiter(map(len, pos_bufs), dtype=np.int64, count=len(pos_bufs))
-    joined = np.frombuffer(b"".join(pos_bufs), dtype=np.uint8)
+def position_extents(pos_col, pos_offs, n_docs: np.ndarray):
+    """(the rows' pos_bin buffer as a uint8 array, each doc's run start in
+    it, each run's length) for a batch of positional rows — pos_col a
+    (buffer, row_ends) pair, pos_offs each row's per-doc offsets — docs in
+    row order; a run ends where the next one starts."""
+    buf, row_ends = pos_col
+    b = np.frombuffer(buf, dtype=np.uint8)
     starts = np.concatenate([np.asarray(o, dtype=np.int64) for o in pos_offs])
-    starts += np.repeat(np.cumsum(lens) - lens, n_docs)
-    return joined, starts, np.diff(starts, append=joined.size)
+    starts += np.repeat(row_ends - np.diff(row_ends, prepend=0), n_docs)
+    return b, starts, np.diff(starts, append=b.size)
 
 
 def decode_positions(buf, counts: np.ndarray) -> np.ndarray:

@@ -13,6 +13,8 @@ import json
 import os
 from dataclasses import dataclass
 
+from olaf_spark.lru import LruCache, file_sig, lru_get
+
 # The single tokenizer contract, shared verbatim by:
 #  - the Spark DataFrame tokenizer  (split(lower(text), TOKEN_SPLIT_RE))
 #  - the pandas-UDF tokenizer       (re.split on the same pattern)
@@ -20,6 +22,10 @@ from dataclasses import dataclass
 #  - the DuckDB oracle SQL          (regexp_split_to_array(lower(text), ...))
 # Changing it invalidates every index, golden file and oracle query at once.
 TOKEN_SPLIT_RE = "[^a-z0-9]+"
+
+#: parsed configs by path (EngineConfig.load)
+_CFG_CACHE = LruCache()
+_CFG_CACHE_MAX = 256
 
 
 @dataclass(frozen=True)
@@ -70,8 +76,18 @@ class EngineConfig:
 
     @classmethod
     def load(cls, index_dir: str) -> "EngineConfig":
-        with open(os.path.join(index_dir, "engine_config.json")) as f:
-            return cls.from_json(f.read())
+        """The config stored with an index, parsed once per file version:
+        cached under the file's lru.file_sig (save republishes via tmp +
+        rename, so a rebuilt index is seen at once). Serving entry points
+        that take no cfg (phrase_topk, batch_phrase_topk) call this per
+        query. The instance is frozen, so sharing it is safe."""
+        path = os.path.join(index_dir, "engine_config.json")
+
+        def load():
+            with open(path) as f:
+                return cls.from_json(f.read())
+
+        return lru_get(_CFG_CACHE, path, file_sig(path), load, _CFG_CACHE_MAX)
 
     def check_compatible(self, other: "EngineConfig") -> None:
         """Query-time config must equal build-time config (olaf_config.h:46-50)."""

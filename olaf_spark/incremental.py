@@ -46,7 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from olaf_spark import wand
-from olaf_spark.codec import decode_posting_rows, first_doc_ids
+from olaf_spark.codec import decode_posting_rows, first_doc_ids, joined
 from olaf_spark.config import EngineConfig
 from olaf_spark.indexer import (
     POSTINGS_SCHEMA,
@@ -210,12 +210,10 @@ class IndexGroup:
         qids = sorted(set(int(t) for t in term_ids))
         out: dict[int, int] = {}
         for p in self.parts:
-            tbl = term_rows(os.path.join(p.index_dir, "postings"), qids, self.cfg.n_segments)
-            if not tbl.num_rows:
-                continue
-            # dict() dedupes a part's chunk rows before the cross-part sum
-            part_df = dict(zip(tbl["term_id"].to_pylist(), tbl["df"].to_pylist()))
-            for tid, df in part_df.items():
+            rows = term_rows(os.path.join(p.index_dir, "postings"), qids, self.cfg.n_segments)
+            # one df per term and part: a part's chunk rows repeat it
+            tids, first = np.unique(rows.column("term_id"), return_index=True)
+            for tid, df in zip(tids.tolist(), rows.column("df")[first].tolist()):
                 out[tid] = out.get(tid, 0) + df
         return out
 
@@ -249,26 +247,25 @@ class IndexGroup:
         appends share the sorted B+tree read path with queries
         (src/olaf_db.c:309-311).
         """
+        pr = wand._fetch_posting_rows(self, query_text)
+        order = np.arange(len(pr)) if pr.order is None else pr.order
+        # RawTermPostings' field order: buffers, offs tables, block metadata
+        views = [
+            pr.rows.row_values(c)
+            for c in ("doc_ids_bin", "tfs_bin", "doc_lens_bin", "id_offs", "tf_offs",
+                      "dl_offs", "block_lasts", "block_maxes")
+        ]
+        w_g = [idf_fn(self.n_docs, df) for df in pr.df.tolist()]
         out: list[RawTermPostings] = []
-        for term, pi, df, r in wand._fetch_posting_rows(self, query_text):
+        for i, t, pi, part_df in zip(
+            order.tolist(), pr.term.tolist(), pr.part.tolist(),
+            pr.rows.column("df")[order].tolist(),
+        ):
             part = self.parts[pi]
-            w_g = idf_fn(self.n_docs, df)
-            w_p = idf_fn(part.n_docs, int(r["df"]))
-            scale = (w_g / w_p) * max(1.0, self.avgdl / part.avgdl)
-            out.append(
-                RawTermPostings(
-                    term=term,
-                    idf=w_g,
-                    id_buf=bytes(r["doc_ids_bin"]),
-                    tf_buf=bytes(r["tfs_bin"]),
-                    dl_buf=bytes(r["doc_lens_bin"]),
-                    id_offs=np.asarray(r["id_offs"], dtype=np.int64),
-                    tf_offs=np.asarray(r["tf_offs"], dtype=np.int64),
-                    dl_offs=np.asarray(r["dl_offs"], dtype=np.int64),
-                    block_lasts=np.asarray(r["block_lasts"], dtype=np.int64),
-                    block_maxes=np.asarray(r["block_maxes"], dtype=np.float64) * scale,
-                )
-            )
+            w_p = idf_fn(part.n_docs, part_df)
+            scale = (w_g[t] / w_p) * max(1.0, self.avgdl / part.avgdl)
+            *row, maxes = (v[i] for v in views)
+            out.append(RawTermPostings(pr.terms[t], w_g[t], *row, maxes * scale))
         return out
 
     def topk(
@@ -332,7 +329,7 @@ def _make_compact_fn(
 
     def _merge_parts(pdf: pd.DataFrame, row_term: np.ndarray):
         ids, tfs, dls, counts = decode_posting_rows(
-            pdf["doc_ids_bin"], pdf["tfs_bin"], pdf["doc_lens_bin"], cfg.block_size
+            *(joined(pdf[c]) for c in ("doc_ids_bin", "tfs_bin", "doc_lens_bin")), cfg.block_size
         )
         term = np.repeat(row_term, counts)
         order = np.lexsort((ids.view(np.int64), term))
@@ -351,7 +348,7 @@ def _first_doc_udf():
 
     @pandas_udf("long")
     def first_doc(bufs: pd.Series) -> pd.Series:
-        return pd.Series(first_doc_ids(bufs))
+        return pd.Series(first_doc_ids(joined(bufs)))
 
     return first_doc
 

@@ -54,9 +54,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from olaf_spark.codec import bm25_contrib, decode_posting_rows, encode_posting_rows
+from olaf_spark.codec import bm25_contrib, decode_posting_rows, encode_posting_rows, joined
 from olaf_spark.config import EngineConfig
-from olaf_spark.lru import file_sig, lru_get
+from olaf_spark.lru import LruCache, file_sig, lru_get
 from olaf_spark.scorer import idf
 
 SEGMENT_SCHEMA = (
@@ -458,7 +458,7 @@ def _concat_runs(pdf: pd.DataFrame, row_term: np.ndarray):
     concatenation in bucket order IS the merge (Olaf's store_cached bulk
     load / sorted B+tree insert)."""
     ids, tfs, dls, counts = decode_posting_rows(
-        pdf["doc_ids_bin"], pdf["tfs_bin"], pdf["doc_lens_bin"]
+        joined(pdf["doc_ids_bin"]), joined(pdf["tfs_bin"]), joined(pdf["doc_lens_bin"])
     )
     return ids, tfs, dls, np.repeat(row_term, counts)
 
@@ -563,7 +563,7 @@ def locked_mutate_id_set(path: str, fn) -> set[int]:
         mfs.publish_json(path, srt)
         # parquet SIDECAR — the scale read path: a sorted int64 column loads
         # without parsing a JSON list of millions of ints (read_tombstones_arr
-        # prefers it when at least as fresh as the json). Written INSIDE the
+        # prefers it when strictly newer than the json). Written INSIDE the
         # lock, AFTER the json (which stays the compat source of truth), via
         # the same whole-file commit.
         import numpy as _np
@@ -581,16 +581,25 @@ def locked_mutate_id_set(path: str, fn) -> set[int]:
 
 def read_tombstones_arr(index_dir: str) -> np.ndarray:
     """Sorted int64 tombstone array for an index dir (empty array when no
-    deletes). Prefers the parquet sidecar when it is at least as fresh as
-    tombstones.json (a json written by hand or an older engine wins over a
-    stale sidecar); both forms are written sorted."""
+    deletes). Prefers the parquet sidecar only when its mtime is strictly
+    newer than tombstones.json's: locked_mutate_id_set writes the sidecar
+    after it publishes the json, so a newer sidecar holds this json's set
+    (or a later one), while one that merely ties the json's mtime may be
+    the previous commit's — timestamps are coarse, and a reader can land
+    between the two commits — so a tie reads the json. A json written by
+    hand or by an older engine likewise wins over a stale sidecar; both
+    forms are written sorted."""
     jp = os.path.join(index_dir, "tombstones.json")
     pp = os.path.join(index_dir, "tombstones.parquet")
     try:
-        j_m = os.path.getmtime(jp)
+        j_m = os.stat(jp).st_mtime_ns
     except FileNotFoundError:
         return np.empty(0, dtype=np.int64)
-    if os.path.exists(pp) and os.path.getmtime(pp) >= j_m:
+    try:
+        side_newer = os.stat(pp).st_mtime_ns > j_m
+    except FileNotFoundError:
+        side_newer = False
+    if side_newer:
         import pyarrow.parquet as pq
 
         return pq.read_table(pp)["doc_id"].to_numpy().astype(np.int64)
@@ -603,7 +612,7 @@ def read_tombstones_arr(index_dir: str) -> np.ndarray:
 
 #: per-dir tombstone arrays, LRU-bounded (a long-lived driver touching many
 #: index dirs must not accumulate dead arrays)
-_TS_CACHE: dict[str, tuple] = {}
+_TS_CACHE = LruCache()
 _TS_CACHE_MAX = 256
 
 
@@ -613,17 +622,18 @@ def union_tombstones_arr(dirs: list[str]) -> np.ndarray | None:
 
     Each dir's array (read_tombstones_arr: the parquet sidecar, no JSON
     parse of a large delete set) is cached under the (inode, mtime_ns)
-    signatures of both tombstone files (olaf_spark.lru): every mutate
-    commits via tmp + rename, so a delete committed through ANY handle is
-    seen by the next read, and an unchanged delete set is not re-read per
-    query. Every query then filters with one searchsorted
-    (tombstone_keep_mask)."""
+    signature of tombstones.json alone (olaf_spark.lru) — one stat per dir
+    per query. That key is sound: locked_mutate_id_set republishes the
+    json (tmp + rename: a new inode) BEFORE it writes the sidecar, and
+    read_tombstones_arr reads the sidecar only when it is strictly newer
+    than the json, so a cached array holds the keyed json's set or a later
+    one — never an earlier one, and a later one changes the key of the
+    next read. A delete committed through ANY handle, or a json edited by
+    hand, is seen by the next read. Every query then filters with one
+    searchsorted (tombstone_keep_mask)."""
     arrs = []
     for d in dirs:
-        sig = tuple(
-            file_sig(os.path.join(d, name))
-            for name in ("tombstones.json", "tombstones.parquet")
-        )
+        sig = file_sig(os.path.join(d, "tombstones.json"))
         arr = lru_get(_TS_CACHE, d, sig, lambda: read_tombstones_arr(d), _TS_CACHE_MAX)
         if arr.size:
             arrs.append(arr)

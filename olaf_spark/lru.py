@@ -1,9 +1,11 @@
 """Tiny signature-keyed LRU for the serving caches.
 
-One idiom, one place (bigram heads and metas, similarity scans, and the
-term-row reader's listings, footers and row groups): pop (recency bump),
-compare the freshness signature, reload on miss, reinsert, evict oldest
-past the bound — an entry count, or a summed weight such as bytes.
+One idiom, one place (bigram heads, side-index markers, engine configs,
+tombstone arrays, similarity scans, and the term-row reader's listings,
+footers and row groups): pop (recency bump), compare the freshness
+signature, reload on miss, reinsert, evict oldest past the bound — an
+entry count, or a summed weight such as bytes, kept as a running total
+(LruCache).
 
 The freshness signature is (st_ino, st_mtime_ns) of the backing file or
 directory (`file_sig`), NOT a bare float mtime: every commit in this
@@ -36,8 +38,20 @@ def file_sig(path: str) -> tuple[int, int] | None:
     return (st.st_ino, st.st_mtime_ns)
 
 
+class LruCache(dict):
+    """An lru_get cache: key -> (sig, value, weight), in recency order, plus
+    `total`, the running sum of the weights — so a miss costs O(1), not a
+    re-sum of every entry."""
+
+    total = 0
+
+    def clear(self) -> None:
+        super().clear()
+        self.total = 0
+
+
 def lru_get(
-    cache: dict, key, sig, load: Callable, max_size: int = 256,
+    cache: LruCache, key, sig, load: Callable, max_size: int = 256,
     weight: Callable | None = None,
 ):
     """cache[key] holds (sig, value, weight); calls load() when absent or
@@ -50,14 +64,16 @@ def lru_get(
     not retained.
     """
     hit = cache.pop(key, None)
-    if hit is not None and hit[0] == sig:
-        cache[key] = hit
-        return hit[1]
+    if hit is not None:
+        if hit[0] == sig:
+            cache[key] = hit
+            return hit[1]
+        cache.total -= hit[2]
     value = load()
     w = 1 if weight is None else weight(value)
     if w <= max_size:
         cache[key] = (sig, value, w)
-        total = len(cache) if weight is None else sum(e[2] for e in cache.values())
-        while total > max_size:
-            total -= cache.pop(next(iter(cache)))[2]
+        cache.total += w
+        while cache.total > max_size:
+            cache.total -= cache.pop(next(iter(cache)))[2]
     return value

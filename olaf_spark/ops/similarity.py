@@ -20,6 +20,8 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from olaf_spark.lru import LruCache, file_sig, lru_get
+
 
 def _cluster_vec_write(v: DataFrame, part_col: str) -> DataFrame:
     """Cluster a vector frame on its hive-partition column before a
@@ -524,14 +526,12 @@ def undelete_vectors(index_dir: str, vec_ids: list) -> None:
 #: replaces files INSIDE an existing partition dir — every mutation in
 #: this module goes through overwrite-the-root or a fresh delta dir).
 #: LRU-bounded like the bigram metadata caches.
-_SCAN_DF_CACHE: dict[tuple, DataFrame] = {}
+_SCAN_DF_CACHE = LruCache()
 _SCAN_DF_CACHE_MAX = 256
 
 
 def _read_vectors(spark, d: str) -> DataFrame:
     import os
-
-    from olaf_spark.lru import file_sig, lru_get
 
     path = os.path.join(d, "vectors")
     sig = file_sig(path)

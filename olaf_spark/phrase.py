@@ -100,6 +100,7 @@ from olaf_spark.codec import (
     decode_doc_positions,
     decode_positional_rows,
     encode_positional_rows,
+    joined,
     position_extents,
     position_runs,
     ranges_index,
@@ -124,7 +125,7 @@ from olaf_spark.indexer import (
     tombstone_keep_mask,
     union_tombstones_arr,
 )
-from olaf_spark.lru import file_sig, lru_get
+from olaf_spark.lru import LruCache, file_sig, lru_get
 from olaf_spark.metafs import get_metafs
 from olaf_spark.termrows import term_rows
 from olaf_spark.tokenize import tokenize_py, tokens_df
@@ -180,7 +181,7 @@ SIDE_KINDS = (POSITIONS, BIGRAMS)
 
 #: parsed markers keyed by path, fresh under lru.file_sig — the serving
 #: gates run on every phrase query and must not re-open json per part
-_META_CACHE: dict[str, tuple] = {}
+_META_CACHE = LruCache()
 _META_CACHE_MAX = 1024
 
 
@@ -442,8 +443,10 @@ def _make_fold_positions(lo: int, width: int, n_buckets: int, bts):
         row_new = np.empty(len(pdf), dtype=bool)
         row_new[0] = True
         row_new[1:] = terms[1:] != terms[:-1]
-        ids, counts, n_docs = decode_positional_rows(pdf["doc_ids_bin"], pdf["pos_counts_bin"])
-        runs, starts, lens = position_extents(pdf["pos_bin"], pdf["pos_offs"], n_docs)
+        ids, counts, n_docs = decode_positional_rows(
+            joined(pdf["doc_ids_bin"]), joined(pdf["pos_counts_bin"])
+        )
+        runs, starts, lens = position_extents(joined(pdf["pos_bin"]), pdf["pos_offs"], n_docs)
         term = np.repeat(np.cumsum(row_new) - 1, n_docs)
         ids = ids.view(np.int64)
         order = np.lexsort((ids, term))
@@ -645,11 +648,12 @@ def append_sides(
             )
 
 
-def _decoded_rows(id_bufs, count_bufs, pos_bufs, pos_offs) -> list[dict]:
+def _decoded_rows(id_col, count_col, pos_bufs, pos_offs) -> list[dict]:
     """One dict per positional row — doc ids and counts DECODED (one batch
-    decode for all rows), positions RAW (buffer + int64 per-doc offsets) —
-    the input of the lazy candidate decode (_phrase_tfs)."""
-    ids, counts, n_docs = decode_positional_rows(id_bufs, count_bufs)
+    decode for all rows; id_col and count_col are codec (buffer, row_ends)
+    pairs), positions RAW (each row's buffer + int64 per-doc offsets) — the
+    input of the lazy candidate decode (_phrase_tfs)."""
+    ids, counts, n_docs = decode_positional_rows(id_col, count_col)
     ids, counts = ids.view(np.int64), counts.astype(np.int64)
     ends = np.cumsum(n_docs)
     return [
@@ -662,22 +666,20 @@ def _decoded_rows(id_bufs, count_bufs, pos_bufs, pos_offs) -> list[dict]:
 
 def _fetch_term_rows(root: str, term_ids: list[int], n_segments: int) -> dict[int, list[dict]]:
     """term_id -> decoded-header rows (_decoded_rows) of <root> (positions
-    or bigrams, read through the cached term rows, termrows.term_rows)."""
-    tbl = term_rows(root, term_ids, n_segments)
-    if not tbl.num_rows:
+    or bigrams), read through the cached term rows (termrows.term_rows):
+    the headers decode straight from the cached columns, and each row's
+    positions and pos_offs are views of the cached buffers."""
+    rows = term_rows(root, term_ids, n_segments)
+    if not len(rows):
         return {}
-    rows = _decoded_rows(
-        tbl["doc_ids_bin"].to_pylist(),
-        tbl["pos_counts_bin"].to_pylist(),
-        tbl["pos_bin"].to_pylist(),
-        # arrow-native access: a head term's pos_offs holds one long per doc
-        # (hundreds of thousands) — .values.to_numpy() is a buffer view,
-        # where a to_pylist() round-trip built million-element Python lists
-        # per query (measured ~2x on head-term phrases)
-        [o.values.to_numpy().astype(np.int64) for o in tbl["pos_offs"]],
+    decoded = _decoded_rows(
+        rows.values("doc_ids_bin"),
+        rows.values("pos_counts_bin"),
+        rows.row_values("pos_bin"),
+        rows.row_values("pos_offs"),
     )
     per: dict[int, list[dict]] = {}
-    for tid, row in zip(tbl["term_id"].to_pylist(), rows):
+    for tid, row in zip(rows.column("term_id").tolist(), decoded):
         per.setdefault(tid, []).append(row)
     return per
 
@@ -762,32 +764,15 @@ def phrase_topk(
     not a post-filter.
     """
     cfg = cfg or EngineConfig.load(index_dir)
-
-    # group serving: every live delta must carry its own positions (phrase
-    # answers need no cross-part statistics, so the union of part rows IS
-    # the group index; a delta without positions would silently vanish
-    # from phrase results — refuse instead)
-    from olaf_spark.incremental import _delta_dirs
-
-    part_dirs = [index_dir] + _delta_dirs(index_dir)
-    for d in part_dirs:
-        require_meta(d, POSITIONS)
     qterms = tokenize_py(phrase, cfg)  # ORDER MATTERS — not deduped/sorted
+    # an empty phrase still needs positions, but is answered before the
+    # bigram gate can refuse it
+    part_dirs, heads = _serving_gate(
+        index_dir, use_bigrams if qterms else False, co_locate=False
+    )
     if not qterms:
         return []
     tids = [term_id_py(t) for t in qterms]
-
-    heads = None
-    if use_bigrams is not False:
-        from olaf_spark.bigram import group_heads
-
-        heads = group_heads(part_dirs)
-        if use_bigrams is True and heads is None:
-            raise ValueError(
-                "use_bigrams=True but the group cannot serve from bigrams "
-                "(a part lacks them, or head sets differ across parts) — "
-                f"run build_bigrams on {part_dirs}"
-            )
 
     units = phrase_units(qterms, tids, heads)
     single_ids = sorted({key[1] for key, _ in units if key[0] == "s"})
@@ -1055,9 +1040,7 @@ def _make_phrase_fanout(bsubs):
         # subscription map flattened ONCE per task into CSR-style arrays:
         # sorted term_ids + per-term (offset, len) into flat qid/ppos — the
         # per-row fan-out is then a searchsorted + repeat + one gather
-        # (no Python loop over rows; each subscribed term has >= 1 entry,
-        # so every gathered range is non-empty as codec.ranges_index
-        # requires)
+        # (no Python loop over rows)
         subs = bsubs.value[0]
         items = sorted(subs.items())
         sub_tids = np.asarray([t for t, _ in items], dtype=np.int64)
@@ -1122,8 +1105,8 @@ def _make_phrase_verify(bsubs):
         #                      pair unit covers two adjacent positions)
         data: dict[int, list[dict]] = {}
         rows = _decoded_rows(
-            pdf["doc_ids_bin"],
-            pdf["pos_counts_bin"],
+            joined(pdf["doc_ids_bin"]),
+            joined(pdf["pos_counts_bin"]),
             pdf["pos_bin"],
             [np.asarray(o, dtype=np.int64) for o in pdf["pos_offs"]],
         )
@@ -1162,6 +1145,46 @@ def _bigram_buckets_match(d: str) -> bool:
         return all(bm[k] == pm[k] for k in ("lo", "width", "n_buckets"))
     except (KeyError, TypeError):
         return False
+
+
+def _serving_gate(
+    index_dir: str, use_bigrams: bool | None, co_locate: bool
+) -> tuple[list[str], np.ndarray | None]:
+    """The phrase serving gate of phrase_topk and batch_phrase_topk: (the
+    group's part dirs, the bigram head set to cover phrases with, or None).
+
+    Every part must carry positions (require_meta): phrase answers need no
+    cross-part statistics, so the union of part rows IS the group index,
+    and a delta without positions would silently vanish from phrase
+    results — refuse instead. use_bigrams: None = heads when every part
+    carries bigrams under one head set (bigram.group_heads), else None;
+    False = None, heads never read; True = require them (ValueError).
+    co_locate (the batch path): pair rows must also bucket like the
+    positional rows (_bigram_buckets_match), because the (query, part,
+    bucket) exchange key co-locates a doc's single AND pair rows only
+    then — they do when built over the same docs with the same n_buckets,
+    but a mismatched rebuild must degrade here, not silently split a doc's
+    units across two verify groups."""
+    from olaf_spark.incremental import _delta_dirs
+
+    part_dirs = [index_dir] + _delta_dirs(index_dir)
+    for d in part_dirs:
+        require_meta(d, POSITIONS)
+    if use_bigrams is False:
+        return part_dirs, None
+    from olaf_spark.bigram import group_heads
+
+    heads = group_heads(part_dirs)
+    if heads is not None and co_locate and not all(map(_bigram_buckets_match, part_dirs)):
+        heads = None
+    if use_bigrams is True and heads is None:
+        raise ValueError(
+            "use_bigrams=True but the group cannot serve from bigrams: a part "
+            "lacks them, head sets differ across parts, or (batch) the bigram "
+            "bucketing does not match the positional bucketing, so pair units "
+            f"cannot co-locate — run build_bigrams on {part_dirs}"
+        )
+    return part_dirs, heads
 
 
 def batch_phrase_topk(
@@ -1207,34 +1230,8 @@ def batch_phrase_topk(
     """
     from pyspark.sql import Window
 
-    from olaf_spark.incremental import _delta_dirs
-
     cfg = cfg or EngineConfig.load(base_dir)
-    part_dirs = [base_dir] + _delta_dirs(base_dir)
-    for d in part_dirs:
-        require_meta(d, POSITIONS)
-
-    heads = None
-    if use_bigrams is not False:
-        from olaf_spark.bigram import group_heads
-
-        heads = group_heads(part_dirs)
-        # the (query, part, bucket) exchange key co-locates a doc's single
-        # AND pair rows only when both side indexes bucket identically —
-        # they do when built over the same docs with the same n_buckets
-        # (the shared contract), but a mismatched rebuild must degrade
-        # here, not silently split a doc's units across two verify groups
-        if heads is not None and not all(
-            _bigram_buckets_match(d) for d in part_dirs
-        ):
-            heads = None
-        if use_bigrams is True and heads is None:
-            raise ValueError(
-                "use_bigrams=True but the group cannot serve pair units "
-                "(a part lacks bigrams, head sets differ, or the bigram "
-                "bucketing does not match the positional bucketing) — "
-                f"run build_bigrams on {part_dirs}"
-            )
+    part_dirs, heads = _serving_gate(base_dir, use_bigrams, co_locate=True)
 
     subs: dict[int, list[tuple[int, int]]] = {}
     pair_keys: set[int] = set()

@@ -3,23 +3,49 @@
 Every serving read asks a tb-partitioned parquet root the same question,
 "the rows of these term_ids": BM25 posting rows (wand._fetch_posting_rows),
 the batch path's group dfs (IndexGroup.term_dfs), and phrase position and
-bigram pair rows (phrase.phrase_topk). Olaf opens its LMDB store once and
-each query is then a key search in B+tree pages already in memory
-(olaf_runner.c:34-39); term_rows is that shape over parquet:
+bigram pair rows (phrase._fetch_term_rows). Olaf opens its LMDB store once
+and each query is then a key search in fixed-layout B+tree pages already
+in memory (olaf_runner.c:34-39); term_rows is that shape over parquet:
 
   listing   root/tb=<tb>/ is listed once per directory signature
   footer    each file's per-row-group term_id min/max is read once
   rows      a row group that can hold a query id is decoded once, stable-
-            sorted by term_id, and answers every later lookup with
-            np.searchsorted
+            sorted by term_id, and kept as flat numpy columns (RowGroup);
+            a lookup is np.searchsorted and answers with row RANGES
+
+Cached row-group layout (Arrow's own, taken zero-copy from the decoded
+row group; every column is indexed by the row's position in term_id
+order):
+
+  column kind                       kept as
+  fixed width (term_id, df, chunk,  one numpy array
+    bucket, n_docs)
+  binary (doc_ids_bin, tfs_bin,     (uint8 buffer, int64 offsets): row i
+    doc_lens_bin, pos_bin, ...)     is buffer[offsets[i]:offsets[i + 1]]
+  list (id_offs, block_lasts,       (flat values, int64 offsets), alike
+    block_maxes, pos_offs, ...)
+
+A term's rows in a row group are one contiguous run, so its bytes are one
+slice of a buffer and its row ends one slice of the offsets. term_rows
+returns TermRows, the runs of one lookup; consumers read a column as one
+array (column), one (values, row_ends) pair for the batch decoders of
+codec.py (values: zero-copy when the lookup is one run, else the runs'
+slices concatenated), or per-row views (row_values). No row's payload is
+copied into Python objects (dicts, bytes or lists).
 
 Every entry is keyed by path and checked against lru.file_sig (inode,
 mtime_ns). Rebuilds, appends and compactions replace files and directories
 wholesale, so a stale listing, footer or row group is never served.
-Decoded row groups share one byte-bounded LRU (_ROWS_CACHE_MAX_BYTES); a
-row group larger than the bound is served but not retained. No Spark job,
-no format change: the rows are exactly those a pyarrow dataset filter on
-(tb, term_id) returns, minus the hive `tb` column.
+Decoded row groups share one byte-bounded LRU (_ROWS_CACHE_MAX_BYTES). An
+entry's weight is the bytes of every buffer it keeps alive (the whole
+Arrow buffers its columns view, plus its own offset and id arrays), not
+the bytes its rows span; a row group heavier than the bound is served but
+not retained. Slice lifetime: the arrays a lookup returns view the cached
+buffers, so they stay valid after their row group is evicted — the buffer
+then lives on, outside the bound, until the last view of it is dropped;
+serving holds them for one query. No Spark job, no format change: the rows
+are exactly those a pyarrow dataset filter on (tb, term_id) returns, minus
+the hive `tb` column.
 """
 
 from __future__ import annotations
@@ -30,12 +56,12 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from olaf_spark.lru import file_sig, lru_get
+from olaf_spark.lru import LruCache, file_sig, lru_get
 
-_LIST_CACHE: dict = {}
-_FOOTER_CACHE: dict = {}
+_LIST_CACHE = LruCache()
+_FOOTER_CACHE = LruCache()
 _META_CACHE_MAX = 4096  # entries, for listings and footers alike
-_ROWS_CACHE: dict = {}
+_ROWS_CACHE = LruCache()
 _ROWS_CACHE_MAX_BYTES = 256 << 20
 
 
@@ -81,38 +107,138 @@ def _footer(path: str, sig) -> tuple[np.ndarray, np.ndarray]:
     return lru_get(_FOOTER_CACHE, path, sig, load, _META_CACHE_MAX)
 
 
-def _row_group(path: str, sig, i: int) -> tuple[np.ndarray, pa.Table]:
-    """(sorted term_ids, rows stable-sorted by term_id) of one row group."""
+def _buffer(buf: pa.Buffer | None, dtype) -> np.ndarray:
+    return np.empty(0, dtype=dtype) if buf is None else np.frombuffer(buf, dtype=dtype)
 
-    def load():
-        tbl = pq.ParquetFile(path).read_row_group(i)
+
+def _flat(arr: pa.Array) -> np.ndarray:
+    """Zero-copy numpy view of a fixed-width array's values."""
+    values = _buffer(arr.buffers()[1], arr.type.to_pandas_dtype())
+    return values[arr.offset : arr.offset + len(arr)]
+
+
+def _column(arr: pa.Array):
+    """A fixed-width column as one array; a binary or list column as
+    (values, int64 offsets), row i at values[offsets[i]:offsets[i + 1]]."""
+    if pa.types.is_binary(arr.type):
+        offs = _buffer(arr.buffers()[1], np.int32)[arr.offset : arr.offset + len(arr) + 1]
+        return _buffer(arr.buffers()[2], np.uint8), offs.astype(np.int64)
+    if pa.types.is_list(arr.type):
+        return _flat(arr.values), arr.offsets.to_numpy().astype(np.int64)
+    return _flat(arr)
+
+
+def _kept_bytes(arrays) -> int:
+    """Bytes of every distinct buffer the arrays keep alive: a view counts
+    its whole base (an Arrow buffer, or its parent), not its own span."""
+    roots = {}
+    for a in arrays:
+        r = a
+        while isinstance(r, np.ndarray) and r.base is not None:
+            r = r.base
+        while getattr(r, "parent", None) is not None:
+            r = r.parent
+        roots[id(r)] = r
+    return sum(r.nbytes if isinstance(r, np.ndarray) else r.size for r in roots.values())
+
+
+class RowGroup:
+    """One cached row group: rows stable-sorted by term_id, every column
+    flat (_column), `nbytes` the buffers it keeps alive."""
+
+    __slots__ = ("term_id", "cols", "nbytes")
+
+    def __init__(self, tbl: pa.Table):
         ids = tbl["term_id"].to_numpy()
         order = np.argsort(ids, kind="stable")
-        return ids[order], tbl.take(order)
+        if (order[1:] < order[:-1]).any():
+            tbl = tbl.take(order)
+        self.cols = {
+            name: _column(tbl[name].combine_chunks()) for name in tbl.column_names
+        }
+        arrays = [a for c in self.cols.values() for a in (c if isinstance(c, tuple) else (c,))]
+        for a in arrays:  # lookups hand out views: none may write the cache
+            a.flags.writeable = False
+        self.term_id = self.cols["term_id"]
+        self.nbytes = _kept_bytes(arrays)
 
+
+def _row_group(path: str, sig, i: int) -> RowGroup:
     return lru_get(
-        _ROWS_CACHE, (path, i), sig, load, _ROWS_CACHE_MAX_BYTES,
-        weight=lambda v: v[0].nbytes + v[1].nbytes,
+        _ROWS_CACHE, (path, i), sig,
+        lambda: RowGroup(pq.ParquetFile(path).read_row_group(i)),
+        _ROWS_CACHE_MAX_BYTES, weight=lambda rg: rg.nbytes,
     )
 
 
-def term_rows(root: str, term_ids: list[int], n_segments: int) -> pa.Table:
+class TermRows:
+    """The rows of a lookup: runs (row group, first row, end row) of cached
+    columns, in run order. `a + b` chains two lookups (no copy)."""
+
+    __slots__ = ("runs",)
+
+    def __init__(self, runs: list[tuple[RowGroup, int, int]]):
+        self.runs = runs
+
+    def __len__(self) -> int:
+        return sum(b - a for _, a, b in self.runs)
+
+    def __add__(self, other: "TermRows") -> "TermRows":
+        return TermRows(self.runs + other.runs)
+
+    def column(self, name: str) -> np.ndarray:
+        """A fixed-width column of every row."""
+        parts = [rg.cols[name][a:b] for rg, a, b in self.runs]
+        if len(parts) == 1:
+            return parts[0]
+        return np.concatenate(parts) if parts else np.empty(0, dtype=np.int64)
+
+    def values(self, name: str) -> tuple[np.ndarray, np.ndarray]:
+        """A binary or list column of every row as (values, row_ends) —
+        codec's batch layout; zero-copy when the lookup is one run."""
+        vals, ends, base = [], [], 0
+        for rg, a, b in self.runs:
+            v, offs = rg.cols[name]
+            lo, hi = int(offs[a]), int(offs[b])
+            vals.append(v[lo:hi])
+            ends.append(offs[a + 1 : b + 1] + (base - lo))
+            base += hi - lo
+        if len(vals) == 1:
+            return vals[0], ends[0]
+        if not vals:
+            return np.empty(0, dtype=np.uint8), np.empty(0, dtype=np.int64)
+        return np.concatenate(vals), np.concatenate(ends)
+
+    def row_values(self, name: str) -> list[np.ndarray]:
+        """A binary or list column as one view per row (no copy) — for the
+        lazy decoders that touch only part of a row."""
+        out = []
+        for rg, a, b in self.runs:
+            v, offs = rg.cols[name]
+            o = offs[a : b + 1].tolist()
+            out += [v[lo:hi] for lo, hi in zip(o[:-1], o[1:])]
+        return out
+
+
+def term_rows(root: str, term_ids, n_segments: int) -> TermRows:
     """Every row of <root>/tb=<id % n_segments>/ whose term_id is in
     term_ids. Rows come in (tb, file, row group, term_id) order and keep
-    their file order within a term; a table with no columns when nothing
-    matches (a rowless or absent root lists no files)."""
-    qids = np.unique(np.asarray(term_ids, dtype=np.int64))
-    pieces = []
-    for tb in np.unique(qids % n_segments).tolist():
-        ids_tb = qids[qids % n_segments == tb]
+    their file order within a term; no rows when nothing matches (a
+    rowless or absent root lists no files)."""
+    by_tb: dict[int, list[int]] = {}
+    for q in sorted({int(t) for t in term_ids}):
+        by_tb.setdefault(q % n_segments, []).append(q)
+    runs = []
+    for tb, ids in sorted(by_tb.items()):
+        ids_tb = np.array(ids, dtype=np.int64)
         for path in _files(os.path.join(root, f"tb={tb}")):
             sig = file_sig(path)
             lo, hi = _footer(path, sig)
-            may_hold = np.searchsorted(ids_tb, lo) < np.searchsorted(ids_tb, hi, "right")
-            for i in np.flatnonzero(may_hold).tolist():
-                ids, tbl = _row_group(path, sig, i)
-                a = np.searchsorted(ids, ids_tb)
-                b = np.searchsorted(ids, ids_tb, "right")
-                # a term's rows are one contiguous run: zero-copy slices
-                pieces += [tbl.slice(x, y - x) for x, y in zip(a.tolist(), b.tolist()) if y > x]
-    return pa.concat_tables(pieces) if pieces else pa.table({})
+            may_hold = ids_tb.searchsorted(lo) < ids_tb.searchsorted(hi, "right")
+            for i in may_hold.nonzero()[0].tolist():
+                rg = _row_group(path, sig, i)
+                a = rg.term_id.searchsorted(ids_tb).tolist()
+                b = rg.term_id.searchsorted(ids_tb, "right").tolist()
+                # a term's rows are one contiguous run
+                runs += [(rg, x, y) for x, y in zip(a, b) if y > x]
+    return TermRows(runs)

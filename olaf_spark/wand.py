@@ -12,13 +12,24 @@ skip whole blocks that cannot beat the current k-th best score.
 Every index is served as an IndexGroup (incremental.py); a single index is
 the one-part group, so there is one read path:
 
-  _fetch_posting_rows          the query terms' posting rows from every part,
-                               read through the process-wide term-row cache
-                               (termrows.term_rows: each parquet row group is
-                               decoded once, a lookup is a searchsorted)
-  load_term_postings           eager decode, scored with group-global stats
+  _fetch_posting_rows          the query terms' posting rows from every part
+                               as row ranges of the process-wide term-row
+                               cache (termrows.term_rows: each parquet row
+                               group is decoded once into flat numpy
+                               columns, a lookup is a searchsorted), plus
+                               each row's term, part and the group df
+  load_term_postings           eager decode: ONE batch decode straight from
+                               the cached (buffer, row_ends) columns, one
+                               gather into (term, part, chunk) order, scored
+                               with group-global stats
   IndexGroup.load_term_postings_raw
-                               undecoded rows with group-valid block maxes
+                               undecoded rows (views of the cached buffers)
+                               with group-valid block maxes; blockmax_topk
+                               slices the surviving block runs as views and
+                               decodes them with one concatenate per column
+
+No row's payload is copied into Python objects on the way (no per-row
+dicts, lists or bytes): the cost of a query is its numpy passes.
 
 and one method table (SERVING_METHODS), shared by query_index and
 IndexGroup.topk:
@@ -52,11 +63,11 @@ from dataclasses import dataclass
 import numpy as np
 from pyspark.sql import SparkSession
 
-from olaf_spark.codec import bm25_contrib, decode_posting_rows
+from olaf_spark.codec import bm25_contrib, decode_posting_rows, ranges_index
 from olaf_spark.config import EngineConfig
 from olaf_spark.indexer import tombstone_keep_mask
 from olaf_spark.scorer import idf as idf_fn
-from olaf_spark.termrows import term_rows
+from olaf_spark.termrows import TermRows, term_rows
 from olaf_spark.tokenize import tokenize_py
 
 #: serving methods of query_index and IndexGroup.topk; "wand" is an alias
@@ -79,17 +90,35 @@ def _as_group(index):
     return index if isinstance(index, IndexGroup) else IndexGroup([index])
 
 
-def _fetch_posting_rows(group, query_text: str) -> list[tuple[str, int, int, dict]]:
-    """(term, part index, group df, row) for every posting row of the
-    query's distinct terms in every part, sorted by (term, part, chunk).
+@dataclass
+class PostingRows:
+    """The query's posting rows of every part (_fetch_posting_rows),
+    columnar. `rows` holds them part by part in term_rows order; `order`
+    permutes that into (term, part, chunk) order — None when it already
+    is — and the per-row arrays below are in that order."""
+
+    terms: list[str]         # the query's terms that have rows, ascending
+    df: np.ndarray           # group df per term
+    rows: TermRows           # every part's rows, fetch order
+    order: np.ndarray | None
+    term: np.ndarray         # per row: index into terms
+    part: np.ndarray         # per row: part index
+
+    def __len__(self) -> int:
+        return self.term.size
+
+
+def _fetch_posting_rows(group, query_text: str) -> PostingRows:
+    """The posting rows of the query's distinct terms in every part, to be
+    read in (term, part, chunk) order.
 
     The serving path does NOT launch a Spark job: like Olaf's query opening
     LMDB read-only once (olaf_runner.c:34-39), every part's postings are
     read through the process-wide term-row cache (termrows.term_rows): the
-    query's tb dirs are listed once, a row group is decoded once, and a
-    lookup is an np.searchsorted over its sorted term_ids.
+    query's tb dirs are listed once, a row group is decoded once into flat
+    columns, and a lookup is an np.searchsorted over its sorted term_ids.
 
-    term is the query's term STRING, so accumulation order stays
+    Terms are the query's term STRINGS, so accumulation order stays
     ascending-by-term-string (the oracle's order — bit-identical float
     sums); on a term_id collision the lexicographically first string labels
     the merged postings. Group df sums each part's df (every chunk row of a
@@ -97,25 +126,40 @@ def _fetch_posting_rows(group, query_text: str) -> list[tuple[str, int, int, dic
     """
     from olaf_spark.indexer import term_id_py
 
-    qterms = sorted(set(tokenize_py(query_text, group.cfg)))
-    if not qterms:
-        return []
     id_to_term: dict[int, str] = {}
-    for t in qterms:
+    for t in sorted(set(tokenize_py(query_text, group.cfg))):
         id_to_term.setdefault(term_id_py(t), t)
-    rows = [
-        (id_to_term[r["term_id"]], pi, r)
-        for pi, p in enumerate(group.parts)
-        for r in term_rows(
+    rows, n_rows = TermRows([]), []
+    for p in group.parts:
+        r = term_rows(
             os.path.join(p.index_dir, "postings"), list(id_to_term), group.cfg.n_segments
-        ).to_pylist()
-    ]
-    part_df = {(term, pi): int(r["df"]) for term, pi, r in rows}
-    df: dict[str, int] = {}
-    for (term, _), v in part_df.items():
-        df[term] = df.get(term, 0) + v
-    rows.sort(key=lambda x: (x[0], x[1], x[2]["chunk"]))
-    return [(term, pi, df[term], r) for term, pi, r in rows]
+        )
+        rows += r
+        n_rows.append(len(r))
+    # each row's term: the rank of its label among the labels, by string
+    labels = sorted(id_to_term.values())
+    rank = {t: i for i, t in enumerate(labels)}
+    qids = np.array(sorted(id_to_term), dtype=np.int64)
+    rank_of = np.array([rank[id_to_term[q]] for q in qids.tolist()], dtype=np.int64)
+    term = rank_of[qids.searchsorted(rows.column("term_id"))]
+    part = np.repeat(np.arange(len(n_rows)), n_rows)
+    order = np.lexsort((rows.column("chunk"), part, term))  # stable
+    term, part, part_df = term[order], part[order], rows.column("df")[order]
+    # rows now run term by term: number the terms that have rows, and sum
+    # one df per (term, part) — a part's chunk rows repeat its df
+    new_term = np.ones(term.size, dtype=bool)
+    np.not_equal(term[1:], term[:-1], out=new_term[1:])
+    first = new_term.copy()
+    first[1:] |= part[1:] != part[:-1]
+    starts = new_term.nonzero()[0]
+    return PostingRows(
+        terms=[labels[i] for i in term[starts].tolist()],
+        df=np.add.reduceat(part_df * first, starts) if starts.size else starts,
+        rows=rows,
+        order=None if (order[1:] > order[:-1]).all() else order,
+        term=new_term.cumsum() - 1,
+        part=part,
+    )
 
 
 def load_term_postings(
@@ -127,34 +171,36 @@ def load_term_postings(
 
     `index` is an Index or an IndexGroup. `spark` is accepted for API
     symmetry but unused — see _fetch_posting_rows. Every row of the query
-    is decoded and scored in ONE batch call. A doc lives in exactly one
-    (part, chunk) per term, so per-doc accumulation order is still term
-    order for every scorer.
+    is decoded and scored in ONE batch call, straight from the cached
+    columns; the postings are then put in (term, part, chunk) row order
+    with one gather. A doc lives in exactly one (part, chunk) per term, so
+    per-doc accumulation order is still term order for every scorer.
     """
     group = _as_group(index)
     cfg = group.cfg
-    entries = _fetch_posting_rows(group, query_text)
-    if not entries:
+    pr = _fetch_posting_rows(group, query_text)
+    if not len(pr):
         return []
     ids, tfs, dls, counts = decode_posting_rows(
-        *([e[3][c] for e in entries] for c in ("doc_ids_bin", "tfs_bin", "doc_lens_bin")),
+        *(pr.rows.values(c) for c in ("doc_ids_bin", "tfs_bin", "doc_lens_bin")),
         cfg.block_size,
     )
+    if pr.order is not None:
+        take = ranges_index((np.cumsum(counts) - counts)[pr.order], counts[pr.order])
+        ids, tfs, dls, counts = ids[take], tfs[take], dls[take], counts[pr.order]
     ids = ids.view(np.int64)
-    terms = list(dict.fromkeys(e[0] for e in entries))  # rows arrive term-sorted
-    ordinal = {t: i for i, t in enumerate(terms)}
-    idf = {e[0]: idf_fn(group.n_docs, e[2]) for e in entries}  # group df per term
-    term = np.repeat([ordinal[e[0]] for e in entries], counts)
-    w = np.repeat([idf[e[0]] for e in entries], counts)
+    idf = np.array([idf_fn(group.n_docs, d) for d in pr.df.tolist()])  # group df
+    term = np.repeat(pr.term, counts)
+    w = idf[term]
     ts_arr = group.tombstones_arr()
     if ts_arr is not None:
         keep = tombstone_keep_mask(ids, ts_arr)  # merge-on-read delete
         ids, tfs, dls, term, w = ids[keep], tfs[keep], dls[keep], term[keep], w[keep]
     scores = bm25_contrib(w, tfs, dls, cfg.k1, cfg.b, group.avgdl)
-    bounds = np.searchsorted(term, np.arange(len(terms) + 1)).tolist()
+    bounds = np.searchsorted(term, np.arange(len(pr.terms) + 1)).tolist()
     return [
-        TermPostings(term=t, idf=idf[t], doc_ids=ids[lo:hi], scores=scores[lo:hi])
-        for t, lo, hi in zip(terms, bounds[:-1], bounds[1:])
+        TermPostings(term=t, idf=float(idf[i]), doc_ids=ids[lo:hi], scores=scores[lo:hi])
+        for i, (t, lo, hi) in enumerate(zip(pr.terms, bounds[:-1], bounds[1:]))
     ]
 
 
@@ -232,15 +278,17 @@ def exhaustive_topk(lists: list[TermPostings], k: int) -> list[tuple[int, float]
 class RawTermPostings:
     """Undecoded posting row + block seek tables — the lazy-decode handle:
     the block-max scorer touches only the bytes of blocks that survive
-    pruning (blocks decode independently; codec.py's posting row).
+    pruning (blocks decode independently; codec.py's posting row). The
+    buffers and arrays are views of the cached row group
+    (termrows.TermRows.row_values), except block_maxes, rescaled per group.
     """
 
     term: str
     idf: float
-    id_buf: bytes
-    tf_buf: bytes
-    dl_buf: bytes
-    id_offs: np.ndarray
+    id_buf: np.ndarray        # uint8
+    tf_buf: np.ndarray
+    dl_buf: np.ndarray
+    id_offs: np.ndarray       # int64 byte offset of each block in its buffer
     tf_offs: np.ndarray
     dl_offs: np.ndarray
     block_lasts: np.ndarray   # int64 last doc_id per block
@@ -256,9 +304,14 @@ def _decode_blocks(
 
     Blocks are sliced as CONTIGUOUS RUNS, not one slice per block: a slice
     starting at a block boundary decodes like a whole blocked row, so every
-    run is one more row of the batch decode. Per-block Python calls were
-    the difference between a win and a 5x loss — measured at 400k docs.
+    run is one more row of the batch decode. A run is a view of the cached
+    buffer; one concatenate per column makes the batch's (buffer, row_ends).
+    Per-block Python calls were the difference between a win and a 5x
+    loss — measured at 400k docs.
     """
+    if not items:
+        empty = np.empty(0, dtype=np.int64)
+        return empty, np.empty(0, dtype=np.float64), empty
     cols: tuple[list, list, list] = ([], [], [])
     w_runs: list[float] = []
     n_runs: list[int] = []
@@ -276,9 +329,11 @@ def _decode_blocks(
             out.extend(buf[o[b0]:o[b1]] for b0, b1 in runs)
         w_runs += [rp.idf] * len(runs)
         n_runs.append(len(runs))
-    ids, tfs, dls, counts = decode_posting_rows(*cols, cfg.block_size)
+    ids, tfs, dls, counts = decode_posting_rows(
+        *((np.concatenate(c), np.cumsum([v.size for v in c])) for c in cols), cfg.block_size
+    )
     scores = bm25_contrib(np.repeat(w_runs, counts), tfs, dls, cfg.k1, cfg.b, avgdl)
-    per_item = np.add.reduceat(counts, np.cumsum(n_runs) - n_runs) if n_runs else counts
+    per_item = np.add.reduceat(counts, np.cumsum(n_runs) - n_runs)
     return ids.view(np.int64), scores, per_item
 
 

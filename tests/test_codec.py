@@ -24,6 +24,7 @@ from olaf_spark.codec import (
     encode_positional_rows,
     encode_posting_rows,
     first_doc_ids,
+    joined,
     position_extents,
     position_runs,
     ranges_index,
@@ -87,9 +88,29 @@ def test_column_decode_matches_per_buffer_decode():
     values up to 2^63 must split back into the per-buffer answers."""
     vals = [rng.integers(0, 2**63, int(n), dtype=np.uint64) for n in rng.integers(0, 40, 200)]
     vals[0] = vals[7] = np.empty(0, dtype=np.uint64)
-    got, counts = varbyte_decode_rows([varbyte_encode(v) for v in vals])
+    got, counts = varbyte_decode_rows(*joined([varbyte_encode(v) for v in vals]))
     assert counts.tolist() == [v.size for v in vals]
     assert np.array_equal(got, np.concatenate(vals))
+
+
+def test_column_decode_reads_a_buffer_slice_with_row_ends():
+    """The (buffer, row_ends) entry reads a run of rows in place: a view
+    into a larger buffer, row ends relative to the view — the cached
+    termrows column layout — decodes like the same rows joined."""
+    vals = [rng.integers(0, 2**40, int(n), dtype=np.uint64) for n in rng.integers(0, 20, 50)]
+    buf, ends = joined([varbyte_encode(v) for v in vals])
+    a, b = 7, 31
+    lo = int(ends[a - 1])
+    got, counts = varbyte_decode_rows(buf[lo : ends[b - 1]], ends[a:b] - lo)
+    assert counts.tolist() == [v.size for v in vals[a:b]]
+    assert np.array_equal(got, np.concatenate(vals[a:b]))
+
+
+def test_ranges_index_skips_empty_ranges():
+    starts = np.array([0, 5, 10, 20, 30], dtype=np.int64)
+    lens = np.array([2, 0, 3, 0, 1], dtype=np.int64)
+    assert ranges_index(starts, lens).tolist() == [0, 1, 10, 11, 12, 30]
+    assert ranges_index(starts[:2], np.zeros(2, dtype=np.int64)).size == 0
 
 
 def test_block_starts_for_groups_with_empty_groups():
@@ -152,7 +173,8 @@ def test_posting_rows_match_per_row_reference(seed, block_size):
         assert got[name] == [w[name] for w in want], name
 
     d_ids, d_tfs, d_dls, counts = decode_posting_rows(
-        got["doc_ids_bin"], got["tfs_bin"], got["doc_lens_bin"], block_size
+        joined(got["doc_ids_bin"]), joined(got["tfs_bin"]), joined(got["doc_lens_bin"]),
+        block_size,
     )
     assert counts.tolist() == sizes.tolist()
     assert d_ids.tolist() == ids.tolist()
@@ -160,14 +182,14 @@ def test_posting_rows_match_per_row_reference(seed, block_size):
     for w, r in zip(want, rows):
         assert ref.decode_posting_row(w, block_size) == tuple(a.tolist() for a in r[:3])
 
-    assert first_doc_ids(got["doc_ids_bin"]).tolist() == [
+    assert first_doc_ids(joined(got["doc_ids_bin"])).tolist() == [
         int(r[0][0]) if r[0].size else 0 for r in rows
     ]
     if block_size:
         i = int(np.argmax(sizes))
         cut = got["id_offs"][i][1]
         tail, _, _, _ = decode_posting_rows(
-            [got["doc_ids_bin"][i][cut:]], [b""], [b""], block_size
+            joined([got["doc_ids_bin"][i][cut:]]), joined([b""]), joined([b""]), block_size
         )
         assert tail.tolist() == rows[i][0][block_size:].tolist()
 
@@ -200,10 +222,12 @@ def test_positional_rows_match_per_row_reference(seed):
     for w, (docs, p) in zip(want, rows):
         assert ref.decode_positional_row(w) == (docs.tolist(), [x.tolist() for x in p])
 
-    d_ids, d_counts, d_n = decode_positional_rows(got["doc_ids_bin"], got["pos_counts_bin"])
+    d_ids, d_counts, d_n = decode_positional_rows(
+        joined(got["doc_ids_bin"]), joined(got["pos_counts_bin"])
+    )
     assert d_n.tolist() == n_docs.tolist()
     assert d_ids.tolist() == doc_ids.tolist() and d_counts.tolist() == counts.tolist()
-    runs, starts, lens = position_extents(got["pos_bin"], got["pos_offs"], d_n)
+    runs, starts, lens = position_extents(joined(got["pos_bin"]), got["pos_offs"], d_n)
     assert decode_positions(runs[ranges_index(starts, lens)], counts).tolist() == pos.tolist()
 
     for i, (docs, p) in enumerate(rows):

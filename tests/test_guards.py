@@ -78,13 +78,20 @@ def test_phrase_is_the_only_owner_of_the_side_index_files():
     assert hits == []
 
 
-def test_benchmark_layer_targets_resolve(monkeypatch):
+def test_benchmark_layer_targets_resolve(spark, monkeypatch, tmp_path):
     """perfbench's traced run wraps each (owner, attr) of
     workloads.layer_targets() by getattr; a rename would silently drop a
     layer from the trace. Every target must resolve, and the private fetch
-    boundary (wrapped only while it exists) must be among them."""
+    boundary (wrapped only while it exists) must be among them. Each
+    wrapped serving target is then called on a tiny index and its result
+    fed to its on_result callback, so a changed return type cannot break
+    the traced run either."""
     monkeypatch.syspath_prepend(str(ROOT / "perfbench"))
     import workloads
+
+    from olaf_spark import incremental, wand
+    from olaf_spark.config import EngineConfig
+    from olaf_spark.indexer import build_index
 
     targets = workloads.layer_targets()
     for owner, attr, span, _spark_call, _on_result in targets:
@@ -94,3 +101,41 @@ def test_benchmark_layer_targets_resolve(monkeypatch):
         "wand.load_term_postings", "wand.score", "wand.blockmax_topk",
         "incremental.group_fetch", "wand.fetch",
     } <= spans
+
+    docs = [(i, f"w{i % 3} w{i % 5} common") for i in range(1, 41)]
+    pages = spark.createDataFrame(docs, "doc_id long, text string")
+    ix = build_index(spark, pages, str(tmp_path / "ix"), EngineConfig(block_size=4), n_buckets=2)
+    group = incremental.IndexGroup([ix])
+    q = "w1 w2 common"
+    serving = {
+        "wand.fetch": lambda: wand._fetch_posting_rows(group, q),
+        "wand.load_term_postings": lambda: wand.load_term_postings(None, ix, q),
+        "wand.score": lambda: wand.vectorized_topk(wand.load_term_postings(None, ix, q), 5),
+        "incremental.group_fetch": lambda: group.load_term_postings_raw(q),
+        "wand.blockmax_topk": lambda: incremental.blockmax_topk(
+            group.load_term_postings_raw(q), 5, ix.cfg, ix.avgdl
+        ),
+        "indexer.build_index": lambda: ix,
+    }
+
+    class Counts:
+        def __init__(self):
+            self.counts: dict[str, float] = {}
+
+        def count(self, name, n=1):
+            self.counts[name] = self.counts.get(name, 0) + n
+
+    tr = Counts()
+    called = set()
+    for _owner, _attr, span, _spark_call, on_result in targets:
+        if span in serving:
+            res = serving[span]()
+            called.add(span)
+            if on_result is not None:
+                on_result(tr, res)
+    assert called == set(serving)
+    assert tr.counts["wand.rows_fetched"] >= 3  # every term has a row
+    assert tr.counts["wand.postings_decoded"] == sum(
+        t in text.split() for _, text in docs for t in q.split()
+    )
+    assert tr.counts["indexer.postings"] > 0

@@ -242,6 +242,58 @@ def test_compact_splits_head_terms_doc_range_parallel(spark, halves, tmp_path):
         assert_identical(query_index(spark, compacted, q, K, method="wand"), want)
 
 
+def test_chunked_terms_across_parts_serve_exactly(spark, halves, tmp_path):
+    """Several chunk rows per term in BOTH parts (max_row_postings=16), and
+    tombstones on both parts: for every serving method IndexGroup.topk
+    equals the oracle over the live docs; so do the exhaustive referent
+    over load_term_postings and blockmax over load_term_postings_raw; and
+    fully decoding the raw rows gives back load_term_postings' postings,
+    array for array (same order, same scores)."""
+    import os
+
+    import numpy as np
+
+    from olaf_spark.indexer import term_id_py, tombstone_keep_mask
+    from olaf_spark.termrows import term_rows
+    from olaf_spark.wand import SERVING_METHODS, _decode_blocks, blockmax_topk, exhaustive_topk
+
+    pages, a, b = halves
+    cfg = EngineConfig(block_size=8, max_row_postings=16)
+    base = str(tmp_path / "chunked")
+    build_index(spark, a, base, cfg, n_buckets=4)
+    append_index(spark, b, base, n_buckets=4)
+    group = IndexGroup.load(base)
+    for p in group.parts:  # the head term spans several rows in each part
+        rows = term_rows(
+            os.path.join(p.index_dir, "postings"), [term_id_py("w2")], cfg.n_segments
+        )
+        assert len(rows) > 2 and len(set(rows.column("chunk").tolist())) > 2
+    oracle = OracleIndex.build([(r["doc_id"], r["text"]) for r in pages.collect()], cfg)
+    hits = group.topk("w2 w3", 40, method="vectorized")
+    group.parts[0].delete_docs([d for d, _ in hits if d % 2 == 0][:3])
+    group.parts[1].delete_docs([d for d, _ in hits if d % 2 == 1][:3])
+    dead = group.tombstones()
+    assert len(dead) == 6
+    ts = group.tombstones_arr()
+    for q in [*QUERIES, "w2", "w2 w3", "w3 w2 w5"]:
+        want = [(d, s) for d, s in oracle.topk(q, N_DOCS) if d not in dead][:K]
+        for m in SERVING_METHODS:
+            assert_identical(group.topk(q, K, method=m), want)
+        lists = group.load_term_postings(q)
+        raw = group.load_term_postings_raw(q)
+        assert_identical(exhaustive_topk(lists, K), want)
+        assert_identical(blockmax_topk(raw, K, cfg, group.avgdl, ts), want)
+        assert [tp.term for tp in lists] == list(dict.fromkeys(rp.term for rp in raw))
+        for tp in lists:
+            ids, scores, _ = _decode_blocks(
+                [(rp, np.arange(rp.block_lasts.size)) for rp in raw if rp.term == tp.term],
+                cfg, group.avgdl,
+            )
+            keep = tombstone_keep_mask(ids, ts)
+            assert ids[keep].tolist() == tp.doc_ids.tolist()
+            assert scores[keep].tolist() == tp.scores.tolist()
+
+
 def test_compact_resume_after_kill(spark, grouped, tmp_path):
     """Kill-after-first-range restart: the committed tb-range is skipped on
     resume (lineage says so), partial state is invisible (no stats.json ->

@@ -360,6 +360,66 @@ def test_long_lived_group_sees_deletes_from_another_handle(spark, built, tmp_pat
     assert {m: group.topk(q, 10, method=m) for m in SERVING_METHODS} == before
 
 
+def test_hand_edited_tombstones_json_over_stale_sidecar_is_served(spark, built, tmp_path):
+    """The tombstone cache is keyed on tombstones.json alone. A json written
+    by hand after an engine delete (its parquet sidecar now stale) is what
+    the next query of every serving method honours: the hand-edit restores
+    doc 97 and deletes another hit, though the sidecar still says [97]."""
+    import json
+    import time
+
+    from olaf_spark.indexer import union_tombstones_arr
+
+    _, _, index = built
+    d = str(tmp_path / "hand_ix")
+    shutil.copytree(index.index_dir, d)
+    group = IndexGroup([Index.load(d)])
+    q = "needle97 w2"
+    before = group.topk(q, 10, method="vectorized")
+    victim = next(doc for doc, _ in before if doc != 97)
+    group.delete_docs([97])
+    assert union_tombstones_arr([d]).tolist() == [97]  # cached
+    path = os.path.join(d, "tombstones.json")
+    with open(path, "w") as f:
+        json.dump([victim], f)
+    t = time.time() + 10  # newer than the sidecar, whatever the clock grain
+    os.utime(path, (t, t))
+    assert union_tombstones_arr([d]).tolist() == [victim]
+    for m in SERVING_METHODS:
+        hits = [doc for doc, _ in group.topk(q, 10, method=m)]
+        assert 97 in hits and victim not in hits, m
+
+
+def test_tombstone_read_between_json_and_sidecar_commits(tmp_path):
+    """A reader that lands between locked_mutate_id_set's two commits — the
+    new json published, the sidecar still the previous set's, both on the
+    same mtime tick (timestamps are coarse) — is served the json's set, and
+    the array cached under that json still matches it once the new sidecar
+    commits (the cache key, the json's signature, does not change then)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from olaf_spark.indexer import locked_mutate_id_set, union_tombstones_arr
+    from olaf_spark.metafs import get_metafs
+
+    mfs, d = get_metafs(), str(tmp_path)
+    jp = os.path.join(d, "tombstones.json")
+    pp = os.path.join(d, "tombstones.parquet")
+    locked_mutate_id_set(jp, lambda ts: ts | {5})
+    assert union_tombstones_arr([d]).tolist() == [5]
+    # first commit of the next mutate: the json, on the old sidecar's tick
+    mfs.publish_json(jp, [5, 7])
+    tick = os.stat(pp).st_mtime_ns
+    os.utime(jp, ns=(tick, tick))
+    assert union_tombstones_arr([d]).tolist() == [5, 7]
+    # second commit: the sidecar of the same set
+    tmp = mfs.tmp_path(pp)
+    pq.write_table(pa.table({"doc_id": np.array([5, 7], dtype=np.int64)}), tmp)
+    mfs.commit_file(tmp, pp)
+    assert union_tombstones_arr([d]).tolist() == [5, 7]
+
+
 def test_tombstone_commits_atomic_and_union_survives(spark, built, tmp_path):
     """Two independent writers (separate Index handles with stale caches)
     deleting different docs: the commit protocol re-reads disk before the

@@ -265,9 +265,10 @@ def test_positions_usable_never_raises(tmp_path):
 
 def test_warm_group_phrase_parses_no_json(spark, positional, tmp_path, monkeypatch):
     """The side-index gates read every part's marker through phrase.py's
-    lru.file_sig-keyed cache: a warm phrase_topk over a two-part group
-    (base + delta, each with positions and bigrams) calls json.load zero
-    times."""
+    lru.file_sig-keyed cache, and the engine config comes from
+    EngineConfig.load's: a warm phrase_topk over a two-part group (base +
+    delta, each with positions and bigrams) calls json.load and json.loads
+    zero times."""
     import json
 
     from olaf_spark.bigram import build_bigrams, group_heads
@@ -289,15 +290,42 @@ def test_warm_group_phrase_parses_no_json(spark, positional, tmp_path, monkeypat
     want = phrase_topk(base, "w2 w3", k=10)
     assert want
     calls = []
-    real_load = json.load
 
-    def counting_load(*args, **kwargs):
-        calls.append(args)
-        return real_load(*args, **kwargs)
+    def counting(real):
+        def counted(*args, **kwargs):
+            calls.append(args)
+            return real(*args, **kwargs)
 
-    monkeypatch.setattr(json, "load", counting_load)
+        return counted
+
+    monkeypatch.setattr(json, "load", counting(json.load))
+    monkeypatch.setattr(json, "loads", counting(json.loads))
     assert phrase_topk(base, "w2 w3", k=10) == want
     assert calls == []
+
+
+def test_rebuilt_index_config_is_seen_at_once(spark, positional, tmp_path):
+    """phrase_topk without a cfg reads engine_config.json through
+    EngineConfig.load's lru.file_sig-keyed cache: rebuilding the index in
+    place under another config (min_token_len=3, so "w2" and "w3" are no
+    longer terms) changes the very next answer."""
+    from olaf_spark.indexer import build_index
+
+    rows, _ = positional
+    pages = spark.createDataFrame(rows[:120], "doc_id long, text string")
+    d = str(tmp_path / "recfg")
+    q = "w2 w17 w3"
+    build_index(spark, pages, d, CFG, n_buckets=2)
+    build_positions(spark, pages, d, CFG, n_buckets=2)
+    assert EngineConfig.load(d) is EngineConfig.load(d) == CFG  # parsed once
+    before = phrase_topk(d, q, k=10)  # caches the config
+    cfg3 = EngineConfig(min_token_len=3)
+    build_index(spark, pages, d, cfg3, n_buckets=2)
+    build_positions(spark, pages, d, cfg3, n_buckets=2)
+    assert EngineConfig.load(d) == cfg3
+    got = phrase_topk(d, q, k=10)
+    assert got == phrase_topk(d, q, k=10, cfg=cfg3)  # the phrase is "w17" now
+    assert got and got != before
 
 
 def test_batch_phrase_min_tf(spark, positional):
@@ -497,10 +525,15 @@ def test_term_rows_match_dataset_filter(spark, positional, tmp_path):
     """termrows.term_rows returns exactly the rows a pyarrow dataset filter
     on (tb, term_id) returns, in the same per-term order, for postings,
     positions and bigram pairs — over tb dirs holding several files of
-    several row groups each, term_ids unsorted within a file."""
+    several row groups each, term_ids unsorted within a file. Every column
+    is read back from the cached columns: fixed-width ones whole, binary
+    and list ones as per-row views (row_values) and as one (values,
+    row_ends) pair (values), which must agree."""
     import glob
     import os
 
+    import numpy as np
+    import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.dataset as ds
     import pyarrow.parquet as pq
@@ -523,6 +556,25 @@ def test_term_rows_match_dataset_filter(spark, positional, tmp_path):
             out.setdefault(r["term_id"], []).append(r)
         return out
 
+    def as_table(rows, schema):
+        """The TermRows as a pyarrow table, column by column."""
+        cols = {}
+        for f in schema:
+            if f.name == "tb":
+                continue
+            if pa.types.is_binary(f.type) or pa.types.is_list(f.type):
+                views = rows.row_values(f.name)
+                vals, ends = rows.values(f.name)
+                assert ends.tolist() == np.cumsum([v.size for v in views]).tolist()
+                joined = np.concatenate(views) if views else vals[:0]
+                assert np.array_equal(vals, joined), f.name
+                cols[f.name] = [
+                    bytes(v) if pa.types.is_binary(f.type) else v.tolist() for v in views
+                ]
+            else:
+                cols[f.name] = rows.column(f.name).tolist()
+        return pa.table(cols)
+
     for kind in ("postings", "positions", "bigrams"):
         root = str(tmp_path / "split" / kind)
         _resplit_rows(os.path.join(d, kind), root)
@@ -538,8 +590,8 @@ def test_term_rows_match_dataset_filter(spark, positional, tmp_path):
                 filter=pc.field("tb").isin(tbs) & pc.field("term_id").isin(qids)
             )
             got = term_rows(root, qids, CFG.n_segments)
-            assert got.num_rows == want.num_rows, (kind, len(qids))
-            assert by_term(got) == by_term(want), (kind, len(qids))
+            assert len(got) == want.num_rows, (kind, len(qids))
+            assert by_term(as_table(got, want.schema)) == by_term(want), (kind, len(qids))
 
 
 def test_rebuilt_dirs_never_serve_stale_rows(spark, positional, tmp_path):
