@@ -59,11 +59,15 @@ from olaf_spark.indexer import (
     tombstone_keep_mask,
     union_tombstones_arr,
 )
-from olaf_spark.scorer import idf as idf_fn
 from olaf_spark.termrows import term_rows
-from olaf_spark.wand import SERVING_METHODS, RawTermPostings, TermPostings, blockmax_topk
+from olaf_spark.wand import SERVING_METHODS, RawPostingRows, TermPostings, blockmax_topk
 
 _DELTAS = "deltas"
+
+
+def _idf_arr(n_docs, df: np.ndarray) -> np.ndarray:
+    """scorer.idf over arrays — for block-max bounds only, never scores."""
+    return np.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
 
 
 def _delta_dirs(base_dir: str) -> list[str]:
@@ -222,12 +226,13 @@ class IndexGroup:
         group."""
         return wand.load_term_postings(None, self, query_text)
 
-    def load_term_postings_raw(self, query_text: str) -> list[RawTermPostings]:
+    def load_term_postings_raw(self, query_text: str) -> RawPostingRows:
         """UNDECODED posting rows with group-valid block-max bounds — the
-        lazy-decode input of the blockmax scorer. Between appends and
-        compaction, stored block_maxes were computed with PART-local stats
-        (w_p = idf over the part's N/df, A_p = the part's avgdl); the group
-        scores with w_g / A_g. Rescaling is cheap math, no rebuild:
+        lazy-decode input of the blockmax scorer (wand.RawPostingRows), one
+        rescale factor per row. Between appends and compaction, stored
+        block_maxes were computed with PART-local stats (w_p = idf over the
+        part's N/df, A_p = the part's avgdl); the group scores with w_g /
+        A_g. Rescaling is cheap math, no rebuild:
 
           contribution = idf * f(tf, dl; avgdl)   is linear in idf, and
           f(tf, dl; A_g) <= f(tf, dl; A_p) * max(1, A_g / A_p)
@@ -240,33 +245,18 @@ class IndexGroup:
         block-max scorer (wand.blockmax_topk) prunes the live group exactly
         like a compacted index. idf is strictly positive (ln(1 + x), x > 0),
         so the quotient is always defined. For one part the scale is exactly
-        (w/w) * max(1, A/A) = 1.0 (avgdl is total_tokens / n_docs in both),
-        so a single index keeps its stored bounds bit for bit. Exact scores
-        are still computed from raw tf/dl with group stats at decode time —
-        bounds only steer the pruning, never the score. Olaf analogue: live
-        appends share the sorted B+tree read path with queries
-        (src/olaf_db.c:309-311).
+        (w/w) * max(1, A/A) = 1.0 (avgdl is total_tokens / n_docs in both,
+        and both idfs come from the one _idf_arr), so a single index keeps
+        its stored bounds bit for bit. Exact scores are still computed from
+        raw tf/dl with group stats at decode time — bounds only steer the
+        pruning, never the score. Olaf analogue: live appends share the
+        sorted B+tree read path with queries (src/olaf_db.c:309-311).
         """
         pr = wand._fetch_posting_rows(self, query_text)
-        order = np.arange(len(pr)) if pr.order is None else pr.order
-        # RawTermPostings' field order: buffers, offs tables, block metadata
-        views = [
-            pr.rows.row_values(c)
-            for c in ("doc_ids_bin", "tfs_bin", "doc_lens_bin", "id_offs", "tf_offs",
-                      "dl_offs", "block_lasts", "block_maxes")
-        ]
-        w_g = [idf_fn(self.n_docs, df) for df in pr.df.tolist()]
-        out: list[RawTermPostings] = []
-        for i, t, pi, part_df in zip(
-            order.tolist(), pr.term.tolist(), pr.part.tolist(),
-            pr.rows.column("df")[order].tolist(),
-        ):
-            part = self.parts[pi]
-            w_p = idf_fn(part.n_docs, part_df)
-            scale = (w_g[t] / w_p) * max(1.0, self.avgdl / part.avgdl)
-            *row, maxes = (v[i] for v in views)
-            out.append(RawTermPostings(pr.terms[t], w_g[t], *row, maxes * scale))
-        return out
+        n_p = np.array([p.n_docs for p in self.parts])
+        a_p = np.array([p.avgdl for p in self.parts])
+        w_g, w_p = _idf_arr(self.n_docs, pr.df[pr.term]), _idf_arr(n_p[pr.part], pr.part_df)
+        return RawPostingRows(pr, (w_g / w_p) * np.maximum(1.0, self.avgdl / a_p[pr.part]))
 
     def topk(
         self,
@@ -281,9 +271,10 @@ class IndexGroup:
         the one-part group).
 
         method (wand.SERVING_METHODS): "blockmax" (default) or its alias
-        "wand": idf-rescaled block-max pruning + lazy decode — only blocks
-        that can beat theta are ever decoded, so the delta-phase read path
-        keeps its pruning exactly when the index is biggest.
+        "wand": under a min_score floor, idf-rescaled block-max pruning —
+        only block runs that can reach the floor are decoded, so the
+        delta-phase read path keeps its pruning exactly when the index is
+        biggest; with no floor, one decode of every row, as "vectorized".
         "vectorized": full decode, the exactness referent; "exhaustive":
         the term-at-a-time test referent.
         """

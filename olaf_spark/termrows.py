@@ -7,8 +7,8 @@ bigram pair rows (phrase._fetch_term_rows). Olaf opens its LMDB store once
 and each query is then a key search in fixed-layout B+tree pages already
 in memory (olaf_runner.c:34-39); term_rows is that shape over parquet:
 
-  listing   root/tb=<tb>/ is listed once per directory signature
-  footer    each file's per-row-group term_id min/max is read once
+  tb dir    root/tb=<tb>/ is listed and its footers' per-row-group
+            term_id min/max read once per dir signature (TbDir)
   rows      a row group that can hold a query id is decoded once, stable-
             sorted by term_id, and kept as flat numpy columns (RowGroup);
             a lookup is np.searchsorted and answers with row RANGES
@@ -34,9 +34,12 @@ slices concatenated), or per-row views (row_values). No row's payload is
 copied into Python objects (dicts, bytes or lists).
 
 Every entry is keyed by path and checked against lru.file_sig (inode,
-mtime_ns). Rebuilds, appends and compactions replace files and directories
-wholesale, so a stale listing, footer or row group is never served.
-Decoded row groups share one byte-bounded LRU (_ROWS_CACHE_MAX_BYTES). An
+mtime_ns): a tb dir against its own, a row group against its file's as
+the dir's listing saw it, so a warm lookup stats each queried tb dir once
+and no file. That is sound because no committed parquet file is rewritten
+in place: rebuilds, appends and compactions replace directories or add
+and rename files, all of which change the dir's signature, so a stale
+listing, footer or row group is never served. Decoded row groups share one byte-bounded LRU (_ROWS_CACHE_MAX_BYTES). An
 entry's weight is the bytes of every buffer it keeps alive (the whole
 Arrow buffers its columns view, plus its own offset and id arrays), not
 the bytes its rows span; a row group heavier than the bound is served but
@@ -58,53 +61,52 @@ import pyarrow.parquet as pq
 
 from olaf_spark.lru import LruCache, file_sig, lru_get
 
-_LIST_CACHE = LruCache()
-_FOOTER_CACHE = LruCache()
-_META_CACHE_MAX = 4096  # entries, for listings and footers alike
+_TB_CACHE = LruCache()
+_TB_CACHE_MAX = 4096  # entries
 _ROWS_CACHE = LruCache()
 _ROWS_CACHE_MAX_BYTES = 256 << 20
 
 
 def clear_caches() -> None:
-    """Drop every cached listing, footer and row group."""
-    for c in (_LIST_CACHE, _FOOTER_CACHE, _ROWS_CACHE):
+    """Drop every cached tb dir and row group."""
+    for c in (_TB_CACHE, _ROWS_CACHE):
         c.clear()
 
 
-def _files(tb_dir: str) -> list[str]:
-    """Committed parquet files of one tb dir, sorted; [] when it is absent.
-    Hidden and _-prefixed names (Spark _temporary attempts, _SUCCESS,
-    dot-tmp strays, .crc) are skipped, as the parquet readers skip them."""
+class TbDir:
+    """The row groups of one tb dir's committed parquet files in (file, row
+    group) order: (path, file signature, index) each, and term_id min/max
+    from the footer (the whole int64 range without statistics). Hidden
+    and _-prefixed names (Spark _temporary attempts, _SUCCESS, dot-tmp
+    strays, .crc) are skipped, as the parquet readers skip them."""
+
+    __slots__ = ("rgs", "lo", "hi")
+
+    def __init__(self, tb_dir: str):
+        self.rgs, lo, hi = [], [], []
+        for f in sorted(os.listdir(tb_dir)):
+            if not f.endswith(".parquet") or f.startswith(("_", ".")):
+                continue
+            path = os.path.join(tb_dir, f)
+            sig = file_sig(path)
+            md = pq.read_metadata(path)
+            j = md.schema.names.index("term_id")  # leaf column index
+            for i in range(md.num_row_groups):
+                st = md.row_group(i).column(j).statistics
+                has = st is not None and st.has_min_max
+                self.rgs.append((path, sig, i))
+                lo.append(st.min if has else np.iinfo(np.int64).min)
+                hi.append(st.max if has else np.iinfo(np.int64).max)
+        self.lo = np.array(lo, dtype=np.int64)
+        self.hi = np.array(hi, dtype=np.int64)
+
+
+def _tb_dir(tb_dir: str) -> TbDir | None:
+    """tb_dir's TbDir, cached under the dir's signature; None when absent."""
     sig = file_sig(tb_dir)
     if sig is None:
-        return []
-
-    def load() -> list[str]:
-        return sorted(
-            os.path.join(tb_dir, f)
-            for f in os.listdir(tb_dir)
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        )
-
-    return lru_get(_LIST_CACHE, tb_dir, sig, load, _META_CACHE_MAX)
-
-
-def _footer(path: str, sig) -> tuple[np.ndarray, np.ndarray]:
-    """(min, max) term_id per row group from the footer statistics; a row
-    group without statistics spans the whole int64 range."""
-
-    def load():
-        md = pq.read_metadata(path)
-        j = md.schema.names.index("term_id")  # leaf column index
-        lo = np.full(md.num_row_groups, np.iinfo(np.int64).min, dtype=np.int64)
-        hi = np.full(md.num_row_groups, np.iinfo(np.int64).max, dtype=np.int64)
-        for i in range(md.num_row_groups):
-            st = md.row_group(i).column(j).statistics
-            if st is not None and st.has_min_max:
-                lo[i], hi[i] = st.min, st.max
-        return lo, hi
-
-    return lru_get(_FOOTER_CACHE, path, sig, load, _META_CACHE_MAX)
+        return None
+    return lru_get(_TB_CACHE, tb_dir, sig, lambda: TbDir(tb_dir), _TB_CACHE_MAX)
 
 
 def _buffer(buf: pa.Buffer | None, dtype) -> np.ndarray:
@@ -230,15 +232,15 @@ def term_rows(root: str, term_ids, n_segments: int) -> TermRows:
         by_tb.setdefault(q % n_segments, []).append(q)
     runs = []
     for tb, ids in sorted(by_tb.items()):
+        t = _tb_dir(os.path.join(root, f"tb={tb}"))
+        if t is None:
+            continue
         ids_tb = np.array(ids, dtype=np.int64)
-        for path in _files(os.path.join(root, f"tb={tb}")):
-            sig = file_sig(path)
-            lo, hi = _footer(path, sig)
-            may_hold = ids_tb.searchsorted(lo) < ids_tb.searchsorted(hi, "right")
-            for i in may_hold.nonzero()[0].tolist():
-                rg = _row_group(path, sig, i)
-                a = rg.term_id.searchsorted(ids_tb).tolist()
-                b = rg.term_id.searchsorted(ids_tb, "right").tolist()
-                # a term's rows are one contiguous run
-                runs += [(rg, x, y) for x, y in zip(a, b) if y > x]
+        may_hold = ids_tb.searchsorted(t.lo) < ids_tb.searchsorted(t.hi, "right")
+        for j in may_hold.nonzero()[0].tolist():
+            rg = _row_group(*t.rgs[j])
+            a = rg.term_id.searchsorted(ids_tb).tolist()
+            b = rg.term_id.searchsorted(ids_tb, "right").tolist()
+            # a term's rows are one contiguous run
+            runs += [(rg, x, y) for x, y in zip(a, b) if y > x]
     return TermRows(runs)

@@ -14,19 +14,17 @@ the one-part group, so there is one read path:
 
   _fetch_posting_rows          the query terms' posting rows from every part
                                as row ranges of the process-wide term-row
-                               cache (termrows.term_rows: each parquet row
-                               group is decoded once into flat numpy
-                               columns, a lookup is a searchsorted), plus
-                               each row's term, part and the group df
-  load_term_postings           eager decode: ONE batch decode straight from
-                               the cached (buffer, row_ends) columns, one
-                               gather into (term, part, chunk) order, scored
-                               with group-global stats
+                               cache (termrows.term_rows), plus each row's
+                               term and part and each term's group df/idf
+  _score_rows                  ONE batch decode straight from the cached
+                               (buffer, row_ends) columns (block runs
+                               gathered byte-wise first), in (term, part,
+                               chunk) order, scored with group-global stats
+  load_term_postings           every row through _score_rows
   IndexGroup.load_term_postings_raw
-                               undecoded rows (views of the cached buffers)
-                               with group-valid block maxes; blockmax_topk
-                               slices the surviving block runs as views and
-                               decodes them with one concatenate per column
+                               the same rows undecoded (RawPostingRows), with
+                               flat block tables built only when a score
+                               floor reads them
 
 No row's payload is copied into Python objects on the way (no per-row
 dicts, lists or bytes): the cost of a query is its numpy passes.
@@ -35,19 +33,24 @@ and one method table (SERVING_METHODS), shared by query_index and
 IndexGroup.topk:
 
   vectorized   eager decode + one numpy accumulate (query_index default)
-  blockmax     block-max pruning in array operations + lazy block decode
-               (IndexGroup.topk default)
-  wand         alias of blockmax — block-max WAND, evaluated vectorized
+  blockmax     under a min_score floor, block-max pruning in numpy (a
+               cursor-per-list WAND loop measured ~16x slower) and only
+               surviving block runs decoded; with no floor, the vectorized
+               decode (IndexGroup.topk default)
+  wand         alias of blockmax
   exhaustive   term-at-a-time dict accumulate, the test referent
 
-There is no Python document-at-a-time loop: a cursor-per-list WAND loop
-measured ~16x slower than the vectorized scorer, so skipping happens in
-numpy (blockmax_topk).
+Block-max pruning needs a score floor known before any posting is read
+(Olaf's minMatchCount). A floor guessed per query from a decoded shortest
+row does not pay: on perfbench's `ingest` group (1,024 queries) it pruned
+1 of 7,229 blocks, and the call took 0.673 ms against 0.390 ms for
+vectorized; on a 50k-doc index it pruned 3% of blocks and was 7% slower
+at p50 (2.27 vs 2.11 ms).
 
 This runs DRIVER-SIDE and launches no Spark job — the p50-latency serving
 path; parts are read serially (a thread pool per query cost more than the
-cached reads it overlapped). The distributed
-DataFrame paths (scorer.py, batch.py) remain the bulk paths. All are
+cached reads it overlapped). The distributed DataFrame paths (scorer.py,
+batch.py) remain the bulk paths. All are
 rank-identical to the oracle.
 
 Determinism: a doc sums its term contributions in ascending term order,
@@ -59,6 +62,7 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass
+from functools import cached_property
 
 import numpy as np
 from pyspark.sql import SparkSession
@@ -73,6 +77,9 @@ from olaf_spark.tokenize import tokenize_py
 #: serving methods of query_index and IndexGroup.topk; "wand" is an alias
 #: of "blockmax"
 SERVING_METHODS = ("vectorized", "blockmax", "wand", "exhaustive")
+
+_POSTING_COLS = ("doc_ids_bin", "tfs_bin", "doc_lens_bin")
+_OFFS_COLS = ("id_offs", "tf_offs", "dl_offs")  # block byte offsets, same order
 
 
 @dataclass
@@ -99,10 +106,12 @@ class PostingRows:
 
     terms: list[str]         # the query's terms that have rows, ascending
     df: np.ndarray           # group df per term
+    idf: np.ndarray          # float64 group idf per term (scorer.idf)
     rows: TermRows           # every part's rows, fetch order
     order: np.ndarray | None
     term: np.ndarray         # per row: index into terms
     part: np.ndarray         # per row: part index
+    part_df: np.ndarray      # per row: its part's df of its term
 
     def __len__(self) -> int:
         return self.term.size
@@ -152,14 +161,47 @@ def _fetch_posting_rows(group, query_text: str) -> PostingRows:
     first = new_term.copy()
     first[1:] |= part[1:] != part[:-1]
     starts = new_term.nonzero()[0]
+    df = np.add.reduceat(part_df * first, starts) if starts.size else starts
     return PostingRows(
         terms=[labels[i] for i in term[starts].tolist()],
-        df=np.add.reduceat(part_df * first, starts) if starts.size else starts,
+        df=df,
+        idf=np.array([idf_fn(group.n_docs, d) for d in df.tolist()], dtype=np.float64),
         rows=rows,
         order=None if (order[1:] > order[:-1]).all() else order,
         term=new_term.cumsum() - 1,
         part=part,
+        part_df=part_df,
     )
+
+
+def _score_rows(
+    pr: PostingRows, cfg: EngineConfig, avgdl: float, spans=None
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(doc_ids int64, contributions float64, term per posting) of the
+    query's rows in (term, part, chunk) row order, decoded in ONE batch
+    call straight from the cached columns and scored with group stats.
+
+    spans = (lo, hi, term) decodes only the byte ranges [lo, hi) of the
+    doc_ids/tfs/doc_lens buffers instead ((3, n) arrays; each range starts
+    at a block boundary, so it decodes like a row of its own) and scores
+    each with its term: the ranges are gathered byte-wise first, so bytes
+    outside every range are never copied. Whole rows out of order are
+    put in order after the decode, with one gather of the postings.
+    """
+    cols = [pr.rows.values(c) for c in _POSTING_COLS]
+    term = pr.term
+    if spans is not None:
+        lo, hi, term = spans
+        cols = [
+            (buf[ranges_index(a, b - a)], np.cumsum(b - a))
+            for (buf, _), a, b in zip(cols, lo, hi)
+        ]
+    ids, tfs, dls, counts = decode_posting_rows(*cols, cfg.block_size)
+    if spans is None and pr.order is not None:
+        take = ranges_index((np.cumsum(counts) - counts)[pr.order], counts[pr.order])
+        ids, tfs, dls, counts = ids[take], tfs[take], dls[take], counts[pr.order]
+    term = np.repeat(term, counts)
+    return ids.view(np.int64), bm25_contrib(pr.idf[term], tfs, dls, cfg.k1, cfg.b, avgdl), term
 
 
 def load_term_postings(
@@ -171,35 +213,22 @@ def load_term_postings(
 
     `index` is an Index or an IndexGroup. `spark` is accepted for API
     symmetry but unused — see _fetch_posting_rows. Every row of the query
-    is decoded and scored in ONE batch call, straight from the cached
-    columns; the postings are then put in (term, part, chunk) row order
-    with one gather. A doc lives in exactly one (part, chunk) per term, so
-    per-doc accumulation order is still term order for every scorer.
+    is decoded and scored in ONE batch call (_score_rows). A doc lives in
+    exactly one (part, chunk) per term, so per-doc accumulation order is
+    still term order for every scorer.
     """
     group = _as_group(index)
-    cfg = group.cfg
     pr = _fetch_posting_rows(group, query_text)
     if not len(pr):
         return []
-    ids, tfs, dls, counts = decode_posting_rows(
-        *(pr.rows.values(c) for c in ("doc_ids_bin", "tfs_bin", "doc_lens_bin")),
-        cfg.block_size,
-    )
-    if pr.order is not None:
-        take = ranges_index((np.cumsum(counts) - counts)[pr.order], counts[pr.order])
-        ids, tfs, dls, counts = ids[take], tfs[take], dls[take], counts[pr.order]
-    ids = ids.view(np.int64)
-    idf = np.array([idf_fn(group.n_docs, d) for d in pr.df.tolist()])  # group df
-    term = np.repeat(pr.term, counts)
-    w = idf[term]
+    ids, scores, term = _score_rows(pr, group.cfg, group.avgdl)
     ts_arr = group.tombstones_arr()
     if ts_arr is not None:
         keep = tombstone_keep_mask(ids, ts_arr)  # merge-on-read delete
-        ids, tfs, dls, term, w = ids[keep], tfs[keep], dls[keep], term[keep], w[keep]
-    scores = bm25_contrib(w, tfs, dls, cfg.k1, cfg.b, group.avgdl)
+        ids, scores, term = ids[keep], scores[keep], term[keep]
     bounds = np.searchsorted(term, np.arange(len(pr.terms) + 1)).tolist()
     return [
-        TermPostings(term=t, idf=float(idf[i]), doc_ids=ids[lo:hi], scores=scores[lo:hi])
+        TermPostings(term=t, idf=float(pr.idf[i]), doc_ids=ids[lo:hi], scores=scores[lo:hi])
         for i, (t, lo, hi) in enumerate(zip(pr.terms, bounds[:-1], bounds[1:]))
     ]
 
@@ -275,70 +304,77 @@ def exhaustive_topk(lists: list[TermPostings], k: int) -> list[tuple[int, float]
 
 
 @dataclass
-class RawTermPostings:
-    """Undecoded posting row + block seek tables — the lazy-decode handle:
-    the block-max scorer touches only the bytes of blocks that survive
-    pruning (blocks decode independently; codec.py's posting row). The
-    buffers and arrays are views of the cached row group
-    (termrows.TermRows.row_values), except block_maxes, rescaled per group.
+class BlockTables:
+    """Every block of a query's rows, one flat array per column, in (term,
+    part, chunk) row order."""
+
+    ends: np.ndarray     # per row: end of its blocks in the arrays below
+    lasts: np.ndarray    # int64 last doc_id of each block
+    maxes: np.ndarray    # float64 max contribution of each block, rescaled
+    lo: np.ndarray       # (3, n_blocks) byte start and end of each block in
+    hi: np.ndarray       # the doc_ids/tfs/doc_lens buffers of the fetch
+
+
+@dataclass(eq=False)
+class RawPostingRows:
+    """The query's posting rows UNDECODED, the input of blockmax_topk: the
+    fetch (its cached columns hold the bytes) and each row's block-max
+    rescale factor (IndexGroup.load_term_postings_raw). The block tables
+    are built from TermRows.values on first read: only a query with a
+    score floor prunes, so only it pays for them."""
+
+    rows: PostingRows
+    scale: np.ndarray    # float64 per row: the factor its block_maxes take
+
+    def __len__(self) -> int:
+        return len(self.rows)
+
+    @cached_property
+    def blocks(self) -> BlockTables:
+        rows, order = self.rows.rows, self.rows.order
+        lasts, ends = rows.values("block_lasts")
+        maxes, _ = rows.values("block_maxes")
+        n = np.diff(ends, prepend=0)  # blocks per row, fetch order
+        row_hi = np.stack([rows.values(c)[1] for c in _POSTING_COLS])
+        row_lo = row_hi - np.diff(row_hi, axis=1, prepend=0)
+        lo = np.stack([rows.values(c)[0] for c in _OFFS_COLS]) + np.repeat(row_lo, n, axis=1)
+        hi = np.empty_like(lo)  # a block ends where the next one starts, or
+        hi[:, :-1] = lo[:, 1:]  # at its row's end
+        hi[:, ends[n > 0] - 1] = row_hi[:, n > 0]
+        if order is not None:
+            take = ranges_index((ends - n)[order], n[order])
+            lasts, maxes, lo, hi, n = lasts[take], maxes[take], lo[:, take], hi[:, take], n[order]
+        return BlockTables(np.cumsum(n), lasts, maxes * np.repeat(self.scale, n), lo, hi)
+
+
+def _surviving_blocks(raw: RawPostingRows, theta: float) -> np.ndarray:
+    """Per block of raw.blocks: can it hold a doc scoring >= theta?
+
+    Every block's last doc_id is a point of the grid that cuts the doc_id
+    axis into segments. A row's block j covers the points after block
+    j-1's last (all from the first, for j = 0) up to its own. A doc has
+    one posting per term at most, so a segment's bound is the sum over
+    terms, in term order, of the largest covering block max among the
+    term's rows. Docs of a pruned segment that ride in through a surviving
+    block carry partial sums < theta, which the caller drops.
     """
-
-    term: str
-    idf: float
-    id_buf: np.ndarray        # uint8
-    tf_buf: np.ndarray
-    dl_buf: np.ndarray
-    id_offs: np.ndarray       # int64 byte offset of each block in its buffer
-    tf_offs: np.ndarray
-    dl_offs: np.ndarray
-    block_lasts: np.ndarray   # int64 last doc_id per block
-    block_maxes: np.ndarray   # float64 max contribution per block
-
-
-def _decode_blocks(
-    items: list[tuple[RawTermPostings, np.ndarray]], cfg: EngineConfig, avgdl: float
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """(doc_ids int64, contributions float64, postings per item) of the
-    given blocks ONLY of each (row, sorted unique block indices) item, in
-    item order, decoded in ONE batch call.
-
-    Blocks are sliced as CONTIGUOUS RUNS, not one slice per block: a slice
-    starting at a block boundary decodes like a whole blocked row, so every
-    run is one more row of the batch decode. A run is a view of the cached
-    buffer; one concatenate per column makes the batch's (buffer, row_ends).
-    Per-block Python calls were the difference between a win and a 5x
-    loss — measured at 400k docs.
-    """
-    if not items:
-        empty = np.empty(0, dtype=np.int64)
-        return empty, np.empty(0, dtype=np.float64), empty
-    cols: tuple[list, list, list] = ([], [], [])
-    w_runs: list[float] = []
-    n_runs: list[int] = []
-    for rp, blocks in items:
-        runs, bl = [], blocks.tolist()  # [b0, b1) runs of consecutive blocks
-        for b in bl:
-            if runs and runs[-1][1] == b:
-                runs[-1][1] = b + 1
-            else:
-                runs.append([b, b + 1])
-        for out, buf, offs in zip(
-            cols, (rp.id_buf, rp.tf_buf, rp.dl_buf), (rp.id_offs, rp.tf_offs, rp.dl_offs)
-        ):
-            o = offs.tolist() + [len(buf)]
-            out.extend(buf[o[b0]:o[b1]] for b0, b1 in runs)
-        w_runs += [rp.idf] * len(runs)
-        n_runs.append(len(runs))
-    ids, tfs, dls, counts = decode_posting_rows(
-        *((np.concatenate(c), np.cumsum([v.size for v in c])) for c in cols), cfg.block_size
-    )
-    scores = bm25_contrib(np.repeat(w_runs, counts), tfs, dls, cfg.k1, cfg.b, avgdl)
-    per_item = np.add.reduceat(counts, np.cumsum(n_runs) - n_runs)
-    return ids.view(np.int64), scores, per_item
+    bt, term = raw.blocks, raw.rows.term
+    n = np.diff(bt.ends, prepend=0)
+    grid, gi = np.unique(bt.lasts, return_inverse=True)
+    first = np.zeros(gi.size, dtype=bool)
+    first[(bt.ends - n)[n > 0]] = True
+    g_lo = np.where(first, 0, np.roll(gi, 1) + 1)  # lasts ascend within a row
+    covered = np.zeros((n.size, grid.size))
+    row_base = np.repeat(np.arange(n.size) * grid.size, n)
+    covered.flat[ranges_index(row_base + g_lo, gi + 1 - g_lo)] = np.repeat(bt.maxes, gi + 1 - g_lo)
+    term_starts = np.flatnonzero(np.diff(term, prepend=-1))
+    ub = np.maximum.reduceat(covered, term_starts, axis=0).sum(axis=0)
+    hit = np.concatenate([[0], np.cumsum(ub >= theta)])
+    return hit[gi + 1] > hit[g_lo]
 
 
 def blockmax_topk(
-    raw_lists: list[RawTermPostings],
+    raw: RawPostingRows,
     k: int,
     cfg: EngineConfig,
     avgdl: float,
@@ -346,28 +382,20 @@ def blockmax_topk(
     min_score: float = 0.0,
     stats_out: dict | None = None,
 ) -> list[tuple[int, float]]:
-    """Exact BM25 top-k with VECTORIZED block-max pruning + lazy decode.
+    """Exact BM25 top-k with block-max pruning under a score floor.
 
-    Block-max WAND re-expressed numpy-first (a Python document-at-a-time
-    cursor loop is 10-100x slower than vectorized scoring — measured;
-    skipping must happen in array operations to pay off):
+    Olaf's minMatchCount is a skip criterion known before any posting is
+    read; min_score is that floor (theta) here, and the only one. With no
+    floor every block survives, and the rows decode in ONE call, exactly
+    as load_term_postings decodes them. With a floor, the segment bounds
+    come from the flat block tables (_surviving_blocks), runs of
+    consecutive surviving blocks decode in ONE call, and a pruned block's
+    bytes are neither copied nor decoded. Either way the tombstone mask
+    and _accumulate_topk follow, in the same float64 fold order as
+    vectorized_topk.
 
-      1. theta: fully decode only the SHORTEST list; the k-th largest of its
-         (tombstone-filtered) contributions lower-bounds the final k-th
-         score — every one of those k docs ends with >= its contribution.
-      2. segment pruning: the union of all lists' block_lasts cuts the
-         doc_id axis into segments; a segment's upper bound is the sum of
-         the covering blocks' maxes (one vectorized searchsorted per list).
-         Segments with ub < theta cannot contain a top-k doc.
-      3. decode ONLY blocks overlapping surviving segments, score exactly,
-         take top-k. Docs that ride in via a partially-surviving block but
-         live in a pruned segment carry partial sums < theta and rank
-         strictly below every true top-k doc — the answer is exact.
-
-    min_score > 0 additionally raises theta to the threshold BEFORE any
-    decoding: a thresholded query prunes every block that cannot reach the
-    floor without touching its bytes (Olaf's minMatchCount as a skip
-    criterion, not a post-filter).
+    A floor the scorer guesses itself does not pay (see the module
+    docstring): theta is min_score alone.
 
     Rank- and score-identical to vectorized_topk/exhaustive_topk
     (tests/test_index_wand.py), including under tombstones (deleting docs
@@ -376,64 +404,25 @@ def blockmax_topk(
     stats_out (optional dict) receives n_blocks_total / n_blocks_decoded —
     the pruning evidence the skip tests assert on.
     """
-    if not raw_lists or k <= 0:
+    if not len(raw) or k <= 0:
         return []
-    ts_arr = tombstones
-    bs = cfg.block_size
-    n_all = np.array([rp.block_lasts.size for rp in raw_lists])
-
-    # ---- 1. theta from the shortest list that can hold >= k postings -------
-    eligible = np.flatnonzero(n_all * bs >= k)
-    theta = float(min_score) if min_score > 0.0 else -np.inf
-    shortest = -1
-    if eligible.size:
-        shortest = int(eligible[np.argmin(n_all[eligible])])
-        sp = raw_lists[shortest]
-        all_blocks = np.arange(sp.block_lasts.size, dtype=np.int64)
-        s_ids, s_scores, _ = _decode_blocks([(sp, all_blocks)], cfg, avgdl)
-        sc = s_scores
-        if ts_arr is not None:
-            sc = sc[tombstone_keep_mask(s_ids, ts_arr)]
-        if sc.size >= k:
-            theta = max(
-                theta, float(np.partition(sc, sc.size - k)[sc.size - k])
-            )
-
-    # ---- 2. segment grid + upper bounds ------------------------------------
-    grid = np.unique(np.concatenate([rp.block_lasts for rp in raw_lists]))
-    ub = np.zeros(grid.size, dtype=np.float64)
-    block_idx = []
-    for rp in raw_lists:
-        idx = np.searchsorted(rp.block_lasts, grid, side="left")
-        valid = idx < rp.block_lasts.size
-        ub[valid] += rp.block_maxes[np.minimum(idx, rp.block_lasts.size - 1)][valid]
-        block_idx.append((idx, valid))
-    surviving = ub >= theta if np.isfinite(theta) else np.ones(grid.size, dtype=bool)
-
-    # ---- 3. decode surviving blocks (one batch call), exact score, top-k ---
-    n_decoded = 0
-    items, before = [], 0  # before: items that precede the theta list
-    for li, (rp, (idx, valid)) in enumerate(zip(raw_lists, block_idx)):
-        if li == shortest:  # already fully decoded for theta
-            n_decoded += int(rp.block_lasts.size)
-            before = len(items)
-            continue
-        blocks = np.unique(idx[surviving & valid])
-        n_decoded += int(blocks.size)
-        if blocks.size:
-            items.append((rp, blocks))
+    spans = None
+    if min_score > 0.0:
+        bt, alive = raw.blocks, _surviving_blocks(raw, min_score)
+        # runs of consecutive surviving blocks within a row, as byte spans
+        row_end = np.zeros(alive.size, dtype=bool)
+        row_end[bt.ends[bt.ends > 0] - 1] = True
+        b0 = np.flatnonzero(alive & (np.roll(row_end, 1) | ~np.roll(alive, 1)))
+        b1 = np.flatnonzero(alive & (row_end | ~np.roll(alive, -1)))
+        spans = bt.lo[:, b0], bt.hi[:, b1], raw.rows.term[np.searchsorted(bt.ends, b0, "right")]
     if stats_out is not None:
-        stats_out["n_blocks_total"] = int(n_all.sum())
-        stats_out["n_blocks_decoded"] = n_decoded
-    ids, scores, per_item = _decode_blocks(items, cfg, avgdl)
-    if shortest >= 0:
-        # splice the theta list back at its place: a doc's contributions
-        # must arrive in ascending term order
-        cut = int(per_item[:before].sum())
-        ids = np.concatenate([ids[:cut], s_ids, ids[cut:]])
-        scores = np.concatenate([scores[:cut], s_scores, scores[cut:]])
-    if ts_arr is not None:
-        keep = tombstone_keep_mask(ids, ts_arr)
+        stats_out["n_blocks_total"] = raw.blocks.lasts.size
+        stats_out["n_blocks_decoded"] = raw.blocks.lasts.size if spans is None else int(alive.sum())
+    if spans is not None and not spans[2].size:
+        return []
+    ids, scores, _ = _score_rows(raw.rows, cfg, avgdl, spans)
+    if tombstones is not None:
+        keep = tombstone_keep_mask(ids, tombstones)
         ids, scores = ids[keep], scores[keep]
     out = _accumulate_topk(ids, scores, k)
     if min_score > 0.0:
@@ -455,9 +444,9 @@ def query_index(
     the one-part group.
 
     method (SERVING_METHODS): "vectorized" (default, eager decode),
-    "blockmax" (vectorized block-max pruning + LAZY block decode — only
-    blocks that can beat theta are ever decoded), "wand" (alias of
-    blockmax), or "exhaustive" (test referent).
+    "blockmax" (block-max pruning under a min_score floor — only block
+    runs that can reach it are ever decoded; with no floor, the vectorized
+    decode), "wand" (alias of blockmax), or "exhaustive" (test referent).
 
     k=None uses cfg.max_results (Olaf maxResults=50, olaf_config.c:99-100);
     min_score=None uses cfg.min_score (minMatchCount analogue,

@@ -32,6 +32,21 @@ def assert_identical(got, want):
         assert math.isclose(gs, osc, rel_tol=1e-12, abs_tol=1e-15), (gd, gs, osc)
 
 
+def _count_decodes(monkeypatch) -> list:
+    """Record every call of the decode_posting_rows that wand serves with."""
+    from olaf_spark import wand
+
+    calls: list = []
+    real = wand.decode_posting_rows
+
+    def counted(*args, **kwargs):
+        calls.append(args)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(wand, "decode_posting_rows", counted)
+    return calls
+
+
 @pytest.fixture(scope="module")
 def halves(spark):
     pages = gen_pages(spark, N_DOCS, seed=42).select("doc_id", "text").cache()
@@ -77,16 +92,19 @@ def test_group_blockmax_matches_vectorized(spark, grouped):
         assert_identical(group.topk(q, K, method="blockmax"), want)
 
 
-def test_group_blockmax_thresholded_skips_blocks(spark, grouped):
+def test_group_blockmax_thresholded_skips_blocks(spark, grouped, monkeypatch):
     """On a thresholded group query the rescaled bounds must actually PRUNE:
     fewer blocks decoded than exist — the whole point of serving block maxes
-    through the delta phase — while staying exact."""
+    through the delta phase — while staying exact, and the surviving block
+    runs decode in ONE call."""
     group, _ = grouped
     q = "w2 w17 w300"
     top = group.topk(q, 1, method="vectorized")
     thr = top[0][1] * 0.95
     stats: dict = {}
+    calls = _count_decodes(monkeypatch)
     got = group.topk(q, K, method="blockmax", min_score=thr, _prune_stats=stats)
+    assert len(calls) == 1
     want = [(d, s) for d, s in group.topk(q, K, method="vectorized") if s >= thr]
     assert_identical(got, want)
     assert 0 < stats["n_blocks_decoded"] < stats["n_blocks_total"], stats
@@ -242,36 +260,48 @@ def test_compact_splits_head_terms_doc_range_parallel(spark, halves, tmp_path):
         assert_identical(query_index(spark, compacted, q, K, method="wand"), want)
 
 
-def test_chunked_terms_across_parts_serve_exactly(spark, halves, tmp_path):
+CHUNKED_CFG = EngineConfig(block_size=8, max_row_postings=16)
+
+
+@pytest.fixture(scope="module")
+def chunked(spark, halves, tmp_path_factory):
+    """A two-part group whose head terms span several chunk rows in each
+    part (max_row_postings=16), with three tombstones on each part."""
+    pages, a, b = halves
+    base = str(tmp_path_factory.mktemp("chunked") / "ix")
+    build_index(spark, a, base, CHUNKED_CFG, n_buckets=4)
+    append_index(spark, b, base, n_buckets=4)
+    group = IndexGroup.load(base)
+    hits = group.topk("w2 w3", 40, method="vectorized")
+    group.parts[0].delete_docs([d for d, _ in hits if d % 2 == 0][:3])
+    group.parts[1].delete_docs([d for d, _ in hits if d % 2 == 1][:3])
+    return group
+
+
+def test_chunked_terms_across_parts_serve_exactly(spark, halves, chunked):
     """Several chunk rows per term in BOTH parts (max_row_postings=16), and
     tombstones on both parts: for every serving method IndexGroup.topk
     equals the oracle over the live docs; so do the exhaustive referent
     over load_term_postings and blockmax over load_term_postings_raw; and
-    fully decoding the raw rows gives back load_term_postings' postings,
-    array for array (same order, same scores)."""
+    decoding every block of the raw rows' flat block tables gives back
+    load_term_postings' postings, array for array (same order, same
+    scores)."""
     import os
 
     import numpy as np
 
     from olaf_spark.indexer import term_id_py, tombstone_keep_mask
     from olaf_spark.termrows import term_rows
-    from olaf_spark.wand import SERVING_METHODS, _decode_blocks, blockmax_topk, exhaustive_topk
+    from olaf_spark.wand import SERVING_METHODS, _score_rows, blockmax_topk, exhaustive_topk
 
-    pages, a, b = halves
-    cfg = EngineConfig(block_size=8, max_row_postings=16)
-    base = str(tmp_path / "chunked")
-    build_index(spark, a, base, cfg, n_buckets=4)
-    append_index(spark, b, base, n_buckets=4)
-    group = IndexGroup.load(base)
+    pages, _, _ = halves
+    cfg, group = CHUNKED_CFG, chunked
     for p in group.parts:  # the head term spans several rows in each part
         rows = term_rows(
             os.path.join(p.index_dir, "postings"), [term_id_py("w2")], cfg.n_segments
         )
         assert len(rows) > 2 and len(set(rows.column("chunk").tolist())) > 2
     oracle = OracleIndex.build([(r["doc_id"], r["text"]) for r in pages.collect()], cfg)
-    hits = group.topk("w2 w3", 40, method="vectorized")
-    group.parts[0].delete_docs([d for d, _ in hits if d % 2 == 0][:3])
-    group.parts[1].delete_docs([d for d, _ in hits if d % 2 == 1][:3])
     dead = group.tombstones()
     assert len(dead) == 6
     ts = group.tombstones_arr()
@@ -283,15 +313,41 @@ def test_chunked_terms_across_parts_serve_exactly(spark, halves, tmp_path):
         raw = group.load_term_postings_raw(q)
         assert_identical(exhaustive_topk(lists, K), want)
         assert_identical(blockmax_topk(raw, K, cfg, group.avgdl, ts), want)
-        assert [tp.term for tp in lists] == list(dict.fromkeys(rp.term for rp in raw))
-        for tp in lists:
-            ids, scores, _ = _decode_blocks(
-                [(rp, np.arange(rp.block_lasts.size)) for rp in raw if rp.term == tp.term],
-                cfg, group.avgdl,
-            )
-            keep = tombstone_keep_mask(ids, ts)
+        row_terms = [raw.rows.terms[t] for t in raw.rows.term.tolist()]
+        assert [tp.term for tp in lists] == list(dict.fromkeys(row_terms))
+        # every block as its own byte span of the block tables: the
+        # pruned path's decode, with nothing pruned
+        bt = raw.blocks
+        assert bt.ends[-1] == bt.lasts.size == bt.maxes.size
+        row_of_block = np.repeat(np.arange(len(raw)), np.diff(bt.ends, prepend=0))
+        ids, scores, term = _score_rows(
+            raw.rows, cfg, group.avgdl, (bt.lo, bt.hi, raw.rows.term[row_of_block])
+        )
+        for i, tp in enumerate(lists):
+            keep = tombstone_keep_mask(ids, ts) & (term == i)
             assert ids[keep].tolist() == tp.doc_ids.tolist()
             assert scores[keep].tolist() == tp.scores.tolist()
+
+
+def test_group_query_decodes_once(chunked, monkeypatch):
+    """The default IndexGroup.topk decodes a query's postings in ONE
+    decode_posting_rows call, with no floor and with min_score > 0, on a
+    tombstoned two-part group whose terms span several chunk rows per
+    part; its answers equal the vectorized referent's."""
+    calls = _count_decodes(monkeypatch)
+    pruned = 0
+    for q in [*QUERIES, "w2", "w2 w3", "w3 w2 w5"]:
+        hits = chunked.topk(q, K, method="vectorized")
+        for floor in (0.0, hits[K // 2][1]):
+            calls.clear()
+            stats: dict = {}
+            got = chunked.topk(q, K, min_score=floor, _prune_stats=stats)
+            assert len(calls) == 1, (q, floor, len(calls))
+            assert_identical(got, [(d, s) for d, s in hits if s >= floor])
+            pruned += stats["n_blocks_total"] - stats["n_blocks_decoded"]
+            if floor == 0.0:
+                assert stats["n_blocks_decoded"] == stats["n_blocks_total"]
+    assert pruned > 0  # the floor did skip blocks
 
 
 def test_compact_resume_after_kill(spark, grouped, tmp_path):

@@ -594,6 +594,40 @@ def test_term_rows_match_dataset_filter(spark, positional, tmp_path):
             assert by_term(as_table(got, want.schema)) == by_term(want), (kind, len(qids))
 
 
+def test_warm_term_rows_stat_each_tb_dir_once(positional, tmp_path, monkeypatch):
+    """A warm termrows.term_rows lookup stats each queried tb dir once and
+    no file in it (each tb dir's table of files, row groups and term_id
+    ranges is cached under the dir's signature), and answers with the
+    same cached row groups as the cold lookup. The tb dirs hold several
+    files of several row groups each, so a per-file stat would show."""
+    import glob
+    import os
+
+    import pyarrow.dataset as ds
+
+    from olaf_spark import termrows
+
+    _, d = positional
+    root = str(tmp_path / "split")
+    _resplit_rows(os.path.join(d, "positions"), root)
+    ids = ds.dataset(root, format="parquet", partitioning="hive").to_table(columns=["term_id"])
+    qids = sorted(set(ids["term_id"].to_pylist()))[::5]
+    tb_dirs = sorted({os.path.join(root, f"tb={q % CFG.n_segments}") for q in qids})
+    assert len(tb_dirs) > 1
+    assert sum(len(glob.glob(os.path.join(t, "*.parquet"))) for t in tb_dirs) > len(tb_dirs)
+    cold = termrows.term_rows(root, qids, CFG.n_segments)
+    assert len(cold) > 0
+
+    stats: list[str] = []
+    real = termrows.file_sig
+    monkeypatch.setattr(termrows, "file_sig", lambda p: stats.append(p) or real(p))
+    warm = termrows.term_rows(root, qids, CFG.n_segments)
+    assert sorted(stats) == tb_dirs
+    assert [(id(rg), a, b) for rg, a, b in warm.runs] == [
+        (id(rg), a, b) for rg, a, b in cold.runs
+    ]
+
+
 def test_rebuilt_dirs_never_serve_stale_rows(spark, positional, tmp_path):
     """In one process, rebuilding positions, bigrams and postings into the
     same dir with other docs: the next query equals the answer with the
